@@ -67,6 +67,7 @@ def start_queries(spark: SparkSession, input_dir: str, output_dir: str,
                   watermark: str = "1 hour", window: str = "1 day"):
     """Build and start the three streaming queries; returns them
     (caller awaits / stops)."""
+    from m3spark.sparkval import violation_rows
     from m3spark.streaming import streaming_drift_buckets, validate_stream
 
     spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
@@ -78,14 +79,9 @@ def start_queries(spark: SparkSession, input_dir: str, output_dir: str,
     trigger = {"availableNow": True} if available_now else \
         {"processingTime": "10 seconds"}
 
-    q_rows = (res["rows"]
-              .where(~F.col("valid"))
-              .select("url", "warc_ts", "lang",
-                      F.explode("violations").alias("v"))
-              .select("url", "warc_ts", "lang",
-                      F.col("v.keyword").alias("keyword"),
-                      F.col("v.schema_path").alias("schema_path"),
-                      F.col("v.message").alias("message"))
+    keys = ["url", "warc_ts", "lang"]
+    q_rows = (violation_rows(res["rows"].where(~F.col("valid")), keys)
+              .select(*keys, "keyword", "schema_path", "message")
               .writeStream.format("parquet")
               .option("path", f"{output_dir}/violations")
               .option("checkpointLocation", f"{checkpoint_dir}/violations")

@@ -34,6 +34,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from m3spark.columnar.inline import UNROLL_GUARD_KEY, inline_local_refs
+from m3spark.memo import expr_memo
 from m3spark.schema.core import (
     DNEXT, DRAFT3, DRAFT4, DRAFT6, DRAFT7, D2019, D2020,
     _SCHEMA_URI_TO_DRAFT, _ge, draft_of, meta_validate_schema,
@@ -42,6 +43,7 @@ from m3spark.schema.formats import (
     FORMATS, IPV6_PATTERN, SPARK_RLIKE, URI_BAD_PCT_PATTERN,
     URI_CHARSET_PATTERN, URI_SCHEME_PATTERN,
 )
+from m3spark.sparkval import violation_rows
 
 
 class UnsupportedKeyword(Exception):
@@ -233,12 +235,11 @@ def _format_pred(fmt: str) -> Callable[[Column, T.DataType], Column]:
         fn._jvm = True
         return fn
 
-    @F.pandas_udf(T.BooleanType())
-    def fmt_udf(s: pd.Series) -> pd.Series:
+    def fmt_check(s: pd.Series) -> pd.Series:
         f = FORMATS[fmt]
         return s.map(lambda x: None if x is None else bool(f(x)))
 
-    fn = lambda col, dt: fmt_udf(col)  # noqa: E731
+    fn = lambda col, dt: _py_pred(fmt_check, col)  # noqa: E731
     fn._jvm = False
     return fn
 
@@ -275,8 +276,7 @@ def _pattern_pred(pattern: str, force_python: bool) -> Callable:
         fn._jvm = True
         return fn
 
-    @F.pandas_udf(T.BooleanType())
-    def pat_udf(s: pd.Series) -> pd.Series:
+    def pat_check(s: pd.Series) -> pd.Series:
         from m3spark.schema.core import compile_ecma_pattern  # noqa: PLC0415
         try:
             rx = compile_ecma_pattern(pattern)
@@ -284,9 +284,17 @@ def _pattern_pred(pattern: str, force_python: bool) -> Callable:
             return s.map(lambda x: None if x is None else True)
         return s.map(lambda x: None if x is None else rx.search(x) is not None)
 
-    fn = lambda col, dt: pat_udf(col)  # noqa: E731
+    fn = lambda col, dt: _py_pred(pat_check, col)  # noqa: E731
     fn._jvm = False
     return fn
+
+
+def _py_pred(check: Callable[[pd.Series], pd.Series], col: Column) -> Column:
+    """``check`` as a boolean pandas UDF over ``col``.  A new UDF per
+    built Column: a UDF object keeps the JVM function of the
+    SparkContext it was first called under, so a shared one would carry
+    a stopped context's accumulator into the next session."""
+    return F.pandas_udf(check, T.BooleanType())(col)
 
 
 class ColumnarValidator:
@@ -2425,56 +2433,36 @@ class ColumnarValidator:
 
     def apply(self, df: DataFrame, out_valid: str = "valid",
               out_violations: str = "violations") -> DataFrame:
+        # expression memo (m3spark.memo), expressions only: keyed on the
+        # SparkContext, this validator, the ordered input dtypes and
+        # the output names
+        added, viol_arr, valid_col = expr_memo(
+            self, df.dtypes, (out_valid, out_violations),
+            lambda: self._build_apply(df, out_violations))
+        for dname, build_col in added:
+            df = df.withColumn(dname, build_col)
+        df = df.withColumn(out_violations, viol_arr)
+        df = df.withColumn(out_valid, valid_col)
+        if added:
+            df = df.drop(*[n for n, _ in added])
+        return df
+
+    def _build_apply(self, df: DataFrame, out_violations: str):
+        """(derived columns, violations array, valid) Columns for
+        :meth:`apply` over ``df``'s shape."""
         dtypes = {f.name: f.dataType for f in df.schema.fields}
-        # The built Column trees are pure functions of (dtypes, output
-        # names) — they reference input columns BY NAME and carry no
-        # data or plan state — so a validator applied repeatedly to
-        # same-shaped inputs (the bench/scaling loop re-validates the
-        # same table every call) reuses the unresolved expression
-        # objects instead of re-issuing the ~10k py4j construction
-        # round-trips (~0.5 s per apply).  This memoizes EXPRESSIONS
-        # only: every invocation still plans, compiles and computes
-        # from the input — nothing about results or shuffles is reused.
-        ckey = (tuple(sorted((n, t.simpleString())
-                             for n, t in dtypes.items())),
-                out_valid, out_violations)
-        cached = getattr(self, "_apply_cache", {}).get(ckey)
-        if cached is not None:
-            added, viol_arr, valid_col = cached
-            for dname, build_col in added:
-                df = df.withColumn(dname, build_col)
-            df = df.withColumn(out_violations, viol_arr)
-            df = df.withColumn(out_valid, valid_col)
-            if added:
-                df = df.drop(*[n for n, _ in added])
-            return df
         # bind shared subexpressions (content decode chain) once per row
         # in a projection UNDER the check projection: each is referenced
         # many times by the per-keyword predicates, and CollapseProject
         # keeps the boundary because the expressions are non-cheap and
         # multiply-referenced.
-        added = []
-        for dname, (src, build_col) in self.derived.items():
-            if src in dtypes and isinstance(dtypes[src], T.StringType):
-                added.append((dname, build_col()))
-                df = df.withColumn(dname, added[-1][1])
+        added = [(dname, build_col())
+                 for dname, (src, build_col) in self.derived.items()
+                 if src in dtypes and isinstance(dtypes[src], T.StringType)]
         self._avail = set(n for n, _ in added)
         structs = []
         for c in self.checks:
-            if c.column == self._ROW_CHECK:
-                ok = c.build(None, dtypes)
-            elif c.column not in dtypes:
-                # column absent from the table: TOP-LEVEL required
-                # (doc_path "", the row object) fails statically;
-                # everything else passes — including nested required,
-                # whose parent property is missing (presence semantics,
-                # c_required parity)
-                ok = F.lit(not (c.keyword == "required"
-                                and c.doc_path == ""))
-                col = None
-            else:
-                col = F.col(c.column)
-                ok = c.build(col, dtypes[c.column])
+            ok = self._check_ok(c, dtypes)
             if c.keyword == "required" and c.doc_path == "":
                 # interp parity: top-level required renders the ROW
                 # document (to_json omits nulls = absent fields)
@@ -2490,8 +2478,8 @@ class ColumnarValidator:
                 # nested check: render the offending LEAF value (the
                 # navigator returns NULL when the type never gets there)
                 val_expr = F.substring(
-                    c.value_of(col, dtypes[c.column]).cast("string"),
-                    1, 128)
+                    c.value_of(F.col(c.column), dtypes[c.column])
+                    .cast("string"), 1, 128)
             else:
                 # truncated textual instance value — parity with the
                 # reference's errors carrying :document
@@ -2532,14 +2520,21 @@ class ColumnarValidator:
         # array_contains([]) is false, so semantics are identical)
         valid_col = ~F.array_contains(
             F.col(out_violations)["level"], "error")
-        if not hasattr(self, "_apply_cache"):
-            self._apply_cache = {}
-        self._apply_cache[ckey] = (added, viol_arr, valid_col)
-        df = df.withColumn(out_violations, viol_arr)
-        df = df.withColumn(out_valid, valid_col)
-        if added:
-            df = df.drop(*[n for n, _ in added])
-        return df
+        return added, viol_arr, valid_col
+
+    def _check_ok(self, c: Check, dtypes: dict) -> Column:
+        """Check ``c``'s pass predicate over a table of ``dtypes``
+        (name -> DataType)."""
+        if c.column == self._ROW_CHECK:
+            return c.build(None, dtypes)
+        if c.column not in dtypes:
+            # column absent from the table: TOP-LEVEL required (doc_path
+            # "", the row object) fails statically; everything else
+            # passes — including nested required, whose parent property
+            # is missing (presence semantics, c_required parity)
+            return F.lit(not (c.keyword == "required"
+                              and c.doc_path == ""))
+        return c.build(F.col(c.column), dtypes[c.column])
 
     def violation_prefilter(self, df: DataFrame) -> DataFrame:
         """``df`` filtered to rows that carry at least one violation:
@@ -2555,49 +2550,18 @@ class ColumnarValidator:
         if self.derived:
             raise ValueError("violation_prefilter does not support "
                              "schemas with content keywords")
-        dtypes = {f.name: f.dataType for f in df.schema.fields}
-        # expression memo, same contract as apply(): Columns are pure
-        # functions of the input dtypes, reused across invocations
-        ckey = tuple(sorted((n, t.simpleString())
-                            for n, t in dtypes.items()))
-        if not hasattr(self, "_prefilter_cache"):
-            self._prefilter_cache = {}
-        cached = self._prefilter_cache.get(ckey)
-        if cached is not None:
-            return df.where(cached) if cached is not False \
-                else df.where(F.lit(False))
-        preds = []
-        for c in self.checks:
-            if c.column == self._ROW_CHECK:
-                ok = c.build(None, dtypes)
-            elif c.column not in dtypes:
-                ok = F.lit(not (c.keyword == "required"
-                                and c.doc_path == ""))
-            else:
-                ok = c.build(F.col(c.column), dtypes[c.column])
-            preds.append(~ok.eqNullSafe(True))
-        if not preds:
-            self._prefilter_cache[ckey] = False
-            return df.where(F.lit(False))
-        cond = preds[0]
-        for p in preds[1:]:
-            cond = cond | p
-        self._prefilter_cache[ckey] = cond
-        return df.where(cond)
+
+        def build():
+            dtypes = {f.name: f.dataType for f in df.schema.fields}
+            return _reduce_or([~self._check_ok(c, dtypes).eqNullSafe(True)
+                               for c in self.checks])
+
+        return df.where(expr_memo(self, df.dtypes, (), build))
 
     def violation_rows(self, df: DataFrame, key_col: str) -> DataFrame:
         """The north-star violation table: (key, keyword, path, message,
         offending value)."""
-        applied = self.apply(df)
-        v = F.explode("violations")
-        return (applied.select(F.col(key_col), v.alias("v"))
-                .select(key_col,
-                        F.col("v.keyword").alias("keyword"),
-                        F.col("v.schema_path").alias("schema_path"),
-                        F.col("v.doc_path").alias("doc_path"),
-                        F.col("v.message").alias("message"),
-                        F.col("v.level").alias("level"),
-                        F.col("v.value").alias("value")))
+        return violation_rows(self.apply(df), key_col)
 
 
 def _struct_field(col: Column, dt: T.DataType, name: str):

@@ -13,37 +13,15 @@ past the first Project)."""
 from __future__ import annotations
 
 import copy
+import json
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from m3spark.columnar import ColumnarValidator
+from m3spark.memo import expr_memo
 from m3spark.pages import PAGES_SCHEMA
-
-# Validator memo: instances are pure compilations of (schema,
-# format_assertion) and cache their built Column expressions, so the
-# bench/scaling loop — which calls validate_pages on the same table
-# every iteration — skips the py4j expression reconstruction (~1.2 s
-# per call of pure driver time that the 4N scaling level cannot
-# parallelize).  Expressions only: every call still plans and computes
-# from its input; no results, plans, or shuffles are reused.
-_CV_CACHE: dict = {}
-
-
-def _validator(schema: dict, format_assertion: bool) -> ColumnarValidator:
-    import json
-
-    try:
-        key = (json.dumps(schema, sort_keys=True), format_assertion)
-    except (TypeError, ValueError):
-        return ColumnarValidator(schema, format_assertion=format_assertion)
-    cv = _CV_CACHE.get(key)
-    if cv is None:
-        cv = ColumnarValidator(schema, format_assertion=format_assertion)
-        if len(_CV_CACHE) > 32:
-            _CV_CACHE.clear()
-        _CV_CACHE[key] = cv
-    return cv
+from m3spark.sparkval import violation_rows
 
 
 def _heavy_null_only_cols(schema: dict, pages: DataFrame, key_col: str,
@@ -83,16 +61,22 @@ def validate_pages(pages: DataFrame, schema: dict | None = None,
                    persist: bool = False) -> dict:
     """Run the full validation over a pages table.
 
-    Returns dict of lazy DataFrames:
+    Returns a dict of lazy DataFrames plus the validator:
       - ``rows``: input + violations + valid (full width)
-      - ``slim``: (key, partition_key, valid, violations) — the shared
-        core of the downstream jobs; persisted when ``persist=True``
-        (caller unpersists)
+      - ``slim``: (key, partition_key, valid, violations) of the rows
+        that carry a violation — the shared core of the downstream jobs
+      - ``slim_heavy``: (key, partition_key, hviols, other_err) of the
+        rows whose heavy columns (see ``_heavy_null_only_cols``) are
+        null, or None when the schema has no heavy column
       - ``violations``: exploded north-star violation table
       - ``partition_verdicts``: per-partition pass/fail + counts
-    """
+      - ``validator``: the ``ColumnarValidator`` behind ``rows``
+
+    With ``persist=True``, ``slim`` is persisted, and it is the only
+    relation the caller releases (``res["slim"].unpersist()``)."""
     schema = schema or PAGES_SCHEMA
-    cv = _validator(schema, format_assertion)
+    cv, cv_light, heavy, ex = _plan(schema, pages, key_col, partition_expr,
+                                    format_assertion)
     rows = cv.apply(pages)
 
     # r8: persist only the VIOLATING rows.  The r7 shape cached the full
@@ -129,14 +113,7 @@ def validate_pages(pages: DataFrame, schema: dict | None = None,
     # the heavy field's base64 no longer appears in that truncated
     # debug string (identical whenever the heavy column is itself
     # null, since to_json omits nulls).
-    heavy = _heavy_null_only_cols(schema, pages, key_col, partition_expr)
-    cv_light, light = cv, pages
-    if heavy:
-        lschema = copy.deepcopy(schema)
-        lschema["required"] = [r for r in schema["required"]
-                               if r not in heavy]
-        cv_light = _validator(lschema, format_assertion)
-        light = pages.drop(*heavy)
+    light = pages.drop(*heavy) if heavy else pages
     try:
         bad = cv_light.violation_prefilter(light)
         prefiltered = True
@@ -144,9 +121,7 @@ def validate_pages(pages: DataFrame, schema: dict | None = None,
         bad = light
         prefiltered = False
     slim = cv_light.apply(bad).select(
-        F.col(key_col),
-        F.expr(partition_expr).alias("partition_key"),
-        "valid", "violations")
+        F.col(key_col), ex["pk"], "valid", "violations")
     if not prefiltered:
         # the prefilter predicate is exactly OR(~ok_i) == "violations
         # non-empty", so when it ran this filter is redundant — and far
@@ -157,25 +132,19 @@ def validate_pages(pages: DataFrame, schema: dict | None = None,
     if persist:
         slim = slim.persist()
 
-    ex = _pipe_exprs(key_col, partition_expr, tuple(heavy))
-
+    keys = [key_col, "partition_key"]
+    viol = violation_rows(slim, keys)
     slim_heavy = None
     if heavy:
         # reuse the already-built full-apply tree (a second cv.apply
         # costs ~0.5 s of py4j expression construction per call); the
         # IsNull filter commutes with the row-wise projection and is
-        # pushed below it into the parquet scan
-        hv = rows.where(ex["null_any"])
-        slim_heavy = (hv.select(*ex["heavy_select"])
-                        .where(ex["hviols_nonempty"]))
-        if persist:
-            slim_heavy = slim_heavy.persist()
-
-    viol = slim.select(*ex["explode_violations"]).select(*ex["viol_cols"])
-    if slim_heavy is not None:
-        viol = viol.unionByName(
-            slim_heavy.select(*ex["explode_hviols"])
-                      .select(*ex["viol_cols"]))
+        # pushed below it into the parquet scan — footer-only on clean
+        # data, so this relation is not persisted
+        slim_heavy = (rows.where(ex["null_any"])
+                          .select(*ex["heavy_select"])
+                          .where(ex["hviols_nonempty"]))
+        viol = viol.unionByName(violation_rows(slim_heavy, keys, "hviols"))
     if with_uniqueness:
         dups = (pages.groupBy(F.col(key_col))
                      .agg(ex["dup_count"])
@@ -202,19 +171,35 @@ def validate_pages(pages: DataFrame, schema: dict | None = None,
             "validator": cv}
 
 
-# Column-expression memo for the pipeline body: every entry is a pure
-# function of (key_col, partition_expr, heavy column list) — reused
-# across calls for the same reason as the validator expression caches
-# (expressions only; nothing about plans, data or shuffles is shared).
-_PIPE_EXPRS: dict = {}
+def _plan(schema: dict, pages: DataFrame, key_col: str,
+          partition_expr: str, format_assertion: bool):
+    """(full validator, value-scan validator, heavy columns, pipeline
+    Column expressions) for ``validate_pages``.  Expression memo
+    (m3spark.memo), expressions only: keyed on the SparkContext, the
+    canonical schema JSON plus options and the ordered input dtypes."""
+    def build():
+        heavy = _heavy_null_only_cols(schema, pages, key_col, partition_expr)
+        cv = cv_light = ColumnarValidator(schema,
+                                          format_assertion=format_assertion)
+        if heavy:
+            lschema = copy.deepcopy(schema)
+            lschema["required"] = [r for r in schema["required"]
+                                   if r not in heavy]
+            cv_light = ColumnarValidator(lschema,
+                                         format_assertion=format_assertion)
+        return (cv, cv_light, heavy,
+                _pipe_exprs(key_col, partition_expr, heavy))
+
+    try:
+        owner = (json.dumps(schema, sort_keys=True), format_assertion,
+                 key_col, partition_expr)
+    except (TypeError, ValueError):
+        return build()
+    return expr_memo(owner, pages.dtypes, (), build)
 
 
-def _pipe_exprs(key_col: str, partition_expr: str,
-                heavy: tuple) -> dict:
-    memo_key = (key_col, partition_expr, heavy)
-    ex = _PIPE_EXPRS.get(memo_key)
-    if ex is not None:
-        return ex
+def _pipe_exprs(key_col: str, partition_expr: str, heavy: list) -> dict:
+    """The pipeline body's Column expressions, by role."""
     ex = {
         "pk": F.expr(partition_expr).alias("partition_key"),
         "rows_scanned": F.count(F.lit(1)).alias("rows_scanned"),
@@ -222,20 +207,6 @@ def _pipe_exprs(key_col: str, partition_expr: str,
         "passed": F.col("invalid_rows") == 0,
         "hviols_nonempty": F.size("hviols") > 0,
     }
-    ex["explode_violations"] = [
-        F.col(key_col), F.col("partition_key"),
-        F.explode("violations").alias("v")]
-    ex["explode_hviols"] = [
-        F.col(key_col), F.col("partition_key"),
-        F.explode("hviols").alias("v")]
-    ex["viol_cols"] = [
-        F.col(key_col), F.col("partition_key"),
-        F.col("v.keyword").alias("keyword"),
-        F.col("v.schema_path").alias("schema_path"),
-        F.col("v.doc_path").alias("doc_path"),
-        F.col("v.message").alias("message"),
-        F.col("v.level").alias("level"),
-        F.col("v.value").alias("value")]
     ex["dup_select"] = [
         F.col(key_col),
         F.lit("uniqueItems").alias("keyword"),
@@ -273,8 +244,7 @@ def _pipe_exprs(key_col: str, partition_expr: str,
                     & v["message"].isin(heavy_msgs))
 
         ex["heavy_select"] = [
-            F.col(key_col),
-            F.expr(partition_expr).alias("partition_key"),
+            F.col(key_col), ex["pk"],
             F.filter("violations", _is_heavy_req).alias("hviols"),
             F.exists("violations",
                      lambda v: (v["level"] == "error")
@@ -285,7 +255,4 @@ def _pipe_exprs(key_col: str, partition_expr: str,
                    & ~F.col("other_err")).cast("long"))
              .alias("_hinvalid"),
             F.sum(F.size("hviols")).alias("_hvcount")]
-    if len(_PIPE_EXPRS) > 32:
-        _PIPE_EXPRS.clear()
-    _PIPE_EXPRS[memo_key] = ex
     return ex

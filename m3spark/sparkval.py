@@ -28,6 +28,8 @@ from pyspark.sql.types import (
     ArrayType, BooleanType, StringType, StructField, StructType,
 )
 
+from m3spark.memo import expr_memo
+
 VIOLATION_SCHEMA = StructType([
     StructField("keyword", StringType()),
     StructField("schema_path", StringType()),
@@ -169,16 +171,26 @@ def validate_table(df: DataFrame, schema: dict | bool,
     return out.drop("_m3_doc")
 
 
-def violation_rows(df: DataFrame, key_col: str = "url",
+def violation_rows(df: DataFrame, key_col: str | list[str] = "url",
                    violations_col: str = "violations") -> DataFrame:
-    """Explode the violations column into the north-star violation table:
-    (key, keyword, json-pointer path, message, level)."""
-    v = F.explode(F.col(violations_col)).alias("v")
-    return (df.select(F.col(key_col), v)
-              .select(key_col,
-                      F.col("v.keyword").alias("keyword"),
-                      F.col("v.schema_path").alias("schema_path"),
-                      F.col("v.doc_path").alias("doc_path"),
-                      F.col("v.message").alias("message"),
-                      F.col("v.level").alias("level"),
-                      F.col("v.value").alias("value")))
+    """Explode an array-of-violations column into the north-star
+    violation table: the carried ``key_col`` column(s), then keyword,
+    json-pointer paths, message, level and the offending value."""
+    keys = (key_col,) if isinstance(key_col, str) else tuple(key_col)
+
+    def build():
+        carried = [F.col(k) for k in keys]
+        return ([*carried, F.explode(F.col(violations_col)).alias("v")],
+                [*carried,
+                 F.col("v.keyword").alias("keyword"),
+                 F.col("v.schema_path").alias("schema_path"),
+                 F.col("v.doc_path").alias("doc_path"),
+                 F.col("v.message").alias("message"),
+                 F.col("v.level").alias("level"),
+                 F.col("v.value").alias("value")])
+
+    # expression memo (m3spark.memo): the Columns do not depend on the
+    # input's dtypes
+    explode, fields = expr_memo(("violation_rows", violations_col), (),
+                                keys, build)
+    return df.select(*explode).select(*fields)

@@ -69,9 +69,15 @@ def _m3_fixture_groups():
     return groups
 
 
+M3_FIXTURE_GROUPS = _m3_fixture_groups()
+
+
+# ids as a list: an ids callable is also called on the placeholder
+# parameter of an empty parametrize (fixture dir absent) and fails
+# collection of the whole module
 @pytest.mark.parametrize(
-    "fixture", _m3_fixture_groups(),
-    ids=lambda f: f"{f[0]}:{f[1]['description'][:48]}")
+    "fixture", M3_FIXTURE_GROUPS,
+    ids=[f"{f[0]}:{f[1]['description'][:48]}" for f in M3_FIXTURE_GROUPS])
 def test_m3_regression_fixture(fixture):
     _, group = fixture
     cs = compile_schema(group["schema"])
