@@ -6,6 +6,4 @@ from .referential import referential_violations  # noqa: F401
 from .drift import (  # noqa: F401
     categorical_histogram, drift_report, ks_statistic, numeric_histogram, psi,
 )
-from .checkpoint import (  # noqa: F401
-    CheckpointStore, run_resumable, run_resumable_batched,
-)
+from .checkpoint import CheckpointStore, run_resumable_batched  # noqa: F401

@@ -50,12 +50,6 @@ class CheckpointStore:
                   .select("partition_spec").distinct().collect())
         return {r["partition_spec"] for r in rows}
 
-    def append(self, snapshot_id: str, partition_spec: str,
-               rows_scanned: int, violations: int, wall_time_s: float,
-               run_id: str):
-        self.append_many([(snapshot_id, partition_spec, rows_scanned,
-                           violations, wall_time_s, run_id)])
-
     def append_many(self, rows: list[tuple]):
         """One parquet file per call regardless of row count — callers
         batch a chunk's partitions into a single append so a 10^5-partition
@@ -81,53 +75,28 @@ class CheckpointStore:
         return self.spark.read.schema(CHECKPOINT_SCHEMA).parquet(self.path)
 
 
-def run_resumable(df: DataFrame, partition_col: str, store: CheckpointStore,
-                  snapshot_id: str, validate_partition,
-                  fail_after: int | None = None) -> dict:
-    """Validate per partition-value, checkpointing each; on restart,
-    already-checkpointed partitions are skipped.  (Deployment uses
-    :func:`run_resumable_batched`, which amortizes per-job cost.)
-
-    ``validate_partition(part_df) -> (rows_scanned, n_violations)`` runs
-    the actual (distributed) validation for one partition's rows.
-    ``fail_after`` aborts after N partitions (for resumability tests).
-    Returns {"validated": [...], "skipped": [...]}.
-    """
-    run_id = uuid.uuid4().hex[:12]
-    done = store.completed(snapshot_id)
-    parts = [r[0] for r in
-             df.select(partition_col).distinct().orderBy(partition_col)
-               .collect()]
-    validated, skipped = [], []
-    n_done = 0
-    for part in parts:
-        spec = f"{partition_col}={part}"
-        if spec in done:
-            skipped.append(spec)
-            continue
-        t0 = time.monotonic()
-        part_df = df.where(F.col(partition_col) == part)
-        rows_scanned, n_viol = validate_partition(part_df)
-        store.append(snapshot_id, spec, rows_scanned, n_viol,
-                     time.monotonic() - t0, run_id)
-        validated.append(spec)
-        n_done += 1
-        if fail_after is not None and n_done >= fail_after:
-            raise RuntimeError(f"simulated failure after {fail_after} partitions")
-    return {"validated": validated, "skipped": skipped}
-
-
 def run_resumable_batched(df: DataFrame, partition_col: str,
                           store: CheckpointStore, snapshot_id: str,
                           validate_batch, batch_size: int = 8) -> dict:
-    """Chunked resumable runs: ONE filtered Spark job per chunk of
-    pending partitions (the fixed per-job cost amortizes over the
-    chunk), per-partition lineage still recorded individually.
+    """Validate ``df`` a chunk of partitions at a time, checkpointing
+    every partition; on restart, already-checkpointed partitions are
+    skipped.
 
-    ``validate_batch(chunk_df) -> {partition_value: (rows, violations)}``
-    runs the validation for a chunk and returns per-partition counts
-    (e.g. from the partition-verdict aggregate).  Restart granularity is
-    one chunk: a crash loses at most ``batch_size`` partitions of work.
+    The pending partitions (distinct ``partition_col`` values not yet
+    recorded under ``snapshot_id``) are taken in sorted order, in chunks
+    of ``batch_size``.  ``validate_batch(chunk_df)`` gets ``df``
+    filtered to one chunk and returns ``{partition_value: (rows,
+    violations)}`` for every partition in it (e.g. from the
+    partition-verdict aggregate); a missing partition raises
+    ``KeyError`` rather than being recorded as complete.  Each chunk's
+    records go to ``store`` in one ``append_many``, after
+    ``validate_batch`` returns; every record carries the chunk's wall
+    time split evenly over its partitions.  So an exception inside a
+    chunk loses that chunk's work only, and a rerun validates exactly
+    the partitions not yet recorded.
+
+    Returns ``{"validated": [spec, ...], "skipped": [spec, ...]}`` with
+    specs of the form ``"<partition_col>=<value>"``.
     """
     run_id = uuid.uuid4().hex[:12]
     done = store.completed(snapshot_id)

@@ -22,7 +22,7 @@ north-star's "regex/format checks batched, never per-row Python".
 
 from __future__ import annotations
 
-from dataclasses import dataclass
+from dataclasses import dataclass, replace
 from decimal import Decimal
 from fractions import Fraction
 from typing import Callable
@@ -216,24 +216,16 @@ def _date_pred(col: Column) -> Column:
 def _format_pred(fmt: str) -> Callable[[Column, T.DataType], Column]:
     # builders tagged _jvm=False use pandas UDFs, which cannot run inside
     # higher-order-function lambdas (nested array/struct compilation
-    # rejects them)
+    # rejects them); untagged builders are JVM expressions
     if fmt == "uri":
-        fn = lambda col, dt: _uri_pred(col)  # noqa: E731
-        fn._jvm = True
-        return fn
+        return lambda col, dt: _uri_pred(col)
     if fmt == "date":
-        fn = lambda col, dt: _date_pred(col)  # noqa: E731
-        fn._jvm = True
-        return fn
+        return lambda col, dt: _date_pred(col)
     rx = SPARK_RLIKE.get(fmt)
     if rx is not None:
-        fn = lambda col, dt: col.rlike(rx)  # noqa: E731
-        fn._jvm = True
-        return fn
+        return lambda col, dt: col.rlike(rx)
     if FORMATS.get(fmt) is None:
-        fn = lambda col, dt: F.lit(True)  # noqa: E731
-        fn._jvm = True
-        return fn
+        return lambda col, dt: F.lit(True)
 
     def fmt_check(s: pd.Series) -> pd.Series:
         f = FORMATS[fmt]
@@ -244,49 +236,27 @@ def _format_pred(fmt: str) -> Callable[[Column, T.DataType], Column]:
     return fn
 
 
-def _pattern_pred(pattern: str, force_python: bool) -> Callable:
-    """ECMA pattern predicate.  Fast path: the ECMA->Java translation
-    (schema/ecma.py) runs as JVM rlike — `$`, `.`, `\\cX`, `\\u{..}`,
-    named groups and empty classes are all rewritten to exact Java
-    equivalents, so the JVM path carries ECMA semantics instead of
-    approximating them.  An ECMA-invalid pattern compiles to no check
-    (the interpreter's c_pattern ignores it identically)."""
+def _pattern_pred(pattern: str) -> Callable:
+    """ECMA pattern predicate as JVM rlike: the ECMA->Java translation
+    (schema/ecma.py) rewrites `$`, `.`, `\\cX`, `\\u{..}`, named groups
+    and empty classes to exact Java equivalents, so the JVM path
+    carries ECMA semantics instead of approximating them.  An
+    ECMA-invalid pattern compiles to no check (the interpreter's
+    c_pattern ignores it identically)."""
     import re as _re
 
     from m3spark.schema.ecma import java_pattern
 
     if pattern.startswith("$format:"):
         # reference extension (property.cljc:705-710): pattern delegates
-        # to a format checker
-        fmt = pattern[len("$format:"):]
-        if FORMATS.get(fmt) is None:
-            fn = lambda col, dt: F.lit(True)  # noqa: E731 (unknown: no-op)
-            fn._jvm = True
-            return fn
-        return _format_pred(fmt)
-    if not force_python:
-        try:
-            jpat = java_pattern(pattern)
-        except _re.error:
-            # ECMA-invalid: both engines ignore the keyword
-            fn = lambda col, dt: F.lit(True)  # noqa: E731
-            fn._jvm = True
-            return fn
-        fn = lambda col, dt: col.rlike(jpat)  # noqa: E731
-        fn._jvm = True
-        return fn
-
-    def pat_check(s: pd.Series) -> pd.Series:
-        from m3spark.schema.core import compile_ecma_pattern  # noqa: PLC0415
-        try:
-            rx = compile_ecma_pattern(pattern)
-        except _re.error:
-            return s.map(lambda x: None if x is None else True)
-        return s.map(lambda x: None if x is None else rx.search(x) is not None)
-
-    fn = lambda col, dt: _py_pred(pat_check, col)  # noqa: E731
-    fn._jvm = False
-    return fn
+        # to a format checker (unknown format: no-op)
+        return _format_pred(pattern[len("$format:"):])
+    try:
+        jpat = java_pattern(pattern)
+    except _re.error:
+        # ECMA-invalid: both engines ignore the keyword
+        return lambda col, dt: F.lit(True)
+    return lambda col, dt: col.rlike(jpat)
 
 
 def _py_pred(check: Callable[[pd.Series], pd.Series], col: Column) -> Column:
@@ -304,19 +274,64 @@ class ColumnarValidator:
 
     def __init__(self, schema: dict, draft: str | None = None,
                  format_assertion: bool | None = None,
-                 force_python_patterns: bool = False,
-                 strict: bool = True,
-                 meta_validate: bool = True,
                  ref_unroll: int | None = None,
-                 inline_refs: bool = True,
                  registry: dict | None = None,
                  uri_dirs: dict | None = None):
-        self.schema = schema
-        self.draft = draft or draft_of(schema)
+        draft = draft or draft_of(schema)
         if format_assertion is None:
-            format_assertion = not _ge(self.draft, D2019)
+            format_assertion = not _ge(draft, D2019)
+        self._setup(schema, draft, format_assertion)
+        registry = dict(registry or {})
+        # custom-dialect guard: a registry meta-schema carrying
+        # $vocabulary restricts the ACTIVE keyword set (core.py
+        # _meta_vocabulary / vocabulary.dialect_keywords) — the interp
+        # honors it, this compiler does not filter keywords, so route
+        # such schemas to the interp rather than over-enforce
+        if isinstance(schema, dict):
+            s_uri = schema.get("$schema")
+            if (isinstance(s_uri, str)
+                    and s_uri.rstrip("#") not in _SCHEMA_URI_TO_DRAFT):
+                meta = (registry.get(s_uri)
+                        or registry.get(s_uri.rstrip("#")))
+                if (isinstance(meta, dict)
+                        and isinstance(meta.get("$vocabulary"), dict)):
+                    raise UnsupportedKeyword(
+                        "custom $vocabulary dialect restricts active "
+                        "keywords; use m3spark.sparkval.validate_json")
+        # validate-m2 parity with the interpreter (core.py): an invalid
+        # schema compiles to a plan that flags EVERY row with the
+        # meta-error instead of silently lenient checks
+        self.meta_errors = meta_validate_schema(schema, draft, registry)
+        if self.meta_errors:
+            msg = self.meta_errors[0].message
+            n = len(self.meta_errors)
+            if n > 1:
+                msg += f" (+{n - 1} more meta-errors)"
+            self._add(self._ROW_CHECK, "$schema", "", msg, "error",
+                      lambda col, dtypes: F.lit(False), null_passes=False)
+            return
+        # eager driver-side $ref/$defs inlining (SURVEY §2.8): acyclic
+        # local refs expand before compilation so the common reuse idiom
+        # stays pure JVM; productive cycles unroll with a depth guard;
+        # anything the inliner can't do safely (external refs,
+        # $dynamicRef/$recursiveRef, non-productive cycles) keeps the
+        # original schema and routes to the interp via UnsupportedKeyword
+        # below.
+        self._compile_root(inline_local_refs(schema, draft,
+                                             unroll=ref_unroll,
+                                             registry=registry,
+                                             uri_dirs=uri_dirs))
+        if self.unsupported:
+            raise UnsupportedKeyword(
+                f"columnar compiler cannot lower: {self.unsupported}; "
+                f"use m3spark.sparkval.validate_json for these")
+
+    def _setup(self, schema, draft: str, format_assertion: bool):
+        """State shared by a root validator and the fragment validators
+        :meth:`_sub_checks` builds."""
+        self.schema = schema
+        self.draft = draft
         self.format_assertion = format_assertion
-        self._force_py = force_python_patterns
         self.checks: list[Check] = []
         self.unsupported: list[str] = []
         # shared subexpressions bound ONCE per row in a projection below
@@ -332,58 +347,6 @@ class ColumnarValidator:
         # predicate (whose synthetic columns never hit a real plan).
         self.derived: dict = {}
         self._avail: set = set()
-        # validate-m2 parity with the interpreter (core.py): an invalid
-        # schema compiles to a plan that flags EVERY row with the
-        # meta-error instead of silently lenient checks
-        self.registry = dict(registry or {})
-        self.uri_dirs = dict(uri_dirs or {})
-        # custom-dialect guard: a registry meta-schema carrying
-        # $vocabulary restricts the ACTIVE keyword set (core.py
-        # _meta_vocabulary / vocabulary.dialect_keywords) — the interp
-        # honors it, this compiler does not filter keywords, so route
-        # such schemas to the interp rather than over-enforce
-        if isinstance(schema, dict):
-            s_uri = schema.get("$schema")
-            if (isinstance(s_uri, str)
-                    and s_uri.rstrip("#") not in _SCHEMA_URI_TO_DRAFT):
-                meta = (self.registry.get(s_uri)
-                        or self.registry.get(s_uri.rstrip("#")))
-                if (isinstance(meta, dict)
-                        and isinstance(meta.get("$vocabulary"), dict)):
-                    raise UnsupportedKeyword(
-                        "custom $vocabulary dialect restricts active "
-                        "keywords; use m3spark.sparkval.validate_json")
-        self.meta_errors = (meta_validate_schema(schema, self.draft,
-                                                 self.registry)
-                            if meta_validate else [])
-        if self.meta_errors:
-            msg = self.meta_errors[0].message
-            n = len(self.meta_errors)
-            if n > 1:
-                msg += f" (+{n - 1} more meta-errors)"
-            self._add(self._ROW_CHECK, "$schema", "", msg, "error",
-                      lambda col, dtypes: F.lit(False), null_passes=False)
-            return
-        # eager driver-side $ref/$defs inlining (SURVEY §2.8): acyclic
-        # local refs expand before compilation so the common reuse idiom
-        # stays pure JVM; productive cycles unroll with a depth guard;
-        # anything the inliner can't do safely (external refs,
-        # $dynamicRef/$recursiveRef, non-productive cycles) keeps the
-        # original schema and routes to the interp via UnsupportedKeyword
-        # below.  Inner validators over fragments pass inline_refs=False:
-        # a fragment's `#` pointers address the ORIGINAL root, which the
-        # fragment no longer knows — any $ref the root-level inline left
-        # behind must stay an unsupported keyword, never re-resolve
-        # against the fragment-as-root.
-        self._compile_root(inline_local_refs(schema, self.draft,
-                                             unroll=ref_unroll,
-                                             registry=self.registry,
-                                             uri_dirs=self.uri_dirs)
-                           if inline_refs else schema)
-        if strict and self.unsupported:
-            raise UnsupportedKeyword(
-                f"columnar compiler cannot lower: {self.unsupported}; "
-                f"use m3spark.sparkval.validate_json for these")
 
     # -- compilation --------------------------------------------------------
 
@@ -861,38 +824,54 @@ class ColumnarValidator:
         self.checks.append(Check(self._ROW_CHECK, keyword, sp, msg,
                                  "error", build, doc_path=""))
 
+    def _sub_checks(self, frag, sp, name="_e", errors_only=False,
+                    jvm_only=False) -> list[Check]:
+        """The checks of subschema ``frag``, compiled with this
+        validator's draft and format_assertion — the one place a
+        fragment compiles.  ``frag`` compiles as property ``name`` of a
+        flat table, or as the row schema itself when ``name`` is None.
+        No meta-validation (the root already validated every subschema)
+        and no ref inlining: a fragment's `#` pointers address the
+        ORIGINAL root, so any $ref the root-level inline left behind
+        stays an unsupported keyword.  What the fragment cannot lower is
+        added to this validator's ``unsupported``, and every schema path
+        is rebased onto ``sp``.  ``errors_only`` drops warning-level
+        checks (branch-success semantics: warnings never fail an
+        in-place applicator); ``jvm_only`` drops pandas-UDF checks,
+        which cannot run inside a higher-order-function lambda, a
+        getField descent or a branch predicate, and reports each as
+        unsupported."""
+        if frag is True or frag == {}:
+            return []
+        root = frag if name is None else {"properties": {name: frag}}
+        prefix = "" if name is None else f"/properties/{name}"
+        inner = ColumnarValidator.__new__(ColumnarValidator)
+        inner._setup(root, self.draft, self.format_assertion)
+        inner._compile_root(root)
+        self.unsupported.extend(sp + u.removeprefix(prefix)
+                                for u in inner.unsupported)
+        out = []
+        for c in inner.checks:
+            path = sp + c.schema_path.removeprefix(prefix)
+            if errors_only and c.level != "error":
+                continue
+            if jvm_only and not getattr(c.build, "_jvm", True):
+                self.unsupported.append(
+                    f"{path} (pandas-UDF check inside a nested or branch "
+                    f"predicate — not lowerable to a JVM expression)")
+                continue
+            out.append(replace(c, schema_path=path))
+        return out
+
     def _row_pred(self, fragment, sp, errors_only=False):
         """Compile an object-schema fragment into a row-level predicate
-        fn(dtypes) -> Column (True = row satisfies the fragment).
-        ``errors_only`` skips warning-level checks (branch-success
-        semantics: warnings never fail an in-place applicator)."""
-        if fragment is True or fragment == {}:
-            return lambda dtypes: F.lit(True)
+        fn(dtypes) -> Column (True = row satisfies the fragment)."""
         if fragment is False:
             return lambda dtypes: F.lit(False)
-        inner = ColumnarValidator(fragment, draft=self.draft,
-                                  format_assertion=self.format_assertion,
-                                  strict=False, inline_refs=False)
-        self.unsupported.extend(f"{sp}{u}" for u in inner.unsupported)
-        checks = [c for c in inner.checks
-                  if not errors_only or c.level == "error"]
-
-        def pred(dtypes):
-            parts = []
-            for c in checks:
-                if c.column == self._ROW_CHECK:
-                    parts.append(c.build(None, dtypes))
-                elif c.column not in dtypes:
-                    # only TOP-LEVEL required (doc_path "") fails on an
-                    # absent column; nested required passes (its parent
-                    # property is missing)
-                    parts.append(F.lit(not (c.keyword == "required"
-                                            and c.doc_path == "")))
-                else:
-                    parts.append(c.build(F.col(c.column), dtypes[c.column])
-                                  .eqNullSafe(True))
-            return _reduce_and(parts)
-        return pred
+        checks = self._sub_checks(fragment, sp, name=None,
+                                  errors_only=errors_only)
+        return lambda dtypes: _reduce_and(
+            [self._check_ok(c, dtypes).eqNullSafe(True) for c in checks])
 
     def _required_builder(self):
         return lambda col, dt: col.isNotNull()
@@ -933,7 +912,6 @@ class ColumnarValidator:
                     f"recursive $ref {_r!r}: column type nests deeper "
                     f"than the unrolled plan (raise M3SPARK_REF_UNROLL "
                     f"or use m3spark.sparkval.validate_json)")
-            build_guard._jvm = True
             self._add(name, "$ref", f"{sp}/$ref",
                       "recursion beyond unroll depth", "error",
                       build_guard, null_passes=False)
@@ -1082,7 +1060,7 @@ class ColumnarValidator:
             pat = sub["pattern"]
             self._add(name, "pattern", f"{sp}/pattern",
                       f"string does not match {pat!r}", "error",
-                      _string_only(_pattern_pred(pat, self._force_py)))
+                      _string_only(_pattern_pred(pat)))
         if isinstance(sub.get("format"), str):
             fmt = sub["format"]
             level = "error" if self.format_assertion else "warning"
@@ -1119,12 +1097,8 @@ class ColumnarValidator:
                 self._compile_combinator(name, "allOf", subs,
                                          f"{sp}/extends")
         if isinstance(sub.get("not"), dict) and _ge(draft, DRAFT4):
-            inner = ColumnarValidator({"properties": {name: sub["not"]}},
-                                      draft=self.draft,
-                                      format_assertion=self.format_assertion,
-                                      strict=False, inline_refs=False)
-            self.unsupported.extend(inner.unsupported)
-            builders = [c.build for c in inner.checks]
+            builders = [c.build for c in self._sub_checks(
+                sub["not"], f"{sp}/not", name=name)]
             self._add(name, "not", f"{sp}/not", "value matches 'not' schema",
                       "error",
                       lambda col, dt, _b=builders: ~_reduce_and(
@@ -1303,7 +1277,7 @@ class ColumnarValidator:
                     | _keep(_variant_cast(v, "string"), _n)))
         if isinstance(frag.get("pattern"), str):
             pat = frag["pattern"]
-            pred = _pattern_pred(pat, self._force_py)
+            pred = _pattern_pred(pat)
             if not getattr(pred, "_jvm", True):
                 self.unsupported.append(
                     f"{sp}/pattern (python-only regex inside "
@@ -1444,23 +1418,8 @@ class ColumnarValidator:
     def _nested_builders(self, frag, sp) -> list:
         """Compile a subschema fragment into JVM-only builders usable
         inside higher-order-function lambdas (SURVEY §2.5 Spark
-        primitives: forall/exists/filter).  Pandas-UDF-backed checks
-        cannot execute per-element, so they are flagged unsupported."""
-        inner = ColumnarValidator({"properties": {"_e": frag}},
-                                  draft=self.draft,
-                                  format_assertion=self.format_assertion,
-                                  strict=False, inline_refs=False)
-        self.unsupported.extend(
-            u.replace("/properties/_e", sp) for u in inner.unsupported)
-        builders = []
-        for c in inner.checks:
-            if not getattr(c.build, "_jvm", True):
-                self.unsupported.append(
-                    f"{sp}/{c.keyword} (pandas-UDF check inside nested "
-                    f"element — not lowerable to a HOF lambda)")
-                continue
-            builders.append(c.build)
-        return builders
+        primitives: forall/exists/filter)."""
+        return [c.build for c in self._sub_checks(frag, sp, jvm_only=True)]
 
     def _compile_array_keywords(self, name: str, sub: dict, sp: str):
         """Array keywords over typed array<T> columns as higher-order
@@ -1819,26 +1778,13 @@ class ColumnarValidator:
         from m3spark.schema.uris import join_pointer
 
         psp = f"{sp}/properties/{pname}"
-        inner = ColumnarValidator({"properties": {"_e": pschema}},
-                                  draft=self.draft,
-                                  format_assertion=self.format_assertion,
-                                  force_python_patterns=self._force_py,
-                                  strict=False, inline_refs=False)
-        self.unsupported.extend(u.replace("/properties/_e", psp, 1)
-                                for u in inner.unsupported)
-        for ic in inner.checks:
-            if not getattr(ic.build, "_jvm", True):
-                self.unsupported.append(
-                    f"{psp}/{ic.keyword} (pandas-UDF check inside a "
-                    f"nested field — not lowerable to getField descent)")
-                continue
+        for ic in self._sub_checks(pschema, psp, jvm_only=True):
 
             def build(col, dt, _p=pname, _b=ic.build):
                 f, ft = _struct_field(col, dt, _p)
                 if f is None:
                     return F.lit(True)
                 return F.when(f.isNull(), F.lit(True)).otherwise(_b(f, ft))
-            build._jvm = True
 
             def value_of(col, dt, _p=pname, _iv=ic.value_of):
                 f, ft = _struct_field(col, dt, _p)
@@ -1848,9 +1794,8 @@ class ColumnarValidator:
 
             idp = ic.doc_path if ic.doc_path is not None else "/_e"
             self.checks.append(Check(
-                name, ic.keyword,
-                ic.schema_path.replace("/properties/_e", psp, 1),
-                ic.message, ic.level, build,
+                name, ic.keyword, ic.schema_path, ic.message, ic.level,
+                build,
                 doc_path=join_pointer("", name, pname) + idp[len("/_e"):],
                 value_of=value_of))
 
@@ -2144,54 +2089,17 @@ class ColumnarValidator:
         """fn(col, dt) -> branch-success Column for a property-level
         fragment (error-level checks only: warnings don't fail a
         branch, matching the interpreter's in-place applicators)."""
-        if frag is True or frag == {}:
-            return lambda col, dt: F.lit(True)
-        if frag is False:
-            return lambda col, dt: F.lit(False)
-        inner = ColumnarValidator({"properties": {"_e": frag}},
-                                  draft=self.draft,
-                                  format_assertion=self.format_assertion,
-                                  strict=False, inline_refs=False)
-        self.unsupported.extend(
-            u.replace("/properties/_e", sp) for u in inner.unsupported)
-        builders = []
-        for c in inner.checks:
-            if c.level != "error":
-                continue
-            if not getattr(c.build, "_jvm", True):
-                self.unsupported.append(
-                    f"{sp}/{c.keyword} (pandas-UDF check inside an "
-                    f"unevaluated* branch predicate)")
-                continue
-            builders.append(c.build)
-        return lambda col, dt, _b=tuple(builders): _reduce_and(
-            [bb(col, dt).eqNullSafe(True) for bb in _b])
+        builders = self._error_builders(frag, sp)
+        return lambda col, dt: _reduce_and(
+            [bb(col, dt).eqNullSafe(True) for bb in builders])
 
     def _error_builders(self, frag, sp):
         """JVM error-level builders for a fragment (the unevaluated*
-        value-schema check), with the same pandas-UDF escape hatch as
-        _nested_builders."""
-        if frag is True or frag == {}:
-            return ()
+        value-schema check and branch predicates)."""
         if frag is False:
             return (lambda col, dt: F.lit(False),)
-        inner = ColumnarValidator({"properties": {"_e": frag}},
-                                  draft=self.draft,
-                                  format_assertion=self.format_assertion,
-                                  strict=False, inline_refs=False)
-        self.unsupported.extend(
-            u.replace("/properties/_e", sp) for u in inner.unsupported)
-        out = []
-        for c in inner.checks:
-            if c.level != "error":
-                continue
-            if not getattr(c.build, "_jvm", True):
-                self.unsupported.append(
-                    f"{sp}/{c.keyword} (pandas-UDF check inside "
-                    f"unevaluated* value schema)")
-                continue
-            out.append(c.build)
-        return tuple(out)
+        return tuple(c.build for c in self._sub_checks(
+            frag, sp, errors_only=True, jvm_only=True))
 
     def _claimed_field(self, claims, fname, col, dt):
         """Boolean Column: struct field ``fname`` is evaluated."""
@@ -2392,33 +2300,21 @@ class ColumnarValidator:
             # first-class checks with their precise inner schema paths —
             # the interpreter propagates inner violations verbatim
             # (core.py c_all_of), and the flat form also keeps each
-            # predicate in the same codegen stage with no wrapper expr
+            # predicate in the same codegen stage with no wrapper expr.
+            # A flattened check renders the whole column as its value:
+            # its value_of navigator is not kept
             for i, s in enumerate(subs):
-                inner = ColumnarValidator(
-                    {"properties": {name: s}}, draft=self.draft,
-                    format_assertion=self.format_assertion, strict=False, inline_refs=False)
-                self.unsupported.extend(inner.unsupported)
-                for c in inner.checks:
-                    self.checks.append(Check(
-                        c.column, c.keyword,
-                        c.schema_path.replace(f"/properties/{name}",
-                                              f"{sp}/{i}", 1),
-                        c.message, c.level, c.build, c.doc_path))
+                self.checks.extend(
+                    replace(c, value_of=None)
+                    for c in self._sub_checks(s, f"{sp}/{i}", name=name))
             return
-        groups = []
-        for i, s in enumerate(subs):
-            inner = ColumnarValidator({"properties": {name: s}},
-                                      draft=self.draft,
-                                      format_assertion=self.format_assertion,
-                                      strict=False, inline_refs=False)
-            self.unsupported.extend(inner.unsupported)
-            groups.append([c.build for c in inner.checks])
+        groups = [[c.build for c in self._sub_checks(s, f"{sp}/{i}",
+                                                     name=name)]
+                  for i, s in enumerate(subs)]
 
         def build(col, dt, _g=groups, _comb=comb):
             branch = [_reduce_and([b(col, dt) for b in builders])
                       for builders in _g]
-            if _comb == "allOf":
-                return _reduce_and(branch)
             if _comb == "anyOf":
                 return _reduce_or(branch)
             total = None

@@ -18,6 +18,7 @@ import json
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from m3spark.checks import uniqueness_violations
 from m3spark.columnar import ColumnarValidator
 from m3spark.memo import expr_memo
 from m3spark.pages import PAGES_SCHEMA
@@ -146,12 +147,9 @@ def validate_pages(pages: DataFrame, schema: dict | None = None,
                           .where(ex["hviols_nonempty"]))
         viol = viol.unionByName(violation_rows(slim_heavy, keys, "hviols"))
     if with_uniqueness:
-        dups = (pages.groupBy(F.col(key_col))
-                     .agg(ex["dup_count"])
-                     .filter(F.col("dup_count") > 1))
         # a key duplicated ACROSS partitions has no single partition_key
         # (filled null by allowMissingColumns)
-        viol = viol.unionByName(dups.select(*ex["dup_select"]),
+        viol = viol.unionByName(uniqueness_violations(pages, key_col),
                                 allowMissingColumns=True)
 
     totals = pages.groupBy(ex["pk"]).agg(ex["rows_scanned"])
@@ -203,19 +201,9 @@ def _pipe_exprs(key_col: str, partition_expr: str, heavy: list) -> dict:
     ex = {
         "pk": F.expr(partition_expr).alias("partition_key"),
         "rows_scanned": F.count(F.lit(1)).alias("rows_scanned"),
-        "dup_count": F.count(F.lit(1)).alias("dup_count"),
         "passed": F.col("invalid_rows") == 0,
         "hviols_nonempty": F.size("hviols") > 0,
     }
-    ex["dup_select"] = [
-        F.col(key_col),
-        F.lit("uniqueItems").alias("keyword"),
-        F.lit("/uniqueItems").alias("schema_path"),
-        F.lit("/" + key_col).alias("doc_path"),
-        F.concat(F.lit("duplicate key: "),
-                 F.col("dup_count").cast("string"),
-                 F.lit(" occurrences")).alias("message"),
-        F.lit("error").alias("level")]
     ex["viol_agg"] = [
         F.sum((~F.col("valid")).cast("long")).alias("_invalid"),
         F.sum(F.size(F.col("violations"))).alias("_vcount")]

@@ -23,6 +23,9 @@ ROOT = pathlib.Path(__file__).resolve().parent.parent
 
 SCHEMA = {"type": "object", "required": ["a", "b", "z"],
           "properties": {"b": {"type": "string", "pattern": "^x"}}}
+# `hostname` has no JVM form: its check is a Python UDF
+UDF_SCHEMA = {"type": "object", "required": ["a", "b", "z"],
+              "properties": {"b": {"type": "string", "format": "hostname"}}}
 
 
 def _violations(cv, df, prefilter):
@@ -72,12 +75,12 @@ def run(spark, cv):
         "violations": sorted(map(str, res["violations"].collect()))}
 
 spark = start()
-cv = ColumnarValidator(SCHEMA, force_python_patterns=True)
+cv = ColumnarValidator(SCHEMA, format_assertion=True)
 pipe_before, before = run(spark, cv)
 spark.stop()
 spark = start()
 pipe_after, after = run(spark, cv)
-_, fresh = run(spark, ColumnarValidator(SCHEMA, force_python_patterns=True))
+_, fresh = run(spark, ColumnarValidator(SCHEMA, format_assertion=True))
 spark.stop()
 print("RESULT " + json.dumps({
     "same": before == after == fresh,
@@ -86,7 +89,7 @@ print("RESULT " + json.dumps({
 
 
 def test_session_restart_rebuilds_memoized_columns():
-    """A validator with Python-UDF patterns and a ``validate_pages`` call
+    """A validator with a Python-UDF format and a ``validate_pages`` call
     made before ``spark.stop()``: after ``get_spark`` starts a new
     session, every Column is rebuilt under the new SparkContext (no
     accumulator of the stopped one is touched) and results equal a
@@ -94,7 +97,7 @@ def test_session_restart_rebuilds_memoized_columns():
     env = dict(os.environ, PYTHONPATH=str(ROOT),
                SPARK_DRIVER_MEMORY="1g")
     proc = subprocess.run(
-        [sys.executable, "-c", RESTART_SCRIPT % json.dumps(SCHEMA)],
+        [sys.executable, "-c", RESTART_SCRIPT % json.dumps(UDF_SCHEMA)],
         cwd=ROOT, env=env, capture_output=True, text=True, timeout=600)
     assert proc.returncode == 0, proc.stderr[-4000:]
     line = [ln for ln in proc.stdout.splitlines()

@@ -10,7 +10,7 @@ from m3spark.pages import PAGES_SCHEMA, extract_text, generate_pages
 from m3spark.pipeline import validate_pages
 from m3spark.checks import (
     CheckpointStore, column_stats, drift_report, duplicate_keys,
-    partition_stats, referential_violations, run_resumable,
+    partition_stats, referential_violations, run_resumable_batched,
 )
 
 N = 20_000
@@ -178,38 +178,48 @@ def test_drift(spark, pages):
 
 
 def test_resumability(tmp_path, spark, pages):
-    """Kill-and-restart skips checkpointed partitions (FIXTURES.md §7)."""
+    """Kill-and-restart skips checkpointed partitions (FIXTURES.md §7):
+    one partition per chunk, and the 4th chunk crashes."""
     store = CheckpointStore(spark, str(tmp_path / "ckpt"))
     df = pages.withColumn("day", F.to_date("warc_ts"))
-    res = validate_pages(pages)["rows"]
 
-    def validate_partition(part_df):
-        n = part_df.count()
-        return n, n  # rows, "violations" (count only; shape test)
+    def crashing_on(chunk):
+        calls = {"n": 0}
+
+        def validate_batch(chunk_df):
+            calls["n"] += 1
+            if calls["n"] == chunk:
+                raise RuntimeError("simulated failure")
+            rows = (chunk_df.groupBy("day")
+                            .agg(F.count(F.lit(1)).alias("n")).collect())
+            return {r["day"]: (r["n"], r["n"]) for r in rows}
+        return validate_batch
 
     with pytest.raises(RuntimeError, match="simulated failure"):
-        run_resumable(df, "day", store, "snap1", validate_partition,
-                      fail_after=3)
-    out = run_resumable(df, "day", store, "snap1", validate_partition)
+        run_resumable_batched(df, "day", store, "snap1", crashing_on(4),
+                              batch_size=1)
+    assert len(store.completed("snap1")) == 3
+    out = run_resumable_batched(df, "day", store, "snap1", crashing_on(None),
+                                batch_size=1)
     assert len(out["skipped"]) == 3
     assert len(out["validated"]) == 30 - 3
+    assert not set(out["skipped"]) & set(out["validated"])
     lineage = store.lineage()
     assert lineage.count() == 30
+    assert lineage.agg(F.sum("rows_scanned")).head()[0] == N
     assert set(lineage.columns) >= {
         "snapshot_id", "partition_spec", "rows_scanned", "violations",
         "wall_time_s"}
     # a fresh snapshot id revalidates everything (nothing skipped)
     with pytest.raises(RuntimeError, match="simulated failure"):
-        run_resumable(df, "day", store, "snap2", validate_partition,
-                      fail_after=1)
+        run_resumable_batched(df, "day", store, "snap2", crashing_on(2),
+                              batch_size=1)
     assert len(store.completed("snap2")) == 1
 
 
 def test_resumability_batched(tmp_path, spark, pages):
     """Chunked mode: one filtered job per chunk, per-partition lineage,
     restart skips whole chunks already recorded."""
-    from m3spark.checks import run_resumable_batched
-
     store = CheckpointStore(spark, str(tmp_path / "ckpt_b"))
     df = pages.withColumn("day", F.to_date("warc_ts"))
 
