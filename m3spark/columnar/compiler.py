@@ -22,6 +22,7 @@ north-star's "regex/format checks batched, never per-row Python".
 
 from __future__ import annotations
 
+import re
 from dataclasses import dataclass, replace
 from decimal import Decimal
 from fractions import Fraction
@@ -36,9 +37,11 @@ from pyspark.sql import types as T
 from m3spark.columnar.inline import UNROLL_GUARD_KEY, inline_local_refs
 from m3spark.memo import expr_memo
 from m3spark.schema.core import (
-    DNEXT, DRAFT3, DRAFT4, DRAFT6, DRAFT7, D2019, D2020,
-    _SCHEMA_URI_TO_DRAFT, _ge, draft_of, meta_validate_schema,
+    _KEYWORDS, _SCHEMA_URI_TO_DRAFT, D2019, D2020, DNEXT, DRAFT3, DRAFT4,
+    DRAFT7, CompiledSchema, _ge, compile_ecma_pattern, draft_of,
+    meta_validate_schema,
 )
+from m3spark.schema.ecma import java_pattern
 from m3spark.schema.formats import (
     FORMATS, IPV6_PATTERN, SPARK_RLIKE, URI_BAD_PCT_PATTERN,
     URI_CHARSET_PATTERN, URI_SCHEME_PATTERN,
@@ -53,7 +56,8 @@ class UnsupportedKeyword(Exception):
 
 @dataclass
 class Check:
-    """One compiled constraint: a builder producing an 'ok' predicate."""
+    """One compiled constraint: a builder producing an 'ok' predicate
+    from (column, its type), or from (None, row type) for a row check."""
     column: str
     keyword: str
     schema_path: str
@@ -243,17 +247,13 @@ def _pattern_pred(pattern: str) -> Callable:
     carries ECMA semantics instead of approximating them.  An
     ECMA-invalid pattern compiles to no check (the interpreter's
     c_pattern ignores it identically)."""
-    import re as _re
-
-    from m3spark.schema.ecma import java_pattern
-
     if pattern.startswith("$format:"):
         # reference extension (property.cljc:705-710): pattern delegates
         # to a format checker (unknown format: no-op)
         return _format_pred(pattern[len("$format:"):])
     try:
         jpat = java_pattern(pattern)
-    except _re.error:
+    except re.error:
         # ECMA-invalid: both engines ignore the keyword
         return lambda col, dt: F.lit(True)
     return lambda col, dt: col.rlike(jpat)
@@ -274,7 +274,7 @@ class ColumnarValidator:
 
     def __init__(self, schema: dict, draft: str | None = None,
                  format_assertion: bool | None = None,
-                 ref_unroll: int | None = None,
+                 ref_unroll: int = 8,
                  registry: dict | None = None,
                  uri_dirs: dict | None = None):
         draft = draft or draft_of(schema)
@@ -285,8 +285,9 @@ class ColumnarValidator:
         # custom-dialect guard: a registry meta-schema carrying
         # $vocabulary restricts the ACTIVE keyword set (core.py
         # _meta_vocabulary / vocabulary.dialect_keywords) — the interp
-        # honors it, this compiler does not filter keywords, so route
-        # such schemas to the interp rather than over-enforce
+        # honors it, this compiler filters by the draft's keyword table
+        # only, so route such schemas to the interp rather than
+        # over-enforce
         if isinstance(schema, dict):
             s_uri = schema.get("$schema")
             if (isinstance(s_uri, str)
@@ -308,7 +309,7 @@ class ColumnarValidator:
             if n > 1:
                 msg += f" (+{n - 1} more meta-errors)"
             self._add(self._ROW_CHECK, "$schema", "", msg, "error",
-                      lambda col, dtypes: F.lit(False), null_passes=False)
+                      lambda col, row: F.lit(False), null_passes=False)
             return
         # eager driver-side $ref/$defs inlining (SURVEY §2.8): acyclic
         # local refs expand before compilation so the common reuse idiom
@@ -381,12 +382,30 @@ class ColumnarValidator:
         "extends", "propertyDependencies",
     }
 
-    _ROW_CHECK = ""  # Check.column sentinel: build receives (None, dtypes)
+    _ROW_CHECK = ""  # Check.column sentinel: build receives (None, row type)
+    # keywords a checker reads beside its own (c_if's then/else,
+    # c_contains's min/maxContains) and the inliner's unroll cut
+    _COMPANIONS = frozenset({"then", "else", "minContains", "maxContains",
+                             UNROLL_GUARD_KEY})
+
+    def _active(self, sub: dict) -> dict:
+        """``sub`` without the keywords its draft does not define.  The
+        interpreter's own keyword table (``_KEYWORDS[draft]``) decides
+        what compiles, so a keyword checks in both engines or in
+        neither (vocabulary.cljc:193-565 analog)."""
+        table = _KEYWORDS[self.draft]
+        return {k: v for k, v in sub.items()
+                if k in table or k in self._COMPANIONS}
 
     def _compile_root(self, schema: dict, sp: str = ""):
+        """The table row: an object whose fields are the columns.
+        Top-level ``required`` and ``properties`` become per-column
+        checks; every other object keyword compiles through
+        :meth:`_compile_object`, as a struct or map column's does."""
         for k in schema:
             if k not in self._ROOT_KEYWORDS:
                 self.unsupported.append(k)
+        schema = self._active(schema)
         req = schema.get("required")
         if isinstance(req, list):
             for name in req:
@@ -402,427 +421,159 @@ class ColumnarValidator:
         if isinstance(props, dict):
             for name, sub in props.items():
                 self._compile_property(name, sub, f"{sp}/properties/{name}")
-        # root-level additionalProperties over the FLAT table: a column
-        # not named by the adjacent `properties` is an "additional"
-        # property — present (non-NULL) values must be allowed / satisfy
-        # the AP schema.  This also makes every branch predicate built
-        # via _row_pred enforce AP, which is what lets _root_claims map
-        # `additionalProperties` to an all_keys claim soundly (the claim
-        # only counts when the branch — including its AP check —
-        # succeeds).
-        # root-level patternProperties over the FLAT table: column names
-        # are static, so the ECMA match runs at compile/build time with
-        # the engine's own matcher (struct path does the same)
-        root_rx = [rx for _, rx in self._claim_patterns(schema)]
-        pp = schema.get("patternProperties")
-        if isinstance(pp, dict):
-            for pat, psch in pp.items():
-                if psch is True or psch == {}:
-                    continue
-                if not isinstance(psch, (dict, bool)):
-                    continue
-                try:
-                    from m3spark.schema.core import compile_ecma_pattern
-                    rx = compile_ecma_pattern(pat)
-                except Exception:
-                    continue  # ECMA-invalid: keyword ignored (c_pattern)
-                psp = f"{sp}/patternProperties/{pat}"
-                pb = ((lambda col, dt: F.lit(False),) if psch is False
-                      else self._error_builders(psch, psp))
-                if not pb:
-                    continue
+        self._compile_object(self._ROW_CHECK, schema, sp)
 
-                def build_pp_root(_col, dtypes, _rx=rx, _b=tuple(pb)):
-                    oks = []
-                    for cname, cdt in dtypes.items():
-                        if not _rx.search(cname):
-                            continue
-                        v = F.col(cname)
-                        oks.append(v.isNull() | _reduce_and(
-                            [bb(v, cdt).eqNullSafe(True) for bb in _b]))
-                    return _reduce_and(oks)
+    def _compile_object(self, name: str, sub: dict, sp: str):
+        """The object keywords of ``sub`` at one object position: the
+        table row (``name`` is ``_ROW_CHECK``; builders get ``(None, row
+        type)`` and read the columns) or column ``name`` (builders get
+        the column and its type).  Struct fields and row columns are
+        static, so their names match at build time; map keys are
+        dynamic (HOFs over ``map_keys``); any other type passes — the
+        ``type`` keyword reports it (m3 analog: property.cljc:992-1095)."""
+        row = name == self._ROW_CHECK
 
-                self._row_check(
-                    "patternProperties", psp,
-                    f"value under key matching {pat!r} violates schema",
-                    build_pp_root)
-        ap = schema.get("additionalProperties")
+        def add(kw, ksp, msg, build):
+            self._add(name, kw, ksp, msg, "error", build,
+                      doc_path="" if row else None)
+
+        pats = self._claim_patterns(sub)
+        pp = sub.get("patternProperties")
+        for pat, (jpat, rx) in pats.items():
+            psch = pp[pat]
+            if psch is True or psch == {} \
+                    or not isinstance(psch, (dict, bool)):
+                continue
+            psp = f"{sp}/patternProperties/{pat}"
+            vb = self._value_builders(psch, psp)
+            if not vb:
+                continue
+
+            def build_pp(col, dt, _j=jpat, _rx=rx, _b=vb):
+                if isinstance(dt, T.MapType):
+                    # values whose KEY matches the (unanchored) pattern
+                    matched = F.map_filter(col, lambda k, v: k.rlike(_j))
+                    return F.forall(F.map_values(matched), lambda v:
+                                    _reduce_and([b(v, dt.valueType)
+                                                 for b in _b]))
+                return _reduce_and([
+                    _field_ok(_field(col, f.name), f.dataType, _b)
+                    for f in _fields(dt) if _rx.search(f.name)])
+
+            add("patternProperties", psp,
+                f"value under key matching {pat!r} violates schema",
+                build_pp)
+        ap = sub.get("additionalProperties")
         if isinstance(ap, (dict, bool)) and ap is not True and ap != {}:
-            named = frozenset(props) if isinstance(props, dict) else \
-                frozenset()
-            ab = () if ap is False else self._error_builders(
+            props = sub.get("properties")
+            named = tuple(props) if isinstance(props, dict) else ()
+            ab = () if ap is False else self._value_builders(
                 ap, f"{sp}/additionalProperties")
 
-            def build_ap_root(_col, dtypes, _n=named, _b=ab,
-                              _rx=tuple(root_rx), _false=ap is False):
+            def build_ap(col, dt, _n=named, _p=tuple(pats.values()),
+                         _b=ab, _false=ap is False):
+                if isinstance(dt, T.MapType):
+                    keys = F.map_keys(col)
+                    if _n:
+                        keys = F.array_except(
+                            keys, F.array(*[F.lit(k) for k in _n]))
+                    for jp, _ in _p:
+                        keys = F.filter(keys, _not_rlike(jp))
+                    if _false:
+                        return F.size(keys) == 0
+                    return F.forall(keys, lambda k: _reduce_and(
+                        [b(F.element_at(col, k), dt.valueType) for b in _b]))
                 oks = []
-                for cname, cdt in dtypes.items():
-                    if cname in _n or any(rx.search(cname) for rx in _rx):
+                for f in _fields(dt):
+                    if f.name in _n or any(rx.search(f.name)
+                                           for _, rx in _p):
                         continue
-                    v = F.col(cname)
+                    v = _field(col, f.name)
                     if _false:
                         oks.append(v.isNull())
                     elif _b:
-                        oks.append(v.isNull() | _reduce_and(
-                            [bb(v, cdt).eqNullSafe(True) for bb in _b]))
+                        oks.append(_field_ok(v, f.dataType, _b))
                 return _reduce_and(oks)
 
-            self._row_check(
-                "additionalProperties", f"{sp}/additionalProperties",
+            add("additionalProperties", f"{sp}/additionalProperties",
                 "additional properties are not allowed" if ap is False
-                else "additional property violates schema", build_ap_root)
-        # root propertyNames: names are the static column set; evaluate
-        # the name schema once per column on the DRIVER with the
-        # interpreter and fold the outcome to a literal per present column
-        pn = schema.get("propertyNames")
-        if isinstance(pn, (dict, bool)) and _ge(self.draft, DRAFT6) \
-                and pn is not True and pn != {}:
-            from m3spark.schema.core import CompiledSchema
+                else "additional property violates schema", build_ap)
+        for kw, most in (("minProperties", False), ("maxProperties", True)):
+            v = sub.get(kw)
+            if isinstance(v, int) and not isinstance(v, bool):
+
+                def build_np(col, dt, _v=v, _most=most):
+                    if isinstance(dt, T.MapType):
+                        n = F.size(F.map_keys(col))
+                    elif isinstance(dt, T.StructType):
+                        n = _count([_field(col, f.name).isNotNull()
+                                    for f in dt.fields])
+                    else:
+                        return F.lit(True)
+                    return n <= _v if _most else n >= _v
+
+                add(kw, f"{sp}/{kw}",
+                    f"{'more' if most else 'fewer'} than {v} properties",
+                    build_np)
+        # propertyNames: static names are judged once per field on the
+        # DRIVER by the interpreter and fold to a literal; map keys run
+        # the name schema's JVM builders
+        pn = sub.get("propertyNames")
+        if isinstance(pn, (dict, bool)) and pn is not True and pn != {}:
             pn_cs = None if pn is False else CompiledSchema(
                 pn, draft=self.draft,
                 format_assertion=self.format_assertion, meta_validate=False)
+            kb = self._value_builders(pn, f"{sp}/propertyNames")
 
-            def build_pn_root(_col, dtypes, _cs=pn_cs):
-                oks = []
-                for cname in dtypes:
-                    ok = (False if _cs is None
-                          else _cs.validate(cname).valid)
-                    oks.append(F.col(cname).isNull() | F.lit(ok))
-                return _reduce_and(oks)
+            def build_pn(col, dt, _cs=pn_cs, _b=kb):
+                if isinstance(dt, T.MapType):
+                    return F.forall(F.map_keys(col), lambda k: _reduce_and(
+                        [b(k, T.StringType()) for b in _b]))
+                return _reduce_and([
+                    _field(col, f.name).isNull()
+                    | F.lit(_cs is not None and _cs.validate(f.name).valid)
+                    for f in _fields(dt)])
 
-            self._row_check("propertyNames", f"{sp}/propertyNames",
-                            "property name violates schema", build_pn_root)
-        for kw, cmp_ok in (("minProperties", lambda n, v: n >= v),
-                           ("maxProperties", lambda n, v: n <= v)):
-            v = schema.get(kw)
-            if isinstance(v, int) and not isinstance(v, bool):
-
-                def build_np_root(_col, dtypes, _v=v, _c=cmp_ok):
-                    n = None
-                    for cname in dtypes:
-                        x = F.when(F.col(cname).isNotNull(), 1).otherwise(0)
-                        n = x if n is None else n + x
-                    if n is None:
-                        n = F.lit(0)
-                    return _c(n, F.lit(_v))
-
-                self._row_check(
-                    kw, f"{sp}/{kw}",
-                    f"{'fewer' if kw == 'minProperties' else 'more'} than "
-                    f"{v} properties", build_np_root)
-        # root-level cross-column applicators (SURVEY §2.7: the "set ops"
-        # over row predicates — when(if_pred, then_pred) etc.)
-        allof = schema.get("allOf")
-        if isinstance(allof, list):
-            for i, branch in enumerate(allof):
-                if isinstance(branch, dict):
-                    # flatten: keeps per-keyword violation granularity
-                    self._compile_root(branch, f"{sp}/allOf/{i}")
-        # draft-3 extends: conjunctive (allOf's ancestor) — flatten the
-        # same way; unknown keyword in every other draft (interp parity)
-        ext = schema.get("extends")
-        if self.draft == DRAFT3 and ext is not None:
-            branches = ext if isinstance(ext, list) else [ext]
-            for i, branch in enumerate(branches):
-                if isinstance(branch, dict):
-                    self._compile_root(branch, f"{sp}/extends/{i}")
-        # draft-next propertyDependencies: property p holding STRING
-        # value v triggers the (p, v) schema (c_property_dependencies)
-        pdeps = schema.get("propertyDependencies")
-        if isinstance(pdeps, dict) and _ge(self.draft, DNEXT):
-            for prop, m in pdeps.items():
-                if not isinstance(m, dict):
-                    continue
-                for sval, s in m.items():
-                    if not isinstance(s, (dict, bool)) \
-                            or not isinstance(sval, str):
-                        continue
-                    psp = f"{sp}/propertyDependencies/{prop}/{sval}"
-                    pred = self._row_pred(s, psp, errors_only=True)
-
-                    def build_pd(_col, dtypes, _p=prop, _v=sval,
-                                 _pred=pred):
-                        if _p in dtypes and isinstance(dtypes[_p],
-                                                       T.StringType):
-                            trig = F.col(_p) == F.lit(_v)
-                        else:
-                            trig = F.lit(False)
-                        return F.when(trig,
-                                      _pred(dtypes).eqNullSafe(True)) \
-                                .otherwise(F.lit(True))
-
-                    self._row_check(
-                        "propertyDependencies", psp,
-                        f"dependent schema for {prop}={sval!r} failed",
-                        build_pd)
-        for comb in ("anyOf", "oneOf"):
-            branches = schema.get(comb)
-            if isinstance(branches, list):
-                preds = [self._row_pred(b, f"{sp}/{comb}/{i}")
-                         for i, b in enumerate(branches)
-                         if isinstance(b, (dict, bool))]
-
-                def build_comb(_col, dtypes, _p=tuple(preds), _c=comb):
-                    oks = [p(dtypes) for p in _p]
-                    if _c == "anyOf":
-                        return _reduce_or(oks)
-                    total = None
-                    for ok in oks:
-                        x = F.when(ok.eqNullSafe(True), 1).otherwise(0)
-                        total = x if total is None else total + x
-                    return total == 1
-
-                self._row_check(comb, f"{sp}/{comb}",
-                                f"{comb} constraint failed", build_comb)
-        if isinstance(schema.get("not"), (dict, bool)):
-            pred = self._row_pred(schema["not"], f"{sp}/not")
-            self._row_check("not", f"{sp}/not", "row matches 'not' schema",
-                            lambda _col, dtypes, _p=pred:
-                            ~_p(dtypes).eqNullSafe(True))
-        if isinstance(schema.get("if"), (dict, bool)):
-            if_p = self._row_pred(schema["if"], f"{sp}/if")
-            then_p = self._row_pred(schema["then"], f"{sp}/then") \
-                if isinstance(schema.get("then"), (dict, bool)) else None
-            else_p = self._row_pred(schema["else"], f"{sp}/else") \
-                if isinstance(schema.get("else"), (dict, bool)) else None
-
-            def build_ite(_col, dtypes, _i=if_p, _t=then_p, _e=else_p):
-                cond = _i(dtypes).eqNullSafe(True)
-                t_ok = _t(dtypes) if _t is not None else F.lit(True)
-                e_ok = _e(dtypes) if _e is not None else F.lit(True)
-                return F.when(cond, t_ok).otherwise(e_ok)
-
-            self._row_check("if", f"{sp}/if",
-                            "conditional (if/then/else) failed", build_ite)
-        dep = schema.get("dependentRequired")
-        if isinstance(dep, dict):
-            for key, needs in dep.items():
-                if not isinstance(needs, list):
-                    continue
-
-                def build_dep(_col, dtypes, _k=key, _n=tuple(needs)):
-                    present = F.col(_k).isNotNull() if _k in dtypes \
-                        else F.lit(False)
-                    all_there = _reduce_and(
-                        [F.col(n).isNotNull() if n in dtypes else F.lit(False)
-                         for n in _n])
-                    return F.when(present, all_there).otherwise(F.lit(True))
-
-                self._row_check(
-                    "dependentRequired", f"{sp}/dependentRequired/{key}",
-                    f"property {key!r} requires {list(needs)!r}", build_dep)
-        # pre-2019 spelling: `dependencies` carries BOTH forms (array =
-        # required-keys, dict/bool = schema); removed in 2019-09 where
-        # the split keywords take over (interp keyword-table parity)
-        deps = schema.get("dependencies")
-        if isinstance(deps, dict) and not _ge(self.draft, D2019):
-            for key, v in deps.items():
-                dsp = f"{sp}/dependencies/{key}"
-                if isinstance(v, list) or isinstance(v, str):
-                    needs = [v] if isinstance(v, str) else v
-
-                    def build_da(_col, dtypes, _k=key, _n=tuple(needs)):
-                        present = F.col(_k).isNotNull() if _k in dtypes \
-                            else F.lit(False)
-                        all_there = _reduce_and(
-                            [F.col(x).isNotNull() if x in dtypes
-                             else F.lit(False) for x in _n])
-                        return F.when(present, all_there) \
-                                .otherwise(F.lit(True))
-
-                    self._row_check("dependencies", dsp,
-                                    f"property {key!r} requires "
-                                    f"{list(needs)!r}", build_da)
-                elif isinstance(v, (dict, bool)):
-                    # errors_only: warnings never fail an in-place
-                    # applicator (interp c_dependent_schemas propagates
-                    # them as warnings, not as dependency failures)
-                    pred = self._row_pred(v, dsp, errors_only=True)
-
-                    def build_dv(_col, dtypes, _k=key, _p=pred):
-                        trig = F.col(_k).isNotNull() if _k in dtypes \
-                            else F.lit(False)
-                        return F.when(trig,
-                                      _p(dtypes).eqNullSafe(True)) \
-                                .otherwise(F.lit(True))
-
-                    self._row_check("dependencies", dsp,
-                                    f"dependency schema for {key!r} "
-                                    f"failed", build_dv)
-        dsch = schema.get("dependentSchemas")
-        if isinstance(dsch, dict) and _ge(self.draft, D2019):
-            for key, s in dsch.items():
-                if not isinstance(s, (dict, bool)):
-                    continue
-                # errors_only matches the claims path (line ~560) and the
-                # interpreter: a warning inside the dependent schema must
-                # not fail the dependency
-                pred = self._row_pred(s, f"{sp}/dependentSchemas/{key}",
-                                      errors_only=True)
-
-                def build_ds(_col, dtypes, _k=key, _p=pred):
-                    trig = F.col(_k).isNotNull() if _k in dtypes \
-                        else F.lit(False)
-                    return F.when(trig, _p(dtypes).eqNullSafe(True)) \
-                            .otherwise(F.lit(True))
-
-                self._row_check(
-                    "dependentSchemas", f"{sp}/dependentSchemas/{key}",
-                    f"dependent schema for {key!r} failed", build_ds)
-        if _ge(self.draft, D2019):
-            self._compile_root_unevaluated(schema, sp)
-
-    def _root_claims(self, frag, sp, top=False):
-        """Claim structure for a ROOT-level (flat-table) fragment: the
-        columns are the object keys; branch preds are row-preds
-        fn(dtypes) -> Column.  Mirrors _object_claims plus root
-        if/then/else (claims from a successful `if` and its taken,
-        successful arm — mini-model semantics)."""
-        if not isinstance(frag, dict):
-            return {"names": (), "patterns": (), "all_keys": False,
-                    "branches": ()}
-        unsafe = [k for k in frag if k in self._CLAIM_UNSAFE]
-        if unsafe:
-            self.unsupported.append(
-                f"{sp} (unevaluated* claim algebra cannot model "
-                f"{sorted(set(unsafe))})")
-            return {"names": (), "patterns": (), "all_keys": False,
-                    "branches": ()}
-        props = frag.get("properties")
-        names = tuple(props) if isinstance(props, dict) else ()
-        branches = []
+            add("propertyNames", f"{sp}/propertyNames",
+                "property name violates schema", build_pn)
+        self._compile_dependent_keywords(name, sub, sp)
+        self._compile_unevaluated_props(name, sub, sp)
+        if not row:
+            self._compile_unevaluated_items(name, sub, sp)
         for comb in ("allOf", "anyOf", "oneOf"):
-            brs = frag.get(comb)
-            if not isinstance(brs, list):
-                continue
-            preds = [self._row_pred(b, f"{sp}/{comb}/{i}",
-                                    errors_only=True)
-                     if isinstance(b, (dict, bool)) else None
-                     for i, b in enumerate(brs)]
-            gate = (self._one_of_row_gate(preds) if comb == "oneOf"
-                    else None)
-            for i, b in enumerate(brs):
-                bsp = f"{sp}/{comb}/{i}"
-                if b is True or b == {} or b is False \
-                        or not isinstance(b, dict):
-                    continue
-                pred = preds[i]
-                if gate is not None:
-                    pred = (lambda dtypes, _p=preds[i], _g=gate:
-                            _g(dtypes) & _p(dtypes))
-                branches.append((pred, self._root_claims(b, bsp)))
-        if isinstance(frag.get("if"), (dict, bool)):
-            if_p = self._row_pred(frag["if"], f"{sp}/if",
-                                  errors_only=True)
-            branches.append((if_p, self._root_claims(frag["if"],
-                                                     f"{sp}/if")))
-            for arm, taken in (("then", True), ("else", False)):
-                a = frag.get(arm)
-                if not isinstance(a, (dict, bool)) \
-                        or not isinstance(a, dict):
-                    continue
-                arm_p = self._row_pred(a, f"{sp}/{arm}",
-                                       errors_only=True)
+            if isinstance(sub.get(comb), list):
+                self._compile_combinator(name, comb, sub[comb],
+                                         f"{sp}/{comb}")
+        # draft-3 extends = conjunction (allOf's ancestor)
+        ext = sub.get("extends")
+        if ext is not None:
+            subs = [s for s in (ext if isinstance(ext, list) else [ext])
+                    if isinstance(s, (dict, bool))]
+            if subs:
+                self._compile_combinator(name, "allOf", subs,
+                                         f"{sp}/extends")
+        if isinstance(sub.get("not"), (dict, bool)):
+            p = self._fragment_pred(sub["not"], f"{sp}/not", row,
+                                    errors_only=False)
+            add("not", f"{sp}/not",
+                f"{'row' if row else 'value'} matches 'not' schema",
+                lambda col, dt, _p=p: ~_p(col, dt))
+        # if/then/else: a warning fails the `if` branch (c_if), while a
+        # then/else arm fails only on errors (it forwards its own)
+        if isinstance(sub.get("if"), (dict, bool)):
+            if_p = self._fragment_pred(sub["if"], f"{sp}/if", row,
+                                       errors_only=False)
+            arms = [self._fragment_pred(sub[a], f"{sp}/{a}", row)
+                    if isinstance(sub.get(a), (dict, bool)) else None
+                    for a in ("then", "else")]
 
-                def gated(dtypes, _i=if_p, _a=arm_p, _t=taken):
-                    cond = _i(dtypes).eqNullSafe(True)
-                    return (cond if _t else ~cond) \
-                        & _a(dtypes).eqNullSafe(True)
+            def build_ite(col, dt, _i=if_p, _t=arms[0], _e=arms[1]):
+                t_ok = _t(col, dt) if _t is not None else F.lit(True)
+                e_ok = _e(col, dt) if _e is not None else F.lit(True)
+                return F.when(_i(col, dt), t_ok).otherwise(e_ok)
 
-                branches.append((gated,
-                                 self._root_claims(a, f"{sp}/{arm}")))
-        # dependentSchemas claims: triggered (key present) AND the
-        # dependent schema succeeds (c_dependent_schemas parity)
-        ds = frag.get("dependentSchemas")
-        if isinstance(ds, dict):
-            for k, s in ds.items():
-                if not isinstance(s, dict) or s == {}:
-                    continue
-                dsp = f"{sp}/dependentSchemas/{k}"
-                s_pred = self._row_pred(s, dsp, errors_only=True)
-
-                def ds_gated(dtypes, _k=k, _p=s_pred):
-                    trig = F.col(_k).isNotNull() if _k in dtypes \
-                        else F.lit(False)
-                    return trig & _p(dtypes).eqNullSafe(True)
-
-                branches.append((ds_gated, self._root_claims(s, dsp)))
-        pdeps = frag.get("propertyDependencies")
-        if isinstance(pdeps, dict) and _ge(self.draft, DNEXT):
-            for prop, m in pdeps.items():
-                if not isinstance(m, dict):
-                    continue
-                for sval, s in m.items():
-                    if not isinstance(s, dict) or s == {} \
-                            or not isinstance(sval, str):
-                        continue
-                    psp = f"{sp}/propertyDependencies/{prop}/{sval}"
-                    s_pred = self._row_pred(s, psp, errors_only=True)
-
-                    def pd_gated(dtypes, _p=prop, _v=sval, _s=s_pred):
-                        if _p in dtypes and isinstance(dtypes[_p],
-                                                       T.StringType):
-                            trig = F.col(_p) == F.lit(_v)
-                        else:
-                            trig = F.lit(False)
-                        return trig.eqNullSafe(True) \
-                            & _s(dtypes).eqNullSafe(True)
-
-                    branches.append((pd_gated,
-                                     self._root_claims(s, psp)))
-        # a nested (non-top) unevaluatedProperties evaluates every
-        # residual key itself, so a SUCCESSFUL branch carrying one has
-        # claimed the whole key set — same shape as additionalProperties
-        all_keys = "additionalProperties" in frag or (
-            not top and "unevaluatedProperties" in frag)
-        return {"names": names, "patterns": self._claim_patterns(frag),
-                "all_keys": all_keys,
-                "branches": tuple(branches)}
-
-    def _root_claimed(self, claims, cname, dtypes):
-        if claims["all_keys"] or cname in claims["names"] or any(
-                rx.search(cname) for _, rx in claims["patterns"]):
-            return F.lit(True)
-        acc = F.lit(False)
-        for pred, sub in claims["branches"]:
-            acc = acc | (pred(dtypes).eqNullSafe(True)
-                         & self._root_claimed(sub, cname, dtypes))
-        return acc
-
-    def _compile_root_unevaluated(self, schema, sp):
-        """Root unevaluatedProperties over the FLAT table: the static
-        column-set algebra — every column whose name no successful
-        schema branch claims must be NULL (missing) or satisfy the
-        unevaluatedProperties schema."""
-        up = schema.get("unevaluatedProperties")
-        if up is None or up is True or up == {}:
-            return
-        if "additionalProperties" in schema:
-            return
-        claims = self._root_claims(schema, sp, top=True)
-        usp = f"{sp}/unevaluatedProperties"
-        ub = None if up is False else (
-            self._error_builders(up, usp) if isinstance(up, dict) else None)
-        if up is not False and ub is None:
-            return
-
-        def build(_col, dtypes, _c=claims, _b=ub):
-            oks = []
-            for cname, cdt in dtypes.items():
-                v = F.col(cname)
-                ok = v.isNull() | self._root_claimed(_c, cname, dtypes)
-                if _b is not None:
-                    ok = ok | _reduce_and(
-                        [bb(v, cdt).eqNullSafe(True) for bb in _b])
-                oks.append(ok)
-            return _reduce_and(oks)
-
-        self._row_check("unevaluatedProperties", usp,
-                        "column not evaluated by any schema", build)
-
-    def _row_check(self, keyword, sp, msg, build):
-        self.checks.append(Check(self._ROW_CHECK, keyword, sp, msg,
-                                 "error", build, doc_path=""))
+            add("if", f"{sp}/if", "conditional (if/then/else) failed",
+                build_ite)
 
     def _sub_checks(self, frag, sp, name="_e", errors_only=False,
                     jvm_only=False) -> list[Check]:
@@ -863,22 +614,15 @@ class ColumnarValidator:
             out.append(replace(c, schema_path=path))
         return out
 
-    def _row_pred(self, fragment, sp, errors_only=False):
-        """Compile an object-schema fragment into a row-level predicate
-        fn(dtypes) -> Column (True = row satisfies the fragment)."""
-        if fragment is False:
-            return lambda dtypes: F.lit(False)
-        checks = self._sub_checks(fragment, sp, name=None,
-                                  errors_only=errors_only)
-        return lambda dtypes: _reduce_and(
-            [self._check_ok(c, dtypes).eqNullSafe(True) for c in checks])
-
     def _required_builder(self):
         return lambda col, dt: col.isNotNull()
 
     def _add(self, column, keyword, sp, msg, level, build, null_passes=True,
              doc_path=None, value_of=None):
-        if null_passes and keyword != "required":
+        # a missing value passes; the row (column _ROW_CHECK) is never
+        # missing
+        if null_passes and keyword != "required" \
+                and column != self._ROW_CHECK:
             inner = build
             wrapped = lambda col, dt, _b=inner: (  # noqa: E731
                 F.when(col.isNull(), F.lit(True)).otherwise(_b(col, dt)))
@@ -910,11 +654,12 @@ class ColumnarValidator:
             def build_guard(col, dt, _r=guard):
                 raise UnsupportedKeyword(
                     f"recursive $ref {_r!r}: column type nests deeper "
-                    f"than the unrolled plan (raise M3SPARK_REF_UNROLL "
-                    f"or use m3spark.sparkval.validate_json)")
+                    f"than the unrolled plan (raise ColumnarValidator's "
+                    f"ref_unroll or use m3spark.sparkval.validate_json)")
             self._add(name, "$ref", f"{sp}/$ref",
                       "recursion beyond unroll depth", "error",
                       build_guard, null_passes=False)
+        sub = self._active(sub)
         draft = self.draft
         old = draft in (DRAFT3, DRAFT4)
 
@@ -971,9 +716,7 @@ class ColumnarValidator:
             self._add(name, "enum", f"{sp}/enum",
                       f"value not in enum ({len(vals)} options)", "error",
                       build_enum)
-        # const / contains joined the spec in draft-06: earlier drafts
-        # treat them as unknown annotations (interp keyword tables)
-        if "const" in sub and _ge(draft, DRAFT6):
+        if "const" in sub:
             cv = sub["const"]
 
             def build_const(col, dt, _c=cv):
@@ -1008,7 +751,7 @@ class ColumnarValidator:
                     self._add(name, kw, f"{sp}/{kw}",
                               f"value is not {op} {sub[kw]}", "error",
                               _numeric_only(_cmp_builder(op, sub[kw])))
-        mof_kw = "divisibleBy" if draft == DRAFT3 else "multipleOf"
+        mof_kw = "divisibleBy" if "divisibleBy" in sub else "multipleOf"
         if mof_kw in sub and isinstance(sub[mof_kw], (int, float)) \
                 and not isinstance(sub[mof_kw], bool):
             d = Decimal(str(sub[mof_kw]))
@@ -1069,60 +812,13 @@ class ColumnarValidator:
                           f"not a valid {fmt}", level,
                           _string_only(_format_pred(fmt)))
 
-        if _ge(draft, DRAFT7) and ("contentEncoding" in sub
-                                   or "contentMediaType" in sub
-                                   or "contentSchema" in sub):
+        if ("contentEncoding" in sub or "contentMediaType" in sub
+                or "contentSchema" in sub):
             self._compile_content(name, sub, sp, draft)
 
         self._compile_array_keywords(name, sub, sp)
         self._compile_struct_keywords(name, sub, sp)
-        self._compile_map_keywords(name, sub, sp)
-        self._compile_dependent_keywords(name, sub, sp)
-        if _ge(draft, D2019):
-            self._compile_unevaluated_props(name, sub, sp)
-            self._compile_unevaluated_items(name, sub, sp)
-
-        # the combinator family joined in draft-04 (draft-03 has only
-        # `extends`): interp keyword tables ignore them in d3
-        for comb in ("allOf", "anyOf", "oneOf"):
-            if isinstance(sub.get(comb), list) and _ge(draft, DRAFT4):
-                self._compile_combinator(name, comb, sub[comb], f"{sp}/{comb}")
-        # draft-3 extends = conjunction (allOf's ancestor); unknown and
-        # ignored in every other draft
-        if draft == DRAFT3 and sub.get("extends") is not None:
-            ext = sub["extends"]
-            subs = ext if isinstance(ext, list) else [ext]
-            subs = [s for s in subs if isinstance(s, (dict, bool))]
-            if subs:
-                self._compile_combinator(name, "allOf", subs,
-                                         f"{sp}/extends")
-        if isinstance(sub.get("not"), dict) and _ge(draft, DRAFT4):
-            builders = [c.build for c in self._sub_checks(
-                sub["not"], f"{sp}/not", name=name)]
-            self._add(name, "not", f"{sp}/not", "value matches 'not' schema",
-                      "error",
-                      lambda col, dt, _b=builders: ~_reduce_and(
-                          [b(col, dt) for b in _b]))
-        # property-level conditional (draft-7+), mirroring the root
-        # lowering: when(if_ok, then_ok, else_ok) over this column
-        if isinstance(sub.get("if"), (dict, bool)) and _ge(draft, DRAFT7):
-            if_p = self._fragment_pred(sub["if"], f"{sp}/if")
-            then_p = (self._fragment_pred(sub["then"], f"{sp}/then")
-                      if isinstance(sub.get("then"), (dict, bool))
-                      else None)
-            else_p = (self._fragment_pred(sub["else"], f"{sp}/else")
-                      if isinstance(sub.get("else"), (dict, bool))
-                      else None)
-
-            def build_ite(col, dt, _i=if_p, _t=then_p, _e=else_p):
-                cond = _i(col, dt)
-                t_ok = _t(col, dt) if _t is not None else F.lit(True)
-                e_ok = _e(col, dt) if _e is not None else F.lit(True)
-                return F.when(cond, t_ok).otherwise(e_ok)
-
-            self._add(name, "if", f"{sp}/if",
-                      "conditional (if/then/else) failed", "error",
-                      build_ite)
+        self._compile_object(name, sub, sp)
 
     # -- content keywords (decode-then-validate, §2.9) -----------------------
     # Lowered to pure JVM expressions: base64 structural validity as one
@@ -1166,8 +862,7 @@ class ColumnarValidator:
         # contentSchema without contentMediaType still assumes JSON
         # content — reference property.cljc:796-801 (interp parity:
         # core.py c_content / c_content_schema)
-        assume_json = (mt is None and isinstance(csch, (dict, bool))
-                       and _ge(draft, D2019))
+        assume_json = mt is None and isinstance(csch, (dict, bool))
         if mt != "application/json" and not assume_json:
             return
 
@@ -1207,7 +902,7 @@ class ColumnarValidator:
                       "content is not valid JSON", level,
                       _string_only(json_ok))
 
-        if isinstance(csch, (dict, bool)) and _ge(draft, D2019):
+        if isinstance(csch, (dict, bool)):
             for kw, spath, msg, inner in self._lower_content_schema(
                     csch, f"{csp}/contentSchema"):
                 def gated(col, dt, _inner=inner):
@@ -1415,12 +1110,6 @@ class ColumnarValidator:
             return _reduce_and([p(v) for p in _ps])
         return ok
 
-    def _nested_builders(self, frag, sp) -> list:
-        """Compile a subschema fragment into JVM-only builders usable
-        inside higher-order-function lambdas (SURVEY §2.5 Spark
-        primitives: forall/exists/filter)."""
-        return [c.build for c in self._sub_checks(frag, sp, jvm_only=True)]
-
     def _compile_array_keywords(self, name: str, sub: dict, sp: str):
         """Array keywords over typed array<T> columns as higher-order
         functions (m3 analogs: property.cljc:1156-1331; SURVEY §2.5)."""
@@ -1463,7 +1152,8 @@ class ColumnarValidator:
                       arr_guard(lambda col, et, _n=n_pfx:
                                 F.size(col) <= _n))
         elif isinstance(items, dict):
-            builders = self._nested_builders(items, f"{sp}/items")
+            builders = self._value_builders(items, f"{sp}/items",
+                                            errors_only=False)
             n_prefix = pfx_offset
             if builders:
                 def build_items(col, et, _b=tuple(builders), _n=n_prefix):
@@ -1485,7 +1175,8 @@ class ColumnarValidator:
             prefix = sub["items"]
             tuple_kw = "items"
         if tuple_kw and all(isinstance(s, (dict, bool)) for s in prefix):
-            per_pos = [self._nested_builders(s, f"{sp}/{tuple_kw}/{i}")
+            per_pos = [self._value_builders(s, f"{sp}/{tuple_kw}/{i}",
+                                            errors_only=False)
                        if isinstance(s, dict) else
                        ([] if s is True else
                         [lambda col, dt: F.lit(False)])
@@ -1518,8 +1209,8 @@ class ColumnarValidator:
                           arr_guard(lambda col, et, _n=n:
                                     F.size(col) <= _n))
             else:
-                builders = self._nested_builders(
-                    addl, f"{sp}/additionalItems")
+                builders = self._value_builders(
+                    addl, f"{sp}/additionalItems", errors_only=False)
                 if builders:
                     def build_ai(col, et, _b=tuple(builders), _n=n):
                         rest = F.slice(col, _n + 1,
@@ -1534,14 +1225,14 @@ class ColumnarValidator:
                               arr_guard(build_ai))
 
         contains = sub.get("contains")
-        if isinstance(contains, (dict, bool)) and _ge(self.draft, DRAFT6):
+        if isinstance(contains, (dict, bool)):
             if contains is True or contains == {}:
                 builders = []         # matches every element
             elif contains is False:
                 builders = [lambda col, dt: F.lit(False)]  # matches none
             else:
-                builders = self._nested_builders(contains,
-                                                 f"{sp}/contains")
+                builders = self._value_builders(
+                    contains, f"{sp}/contains", errors_only=False)
             min_c = sub.get("minContains", 1)
             max_c = sub.get("maxContains")
 
@@ -1558,118 +1249,25 @@ class ColumnarValidator:
                       f"{max_c if max_c is not None else 'inf'}]", "error",
                       arr_guard(build))
 
-    def _compile_map_keywords(self, name: str, sub: dict, sp: str):
-        """Object keywords over typed map<string,T> columns as HOFs
-        (SURVEY §2.4 Spark primitives: map_keys/map_filter/forall/
-        array_except).  Struct columns are handled statically in
-        _compile_struct_keywords; these checks no-op on non-map types."""
-        def map_guard(build):
-            def guarded(col, dt):
-                if not isinstance(dt, T.MapType):
-                    return F.lit(True)
-                return build(col, dt.valueType)
-            return guarded
-
-        if "minProperties" in sub:
-            v = sub["minProperties"]
-            self._add(name, "minProperties", f"{sp}/minProperties",
-                      f"fewer than {v} properties", "error",
-                      map_guard(lambda col, vt, _v=v:
-                                F.size(F.map_keys(col)) >= _v))
-        if "maxProperties" in sub:
-            v = sub["maxProperties"]
-            self._add(name, "maxProperties", f"{sp}/maxProperties",
-                      f"more than {v} properties", "error",
-                      map_guard(lambda col, vt, _v=v:
-                                F.size(F.map_keys(col)) <= _v))
-        pn = sub.get("propertyNames")
-        if isinstance(pn, dict):
-            builders = self._nested_builders(pn, f"{sp}/propertyNames")
-            if builders:
-                self._add(name, "propertyNames", f"{sp}/propertyNames",
-                          "property name violates schema", "error",
-                          map_guard(lambda col, vt, _b=tuple(builders):
-                                    F.forall(F.map_keys(col),
-                                             lambda k: _reduce_and(
-                                                 [b(k, T.StringType())
-                                                  for b in _b]))))
-        pp = sub.get("patternProperties")
-        if isinstance(pp, dict):
-            for pat, pschema in pp.items():
-                if not isinstance(pschema, dict):
-                    continue
-                builders = self._nested_builders(
-                    pschema, f"{sp}/patternProperties/{pat}")
-                if not builders:
-                    continue
-
-                def build_pp(col, vt, _pat=pat, _b=tuple(builders)):
-                    # values whose KEY matches the (unanchored) pattern
-                    matched = F.map_filter(
-                        col, lambda k, v: k.rlike(_pat))
-                    return F.forall(F.map_values(matched),
-                                    lambda v: _reduce_and(
-                                        [b(v, vt) for b in _b]))
-                self._add(name, "patternProperties",
-                          f"{sp}/patternProperties/{pat}",
-                          f"value under key matching {pat!r} violates "
-                          f"schema", "error", map_guard(build_pp))
-        ap = sub.get("additionalProperties")
-        if ap is not None and (isinstance(ap, dict) or ap is False):
-            named = [k for k in (sub.get("properties") or {})]
-            pats = list(sub.get("patternProperties") or {})
-
-            def _not_matching(pat):
-                return lambda k: ~k.rlike(pat)
-
-            def unmatched_keys(col):
-                keys = F.map_keys(col)
-                if named:
-                    keys = F.array_except(
-                        keys, F.array(*[F.lit(k) for k in named]))
-                for pat in pats:
-                    keys = F.filter(keys, _not_matching(pat))
-                return keys
-
-            if ap is False:
-                self._add(name, "additionalProperties",
-                          f"{sp}/additionalProperties",
-                          "additional properties are not allowed", "error",
-                          map_guard(lambda col, vt:
-                                    F.size(unmatched_keys(col)) == 0))
-            else:
-                builders = self._nested_builders(
-                    ap, f"{sp}/additionalProperties")
-                if builders:
-                    def build_ap(col, vt, _b=tuple(builders)):
-                        return F.forall(
-                            unmatched_keys(col),
-                            lambda k: _reduce_and(
-                                [b(F.element_at(col, k), vt) for b in _b]))
-                    self._add(name, "additionalProperties",
-                              f"{sp}/additionalProperties",
-                              "additional property violates schema",
-                              "error", map_guard(build_ap))
-
     @staticmethod
-    def _obj_present(col: Column, dt: T.DataType, k: str):
-        """Presence of key ``k`` in an object-typed column, or None when
-        the column isn't an object (dependent keywords then no-op)."""
+    def _obj_present(col, dt: T.DataType, k: str):
+        """Presence of key ``k`` in an object (the row when ``col`` is
+        None), or None when the value isn't an object (dependent
+        keywords then no-op)."""
         if isinstance(dt, T.StructType):
-            return (col.getField(k).isNotNull()
-                    if k in dt.fieldNames() else F.lit(False))
+            return (_field(col, k).isNotNull()
+                    if k in dt.names else F.lit(False))
         if isinstance(dt, T.MapType):
             return F.map_contains_key(col, F.lit(k))
         return None
 
     @staticmethod
-    def _obj_strval_eq(col: Column, dt: T.DataType, k: str, v: str):
+    def _obj_strval_eq(col, dt: T.DataType, k: str, v: str):
         """key ``k`` holds STRING value ``v`` (propertyDependencies
-        trigger), or None when the column isn't an object."""
+        trigger), or None when the value isn't an object."""
         if isinstance(dt, T.StructType):
-            if k in dt.fieldNames() \
-                    and isinstance(dt[k].dataType, T.StringType):
-                return col.getField(k).eqNullSafe(F.lit(v))
+            if k in dt.names and isinstance(dt[k].dataType, T.StringType):
+                return _field(col, k).eqNullSafe(F.lit(v))
             return F.lit(False)
         if isinstance(dt, T.MapType):
             if isinstance(dt.valueType, T.StringType):
@@ -1678,54 +1276,54 @@ class ColumnarValidator:
         return None
 
     def _compile_dependent_keywords(self, name: str, sub: dict, sp: str):
-        """Property-level dependentRequired / dependentSchemas (2019+)
-        and the combined pre-2019 `dependencies` over struct/map columns
-        (interp parity: c_dependencies / c_dependent_required /
-        c_dependent_schemas; reference property.cljc:812-874)."""
-        draft = self.draft
+        """dependentRequired / dependentSchemas (2019+), the combined
+        pre-2019 `dependencies` and draft-next propertyDependencies over
+        an object position (interp parity: c_dependencies /
+        c_dependent_required / c_dependent_schemas /
+        c_property_dependencies; reference property.cljc:812-911)."""
+        row = name == self._ROW_CHECK
+
+        def add(kw, dsp, msg, trigger, ok):
+            def build(col, dt, _t=trigger, _ok=ok):
+                trig = _t(col, dt)
+                if trig is None:
+                    return F.lit(True)
+                return F.when(trig, _ok(col, dt)).otherwise(F.lit(True))
+            self._add(name, kw, dsp, msg, "error", build,
+                      doc_path="" if row else None)
 
         def req_check(kw, key, needs, dsp):
-            def build(col, dt, _k=key, _n=tuple(needs)):
-                trig = self._obj_present(col, dt, _k)
-                if trig is None:
-                    return F.lit(True)
-                alln = _reduce_and(
-                    [self._obj_present(col, dt, n) for n in _n])
-                return F.when(trig, alln).otherwise(F.lit(True))
-            self._add(name, kw, dsp,
-                      f"property {key!r} requires {list(needs)!r}",
-                      "error", build)
+            add(kw, dsp, f"property {key!r} requires {list(needs)!r}",
+                lambda col, dt, _k=key: self._obj_present(col, dt, _k),
+                lambda col, dt, _n=tuple(needs): _reduce_and(
+                    [self._obj_present(col, dt, n) for n in _n]))
 
-        def schema_check(kw, key, s, dsp):
+        def schema_check(kw, trigger, s, dsp, msg):
             # errors-only (in-place applicator branch semantics): a
             # warning inside the dependent schema never fails it
-            pred = self._fragment_pred(s, dsp)
+            pred = self._fragment_pred(s, dsp, row)
+            add(kw, dsp, msg, trigger,
+                lambda col, dt, _p=pred: _p(col, dt).eqNullSafe(True))
 
-            def build(col, dt, _k=key, _p=pred):
-                trig = self._obj_present(col, dt, _k)
-                if trig is None:
-                    return F.lit(True)
-                return F.when(trig, _p(col, dt).eqNullSafe(True)) \
-                        .otherwise(F.lit(True))
-            self._add(name, kw, dsp,
-                      f"dependent schema for {key!r} failed",
-                      "error", build)
+        def present(key):
+            return lambda col, dt: self._obj_present(col, dt, key)
 
         dr = sub.get("dependentRequired")
-        if isinstance(dr, dict) and _ge(draft, D2019):
+        if isinstance(dr, dict):
             for k, needs in dr.items():
                 if isinstance(needs, list):
                     req_check("dependentRequired", k,
                               [x for x in needs if isinstance(x, str)],
                               f"{sp}/dependentRequired/{k}")
         ds = sub.get("dependentSchemas")
-        if isinstance(ds, dict) and _ge(draft, D2019):
+        if isinstance(ds, dict):
             for k, s in ds.items():
                 if isinstance(s, (dict, bool)):
-                    schema_check("dependentSchemas", k, s,
-                                 f"{sp}/dependentSchemas/{k}")
+                    schema_check("dependentSchemas", present(k), s,
+                                 f"{sp}/dependentSchemas/{k}",
+                                 f"dependent schema for {k!r} failed")
         deps = sub.get("dependencies")
-        if isinstance(deps, dict) and not _ge(draft, D2019):
+        if isinstance(deps, dict):
             for k, v in deps.items():
                 dsp = f"{sp}/dependencies/{k}"
                 if isinstance(v, str):
@@ -1734,32 +1332,22 @@ class ColumnarValidator:
                     req_check("dependencies", k,
                               [x for x in v if isinstance(x, str)], dsp)
                 elif isinstance(v, (dict, bool)):
-                    schema_check("dependencies", k, v, dsp)
-        # draft-next propertyDependencies: key k holding string value v
-        # triggers the (k, v) schema (c_property_dependencies parity)
+                    schema_check("dependencies", present(k), v, dsp,
+                                 f"{'dependency' if row else 'dependent'} "
+                                 f"schema for {k!r} failed")
+        # key k holding string value v triggers the (k, v) schema
         pdeps = sub.get("propertyDependencies")
-        if isinstance(pdeps, dict) and _ge(draft, DNEXT):
-            for prop, m in pdeps.items():
-                if not isinstance(m, dict):
-                    continue
-                for sval, s in m.items():
-                    if not isinstance(s, (dict, bool)) \
-                            or not isinstance(sval, str):
-                        continue
-                    psp = f"{sp}/propertyDependencies/{prop}/{sval}"
-                    pred = self._fragment_pred(s, psp)
-
-                    def build_pd(col, dt, _p=prop, _v=sval, _pred=pred):
-                        trig = self._obj_strval_eq(col, dt, _p, _v)
-                        if trig is None:
-                            return F.lit(True)
-                        return F.when(trig,
-                                      _pred(col, dt).eqNullSafe(True)) \
-                                .otherwise(F.lit(True))
-
-                    self._add(name, "propertyDependencies", psp,
-                              f"dependent schema for {prop}={sval!r} "
-                              f"failed", "error", build_pd)
+        for prop, m in (pdeps.items() if isinstance(pdeps, dict) else ()):
+            if not isinstance(m, dict):
+                continue
+            for sval, s in m.items():
+                if isinstance(s, (dict, bool)) and isinstance(sval, str):
+                    schema_check(
+                        "propertyDependencies",
+                        lambda col, dt, _p=prop, _v=sval:
+                        self._obj_strval_eq(col, dt, _p, _v),
+                        s, f"{sp}/propertyDependencies/{prop}/{sval}",
+                        f"dependent schema for {prop}={sval!r} failed")
 
     def _surface_nested_property(self, name: str, pname: str, pschema,
                                  sp: str):
@@ -1800,8 +1388,9 @@ class ColumnarValidator:
                 value_of=value_of))
 
     def _compile_struct_keywords(self, name: str, sub: dict, sp: str):
-        """Object keywords over typed struct columns: per-field predicate
-        via getField (m3 analog: property.cljc:992-1052; SURVEY §2.4)."""
+        """``required`` and ``properties`` of a struct or map column: the
+        members the row's own pair maps to columns (m3 analog:
+        property.cljc:992-1052; SURVEY §2.4)."""
         props = sub.get("properties")
         req = sub.get("required")
         if isinstance(req, list):
@@ -1836,82 +1425,6 @@ class ColumnarValidator:
                     continue
                 self._surface_nested_property(name, pname, pschema, sp)
 
-        # patternProperties / additionalProperties over STRUCT columns:
-        # field names are static, so pattern matching happens at compile
-        # time with the engine's own ECMA matcher (the map-typed path in
-        # _compile_map_keywords does the same dynamically via rlike)
-        import re as _re
-
-        from m3spark.schema.core import compile_ecma_pattern
-
-        pp = sub.get("patternProperties")
-        pat_rx = []
-        if isinstance(pp, dict):
-            for pat, pschema in pp.items():
-                try:
-                    rx = compile_ecma_pattern(pat)
-                except _re.error:
-                    continue  # ECMA-invalid: keyword ignored (c_pattern)
-                pat_rx.append(rx)
-                if pschema is True or pschema == {}:
-                    continue
-                psp = f"{sp}/patternProperties/{pat}"
-                builders = ((lambda col, dt: F.lit(False),) \
-                    if pschema is False else
-                    tuple(self._nested_builders(pschema, psp))) \
-                    if isinstance(pschema, (dict, bool)) else ()
-                if not builders:
-                    continue
-
-                def build_pp(col, dt, _rx=rx, _b=builders):
-                    if not isinstance(dt, T.StructType):
-                        return F.lit(True)
-                    oks = []
-                    for f in dt.fields:
-                        if not _rx.search(f.name):
-                            continue
-                        v = col.getField(f.name)
-                        oks.append(v.isNull() | _reduce_and(
-                            [bb(v, f.dataType).eqNullSafe(True)
-                             for bb in _b]))
-                    return _reduce_and(oks)
-
-                self._add(name, "patternProperties", psp,
-                          f"value under key matching {pat!r} violates "
-                          f"schema", "error", build_pp)
-
-        ap = sub.get("additionalProperties")
-        if ap is not None and (isinstance(ap, dict) or ap is False):
-            named = frozenset(props) if isinstance(props, dict) else \
-                frozenset()
-            ap_builders = () if ap is False else \
-                tuple(self._nested_builders(
-                    ap, f"{sp}/additionalProperties"))
-
-            def build_ap_struct(col, dt, _n=named, _rx=tuple(pat_rx),
-                                _b=ap_builders, _false=ap is False):
-                if not isinstance(dt, T.StructType):
-                    return F.lit(True)
-                oks = []
-                for f in dt.fields:
-                    if f.name in _n or any(rx.search(f.name)
-                                           for rx in _rx):
-                        continue
-                    v = col.getField(f.name)
-                    if _false:
-                        oks.append(v.isNull())
-                    elif _b:
-                        oks.append(v.isNull() | _reduce_and(
-                            [bb(v, f.dataType).eqNullSafe(True)
-                             for bb in _b]))
-                return _reduce_and(oks)
-
-            self._add(name, "additionalProperties",
-                      f"{sp}/additionalProperties",
-                      "additional properties are not allowed" if ap is False
-                      else "additional property violates schema",
-                      "error", build_ap_struct)
-
     # -- unevaluatedProperties / unevaluatedItems (§2.4/§2.5 hard part) ------
     # Static key-set algebra (SURVEY §7 hard-part 1): each in-place
     # applicator branch contributes its evaluated key-set GATED on the
@@ -1941,29 +1454,25 @@ class ColumnarValidator:
         "$ref", "$dynamicRef", "$recursiveRef",
     })
 
-    def _claim_patterns(self, frag):
-        """(java_rlike, compiled_python) pairs for patternProperties —
-        ECMA-invalid patterns are ignored by both engines."""
-        import re as _re
-
-        from m3spark.schema.core import compile_ecma_pattern
-        from m3spark.schema.ecma import java_pattern
-
-        out = []
+    def _claim_patterns(self, frag) -> dict:
+        """pattern -> (java_rlike, compiled_python) for each
+        patternProperties key — ECMA-invalid patterns are ignored by
+        both engines."""
+        out = {}
         pp = frag.get("patternProperties")
         if isinstance(pp, dict):
             for pat in pp:
                 try:
-                    out.append((java_pattern(pat),
-                                compile_ecma_pattern(pat)))
-                except _re.error:
+                    out[pat] = (java_pattern(pat), compile_ecma_pattern(pat))
+                except re.error:
                     continue
-        return tuple(out)
+        return out
 
-    def _object_claims(self, frag, name, sp, top=False):
+    def _object_claims(self, frag, sp, row, top=False):
         """{names, patterns, all_keys, branches} claim structure for an
-        object fragment over a struct/map COLUMN; branch preds are
-        fn(col, dt) -> Column."""
+        object fragment at an object position (``row``: the table row,
+        else a struct/map column); branch preds are fn(col, dt) ->
+        Column."""
         if not isinstance(frag, dict):
             return {"names": (), "patterns": (), "all_keys": False,
                     "branches": ()}
@@ -1974,6 +1483,7 @@ class ColumnarValidator:
                 f"{sorted(set(unsafe))})")
             return {"names": (), "patterns": (), "all_keys": False,
                     "branches": ()}
+        frag = self._active(frag)
         props = frag.get("properties")
         names = tuple(props) if isinstance(props, dict) else ()
         branches = []
@@ -1981,7 +1491,7 @@ class ColumnarValidator:
             brs = frag.get(comb)
             if not isinstance(brs, list):
                 continue
-            preds = [self._fragment_pred(b, f"{sp}/{comb}/{i}")
+            preds = [self._fragment_pred(b, f"{sp}/{comb}/{i}", row)
                      if isinstance(b, (dict, bool)) else None
                      for i, b in enumerate(brs)]
             # interp parity (core.py c_one_of): oneOf contributes
@@ -1999,35 +1509,35 @@ class ColumnarValidator:
                     pred = (lambda col, dt, _p=preds[i], _g=gate:
                             _g(col, dt) & _p(col, dt))
                 branches.append((pred,
-                                 self._object_claims(b, name, bsp)))
+                                 self._object_claims(b, bsp, row)))
         # if/then/else claims (c_if parity): a successful `if`
         # contributes; the taken arm contributes only when IT succeeds
         if isinstance(frag.get("if"), (dict, bool)):
-            if_p = self._fragment_pred(frag["if"], f"{sp}/if")
+            if_p = self._fragment_pred(frag["if"], f"{sp}/if", row)
             if isinstance(frag["if"], dict):
                 branches.append((if_p, self._object_claims(
-                    frag["if"], name, f"{sp}/if")))
+                    frag["if"], f"{sp}/if", row)))
             for arm, taken in (("then", True), ("else", False)):
                 a = frag.get(arm)
                 if not isinstance(a, dict):
                     continue
-                arm_p = self._fragment_pred(a, f"{sp}/{arm}")
+                arm_p = self._fragment_pred(a, f"{sp}/{arm}", row)
 
                 def gated(col, dt, _i=if_p, _a=arm_p, _t=taken):
                     cond = _i(col, dt)
                     return (cond if _t else ~cond) & _a(col, dt)
 
                 branches.append((gated, self._object_claims(
-                    a, name, f"{sp}/{arm}")))
+                    a, f"{sp}/{arm}", row)))
         # dependentSchemas claims (c_dependent_schemas parity): the
         # dependent schema contributes on (key present AND it succeeds)
         ds = frag.get("dependentSchemas")
-        if isinstance(ds, dict) and _ge(self.draft, D2019):
+        if isinstance(ds, dict):
             for k, s in ds.items():
                 if not isinstance(s, dict) or s == {}:
                     continue  # bool/empty: claims nothing
                 dsp = f"{sp}/dependentSchemas/{k}"
-                s_pred = self._fragment_pred(s, dsp)
+                s_pred = self._fragment_pred(s, dsp, row)
 
                 def ds_gated(col, dt, _k=k, _p=s_pred):
                     trig = self._obj_present(col, dt, _k)
@@ -2036,11 +1546,11 @@ class ColumnarValidator:
                     return trig & _p(col, dt).eqNullSafe(True)
 
                 branches.append((ds_gated,
-                                 self._object_claims(s, name, dsp)))
+                                 self._object_claims(s, dsp, row)))
         # propertyDependencies claims: (key holds the string) AND the
         # dependent schema succeeds
         pdeps = frag.get("propertyDependencies")
-        if isinstance(pdeps, dict) and _ge(self.draft, DNEXT):
+        if isinstance(pdeps, dict):
             for prop, m in pdeps.items():
                 if not isinstance(m, dict):
                     continue
@@ -2049,7 +1559,7 @@ class ColumnarValidator:
                             or not isinstance(sval, str):
                         continue
                     psp = f"{sp}/propertyDependencies/{prop}/{sval}"
-                    s_pred = self._fragment_pred(s, psp)
+                    s_pred = self._fragment_pred(s, psp, row)
 
                     def pd_gated(col, dt, _p=prop, _v=sval, _s=s_pred):
                         trig = self._obj_strval_eq(col, dt, _p, _v)
@@ -2058,10 +1568,14 @@ class ColumnarValidator:
                         return trig & _s(col, dt).eqNullSafe(True)
 
                     branches.append((pd_gated,
-                                     self._object_claims(s, name, psp)))
+                                     self._object_claims(s, psp, row)))
+        # a nested (non-top) unevaluatedProperties evaluates every
+        # residual key itself, so a SUCCESSFUL branch carrying one has
+        # claimed the whole key set — same shape as additionalProperties
         all_keys = "additionalProperties" in frag or (
             not top and "unevaluatedProperties" in frag)
-        return {"names": names, "patterns": self._claim_patterns(frag),
+        return {"names": names,
+                "patterns": tuple(self._claim_patterns(frag).values()),
                 "all_keys": all_keys,
                 "branches": tuple(branches)}
 
@@ -2075,31 +1589,31 @@ class ColumnarValidator:
             return F.lit(True) if total is None else total == 1
         return gate
 
-    @staticmethod
-    def _one_of_row_gate(preds):
-        def gate(dtypes, _ps=tuple(p for p in preds if p is not None)):
-            total = None
-            for p in _ps:
-                x = F.when(p(dtypes).eqNullSafe(True), 1).otherwise(0)
-                total = x if total is None else total + x
-            return F.lit(True) if total is None else total == 1
-        return gate
-
-    def _fragment_pred(self, frag, sp):
-        """fn(col, dt) -> branch-success Column for a property-level
-        fragment (error-level checks only: warnings don't fail a
-        branch, matching the interpreter's in-place applicators)."""
-        builders = self._error_builders(frag, sp)
+    def _fragment_pred(self, frag, sp, row=False, errors_only=True):
+        """fn(col, dt) -> branch-success Column: every check of object
+        fragment ``frag`` passes at this position (``row``: ``frag`` is
+        compiled as the row schema, else as the value of a column).
+        ``errors_only``: warnings don't fail a branch, matching the
+        interpreter's in-place applicators that forward inner errors."""
+        if not row:
+            builders = self._value_builders(frag, sp, errors_only)
+        elif frag is False:
+            return lambda col, dt: F.lit(False)
+        else:
+            builders = [lambda col, dt, _c=c: self._check_ok(_c, dt)
+                        for c in self._sub_checks(frag, sp, name=None,
+                                                  errors_only=errors_only)]
         return lambda col, dt: _reduce_and(
-            [bb(col, dt).eqNullSafe(True) for bb in builders])
+            [b(col, dt).eqNullSafe(True) for b in builders])
 
-    def _error_builders(self, frag, sp):
-        """JVM error-level builders for a fragment (the unevaluated*
-        value-schema check and branch predicates)."""
+    def _value_builders(self, frag, sp, errors_only=True):
+        """JVM builders for the checks of a value-position fragment
+        (items, patternProperties/additionalProperties values, branch
+        predicates); ``errors_only`` drops warning-level checks."""
         if frag is False:
             return (lambda col, dt: F.lit(False),)
         return tuple(c.build for c in self._sub_checks(
-            frag, sp, errors_only=True, jvm_only=True))
+            frag, sp, errors_only=errors_only, jvm_only=True))
 
     def _claimed_field(self, claims, fname, col, dt):
         """Boolean Column: struct field ``fname`` is evaluated."""
@@ -2136,32 +1650,19 @@ class ColumnarValidator:
 
     def _compile_unevaluated_props(self, name, sub, sp):
         up = sub.get("unevaluatedProperties")
-        if up is None or not _ge(self.draft, D2019):
-            return
-        if up is True or up == {}:
+        if up is None or up is True or up == {}:
             return  # evaluates everything, never fails
         if "additionalProperties" in sub:
             return  # adjacent AP claims every key; uP can never fire
-        claims = self._object_claims(sub, name, sp, top=True)
+        row = name == self._ROW_CHECK
+        claims = self._object_claims(sub, sp, row, top=True)
         usp = f"{sp}/unevaluatedProperties"
         ub = None if up is False else (
-            self._error_builders(up, usp) if isinstance(up, dict) else None)
+            self._value_builders(up, usp) if isinstance(up, dict) else None)
         if up is not False and ub is None:
             return
 
         def build(col, dt, _c=claims, _b=ub):
-            if isinstance(dt, T.StructType):
-                oks = []
-                for f in dt.fields:
-                    val = col.getField(f.name)
-                    ok = val.isNull() \
-                        | self._claimed_field(_c, f.name, col, dt)
-                    if _b is not None:
-                        ok = ok | _reduce_and(
-                            [bb(val, f.dataType).eqNullSafe(True)
-                             for bb in _b])
-                    oks.append(ok)
-                return _reduce_and(oks)
             if isinstance(dt, T.MapType):
                 unev = F.array_except(F.map_keys(col),
                                       self._claimed_keys(_c, col, dt))
@@ -2170,10 +1671,19 @@ class ColumnarValidator:
                 return F.forall(unev, lambda k: _reduce_and(
                     [bb(F.element_at(col, k), dt.valueType)
                         .eqNullSafe(True) for bb in _b]))
-            return F.lit(True)
+            oks = []
+            for f in _fields(dt):
+                val = _field(col, f.name)
+                ok = val.isNull() | self._claimed_field(_c, f.name, col, dt)
+                if _b is not None:
+                    ok = ok | _reduce_and(
+                        [bb(val, f.dataType).eqNullSafe(True) for bb in _b])
+                oks.append(ok)
+            return _reduce_and(oks)
 
         self._add(name, "unevaluatedProperties", usp,
-                  "property not evaluated by any schema", "error", build)
+                  f"{'column' if row else 'property'} not evaluated by any "
+                  f"schema", "error", build, doc_path="" if row else None)
 
     def _array_claims(self, frag, sp, top=False):
         """{n_prefix, all_items, contains, branches} claim structure for
@@ -2188,7 +1698,7 @@ class ColumnarValidator:
                 f"{sorted(set(unsafe))})")
             return {"n_prefix": 0, "all_items": False, "contains": None,
                     "branches": ()}
-        from m3spark.schema.core import D2020
+        frag = self._active(frag)
         is2020 = _ge(self.draft, D2020)
         items = frag.get("items")
         prefix = frag.get("prefixItems") if is2020 else (
@@ -2204,7 +1714,7 @@ class ColumnarValidator:
             not top and "unevaluatedItems" in frag)
         contains = None
         if is2020 and isinstance(frag.get("contains"), (dict, bool)):
-            contains = self._error_builders(frag["contains"],
+            contains = self._value_builders(frag["contains"],
                                             f"{sp}/contains")
         branches = []
         for comb in ("allOf", "anyOf", "oneOf"):
@@ -2265,14 +1775,12 @@ class ColumnarValidator:
 
     def _compile_unevaluated_items(self, name, sub, sp):
         ui = sub.get("unevaluatedItems")
-        if ui is None or not _ge(self.draft, D2019):
-            return
-        if ui is True or ui == {}:
+        if ui is None or ui is True or ui == {}:
             return
         claims = self._array_claims(sub, sp, top=True)
         usp = f"{sp}/unevaluatedItems"
         ub = None if ui is False else (
-            self._error_builders(ui, usp) if isinstance(ui, dict) else None)
+            self._value_builders(ui, usp) if isinstance(ui, dict) else None)
         if ui is not False and ub is None:
             return
         if claims["all_items"]:
@@ -2295,35 +1803,34 @@ class ColumnarValidator:
                   build)
 
     def _compile_combinator(self, name, comb, subs, sp):
+        row = name == self._ROW_CHECK
         if comb == "allOf":
             # pure conjunction: flatten every branch's checks to
             # first-class checks with their precise inner schema paths —
             # the interpreter propagates inner violations verbatim
             # (core.py c_all_of), and the flat form also keeps each
             # predicate in the same codegen stage with no wrapper expr.
-            # A flattened check renders the whole column as its value:
-            # its value_of navigator is not kept
+            # A row branch compiles onto this row; a column branch
+            # compiles apart (its content-decode columns stay its own)
             for i, s in enumerate(subs):
-                self.checks.extend(
-                    replace(c, value_of=None)
-                    for c in self._sub_checks(s, f"{sp}/{i}", name=name))
+                if not row:
+                    self.checks.extend(
+                        self._sub_checks(s, f"{sp}/{i}", name=name))
+                elif isinstance(s, dict):
+                    self._compile_root(s, f"{sp}/{i}")
             return
-        groups = [[c.build for c in self._sub_checks(s, f"{sp}/{i}",
-                                                     name=name)]
-                  for i, s in enumerate(subs)]
+        preds = [self._fragment_pred(s, f"{sp}/{i}", row, errors_only=False)
+                 for i, s in enumerate(subs)
+                 if isinstance(s, (dict, bool))]
 
-        def build(col, dt, _g=groups, _comb=comb):
-            branch = [_reduce_and([b(col, dt) for b in builders])
-                      for builders in _g]
+        def build(col, dt, _p=tuple(preds), _comb=comb):
+            branch = [p(col, dt) for p in _p]
             if _comb == "anyOf":
                 return _reduce_or(branch)
-            total = None
-            for p in branch:
-                c = F.when(p, 1).otherwise(0)
-                total = c if total is None else total + c
-            return total == 1
+            return _count(branch) == 1
 
-        self._add(name, comb, sp, f"{comb} constraint failed", "error", build)
+        self._add(name, comb, sp, f"{comb} constraint failed", "error",
+                  build, doc_path="" if row else None)
 
     # -- application --------------------------------------------------------
 
@@ -2358,7 +1865,7 @@ class ColumnarValidator:
         self._avail = set(n for n, _ in added)
         structs = []
         for c in self.checks:
-            ok = self._check_ok(c, dtypes)
+            ok = self._check_ok(c, df.schema)
             if c.keyword == "required" and c.doc_path == "":
                 # interp parity: top-level required renders the ROW
                 # document (to_json omits nulls = absent fields)
@@ -2418,19 +1925,19 @@ class ColumnarValidator:
             F.col(out_violations)["level"], "error")
         return added, viol_arr, valid_col
 
-    def _check_ok(self, c: Check, dtypes: dict) -> Column:
-        """Check ``c``'s pass predicate over a table of ``dtypes``
-        (name -> DataType)."""
+    def _check_ok(self, c: Check, row: T.StructType) -> Column:
+        """Check ``c``'s pass predicate over a table whose row type is
+        ``row``."""
         if c.column == self._ROW_CHECK:
-            return c.build(None, dtypes)
-        if c.column not in dtypes:
+            return c.build(None, row)
+        if c.column not in row.names:
             # column absent from the table: TOP-LEVEL required (doc_path
             # "", the row object) fails statically; everything else
             # passes — including nested required, whose parent property
             # is missing (presence semantics, c_required parity)
             return F.lit(not (c.keyword == "required"
                               and c.doc_path == ""))
-        return c.build(F.col(c.column), dtypes[c.column])
+        return c.build(F.col(c.column), row[c.column].dataType)
 
     def violation_prefilter(self, df: DataFrame) -> DataFrame:
         """``df`` filtered to rows that carry at least one violation:
@@ -2448,8 +1955,7 @@ class ColumnarValidator:
                              "schemas with content keywords")
 
         def build():
-            dtypes = {f.name: f.dataType for f in df.schema.fields}
-            return _reduce_or([~self._check_ok(c, dtypes).eqNullSafe(True)
+            return _reduce_or([~self._check_ok(c, df.schema).eqNullSafe(True)
                                for c in self.checks])
 
         return df.where(expr_memo(self, df.dtypes, (), build))
@@ -2458,6 +1964,41 @@ class ColumnarValidator:
         """The north-star violation table: (key, keyword, path, message,
         offending value)."""
         return violation_rows(self.apply(df), key_col)
+
+
+def _field(col, name: str) -> Column:
+    """Field ``name`` of an object: a column of the table row when
+    ``col`` is None, else a field of struct column ``col``."""
+    return F.col(name) if col is None else col.getField(name)
+
+
+def _fields(dt: T.DataType):
+    """The static fields of an object type (the row's or a struct's);
+    none for any other type."""
+    return dt.fields if isinstance(dt, T.StructType) else ()
+
+
+def _field_ok(v: Column, vt: T.DataType, builders) -> Column:
+    """Field value ``v`` is missing (NULL) or passes every builder."""
+    return v.isNull() | _reduce_and(
+        [b(v, vt).eqNullSafe(True) for b in builders])
+
+
+def _not_rlike(jpat: str):
+    # no default-arg capture: PySpark counts lambda params to decide
+    # whether to pass the element index
+    return lambda k: ~k.rlike(jpat)
+
+
+def _count(preds: list[Column]) -> Column:
+    """How many of ``preds`` are true (NULL counts as false)."""
+    counts = [F.when(p, 1).otherwise(0) for p in preds]
+    if not counts:
+        return F.lit(0)
+    out = counts[0]
+    for x in counts[1:]:
+        out = out + x
+    return out
 
 
 def _struct_field(col: Column, dt: T.DataType, name: str):
@@ -2598,12 +2139,6 @@ def _b64_ok(col: Column) -> Column:
         F.is_valid_utf8(F.unbase64(col))
 
 
-def _variant_field(v: Column, k: str) -> Column:
-    """The field as a VARIANT; SQL NULL iff missing (a JSON null field
-    is a non-null VOID variant, so presence is distinguishable)."""
-    return F.try_variant_get(v, f"$.{k}", "variant")
-
-
 def _variant_is(v: Column, prefix: str) -> Column:
     return F.schema_of_variant(v).startswith(prefix)
 
@@ -2683,36 +2218,6 @@ def _items_lift(p):
         arr = _variant_arr(v)
         return arr.isNull() | F.forall(arr, lambda e: p(e))
     return lifted
-
-
-def _variant_num(v: Column, k: str) -> Column:
-    return F.try_variant_get(v, f"$.{k}", "double")
-
-
-def _variant_str(v: Column, k: str) -> Column:
-    return F.try_variant_get(v, f"$.{k}", "string")
-
-
-def _variant_scalar_in(v: Column, k: str, vals: tuple) -> Column:
-    """JSON equality of a variant field against scalar literals: typed
-    (1 != true, 1 != "1") but numeric-kind-blind (1 == 1.0)."""
-    f = _variant_field(v, k)
-    typ = F.schema_of_variant(f)
-    preds = []
-    for x in vals:
-        if x is None:
-            preds.append(typ == "VOID")
-        elif isinstance(x, bool):
-            preds.append((typ == "BOOLEAN")
-                         & (F.try_variant_get(v, f"$.{k}", "boolean")
-                            == F.lit(x)))
-        elif isinstance(x, (int, float)):
-            preds.append(_variant_is_number(f)
-                         & (_variant_num(v, k) == F.lit(float(x))))
-        else:
-            preds.append((typ == "STRING") & (_variant_str(v, k)
-                                              == F.lit(x)))
-    return _reduce_or(preds)
 
 
 def _string_only(build):

@@ -69,13 +69,14 @@ hatch routes it to the interpreter) whenever it sees:
 PRODUCTIVE cycles — recursion that passes through ``properties`` /
 ``items`` / another data-descent keyword (the linked-list / tree
 idiom, reference lazy resolution at property.cljc:204-295) — are
-UNROLLED ``unroll`` levels (default 8, ``M3SPARK_REF_UNROLL``).  Spark
-column types are finite trees, so the unrolled plan is EXACT for every
-input whose type nests no deeper than the unroll depth: the compiler's
-type-driven builder descent simply never reaches the cut.  At the cut
-the inliner plants ``{"x-m3-unroll-guard": <ref>}``; the compiler
-lowers that to a builder that raises ``UnsupportedKeyword`` at
-``apply()`` time IF AND ONLY IF the input column type actually nests
+UNROLLED ``unroll`` levels (default 8, ``ColumnarValidator``'s
+``ref_unroll``).  Spark column types are finite trees, so the unrolled
+plan is EXACT for every input whose type nests no deeper than the
+unroll depth: the compiler's type-driven builder descent simply never
+reaches the cut.  At the cut the inliner plants
+``{"x-m3-unroll-guard": <ref>}``; the compiler lowers that to a
+builder that raises ``UnsupportedKeyword`` at ``apply()`` time IF AND
+ONLY IF the input column type actually nests
 deeper than the unroll — i.e. deeper-typed tables still route to the
 Arrow interpreter, shallow ones stay pure JVM.
 
@@ -88,7 +89,6 @@ never touched.
 from __future__ import annotations
 
 import logging
-import os
 
 from m3spark.schema.core import (DRAFT3, DRAFT4, D2019, D2020, DNEXT,
                                  _ge, draft_of)
@@ -103,10 +103,6 @@ _log = logging.getLogger(__name__)
 # builder that raises UnsupportedKeyword only when the input type is
 # deep enough to reach it (never a real JSON Schema keyword)
 UNROLL_GUARD_KEY = "x-m3-unroll-guard"
-
-
-def _default_unroll() -> int:
-    return int(os.environ.get("M3SPARK_REF_UNROLL", "8"))
 
 # keys whose value is one schema (or draft-dependent single-schema form)
 _SINGLE_SCHEMA_KEYS = (
@@ -151,7 +147,7 @@ class _GiveUp(Exception):
     """Transform cannot be done safely; caller keeps the original."""
 
 
-def inline_local_refs(schema, draft: str, unroll: int | None = None,
+def inline_local_refs(schema, draft: str, unroll: int = 8,
                       registry: dict | None = None,
                       uri_dirs: dict | None = None):
     """Return ``schema`` with every reference eagerly expanded
@@ -166,9 +162,7 @@ def inline_local_refs(schema, draft: str, unroll: int | None = None,
     try:
         if not _contains_ref(schema):
             return schema
-        return _Inliner(schema, draft,
-                        _default_unroll() if unroll is None
-                        else unroll, registry, uri_dirs).run()
+        return _Inliner(schema, draft, unroll, registry, uri_dirs).run()
     except _GiveUp:
         return schema
 

@@ -1,12 +1,21 @@
-"""Root-level cross-column applicators in the columnar engine
-(if/then/else, anyOf/oneOf/not, dependentRequired over table columns) —
-must agree with the interpreter row-for-row."""
+"""Object keywords in the columnar engine — root-level cross-column
+applicators (if/then/else, anyOf/oneOf/not, dependentRequired over table
+columns) and the same keywords on struct and map columns — must agree
+with the interpreter row-for-row."""
 
 from __future__ import annotations
 
 import json
+from functools import reduce
+
+import pytest
+from pyspark.sql import DataFrame
+from pyspark.sql import functions as F
 
 from m3spark.columnar import ColumnarValidator
+from m3spark.schema.core import (
+    D2019, D2020, DRAFT3, DRAFT4, DRAFT6, DRAFT7, compile_schema,
+)
 from m3spark.sparkval import validate_json
 
 SCHEMA = {
@@ -89,8 +98,6 @@ def test_root_oneof_and_not(spark):
 def test_root_dependencies_draft7_parity(spark):
     """Pre-2019 `dependencies` at root: array form (required keys) and
     schema form, columnar vs interp; ignored as unknown in 2019+."""
-    from m3spark.schema.core import compile_schema
-
     D7 = "http://json-schema.org/draft-07/schema#"
     D20 = "https://json-schema.org/draft/2020-12/schema"
     schema = {"$schema": D7,
@@ -120,3 +127,119 @@ def test_root_dependencies_draft7_parity(spark):
                                          "a string, b string, c string")
                    ).collect()[0]
     assert bool(r["valid"]) and cs20.validate({"a": "x"}).valid
+
+
+# -- object keywords: one grid over drafts and object positions ------------
+# Each keyword schema constrains an object over the keys "a" and "b"; the
+# object is the table row, a struct column or a map column.  Columnar
+# `valid` must equal the interpreter's verdict in every draft, including
+# the drafts whose keyword table lacks the keyword (it is then ignored).
+
+_LE5 = {"maximum": 5}
+OBJECT_KEYWORDS = {
+    "allOf": {"allOf": [{"properties": {"a": _LE5}}]},
+    "anyOf": {"anyOf": [{"properties": {"a": _LE5}},
+                        {"properties": {"b": _LE5}}]},
+    "oneOf": {"oneOf": [{"properties": {"a": _LE5}},
+                        {"properties": {"b": _LE5}}]},
+    "not": {"not": {"properties": {"a": _LE5}}},
+    "if": {"if": {"properties": {"a": _LE5}},
+           "then": {"properties": {"b": _LE5}}},
+    "dependentRequired": {"dependentRequired": {"a": ["b"]}},
+    "dependentSchemas": {"dependentSchemas": {
+        "a": {"properties": {"b": _LE5}}}},
+    "dependencies": {"dependencies": {
+        "a": ["b"], "b": {"properties": {"a": _LE5}}}},
+    "minProperties": {"minProperties": 2},
+    "maxProperties": {"maxProperties": 1},
+    "propertyNames": {"propertyNames": {"pattern": "^a"}},
+    "additionalProperties": {"properties": {"a": {}},
+                             "additionalProperties": False},
+}
+DRAFTS = [DRAFT3, DRAFT4, DRAFT6, DRAFT7, D2019, D2020]
+POSITIONS = {  # position -> (wrap the keyword schema, table DDL)
+    "row": (lambda s: s, "a long, b long"),
+    "struct": (lambda s: {"properties": {"o": s}},
+               "o struct<a: long, b: long>"),
+    "map": (lambda s: {"properties": {"o": s}}, "o map<string, long>"),
+}
+OBJECTS = [{}, {"a": 1}, {"a": 9}, {"b": 1}, {"b": 9}, {"a": 1, "b": 1},
+           {"a": 9, "b": 9}, {"a": 1, "b": 9}, {"a": 9, "b": 1}]
+
+
+def _rows(position):
+    if position == "row":
+        return [(o.get("a"), o.get("b")) for o in OBJECTS]
+    if position == "struct":
+        return [((o.get("a"), o.get("b")),) for o in OBJECTS]
+    return [(o,) for o in OBJECTS]
+
+
+def _key(position, r):
+    """Identifies an object of OBJECTS in a collected row."""
+    if position == "row":
+        return (r["a"], r["b"])
+    if position == "struct":
+        return tuple(r["o"])
+    return frozenset(r["o"].items())
+
+
+@pytest.fixture(scope="module")
+def object_verdicts(spark):
+    """position -> {(keyword, draft): [columnar valid per object]}, one
+    Spark job per position over a cached table.  Each validator runs on
+    the bare table: an output column of another would be one more row
+    field."""
+    memo = {}
+
+    def get(position):
+        if position not in memo:
+            wrap, ddl = POSITIONS[position]
+            df = spark.createDataFrame(_rows(position), ddl).cache()
+            cells = [(kw, d) for kw in OBJECT_KEYWORDS for d in DRAFTS]
+            parts = [ColumnarValidator(wrap(OBJECT_KEYWORDS[kw]), draft=d)
+                     .apply(df)
+                     .select(F.lit(i).alias("cell"), *df.columns, "valid")
+                     for i, (kw, d) in enumerate(cells)]
+            got = {(r["cell"], _key(position, r)): r["valid"]
+                   for r in reduce(DataFrame.unionAll, parts).collect()}
+            df.unpersist()
+            keys = [_key(position, dict(zip(df.columns, row)))
+                    for row in _rows(position)]
+            memo[position] = {cell: [got[i, k] for k in keys]
+                              for i, cell in enumerate(cells)}
+        return memo[position]
+    return get
+
+
+@pytest.mark.parametrize("position", list(POSITIONS))
+@pytest.mark.parametrize("draft", DRAFTS)
+@pytest.mark.parametrize("keyword", list(OBJECT_KEYWORDS))
+def test_object_keyword_parity(object_verdicts, keyword, draft, position):
+    wrap, _ = POSITIONS[position]
+    cs = compile_schema(wrap(OBJECT_KEYWORDS[keyword]), draft=draft)
+    want = [cs.validate(o if position == "row" else {"o": o}).valid
+            for o in OBJECTS]
+    got = object_verdicts(position)[keyword, draft]
+    assert got == want, list(zip(OBJECTS, got, want))
+
+
+def test_property_not_true_fails_present_values(spark):
+    schema = {"properties": {"o": {"not": True}}}
+    df = spark.createDataFrame([(1,), (None,)], "o long")
+    got = [r["valid"] for r in ColumnarValidator(schema).apply(df).collect()]
+    cs = compile_schema(schema)
+    assert got == [cs.validate({"o": 1}).valid, cs.validate({}).valid] \
+        == [False, True]
+
+
+def test_flattened_allof_renders_the_leaf_value(spark):
+    """A nested check flattened out of `allOf` renders the offending leaf,
+    as the interpreter does, not the whole struct."""
+    schema = {"properties": {"o": {"allOf": [
+        {"properties": {"x": {"maximum": 1}}}]}}}
+    df = spark.createDataFrame([((5, "q"),)], "o struct<x: long, q: string>")
+    (viol,) = ColumnarValidator(schema).apply(df).collect()[0]["violations"]
+    (want,) = compile_schema(schema).validate({"o": {"x": 5, "q": "q"}}).errors
+    assert (viol["keyword"], viol["doc_path"], viol["value"]) \
+        == (want.keyword, want.doc_path, want.value) == ("maximum", "/o/x", "5")

@@ -1,0 +1,120 @@
+"""Snapshot of what the columnar compiler produces for the test corpus.
+
+Every case of ``tests/corpus*.py`` is compiled with its own draft twice:
+as the table-row schema itself and as ``{"properties": {"v": schema}}``.
+For each compiled schema the snapshot records
+
+- the checks as ``(column, keyword, schema_path, doc_path, message,
+  level)`` tuples,
+- the ``UnsupportedKeyword`` text (or another exception's type and text),
+- ``str()`` of the Column trees ``ColumnarValidator._build_apply`` builds
+  over each table shape in ``SHAPES``, with the parts that vary from run
+  to run made stable: lambda variables are numbered per tree, and a
+  Python UDF's call site is dropped.
+
+The output is sorted, indented JSON, so two snapshots (say, of a parent
+commit and of a change) compare with one ``diff``:
+
+    python tools/compile_snapshot.py before.json      # in the parent
+    python tools/compile_snapshot.py after.json       # in the change
+    diff before.json after.json
+"""
+
+from __future__ import annotations
+
+import argparse
+import importlib
+import json
+import re
+import sys
+from pathlib import Path
+
+ROOT = Path(__file__).resolve().parents[1]
+sys.path.insert(0, str(ROOT))
+sys.path.insert(0, str(ROOT / "tests"))
+
+from m3spark.columnar.compiler import (  # noqa: E402
+    ColumnarValidator, UnsupportedKeyword,
+)
+
+CORPORA = [("corpus", "CASES"), ("corpus2", "CASES2"), ("corpus3", "CASES3"),
+           ("corpus4", "CASES4"), ("corpus5", "CASES5"),
+           ("corpus6", "CASES6"), ("corpus7", "CASES7")]
+
+# fixed table shapes (Spark DDL): scalar, array, struct and map columns
+# named "v" for the property form; flat rows over commonly used property
+# names for the row form
+SHAPES = {
+    "v_long": "v long",
+    "v_double": "v double",
+    "v_string": "v string",
+    "v_array": "v array<long>",
+    "v_struct": "v struct<a: long, b: string, foo: long, bar: string>",
+    "v_map": "v map<string, long>",
+    "v_nested": "v struct<a: struct<b: long>, c: array<struct<d: string>>>",
+    "flat": "a long, b string, foo long, bar string, baz array<long>",
+    "flat_obj": "foo struct<bar: long>, a map<string, string>, x double",
+}
+
+_LAMBDA_VAR = re.compile(r"\b([xy])_\d+\b")
+_UDF_SITE = re.compile(r"Some\(\[Ljava\.lang\.StackTraceElement;@\w+\),"
+                       r"Some\(\(\w+,[^)]*\)\)")
+
+
+def _stable(tree) -> str:
+    names: dict = {}
+    return _LAMBDA_VAR.sub(
+        lambda m: names.setdefault(m.group(0), f"{m.group(1)}_{len(names)}"),
+        _UDF_SITE.sub("<call site>", str(tree)))
+
+
+def _err(e: Exception) -> str:
+    return f"{type(e).__name__}: {e}"
+
+
+def snapshot_one(schema, draft, frames) -> dict:
+    try:
+        cv = ColumnarValidator(schema, draft=draft)
+    except UnsupportedKeyword as e:
+        return {"unsupported": str(e)}
+    except Exception as e:  # noqa: BLE001 - recorded, compared by text
+        return {"error": _err(e)}
+    trees = {}
+    for name, df in frames.items():
+        try:
+            added, viol, valid = cv._build_apply(df, "violations")
+            trees[name] = [_stable(c) for c in
+                           [c for _, c in added] + [viol, valid]]
+        except Exception as e:  # noqa: BLE001
+            trees[name] = _err(e)
+    return {"checks": [[c.column, c.keyword, c.schema_path, c.doc_path,
+                        c.message, c.level] for c in cv.checks],
+            "trees": trees}
+
+
+def main() -> None:
+    ap = argparse.ArgumentParser(description=__doc__.splitlines()[0])
+    ap.add_argument("out", help="output JSON path")
+    args = ap.parse_args()
+    from m3spark.session import get_spark
+    spark = get_spark("compile-snapshot", cores=2)
+    spark.sparkContext.setLogLevel("ERROR")
+    frames = {n: spark.createDataFrame([], ddl) for n, ddl in SHAPES.items()}
+    snap = {}
+    for mod, attr in CORPORA:
+        cases = getattr(importlib.import_module(mod), attr)
+        for i, (draft, desc, schema, _tests) in enumerate(cases):
+            for form, s in (("root", schema),
+                            ("property", {"properties": {"v": schema}})):
+                snap[f"{mod}/{i:04d}/{form}"] = dict(
+                    snapshot_one(s, draft, frames), description=desc)
+    with open(args.out, "w") as f:
+        json.dump(snap, f, indent=1, sort_keys=True, default=repr)
+        f.write("\n")
+    n_ok = sum("checks" in v for v in snap.values())
+    print(f"{len(snap)} schemas, {n_ok} compiled -> {args.out}")
+    spark.stop()
+
+
+if __name__ == "__main__":
+    main()
