@@ -57,8 +57,9 @@ class UnsupportedKeyword(Exception):
 @dataclass
 class Check:
     """One compiled constraint: a builder producing an 'ok' predicate
-    from (column, its type), or from (None, row type) for a row check."""
-    column: str
+    from (column, its type), or from (None, row type) for a row check
+    (``column`` None)."""
+    column: str | None
     keyword: str
     schema_path: str
     message: str
@@ -80,7 +81,8 @@ def _type_ok(tname: str, dtype: T.DataType, col: Column) -> Column:
     satisfies the JSON type, the predicate folds to a literal (free under
     Catalyst constant folding)."""
     if tname == "null":
-        return col.isNull()
+        # NullType is the typed view of a JSON null inside a VARIANT
+        return F.lit(True) if isinstance(dtype, T.NullType) else col.isNull()
     if tname == "string":
         return F.lit(isinstance(dtype, T.StringType))
     if tname == "boolean":
@@ -335,19 +337,21 @@ class ColumnarValidator:
         self.format_assertion = format_assertion
         self.checks: list[Check] = []
         self.unsupported: list[str] = []
-        # shared subexpressions bound ONCE per row in a projection below
-        # the check projection (r8): name -> (source column, () -> Column).
-        # Today this carries the content-keyword decode chain
-        # (try_parse_json(unbase64(col)) and the base64-validity gate),
-        # which would otherwise be re-evaluated by every per-keyword
-        # predicate — Spark's codegen subexpression elimination does not
-        # collapse them because each occurrence sits inside a different
-        # conditional branch.  apply() materializes these and records
-        # them in _avail; builders fall back to the inline expression
-        # when their validator instance was hoisted into a fragment
-        # predicate (whose synthetic columns never hit a real plan).
+        # the content decode, bound ONCE per row in a projection below
+        # the check projection: name -> (source column, () -> Column).
+        # Each string column with content keywords binds its base64
+        # gate (``__m3b64__<col>``) and its decoded VARIANT
+        # (``__m3var__<col>``); every contentSchema check reads them.
+        # apply() materializes these and records them in _avail; a
+        # fragment validator's checks never reach apply(), so they
+        # build the decode inline.
         self.derived: dict = {}
         self._avail: set = set()
+        # the values compiled here are decoded content (a VARIANT).  SQL
+        # has no equality on VARIANT, so uniqueItems and array/object
+        # enum/const literals cannot lower, and value applicators report
+        # each inner check (_surface_values).  _sub_checks passes it on.
+        self._variant = False
 
     # -- compilation --------------------------------------------------------
 
@@ -382,7 +386,7 @@ class ColumnarValidator:
         "extends", "propertyDependencies",
     }
 
-    _ROW_CHECK = ""  # Check.column sentinel: build receives (None, row type)
+    _ROW_CHECK = None  # a row check's column: build gets (None, row type)
     # keywords a checker reads beside its own (c_if's then/else,
     # c_contains's min/maxContains) and the inliner's unroll cut
     _COMPANIONS = frozenset({"then", "else", "minContains", "maxContains",
@@ -406,24 +410,35 @@ class ColumnarValidator:
             if k not in self._ROOT_KEYWORDS:
                 self.unsupported.append(k)
         schema = self._active(schema)
-        req = schema.get("required")
-        if isinstance(req, list):
-            for name in req:
-                # interp convention (c_required): the violation sits at
-                # the OBJECT that is missing the key — the table row,
-                # pointer "" — and renders the row document as value
-                # (apply() special-cases the whole-row to_json)
-                self._add(name, "required", f"{sp}/required",
-                          f"required property {name!r} missing",
-                          "error", self._required_builder(),
-                          doc_path="")
+        for name, rsp in self._required_keys(schema, sp):
+            # interp convention (c_required): the violation sits at
+            # the OBJECT that is missing the key — the table row,
+            # pointer "" — and renders the row document as value
+            # (apply() special-cases the whole-row to_json)
+            self._add(name, "required", rsp,
+                      f"required property {name!r} missing",
+                      "error", lambda col, dt: col.isNotNull(),
+                      doc_path="")
         props = schema.get("properties")
         if isinstance(props, dict):
             for name, sub in props.items():
                 self._compile_property(name, sub, f"{sp}/properties/{name}")
         self._compile_object(self._ROW_CHECK, schema, sp)
 
-    def _compile_object(self, name: str, sub: dict, sp: str):
+    def _required_keys(self, sub: dict, sp: str) -> list:
+        """(key, schema path) for each key object ``sub`` requires: its
+        ``required`` list, and in draft 3 each property schema that
+        says ``"required": true`` (c_properties' draft-3 form)."""
+        req = sub.get("required")
+        out = ([(k, f"{sp}/required") for k in req]
+               if isinstance(req, list) else [])
+        props = sub.get("properties")
+        if self.draft == DRAFT3 and isinstance(props, dict):
+            out += [(k, f"{sp}/properties/{k}") for k, s in props.items()
+                    if isinstance(s, dict) and s.get("required") is True]
+        return out
+
+    def _compile_object(self, name: str | None, sub: dict, sp: str):
         """The object keywords of ``sub`` at one object position: the
         table row (``name`` is ``_ROW_CHECK``; builders get ``(None, row
         type)`` and read the columns) or column ``name`` (builders get
@@ -431,10 +446,10 @@ class ColumnarValidator:
         static, so their names match at build time; map keys are
         dynamic (HOFs over ``map_keys``); any other type passes — the
         ``type`` keyword reports it (m3 analog: property.cljc:992-1095)."""
-        row = name == self._ROW_CHECK
+        row = name is self._ROW_CHECK
 
-        def add(kw, ksp, msg, build):
-            self._add(name, kw, ksp, msg, "error", build,
+        def add(kw, ksp, msg, build, on="object"):
+            self._add(name, kw, ksp, msg, "error", _only(on, build),
                       doc_path="" if row else None)
 
         pats = self._claim_patterns(sub)
@@ -445,6 +460,12 @@ class ColumnarValidator:
                     or not isinstance(psch, (dict, bool)):
                 continue
             psp = f"{sp}/patternProperties/{pat}"
+            if self._variant:
+                self._surface_values(
+                    name, psch, psp, T.MapType,
+                    lambda col, _j=jpat: F.map_values(
+                        F.map_filter(col, lambda k, v: k.rlike(_j))))
+                continue
             vb = self._value_builders(psch, psp)
             if not vb:
                 continue
@@ -464,21 +485,23 @@ class ColumnarValidator:
                 f"value under key matching {pat!r} violates schema",
                 build_pp)
         ap = sub.get("additionalProperties")
-        if isinstance(ap, (dict, bool)) and ap is not True and ap != {}:
-            props = sub.get("properties")
-            named = tuple(props) if isinstance(props, dict) else ()
+        props = sub.get("properties")
+        named = tuple(props) if isinstance(props, dict) else ()
+        ap_on = isinstance(ap, (dict, bool)) and ap is not True and ap != {}
+        if ap_on and self._variant:
+            self._surface_values(
+                name, ap, f"{sp}/additionalProperties", T.MapType,
+                lambda col, _n=named, _p=tuple(pats.values()):
+                F.transform(_additional_keys(col, _n, _p),
+                            lambda k: F.element_at(col, k)))
+        elif ap_on:
             ab = () if ap is False else self._value_builders(
                 ap, f"{sp}/additionalProperties")
 
             def build_ap(col, dt, _n=named, _p=tuple(pats.values()),
                          _b=ab, _false=ap is False):
                 if isinstance(dt, T.MapType):
-                    keys = F.map_keys(col)
-                    if _n:
-                        keys = F.array_except(
-                            keys, F.array(*[F.lit(k) for k in _n]))
-                    for jp, _ in _p:
-                        keys = F.filter(keys, _not_rlike(jp))
+                    keys = _additional_keys(col, _n, _p)
                     if _false:
                         return F.size(keys) == 0
                     return F.forall(keys, lambda k: _reduce_and(
@@ -557,26 +580,36 @@ class ColumnarValidator:
                                     errors_only=False)
             add("not", f"{sp}/not",
                 f"{'row' if row else 'value'} matches 'not' schema",
-                lambda col, dt, _p=p: ~_p(col, dt))
-        # if/then/else: a warning fails the `if` branch (c_if), while a
-        # then/else arm fails only on errors (it forwards its own)
+                lambda col, dt, _p=p: ~_p(col, dt), on=None)
+        # if/then/else (c_if): a warning fails the `if` branch; the
+        # taken arm forwards its own errors, so each error check of
+        # then/else is a check at `.../if/../then|else/...`, gated on
+        # the `if` outcome
         if isinstance(sub.get("if"), (dict, bool)):
             if_p = self._fragment_pred(sub["if"], f"{sp}/if", row,
                                        errors_only=False)
-            arms = [self._fragment_pred(sub[a], f"{sp}/{a}", row)
-                    if isinstance(sub.get(a), (dict, bool)) else None
-                    for a in ("then", "else")]
+            for arm in ("then", "else"):
+                if not isinstance(sub.get(arm), (dict, bool)):
+                    continue
+                for c in self._sub_checks(sub[arm], f"{sp}/if/../{arm}",
+                                          name=name, errors_only=True,
+                                          jvm_only=not row):
+                    b = ((lambda col, dt, _c=c: self._check_ok(_c, dt))
+                         if row else c.build)
 
-            def build_ite(col, dt, _i=if_p, _t=arms[0], _e=arms[1]):
-                t_ok = _t(col, dt) if _t is not None else F.lit(True)
-                e_ok = _e(col, dt) if _e is not None else F.lit(True)
-                return F.when(_i(col, dt), t_ok).otherwise(e_ok)
+                    def gated(col, dt, _i=if_p, _b=b, _then=arm == "then"):
+                        cond = _i(col, dt)
+                        return (~cond if _then else cond) | _b(col, dt)
 
-            add("if", f"{sp}/if", "conditional (if/then/else) failed",
-                build_ite)
+                    gated._jvm = getattr(b, "_jvm", True)
+                    doc = c.doc_path
+                    if row and doc is None:
+                        doc = f"/{c.column}"
+                    self.checks.append(replace(c, column=name, build=gated,
+                                               doc_path=doc))
 
     def _sub_checks(self, frag, sp, name="_e", errors_only=False,
-                    jvm_only=False) -> list[Check]:
+                    jvm_only=False, variant=False) -> list[Check]:
         """The checks of subschema ``frag``, compiled with this
         validator's draft and format_assertion — the one place a
         fragment compiles.  ``frag`` compiles as property ``name`` of a
@@ -591,14 +624,21 @@ class ColumnarValidator:
         in-place applicator); ``jvm_only`` drops pandas-UDF checks,
         which cannot run inside a higher-order-function lambda, a
         getField descent or a branch predicate, and reports each as
-        unsupported."""
+        unsupported.  ``variant``: ``frag`` checks decoded content
+        (see ``_variant``)."""
         if frag is True or frag == {}:
             return []
-        root = frag if name is None else {"properties": {name: frag}}
+        if frag is False and name is None:
+            return [Check(None, "false", sp, "schema is false", "error",
+                          lambda col, row: F.lit(False), doc_path="")]
         prefix = "" if name is None else f"/properties/{name}"
         inner = ColumnarValidator.__new__(ColumnarValidator)
-        inner._setup(root, self.draft, self.format_assertion)
-        inner._compile_root(root)
+        inner._setup(frag, self.draft, self.format_assertion)
+        inner._variant = self._variant or variant
+        if name is None:
+            inner._compile_root(frag)
+        else:
+            inner._compile_property(name, frag, prefix)
         self.unsupported.extend(sp + u.removeprefix(prefix)
                                 for u in inner.unsupported)
         out = []
@@ -614,20 +654,29 @@ class ColumnarValidator:
             out.append(replace(c, schema_path=path))
         return out
 
-    def _required_builder(self):
-        return lambda col, dt: col.isNotNull()
+    def _surface_values(self, name, frag, sp, container, values):
+        """Each check of value schema ``frag`` as its own check over
+        every value ``values(col)`` picks from a ``container`` (map or
+        array) value.  Decoded content reports violations this way
+        (inner keyword and path), as the interpreter's c_items,
+        c_pattern_properties and c_additional_properties forward each
+        inner violation; typed columns report at the applicator."""
+        for c in self._sub_checks(frag, sp, jvm_only=True):
+            def build(col, dt, _b=c.build):
+                if not isinstance(dt, container):
+                    return F.lit(True)  # type keyword reports mismatches
+                vt = (dt.valueType if isinstance(dt, T.MapType)
+                      else dt.elementType)
+                return F.forall(values(col), lambda x: _b(x, vt))
+            self._add(name, c.keyword, c.schema_path, c.message, c.level,
+                      _only("object" if container is T.MapType else "array",
+                            build))
 
     def _add(self, column, keyword, sp, msg, level, build, null_passes=True,
              doc_path=None, value_of=None):
-        # a missing value passes; the row (column _ROW_CHECK) is never
-        # missing
-        if null_passes and keyword != "required" \
-                and column != self._ROW_CHECK:
-            inner = build
-            wrapped = lambda col, dt, _b=inner: (  # noqa: E731
-                F.when(col.isNull(), F.lit(True)).otherwise(_b(col, dt)))
-            wrapped._jvm = getattr(inner, "_jvm", True)
-            build = wrapped
+        # the row (column _ROW_CHECK) is never missing and never a VARIANT
+        if column is not self._ROW_CHECK:
+            build = _at_value(build, null_passes and keyword != "required")
         self.checks.append(Check(column, keyword, sp, msg, level, build,
                                  doc_path, value_of))
 
@@ -689,10 +738,19 @@ class ColumnarValidator:
                       build_type_union,
                       null_passes=False if "null" in names else True)
 
+        for kw, lits in (("enum", sub.get("enum")),
+                         ("const", [sub.get("const")])):
+            if self._variant and isinstance(lits, list) and any(
+                    isinstance(x, (list, dict)) for x in lits):
+                self.unsupported.append(
+                    f"{sp}/{kw} (array or object literal: SQL has no "
+                    f"equality on VARIANT values)")
         if isinstance(sub.get("enum"), list):
             vals = sub["enum"]
 
             def build_enum(col, dt, _v=tuple(vals)):
+                if isinstance(dt, T.NullType):
+                    return F.lit(None in _v)
                 ok = [x for x in _v if _value_compat(x, dt)]
                 # incompatible-typed literals can never match this column
                 if not ok:
@@ -720,6 +778,8 @@ class ColumnarValidator:
             cv = sub["const"]
 
             def build_const(col, dt, _c=cv):
+                if isinstance(dt, T.NullType):
+                    return F.lit(_c is None)
                 if not _value_compat(_c, dt):
                     return F.lit(False)
                 if isinstance(_c, list):
@@ -821,15 +881,27 @@ class ColumnarValidator:
         self._compile_object(name, sub, sp)
 
     # -- content keywords (decode-then-validate, §2.9) -----------------------
-    # Lowered to pure JVM expressions: base64 structural validity as one
-    # rlike + is_valid_utf8(unbase64(...)), JSON well-formedness as
-    # try_parse_json IS NOT NULL, and contentSchema as variant-typed
-    # predicates over the decoded column — zero Python stages.  Interp
-    # parity (core.py c_content, reference property.cljc:743-810): the
-    # checker is registered under contentEncoding when present, so every
-    # content violation carries that keyword's schema path; draft-07 =
-    # errors, 2019+ = warnings; an invalid encoding suppresses the
-    # downstream media-type / schema checks.
+    # Pure JVM: base64 validity is one rlike plus is_valid_utf8 of the
+    # decoded bytes, JSON well-formedness is try_parse_json IS NOT NULL,
+    # and contentSchema compiles through _sub_checks like any subschema,
+    # its checks reading the decoded VARIANT through the typed builders
+    # (m3 runs the same checkers on the decoded value,
+    # property.cljc:788-810).  Both decodes are total (try_to_binary,
+    # try_parse_json), so no plan shape can make one throw.  Interp
+    # parity (core.py c_content): the checker is registered under
+    # contentEncoding when present, so every content violation carries
+    # that keyword's schema path; draft-07 = errors, 2019+ = warnings,
+    # and every contentSchema violation is a warning; an invalid
+    # encoding suppresses the downstream media-type / schema checks.
+
+    def _bind(self, dname: str, src: str, expr):
+        """Registers ``expr`` of column ``src`` as derived column
+        ``dname``, bound once per row when this validator's apply()
+        runs.  Returns its reader: the bound column inside apply(), the
+        inline expression for a fragment validator's checks."""
+        self.derived[dname] = (src, lambda: expr(F.col(src)))
+        return lambda col: (F.col(dname) if dname in self._avail
+                            else expr(col))
 
     def _compile_content(self, name: str, sub: dict, sp: str, draft):
         enc = sub.get("contentEncoding")
@@ -842,20 +914,8 @@ class ColumnarValidator:
         csp = f"{sp}/{reg}"
         b64 = enc == "base64"
 
-        # shared decode subexpressions, bound once per row when this
-        # validator's apply() runs (fallback: inline, for validators
-        # hoisted into fragment predicates)
-        vname = f"__m3var__{name}"
-        bname = f"__m3b64__{name}"
-
-        def _bok(col):
-            if bname in self._avail:
-                return F.col(bname)
-            return _b64_ok(col)
-
         if b64:
-            self.derived[bname] = (name,
-                                   lambda _n=name: _b64_ok(F.col(_n)))
+            _bok = self._bind(f"__m3b64__{name}", name, _b64_ok)
             self._add(name, "contentEncoding", csp, "not valid base64",
                       level, _string_only(lambda col, dt: _bok(col)))
 
@@ -866,25 +926,12 @@ class ColumnarValidator:
         if mt != "application/json" and not assume_json:
             return
 
-        def dec(col):
-            return F.unbase64(col).cast("string") if b64 else col
-
-        def _var(col):
-            if vname in self._avail:
-                return F.col(vname)
-            return F.try_parse_json(dec(col))
-
-        # the b64 variant must stay NULL (not throw) on invalid base64:
-        # unbase64 raises on malformed input, so the decode is gated on
-        # the validity check — exactly the guard every consumer's
-        # short-circuit (`~b64_ok | ...`, `b64_ok & ...`) already
-        # implies, so substituting NULL is observationally identical
-        self.derived[vname] = (
-            name, lambda _n=name, _b=b64: (
-                F.when(_b64_ok(F.col(_n)),
-                       F.try_parse_json(
-                           F.unbase64(F.col(_n)).cast("string")))
-                if _b else F.try_parse_json(F.col(_n))))
+        # the rlike gate in _bok rejects what the lenient decode accepts
+        # (unpadded input); every consumer applies it
+        _var = self._bind(f"__m3var__{name}", name, lambda col: (
+            F.try_parse_json(
+                F.try_to_binary(col, F.lit("base64")).cast("string")
+                if b64 else col)))
 
         def json_ok(col, dt):
             ok = _var(col).isNotNull()
@@ -903,212 +950,19 @@ class ColumnarValidator:
                       _string_only(json_ok))
 
         if isinstance(csch, (dict, bool)):
-            for kw, spath, msg, inner in self._lower_content_schema(
-                    csch, f"{csp}/contentSchema"):
-                def gated(col, dt, _inner=inner):
+            for c in self._sub_checks(csch, f"{csp}/contentSchema",
+                                      errors_only=True, jvm_only=True,
+                                      variant=True):
+                def gated(col, dt, _b=c.build):
                     v = _var(col)
                     gate = v.isNotNull()
                     if b64:
                         gate = _bok(col) & gate
-                    return ~gate | _inner(v)
+                    return ~gate | _b(v, T.VariantType())
                 # interp parity: every contentSchema violation is a
                 # warning regardless of draft (core.py c_content)
-                self._add(name, kw, spath, msg, "warning",
-                          _string_only(gated))
-
-    _CONTENT_SCALARS = {"type", "minLength", "maxLength", "pattern",
-                        "minimum", "maximum", "const", "enum"}
-    _CONTENT_ANNOTATIONS = {"title", "description", "$comment", "default",
-                            "examples", "deprecated", "readOnly",
-                            "writeOnly"}
-    _CONTENT_KEYWORDS = _CONTENT_SCALARS | _CONTENT_ANNOTATIONS | {
-        "properties", "required", "items", "minItems", "maxItems",
-        "allOf", "anyOf", "oneOf", "not", "if", "then", "else"}
-
-    def _lower_content_schema(self, csch, sp: str) -> list:
-        """Lower a contentSchema fragment to predicates over a VARIANT
-        column (the try_parse_json of the decoded content) — RECURSIVE
-        over nested objects (``$.a.b`` paths) and arrays (cast to
-        ``array<variant>`` + forall), so realistic contentSchemas stay
-        0-Python at any depth.  Keywords outside the supported subset
-        route the schema to the interpreter via UnsupportedKeyword (the
-        compiler's standing escape hatch)."""
-        return self._variant_preds(csch, sp)
-
-    def _check_variant_key(self, k, sp):
-        if not isinstance(k, str) or not k.isidentifier():
-            self.unsupported.append(
-                f"{sp} (contentSchema key {k!r} needs JSON-pointer "
-                f"escaping in a variant path)")
-
-    def _variant_preds(self, frag, sp: str) -> list:
-        """(keyword, schema_path, message, fn(variant) -> ok) entries
-        for a contentSchema fragment applied to a VARIANT value."""
-        if frag is True or frag == {}:
-            return []
-        if frag is False:
-            return [("false", sp, "schema is false: nothing is valid",
-                     lambda v: F.lit(False))]
-        if not isinstance(frag, dict):
-            return []
-        out = []
-        for k in frag:
-            if k not in self._CONTENT_KEYWORDS:
-                self.unsupported.append(f"{sp}/{k} (contentSchema subset)")
-        t = frag.get("type")
-        if isinstance(t, str):
-            out.append(("type", f"{sp}/type", f"expected type {t}",
-                        lambda v, _t=t: _variant_type_ok(v, _t)))
-        for kw, keep in (("minLength", lambda s, n: F.length(s) >= n),
-                         ("maxLength", lambda s, n: F.length(s) <= n)):
-            if isinstance(frag.get(kw), int):
-                n = frag[kw]
-                out.append((
-                    kw, f"{sp}/{kw}",
-                    f"string {'shorter' if kw == 'minLength' else 'longer'}"
-                    f" than {n}",
-                    lambda v, _n=n, _keep=keep:
-                    ~_variant_is(v, "STRING")
-                    | _keep(_variant_cast(v, "string"), _n)))
-        if isinstance(frag.get("pattern"), str):
-            pat = frag["pattern"]
-            pred = _pattern_pred(pat)
-            if not getattr(pred, "_jvm", True):
-                self.unsupported.append(
-                    f"{sp}/pattern (python-only regex inside "
-                    f"contentSchema)")
-            else:
-                out.append((
-                    "pattern", f"{sp}/pattern",
-                    f"string does not match {pat!r}",
-                    lambda v, _p=pred: ~_variant_is(v, "STRING")
-                    | _p(_variant_cast(v, "string"), T.StringType())))
-        for kw, op in (("minimum", ">="), ("maximum", "<=")):
-            b = frag.get(kw)
-            if isinstance(b, (int, float)) and not isinstance(b, bool):
-                out.append((
-                    kw, f"{sp}/{kw}", f"value is not {op} {b}",
-                    lambda v, _b=b, _op=op: ~_variant_is_number(v)
-                    | (_variant_cast(v, "double") >= _b if _op == ">="
-                       else _variant_cast(v, "double") <= _b)))
-        if "const" in frag or isinstance(frag.get("enum"), list):
-            vals = ([frag["const"]] if "const" in frag
-                    else list(frag["enum"]))
-            kw = "const" if "const" in frag else "enum"
-            if not all(isinstance(x, (str, int, float, bool))
-                       or x is None for x in vals):
-                self.unsupported.append(
-                    f"{sp}/{kw} (non-scalar literal inside contentSchema)")
-            else:
-                out.append((
-                    kw, f"{sp}/{kw}",
-                    ("value does not equal const" if kw == "const"
-                     else f"value not in enum ({len(vals)} options)"),
-                    lambda v, _vals=tuple(vals):
-                    _variant_elem_in(v, _vals)))
-        req = frag.get("required")
-        if isinstance(req, list):
-            for k in req:
-                self._check_variant_key(k, sp)
-                out.append((
-                    "required", f"{sp}/required",
-                    f"required property {k!r} missing",
-                    # required binds only on objects (presence semantics)
-                    lambda v, _k=k: ~_variant_is(v, "OBJECT")
-                    | F.try_variant_get(v, f"$.{_k}", "variant")
-                       .isNotNull()))
-        props = frag.get("properties")
-        if isinstance(props, dict):
-            for pk, psub in props.items():
-                self._check_variant_key(pk, sp)
-                for kw, spath, msg, p in self._variant_preds(
-                        psub, f"{sp}/properties/{pk}"):
-                    # missing field (or non-object parent) passes
-                    out.append((kw, spath, msg, _field_lift(pk, p)))
-        items = frag.get("items")
-        if isinstance(items, (dict, bool)):
-            for kw, spath, msg, p in self._variant_preds(
-                    items, f"{sp}/items"):
-                out.append((kw, spath, msg, _items_lift(p)))
-        for kw, op in (("minItems", ">="), ("maxItems", "<=")):
-            n = frag.get(kw)
-            if isinstance(n, int) and not isinstance(n, bool):
-                out.append((
-                    kw, f"{sp}/{kw}",
-                    f"{'fewer' if kw == 'minItems' else 'more'} than {n} "
-                    f"items",
-                    lambda v, _n=n, _op=op: _variant_arr(v).isNull()
-                    | (F.size(_variant_arr(v)) >= _n if _op == ">="
-                       else F.size(_variant_arr(v)) <= _n)))
-        # in-place applicators over the same variant value (r6; the
-        # reference composes them freely inside contentSchema,
-        # property.cljc:788-810).  $ref arrives here already expanded:
-        # the root-level inline pre-pass walks contentSchema as a schema
-        # position, and anything it could not resolve stays a $ref key,
-        # which the subset check above routes to the interp.  allOf
-        # keeps per-keyword granularity; anyOf/oneOf/not/if-then-else
-        # compose to one entry each (the interp forwards inner branch
-        # errors — a declared granularity bound, verdicts identical).
-        allof = frag.get("allOf")
-        if isinstance(allof, list):
-            for i, br in enumerate(allof):
-                out.extend(self._variant_preds(br, f"{sp}/allOf/{i}"))
-        anyof = frag.get("anyOf")
-        if isinstance(anyof, list):
-            oks = tuple(self._variant_all(br, f"{sp}/anyOf/{i}")
-                        for i, br in enumerate(anyof))
-            out.append((
-                "anyOf", f"{sp}/anyOf",
-                f"no schema of {len(anyof)} matched",
-                lambda v, _o=oks: _reduce_or([f(v) for f in _o])))
-        oneof = frag.get("oneOf")
-        if isinstance(oneof, list):
-            oks = tuple(self._variant_all(br, f"{sp}/oneOf/{i}")
-                        for i, br in enumerate(oneof))
-
-            def one_of_ok(v, _o=oks):
-                n = None
-                for f in _o:
-                    x = F.when(f(v), 1).otherwise(0)
-                    n = x if n is None else n + x
-                return (n if n is not None else F.lit(0)) == 1
-            out.append((
-                "oneOf", f"{sp}/oneOf",
-                f"expected exactly 1 of {len(oneof)} schemas to match",
-                one_of_ok))
-        notf = frag.get("not")
-        if isinstance(notf, (dict, bool)):
-            okn = self._variant_all(notf, f"{sp}/not")
-            out.append(("not", f"{sp}/not", "value matches 'not' schema",
-                        lambda v, _f=okn: ~_f(v)))
-        ifs = frag.get("if")
-        if isinstance(ifs, (dict, bool)):
-            iok = self._variant_all(ifs, f"{sp}/if")
-            # then/else branches keep inner per-keyword identity, each
-            # entry gated on the if outcome; schema paths mirror the
-            # interpreter's literal "/if/../then" form (c_if)
-            for arm, taken in (("then", True), ("else", False)):
-                if not isinstance(frag.get(arm), (dict, bool)):
-                    continue
-                for kw, spath, msg, p in self._variant_preds(
-                        frag[arm], f"{sp}/if/../{arm}"):
-                    out.append((
-                        kw, spath, msg,
-                        lambda v, _i=iok, _p=p, _t=taken:
-                        (~_i(v) if _t else _i(v)) | _p(v)))
-        return out
-
-    def _variant_all(self, frag, sp: str):
-        """Conjunction of a contentSchema fragment's predicates as one
-        fn(variant) -> ok Column (empty/true fragment folds to lit
-        True)."""
-        preds = tuple(p for _, _, _, p in self._variant_preds(frag, sp))
-
-        def ok(v, _ps=preds):
-            if not _ps:
-                return F.lit(True)
-            return _reduce_and([p(v) for p in _ps])
-        return ok
+                self._add(name, c.keyword, c.schema_path, c.message,
+                          "warning", _string_only(gated))
 
     def _compile_array_keywords(self, name: str, sub: dict, sp: str):
         """Array keywords over typed array<T> columns as higher-order
@@ -1118,7 +972,7 @@ class ColumnarValidator:
                 if not isinstance(dt, T.ArrayType):
                     return F.lit(True)  # type keyword reports mismatches
                 return build(col, dt.elementType)
-            return guarded
+            return _only("array", guarded)
 
         if "minItems" in sub:
             v = sub["minItems"]
@@ -1130,7 +984,10 @@ class ColumnarValidator:
             self._add(name, "maxItems", f"{sp}/maxItems",
                       f"more than {v} items", "error",
                       arr_guard(lambda col, et, _v=v: F.size(col) <= _v))
-        if sub.get("uniqueItems") is True:
+        if sub.get("uniqueItems") is True and self._variant:
+            self.unsupported.append(f"{sp}/uniqueItems (SQL has no "
+                                    f"equality on VARIANT values)")
+        elif sub.get("uniqueItems") is True:
             self._add(name, "uniqueItems", f"{sp}/uniqueItems",
                       "array items are not unique", "error",
                       arr_guard(lambda col, et:
@@ -1142,7 +999,10 @@ class ColumnarValidator:
         pfx_offset = len(sub["prefixItems"]) \
             if (self.draft in (D2020, DNEXT)
                 and isinstance(sub.get("prefixItems"), list)) else 0
-        if items is False:
+        if self._variant and (items is False or isinstance(items, dict)):
+            self._surface_values(name, items, f"{sp}/items", T.ArrayType,
+                                 lambda col, _n=pfx_offset: _after(col, _n))
+        elif items is False:
             # 2020-12: items applies only past the prefixItems window,
             # so false forbids elements BEYOND the prefix, not all
             n_pfx = pfx_offset
@@ -1157,10 +1017,7 @@ class ColumnarValidator:
             n_prefix = pfx_offset
             if builders:
                 def build_items(col, et, _b=tuple(builders), _n=n_prefix):
-                    target = col if _n == 0 else F.slice(
-                        col, _n + 1,
-                        F.greatest(F.size(col) - _n, F.lit(0)))
-                    return F.forall(target, lambda x: _reduce_and(
+                    return F.forall(_after(col, _n), lambda x: _reduce_and(
                         [b(x, et) for b in _b]))
                 self._add(name, "items", f"{sp}/items",
                           "array element violates items schema", "error",
@@ -1270,8 +1127,13 @@ class ColumnarValidator:
                 return _field(col, k).eqNullSafe(F.lit(v))
             return F.lit(False)
         if isinstance(dt, T.MapType):
+            val = F.element_at(col, F.lit(k))
+            if isinstance(dt.valueType, T.VariantType):
+                return (F.schema_of_variant(val).eqNullSafe("STRING")
+                        & F.try_variant_get(val, "$", "string")
+                        .eqNullSafe(F.lit(v)))
             if isinstance(dt.valueType, T.StringType):
-                return F.element_at(col, F.lit(k)).eqNullSafe(F.lit(v))
+                return val.eqNullSafe(F.lit(v))
             return F.lit(False)
         return None
 
@@ -1281,7 +1143,7 @@ class ColumnarValidator:
         an object position (interp parity: c_dependencies /
         c_dependent_required / c_dependent_schemas /
         c_property_dependencies; reference property.cljc:812-911)."""
-        row = name == self._ROW_CHECK
+        row = name is self._ROW_CHECK
 
         def add(kw, dsp, msg, trigger, ok):
             def build(col, dt, _t=trigger, _ok=ok):
@@ -1289,7 +1151,7 @@ class ColumnarValidator:
                 if trig is None:
                     return F.lit(True)
                 return F.when(trig, _ok(col, dt)).otherwise(F.lit(True))
-            self._add(name, kw, dsp, msg, "error", build,
+            self._add(name, kw, dsp, msg, "error", _only("object", build),
                       doc_path="" if row else None)
 
         def req_check(kw, key, needs, dsp):
@@ -1381,47 +1243,45 @@ class ColumnarValidator:
                 return _iv(f, ft) if _iv is not None else f
 
             idp = ic.doc_path if ic.doc_path is not None else "/_e"
-            self.checks.append(Check(
-                name, ic.keyword, ic.schema_path, ic.message, ic.level,
-                build,
-                doc_path=join_pointer("", name, pname) + idp[len("/_e"):],
-                value_of=value_of))
+            self._add(name, ic.keyword, ic.schema_path, ic.message, ic.level,
+                      _only("object", build), null_passes=False,
+                      doc_path=join_pointer("", name, pname)
+                      + idp[len("/_e"):],
+                      value_of=value_of)
 
     def _compile_struct_keywords(self, name: str, sub: dict, sp: str):
         """``required`` and ``properties`` of a struct or map column: the
         members the row's own pair maps to columns (m3 analog:
         property.cljc:992-1052; SURVEY §2.4)."""
         props = sub.get("properties")
-        req = sub.get("required")
-        if isinstance(req, list):
-            for k in req:
-                def build_req(col, dt, _k=k):
-                    # a NULL struct means the whole property is missing:
-                    # nested required does not apply (presence semantics)
-                    if isinstance(dt, T.StructType):
-                        inner = (F.lit(False) if _k not in dt.fieldNames()
-                                 else col.getField(_k).isNotNull())
-                    elif isinstance(dt, T.MapType):
-                        inner = F.map_contains_key(col, F.lit(_k))
-                    else:
-                        return F.lit(True)
-                    return F.when(col.isNull(), F.lit(True)).otherwise(inner)
+        for k, rsp in self._required_keys(sub, sp):
+            def build_req(col, dt, _k=k):
+                # a NULL struct means the whole property is missing:
+                # nested required does not apply (presence semantics)
+                if isinstance(dt, T.StructType):
+                    inner = (F.lit(False) if _k not in dt.fieldNames()
+                             else col.getField(_k).isNotNull())
+                elif isinstance(dt, T.MapType):
+                    inner = F.map_contains_key(col, F.lit(_k))
+                else:
+                    return F.lit(True)
+                return F.when(col.isNull(), F.lit(True)).otherwise(inner)
 
-                def req_value(col, dt):
-                    # interp parity: the violation's value is the OBJECT
-                    # missing the key, compact-JSON rendered with null
-                    # fields omitted (= absent, the typed-column
-                    # convention) — matches _fmt_value's separators
-                    if isinstance(dt, (T.StructType, T.MapType)):
-                        return F.to_json(col)
-                    return F.lit(None)
-                self._add(name, "required", f"{sp}/required",
-                          f"required property {k!r} missing", "error",
-                          build_req, doc_path=f"/{name}",
-                          value_of=req_value)
+            def req_value(col, dt):
+                # interp parity: the violation's value is the OBJECT
+                # missing the key, compact-JSON rendered with null
+                # fields omitted (= absent, the typed-column
+                # convention) — matches _fmt_value's separators
+                if isinstance(dt, (T.StructType, T.MapType)):
+                    return F.to_json(col)
+                return F.lit(None)
+            self._add(name, "required", rsp,
+                      f"required property {k!r} missing", "error",
+                      _only("object", build_req), doc_path=f"/{name}",
+                      value_of=req_value)
         if isinstance(props, dict):
             for pname, pschema in props.items():
-                if not isinstance(pschema, dict):
+                if pschema is not False and not isinstance(pschema, dict):
                     continue
                 self._surface_nested_property(name, pname, pschema, sp)
 
@@ -1654,7 +1514,7 @@ class ColumnarValidator:
             return  # evaluates everything, never fails
         if "additionalProperties" in sub:
             return  # adjacent AP claims every key; uP can never fire
-        row = name == self._ROW_CHECK
+        row = name is self._ROW_CHECK
         claims = self._object_claims(sub, sp, row, top=True)
         usp = f"{sp}/unevaluatedProperties"
         ub = None if up is False else (
@@ -1683,7 +1543,8 @@ class ColumnarValidator:
 
         self._add(name, "unevaluatedProperties", usp,
                   f"{'column' if row else 'property'} not evaluated by any "
-                  f"schema", "error", build, doc_path="" if row else None)
+                  f"schema", "error", _only("object", build),
+                  doc_path="" if row else None)
 
     def _array_claims(self, frag, sp, top=False):
         """{n_prefix, all_items, contains, branches} claim structure for
@@ -1800,10 +1661,10 @@ class ColumnarValidator:
 
         self._add(name, "unevaluatedItems", usp,
                   "array element not evaluated by any schema", "error",
-                  build)
+                  _only("array", build))
 
     def _compile_combinator(self, name, comb, subs, sp):
-        row = name == self._ROW_CHECK
+        row = name is self._ROW_CHECK
         if comb == "allOf":
             # pure conjunction: flatten every branch's checks to
             # first-class checks with their precise inner schema paths —
@@ -1872,7 +1733,7 @@ class ColumnarValidator:
                 val_expr = F.substring(
                     F.to_json(F.struct(*[F.col(n) for n in dtypes])),
                     1, 128)
-            elif (c.column == self._ROW_CHECK or c.column not in dtypes
+            elif (c.column is self._ROW_CHECK or c.column not in dtypes
                     or isinstance(dtypes[c.column], T.BinaryType)):
                 # cross-column checks have no single offending value;
                 # binary payloads have no meaningful textual form
@@ -1894,7 +1755,7 @@ class ColumnarValidator:
                 F.lit(c.keyword).alias("keyword"),
                 F.lit(c.schema_path).alias("schema_path"),
                 F.lit(c.doc_path if c.doc_path is not None
-                      else "/" + c.column).alias("doc_path"),
+                      else f"/{c.column or ''}").alias("doc_path"),
                 F.lit(c.message).alias("message"),
                 F.lit(c.level).alias("level"),
                 val_expr.alias("value"))
@@ -1928,7 +1789,7 @@ class ColumnarValidator:
     def _check_ok(self, c: Check, row: T.StructType) -> Column:
         """Check ``c``'s pass predicate over a table whose row type is
         ``row``."""
-        if c.column == self._ROW_CHECK:
+        if c.column is self._ROW_CHECK:
             return c.build(None, row)
         if c.column not in row.names:
             # column absent from the table: TOP-LEVEL required (doc_path
@@ -1984,6 +1845,24 @@ def _field_ok(v: Column, vt: T.DataType, builders) -> Column:
         [b(v, vt).eqNullSafe(True) for b in builders])
 
 
+def _additional_keys(col: Column, named: tuple, pats: tuple) -> Column:
+    """The keys of map ``col`` that are neither ``named`` nor match one
+    of the ``pats`` (java pattern, compiled) patterns."""
+    keys = F.map_keys(col)
+    if named:
+        keys = F.array_except(keys, F.array(*[F.lit(k) for k in named]))
+    for jp, _ in pats:
+        keys = F.filter(keys, _not_rlike(jp))
+    return keys
+
+
+def _after(arr: Column, n: int) -> Column:
+    """The elements of array ``arr`` past its first ``n``."""
+    if n == 0:
+        return arr
+    return F.slice(arr, n + 1, F.greatest(F.size(arr) - n, F.lit(0)))
+
+
 def _not_rlike(jpat: str):
     # no default-arg capture: PySpark counts lambda params to decide
     # whether to pass the element index
@@ -2034,8 +1913,6 @@ def _eq_lit(col: Column, dt: T.DataType, x) -> Column:
     double-representable and the doubles match; a non-representable
     integer equals no double (a double's exact value is a bounded
     dyadic rational)."""
-    from decimal import Decimal as _D
-
     if isinstance(x, int) and not isinstance(x, bool):
         if isinstance(dt, (T.FloatType, T.DoubleType)):
             try:
@@ -2051,7 +1928,7 @@ def _eq_lit(col: Column, dt: T.DataType, x) -> Column:
             return F.lit(False)
         if isinstance(dt, T.DecimalType):
             if len(str(abs(x))) <= 38:
-                return col == F.lit(_D(x))
+                return col == F.lit(Decimal(x))
             return F.lit(False)
         return F.lit(False)
     if isinstance(x, float) and isinstance(dt, _INTEGRAL):
@@ -2112,6 +1989,59 @@ def _value_compat(v, dt: T.DataType) -> bool:
     return False
 
 
+def _at_value(build, null_passes: bool):
+    """``build`` at a value position.  A missing value (SQL NULL) passes
+    when ``null_passes``.  A VARIANT value runs ``build`` on its typed
+    view, chosen by JSON kind (:data:`_VIEWS`), for each kind the build
+    constrains (``_on``, see :func:`_only`); a typed builder folds to a
+    literal for the types it does not constrain, and the view's map
+    values and array elements are VARIANTs again."""
+    on = getattr(build, "_on", None)
+
+    def at(col, dt):
+        if not isinstance(dt, T.VariantType):
+            if null_passes:
+                return F.when(col.isNull(), F.lit(True)) \
+                        .otherwise(build(col, dt))
+            return build(col, dt)
+        out = F.when(col.isNull(), F.lit(True) if null_passes
+                     else build(col, dt))
+        kind = F.schema_of_variant(col)
+        for name, is_kind, t in _VIEWS:
+            if on in (None, name):
+                # a JSON null is present: its view is the value itself
+                view = col if name == "null" else F.try_variant_get(
+                    col, "$", t.simpleString())
+                out = out.when(is_kind(kind), build(view, t))
+        return out.otherwise(F.lit(True))
+    at._jvm = getattr(build, "_jvm", True)
+    return at
+
+
+# JSON kind -> its test on schema_of_variant and the Spark type its value
+# is read as; numbers that are not BIGINT read as double, as the
+# interpreter's json.loads floats.  try_variant_get converts across
+# kinds (true -> 1.0), so the kind test guards each view.
+_VIEWS = (
+    ("object", lambda k: k.startswith("OBJECT"),
+     T.MapType(T.StringType(), T.VariantType())),
+    ("array", lambda k: k.startswith("ARRAY"), T.ArrayType(T.VariantType())),
+    ("null", lambda k: k == "VOID", T.NullType()),
+    ("string", lambda k: k == "STRING", T.StringType()),
+    ("number", lambda k: k == "BIGINT", T.LongType()),
+    ("number", lambda k: (k == "DOUBLE") | k.startswith("DECIMAL"),
+     T.DoubleType()),
+    ("boolean", lambda k: k == "BOOLEAN", T.BooleanType()),
+)
+
+
+def _only(kind: str, build):
+    """``build``, tagged as constraining only JSON ``kind`` values: over a
+    VARIANT, :func:`_at_value` builds it on that kind's view alone."""
+    build._on = kind
+    return build
+
+
 def _numeric_only(build):
     """JSON Schema numeric keywords constrain only numbers: on any other
     column type they pass statically (and never emit an ANSI cast)."""
@@ -2120,10 +2050,10 @@ def _numeric_only(build):
             return F.lit(True)
         return build(col, dt)
     guarded._jvm = getattr(build, "_jvm", True)
-    return guarded
+    return _only("number", guarded)
 
 
-# -- content-keyword helpers (variant-typed predicates) ----------------------
+# -- content-keyword helpers ------------------------------------------------
 
 # structural base64 per RFC 4648 §4 with mandatory padding — matches the
 # interpreter's base64.b64decode(validate=True) acceptance exactly
@@ -2134,90 +2064,9 @@ _B64_STRUCT_PATTERN = ("^(?:[A-Za-z0-9+/]{4})*"
 
 def _b64_ok(col: Column) -> Column:
     """Valid base64 AND the decoded bytes are valid UTF-8 (the interp
-    decodes to str; unbase64 alone is lenient, hence the rlike gate)."""
+    decodes to str; the decode alone is lenient, hence the rlike gate)."""
     return col.rlike(_B64_STRUCT_PATTERN) & \
-        F.is_valid_utf8(F.unbase64(col))
-
-
-def _variant_is(v: Column, prefix: str) -> Column:
-    return F.schema_of_variant(v).startswith(prefix)
-
-
-def _variant_is_number(v: Column) -> Column:
-    t = F.schema_of_variant(v)
-    return t.isin("BIGINT", "DOUBLE") | t.startswith("DECIMAL")
-
-
-def _variant_type_ok(v: Column, t: str) -> Column:
-    """JSON-type check on a variant value (draft-06+ semantics: an
-    integral-valued float IS an integer)."""
-    typ = F.schema_of_variant(v)
-    if t == "object":
-        return typ.startswith("OBJECT")
-    if t == "array":
-        return typ.startswith("ARRAY")
-    if t == "string":
-        return typ == "STRING"
-    if t == "boolean":
-        return typ == "BOOLEAN"
-    if t == "null":
-        return typ == "VOID"
-    if t == "integer":
-        return (typ == "BIGINT") | (
-            (typ.startswith("DECIMAL") | (typ == "DOUBLE"))
-            & (F.pmod(F.try_variant_get(v, "$", "double"), F.lit(1.0))
-               == 0))
-    if t == "number":
-        return _variant_is_number(v)
-    return F.lit(False)
-
-
-def _variant_cast(v: Column, t: str) -> Column:
-    """A variant VALUE as the given SQL type (NULL when incompatible)."""
-    return F.try_variant_get(v, "$", t)
-
-
-def _variant_arr(v: Column) -> Column:
-    """A variant value as array<variant>; NULL when it is not an array."""
-    return F.try_variant_get(v, "$", "array<variant>")
-
-
-def _variant_elem_in(v: Column, vals: tuple) -> Column:
-    """JSON equality of a variant VALUE against scalar literals: typed
-    (1 != true, 1 != \"1\") but numeric-kind-blind (1 == 1.0)."""
-    typ = F.schema_of_variant(v)
-    preds = []
-    for x in vals:
-        if x is None:
-            preds.append(typ == "VOID")
-        elif isinstance(x, bool):
-            preds.append((typ == "BOOLEAN")
-                         & (_variant_cast(v, "boolean") == F.lit(x)))
-        elif isinstance(x, (int, float)):
-            preds.append(_variant_is_number(v)
-                         & (_variant_cast(v, "double") == F.lit(float(x))))
-        else:
-            preds.append((typ == "STRING")
-                         & (_variant_cast(v, "string") == F.lit(x)))
-    return _reduce_or(preds) if preds else F.lit(False)
-
-
-def _field_lift(pk: str, p):
-    """Lift a variant predicate to field ``pk`` of an object variant:
-    a missing field (or non-object parent) passes."""
-    def lifted(v):
-        f = F.try_variant_get(v, f"$.{pk}", "variant")
-        return f.isNull() | p(f)
-    return lifted
-
-
-def _items_lift(p):
-    """Lift a variant predicate over every element of an array variant:
-    non-arrays pass (the type keyword reports those)."""
-    def lifted(v):
-        arr = _variant_arr(v)
-        return arr.isNull() | F.forall(arr, lambda e: p(e))
-    return lifted
+        F.is_valid_utf8(F.try_to_binary(col, F.lit("base64")))
 
 
 def _string_only(build):
@@ -2226,7 +2075,7 @@ def _string_only(build):
             return F.lit(True)
         return build(col, dt)
     guarded._jvm = getattr(build, "_jvm", True)
-    return guarded
+    return _only("string", guarded)
 
 
 def _reduce_and(preds: list[Column]) -> Column:

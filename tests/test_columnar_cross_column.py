@@ -131,7 +131,8 @@ def test_root_dependencies_draft7_parity(spark):
 
 # -- object keywords: one grid over drafts and object positions ------------
 # Each keyword schema constrains an object over the keys "a" and "b"; the
-# object is the table row, a struct column or a map column.  Columnar
+# object is the table row, a struct column, a map column or a VARIANT
+# column.  Columnar
 # `valid` must equal the interpreter's verdict in every draft, including
 # the drafts whose keyword table lacks the keyword (it is then ignored).
 
@@ -162,6 +163,8 @@ POSITIONS = {  # position -> (wrap the keyword schema, table DDL)
     "struct": (lambda s: {"properties": {"o": s}},
                "o struct<a: long, b: long>"),
     "map": (lambda s: {"properties": {"o": s}}, "o map<string, long>"),
+    # the map column's objects as parse_json(to_json(o))
+    "variant": (lambda s: {"properties": {"o": s}}, "o map<string, long>"),
 }
 OBJECTS = [{}, {"a": 1}, {"a": 9}, {"b": 1}, {"b": 9}, {"a": 1, "b": 1},
            {"a": 9, "b": 9}, {"a": 1, "b": 9}, {"a": 9, "b": 1}]
@@ -175,12 +178,21 @@ def _rows(position):
     return [(o,) for o in OBJECTS]
 
 
+def _table(spark, position):
+    df = spark.createDataFrame(_rows(position), POSITIONS[position][1])
+    if position == "variant":
+        df = df.select(F.parse_json(F.to_json("o")).alias("o"))
+    return df
+
+
 def _key(position, r):
     """Identifies an object of OBJECTS in a collected row."""
     if position == "row":
         return (r["a"], r["b"])
     if position == "struct":
         return tuple(r["o"])
+    if position == "variant" and not isinstance(r["o"], dict):
+        return frozenset(json.loads(r["o"].toJson()).items())
     return frozenset(r["o"].items())
 
 
@@ -194,8 +206,8 @@ def object_verdicts(spark):
 
     def get(position):
         if position not in memo:
-            wrap, ddl = POSITIONS[position]
-            df = spark.createDataFrame(_rows(position), ddl).cache()
+            wrap, _ = POSITIONS[position]
+            df = _table(spark, position).cache()
             cells = [(kw, d) for kw in OBJECT_KEYWORDS for d in DRAFTS]
             parts = [ColumnarValidator(wrap(OBJECT_KEYWORDS[kw]), draft=d)
                      .apply(df)
@@ -243,3 +255,81 @@ def test_flattened_allof_renders_the_leaf_value(spark):
     (want,) = compile_schema(schema).validate({"o": {"x": 5, "q": "q"}}).errors
     assert (viol["keyword"], viol["doc_path"], viol["value"]) \
         == (want.keyword, want.doc_path, want.value) == ("maximum", "/o/x", "5")
+
+
+# mixed JSON kinds in one VARIANT column (SQL NULL = a missing "o")
+VARIANT_VALUES = ['{"a": 1}', '[1]', '"s"', '3', '3.0', 'null', None]
+VARIANT_SCHEMAS = [
+    {"properties": {"o": {"type": "object"}}},
+    {"properties": {"o": {"type": "string"}}},
+    {"properties": {"o": {"type": "integer"}}},
+    {"properties": {"o": {"type": "null"}}},
+    {"properties": {"o": {"required": ["a"]}}},
+    {"required": ["o"]},
+    {"properties": {"o": {"minimum": 3}}},
+    {"properties": {"o": {"minimum": 4}}},
+]
+
+
+def test_variant_column_matches_interpreter(spark):
+    """Each value of a VARIANT column is checked as the JSON value it
+    holds: `type`, `required` and `minimum` verdicts equal the
+    interpreter's on {"o": value}, JSON null included."""
+    df = spark.createDataFrame(list(enumerate(VARIANT_VALUES)),
+                               "i int, j string") \
+        .select("i", F.parse_json("j").alias("o"))
+    docs = [{} if v is None else {"o": json.loads(v)}
+            for v in VARIANT_VALUES]
+    for schema in VARIANT_SCHEMAS:
+        rows = ColumnarValidator(schema).apply(df).select("i", "valid")
+        got = [r["valid"] for r in sorted(rows.collect())]
+        cs = compile_schema(schema)
+        assert got == [cs.validate(d).valid for d in docs], schema
+
+
+@pytest.mark.parametrize("position", list(POSITIONS))
+def test_draft3_property_required_true(spark, position):
+    """Draft 3 spells `required` inside the property schema; it is a
+    `required` check at `.../properties/a`, as in the interpreter."""
+    wrap, _ = POSITIONS[position]
+    schema = wrap({"properties": {"a": {"required": True}}})
+    cv = ColumnarValidator(schema, draft=DRAFT3)
+    df = _table(spark, position)
+    got = {_key(position, r): [(v["keyword"], v["schema_path"])
+                               for v in r["violations"]]
+           for r in cv.apply(df).collect()}
+    cs = compile_schema(schema, draft=DRAFT3)
+    for o, raw in zip(OBJECTS, _rows(position)):
+        want = cs.validate(o if position == "row" else {"o": o}).errors
+        assert got[_key(position, dict(zip(df.columns, raw)))] == \
+            [(v.keyword, v.schema_path) for v in want], o
+    assert any(got.values())
+
+
+def test_empty_property_name_is_a_column(spark):
+    """A property named "" is a column like any other, not the row."""
+    schema = {"properties": {"": {"type": "string", "minLength": 2}}}
+    cv = ColumnarValidator(schema)
+    assert [c.column for c in cv.checks] == ["", ""]
+    df = spark.range(1).select(F.lit("x").alias(""), F.lit(1).alias("a"))
+    (r,) = cv.apply(df).collect()
+    (want,) = compile_schema(schema).validate({"": "x", "a": 1}).errors
+    assert [(v["keyword"], v["doc_path"], v["value"])
+            for v in r["violations"]] == \
+        [(want.keyword, want.doc_path, want.value)] == \
+        [("minLength", "/", "x")]
+
+
+@pytest.mark.parametrize("position", ["struct", "map", "variant"])
+def test_false_property_schema_rejects_present_key(spark, position):
+    """`properties: {"a": false}` inside an object column rejects an
+    object that has "a", as the interpreter does."""
+    wrap, _ = POSITIONS[position]
+    schema = wrap({"properties": {"a": False}})
+    df = _table(spark, position)
+    got = {_key(position, r): r["valid"]
+           for r in ColumnarValidator(schema).apply(df).collect()}
+    cs = compile_schema(schema)
+    assert [got[_key(position, dict(zip(df.columns, raw)))]
+            for raw in _rows(position)] == \
+        [cs.validate({"o": o}).valid for o in OBJECTS]

@@ -1,11 +1,14 @@
 """Snapshot of what the columnar compiler produces for the test corpus.
 
-Every case of ``tests/corpus*.py`` is compiled with its own draft twice:
-as the table-row schema itself and as ``{"properties": {"v": schema}}``.
-For each compiled schema the snapshot records
+Every case of ``tests/corpus*.py`` is compiled with its own draft as the
+table-row schema itself, as ``{"properties": {"v": schema}}`` and, for
+drafts 2019-09 and later, as the decoded content of a string column
+``{"properties": {"v": {"contentMediaType": "application/json",
+"contentSchema": schema}}}``.  For each compiled schema the snapshot
+records
 
 - the checks as ``(column, keyword, schema_path, doc_path, message,
-  level)`` tuples,
+  level)`` tuples, with ``<row>`` for a check on the table row,
 - the ``UnsupportedKeyword`` text (or another exception's type and text),
 - ``str()`` of the Column trees ``ColumnarValidator._build_apply`` builds
   over each table shape in ``SHAPES``, with the parts that vary from run
@@ -36,14 +39,15 @@ sys.path.insert(0, str(ROOT / "tests"))
 from m3spark.columnar.compiler import (  # noqa: E402
     ColumnarValidator, UnsupportedKeyword,
 )
+from m3spark.schema.core import D2019, _ge  # noqa: E402
 
 CORPORA = [("corpus", "CASES"), ("corpus2", "CASES2"), ("corpus3", "CASES3"),
            ("corpus4", "CASES4"), ("corpus5", "CASES5"),
            ("corpus6", "CASES6"), ("corpus7", "CASES7")]
 
-# fixed table shapes (Spark DDL): scalar, array, struct and map columns
-# named "v" for the property form; flat rows over commonly used property
-# names for the row form
+# fixed table shapes (Spark DDL): scalar, array, struct, map and variant
+# columns named "v" for the property and content forms; flat rows over
+# commonly used property names for the row form
 SHAPES = {
     "v_long": "v long",
     "v_double": "v double",
@@ -51,6 +55,7 @@ SHAPES = {
     "v_array": "v array<long>",
     "v_struct": "v struct<a: long, b: string, foo: long, bar: string>",
     "v_map": "v map<string, long>",
+    "v_variant": "v variant",
     "v_nested": "v struct<a: struct<b: long>, c: array<struct<d: string>>>",
     "flat": "a long, b string, foo long, bar string, baz array<long>",
     "flat_obj": "foo struct<bar: long>, a map<string, string>, x double",
@@ -87,8 +92,9 @@ def snapshot_one(schema, draft, frames) -> dict:
                            [c for _, c in added] + [viol, valid]]
         except Exception as e:  # noqa: BLE001
             trees[name] = _err(e)
-    return {"checks": [[c.column, c.keyword, c.schema_path, c.doc_path,
-                        c.message, c.level] for c in cv.checks],
+    return {"checks": [["<row>" if c.column == cv._ROW_CHECK else c.column,
+                        c.keyword, c.schema_path, c.doc_path, c.message,
+                        c.level] for c in cv.checks],
             "trees": trees}
 
 
@@ -104,8 +110,13 @@ def main() -> None:
     for mod, attr in CORPORA:
         cases = getattr(importlib.import_module(mod), attr)
         for i, (draft, desc, schema, _tests) in enumerate(cases):
-            for form, s in (("root", schema),
-                            ("property", {"properties": {"v": schema}})):
+            forms = [("root", schema),
+                     ("property", {"properties": {"v": schema}})]
+            if _ge(draft, D2019):
+                forms.append(("content", {"properties": {"v": {
+                    "contentMediaType": "application/json",
+                    "contentSchema": schema}}}))
+            for form, s in forms:
                 snap[f"{mod}/{i:04d}/{form}"] = dict(
                     snapshot_one(s, draft, frames), description=desc)
     with open(args.out, "w") as f:
