@@ -34,9 +34,10 @@ def main(argv=None):
                     help="skip partitions already checkpointed for this snapshot")
     ap.add_argument("--partition-col", default="warc_day")
     ap.add_argument("--batch-size", type=int, default=8,
-                    help="pending partitions validated per Spark job "
-                         "(amortizes fixed per-job cost; crash loses at "
-                         "most one chunk)")
+                    help="pending partitions validated per chunk; a "
+                         "chunk runs about 7 Spark jobs whatever its "
+                         "size, so larger chunks amortize their fixed "
+                         "cost (a crash loses at most one chunk)")
     ap.add_argument("--generate-rows", type=int, default=0,
                     help="generate a synthetic input of N pages first (demo)")
     args = ap.parse_args(argv)

@@ -92,8 +92,13 @@ def _type_ok(tname: str, dtype: T.DataType, col: Column) -> Column:
     if tname == "integer":
         if isinstance(dtype, _INTEGRAL):
             return F.lit(True)
+        if isinstance(dtype, (T.FloatType, T.DoubleType)):
+            # floor() is a bigint, and from 2^53 up every finite double
+            # is integral (NaN sorts above +inf in Spark)
+            return (F.when(F.abs(col) < F.lit(_TWO_53), col == F.floor(col))
+                     .otherwise(F.abs(col) < F.lit(float("inf"))))
         if isinstance(dtype, _NUMERIC):
-            return col == F.floor(col)  # draft6+ zero-fraction semantics
+            return col == F.floor(col)
         return F.lit(False)
     if tname == "array":
         return F.lit(isinstance(dtype, T.ArrayType))
@@ -1674,11 +1679,11 @@ class ColumnarValidator:
             # A row branch compiles onto this row; a column branch
             # compiles apart (its content-decode columns stay its own)
             for i, s in enumerate(subs):
-                if not row:
-                    self.checks.extend(
-                        self._sub_checks(s, f"{sp}/{i}", name=name))
-                elif isinstance(s, dict):
+                if row and isinstance(s, dict):
                     self._compile_root(s, f"{sp}/{i}")
+                else:
+                    self.checks.extend(self._sub_checks(
+                        s, f"{sp}/{i}", name=None if row else name))
             return
         preds = [self._fragment_pred(s, f"{sp}/{i}", row, errors_only=False)
                  for i, s in enumerate(subs)

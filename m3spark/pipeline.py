@@ -13,6 +13,7 @@ past the first Project)."""
 from __future__ import annotations
 
 import copy
+import functools
 import json
 
 from pyspark.sql import DataFrame
@@ -80,40 +81,25 @@ def validate_pages(pages: DataFrame, schema: dict | None = None,
                                     format_assertion)
     rows = cv.apply(pages)
 
-    # r8: persist only the VIOLATING rows.  The r7 shape cached the full
-    # slim projection (key, partition_key, valid, violations) — at 10M
-    # rows the in-memory columnar cache build alone cost ~35% of the
-    # flagship job, yet every downstream consumer except the
-    # rows_scanned total only ever looks at rows that carry a
-    # violation (~3% with the planted anomaly rates).  rows_scanned now
-    # comes from a column-pruned count over the raw input (reads just
-    # the partition column), left-joined to the per-partition violation
-    # aggregate.  The violating rows are found by ONE Filter pass that
-    # evaluates each check predicate once (violation_prefilter) — the
-    # per-row violation-struct assembly then runs only on the ~3%
-    # survivors.  A row with an empty violations array is always valid
-    # (valid := no error-level violations), so the filter loses
-    # nothing.
+    # Only the VIOLATING rows (~3% with the planted anomaly rates) are
+    # projected to slim and persisted: every consumer but the rows
+    # total looks at them alone, and caching the full projection cost
+    # ~35% of the flagship job at 10M rows.  They are found by ONE
+    # Filter pass that evaluates each check once
+    # (violation_prefilter), so the violation structs are assembled
+    # for the survivors only; a row with no violations is valid, so
+    # the filter loses nothing.
     #
-    # r8b: blob columns whose only constraint is `required` never enter
-    # the value scan at all.  The html payload is >half the table's
-    # bytes, yet the validator only needs `html IS NOT NULL`; so the
-    # value checks run over pages.drop(html) (ReadSchema excludes the
-    # blob), and the required-on-html violations come from a separate
-    # `WHERE html IS NULL` scan whose pushed IsNull filter skips every
-    # row group with null_count == 0 — a footer-only read on clean
-    # data.  The heavy scan runs cv.apply with the FULL schema, so the
-    # violation structs for heavy-null rows (including the to_json row
-    # render) are bit-identical to the single-scan path.  Verdict
-    # arithmetic composes without overlap: the value scan counts rows
-    # with value-check errors (it still sees heavy-null rows — their
-    # other columns are intact), the heavy scan adds only heavy-null
-    # rows with NO value-check error.  One documented render nuance:
-    # a required violation on a NON-heavy column (a null url/ts/text)
-    # renders its row-document `value` from the pruned projection, so
-    # the heavy field's base64 no longer appears in that truncated
-    # debug string (identical whenever the heavy column is itself
-    # null, since to_json omits nulls).
+    # Blob columns whose only constraint is `required` (html, >half the
+    # bytes) never enter the value scan: the value checks run over
+    # pages.drop(html), and the required-on-html violations come from a
+    # `WHERE html IS NULL` scan whose pushed IsNull filter reads only
+    # footers on clean data.  That scan applies the FULL schema, so its
+    # violation structs equal the single-scan path's.  One render
+    # nuance: a required violation on a NON-heavy column renders its
+    # row document from the pruned projection, without the heavy
+    # field's base64 (identical when the heavy column is null, since
+    # to_json omits nulls).
     light = pages.drop(*heavy) if heavy else pages
     try:
         bad = cv_light.violation_prefilter(light)
@@ -152,18 +138,17 @@ def validate_pages(pages: DataFrame, schema: dict | None = None,
         viol = viol.unionByName(uniqueness_violations(pages, key_col),
                                 allowMissingColumns=True)
 
-    totals = pages.groupBy(ex["pk"]).agg(ex["rows_scanned"])
-    viol_agg = slim.groupBy("partition_key").agg(*ex["viol_agg"])
-    verdicts = (totals.join(viol_agg, "partition_key", "left")
-                      .select(*ex["verdict_select"]))
+    # one shuffle for every verdict figure: pages (a scan of the key
+    # column alone), slim and slim_heavy add (rows, invalid, violations)
+    # terms to one union, summed per key; a heavy-null row is invalid
+    # there only if the value scan saw no error for it, so no row counts
+    # twice.  Grouping keeps a NULL key, which an equi-join would drop.
+    parts = [pages.select(*ex["page_terms"]), slim.select(*ex["slim_terms"])]
     if slim_heavy is not None:
-        # heavy-null rows add their required violations, and count as
-        # newly-invalid only when the value scan saw no error for them
-        # (no row is counted twice; error-level heavy violations only)
-        hagg = slim_heavy.groupBy("partition_key").agg(*ex["hagg"])
-        verdicts = (verdicts.join(hagg, "partition_key", "left")
-                            .select(*ex["verdict_merge"]))
-    verdicts = verdicts.withColumn("passed", ex["passed"])
+        parts.append(slim_heavy.select(*ex["heavy_terms"]))
+    verdicts = (functools.reduce(DataFrame.unionByName, parts)
+                .groupBy("partition_key").agg(*ex["verdict_sums"])
+                .withColumn("passed", ex["passed"]))
     return {"rows": rows, "slim": slim, "slim_heavy": slim_heavy,
             "violations": viol, "partition_verdicts": verdicts,
             "validator": cv}
@@ -198,27 +183,20 @@ def _plan(schema: dict, pages: DataFrame, key_col: str,
 
 def _pipe_exprs(key_col: str, partition_expr: str, heavy: list) -> dict:
     """The pipeline body's Column expressions, by role."""
+    pk = F.expr(partition_expr).alias("partition_key")
     ex = {
-        "pk": F.expr(partition_expr).alias("partition_key"),
-        "rows_scanned": F.count(F.lit(1)).alias("rows_scanned"),
+        "pk": pk,
         "passed": F.col("invalid_rows") == 0,
         "hviols_nonempty": F.size("hviols") > 0,
+        "page_terms": [pk, F.lit(1).alias("_rows"),
+                       F.lit(0).alias("_invalid"), F.lit(0).alias("_vcount")],
+        "slim_terms": [F.col("partition_key"), F.lit(0).alias("_rows"),
+                       (~F.col("valid")).cast("int").alias("_invalid"),
+                       F.size("violations").alias("_vcount")],
+        "verdict_sums": [F.sum("_rows").alias("rows_scanned"),
+                         F.sum("_invalid").alias("invalid_rows"),
+                         F.sum("_vcount").alias("violation_count")],
     }
-    ex["viol_agg"] = [
-        F.sum((~F.col("valid")).cast("long")).alias("_invalid"),
-        F.sum(F.size(F.col("violations"))).alias("_vcount")]
-    ex["verdict_select"] = [
-        F.col("partition_key"), F.col("rows_scanned"),
-        F.coalesce("_invalid", F.lit(0)).cast("long")
-         .alias("invalid_rows"),
-        F.coalesce("_vcount", F.lit(0)).cast("long")
-         .alias("violation_count")]
-    ex["verdict_merge"] = [
-        F.col("partition_key"), F.col("rows_scanned"),
-        (F.col("invalid_rows") + F.coalesce("_hinvalid", F.lit(0)))
-        .cast("long").alias("invalid_rows"),
-        (F.col("violation_count") + F.coalesce("_hvcount", F.lit(0)))
-        .cast("long").alias("violation_count")]
     if heavy:
         null_any = F.col(heavy[0]).isNull()
         for c in heavy[1:]:
@@ -237,10 +215,9 @@ def _pipe_exprs(key_col: str, partition_expr: str, heavy: list) -> dict:
             F.exists("violations",
                      lambda v: (v["level"] == "error")
                      & ~_is_heavy_req(v)).alias("other_err")]
-        ex["hagg"] = [
-            F.sum((F.exists("hviols",
-                            lambda v: v["level"] == "error")
-                   & ~F.col("other_err")).cast("long"))
-             .alias("_hinvalid"),
-            F.sum(F.size("hviols")).alias("_hvcount")]
+        ex["heavy_terms"] = [
+            F.col("partition_key"), F.lit(0).alias("_rows"),
+            (F.exists("hviols", lambda v: v["level"] == "error")
+             & ~F.col("other_err")).cast("int").alias("_invalid"),
+            F.size("hviols").alias("_vcount")]
     return ex

@@ -83,6 +83,21 @@ def test_root_allof_flattens(spark):
         "/allOf/1/properties/x/maximum"
 
 
+@pytest.mark.parametrize("branches", [
+    [False], [True, False], [{"required": ["x"]}, False]])
+def test_root_allof_false_branch(spark, branches):
+    """A `false` branch of a root `allOf` fails every row, with the
+    interpreter's (keyword, schema path, doc path)."""
+    schema = {"allOf": branches}
+    df = spark.createDataFrame([(5,)], "x int")
+    (r,) = ColumnarValidator(schema).apply(df).collect()
+    want = compile_schema(schema).validate({"x": 5})
+    assert r["valid"] is want.valid is False
+    assert [(v["keyword"], v["schema_path"], v["doc_path"])
+            for v in r["violations"]] == \
+        [(e.keyword, e.schema_path, e.doc_path) for e in want.errors]
+
+
 def test_root_oneof_and_not(spark):
     df = spark.createDataFrame(
         [(1, None), (None, "y"), (1, "y"), (None, None)],

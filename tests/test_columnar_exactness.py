@@ -75,6 +75,36 @@ def test_multiple_of_integral_column(spark):
     assert got == [False, True, True, False]
 
 
+# type: integer on doubles (draft 6+ zero-fraction semantics): every
+# finite double at or above 2^53 is integral, also beyond a bigint's range
+INTEGER_DOUBLES = [1.0, 1.5, -2.0, 2.0**53, 2.0**53 + 2, 2.0**63,
+                   1.2345678901234568e+19, 1e300, -1e300,
+                   float("nan"), float("inf"), float("-inf")]
+
+
+def test_integer_type_on_huge_doubles_matches_interpreter(spark):
+    """A double column and a VARIANT double get the interpreter's
+    ``float.is_integer()`` verdict, 1e300 included."""
+    from m3spark.columnar import ColumnarValidator
+    from m3spark.schema.core import compile_schema
+
+    schema = {"properties": {"x": {"type": "integer"}}}
+    want = [compile_schema(schema).validate({"x": v}).valid
+            for v in INTEGER_DOUBLES]
+    assert want[-5:] == [True, True, False, False, False]
+    dbl = spark.createDataFrame(list(enumerate(INTEGER_DOUBLES)),
+                                "i int, x double")
+    # parse_json reads a number with an exponent as a VARIANT double
+    finite = [(i, f"{v:e}") for i, v in enumerate(INTEGER_DOUBLES[:-3])]
+    var = (spark.createDataFrame(finite, "i int, j string")
+                .select("i", F.parse_json("j").alias("x")))
+    cv = ColumnarValidator(schema)
+    for df, n in ((dbl, len(want)), (var, len(finite))):
+        got = [r["valid"] for r in
+               cv.apply(df).orderBy("i").select("valid").collect()]
+        assert got == want[:n], df.dtypes
+
+
 def test_multiple_of_zero_divisor_schema(spark):
     from m3spark.columnar import ColumnarValidator
     df = spark.createDataFrame([(4.0,), (0.0,)], "x double")
