@@ -76,10 +76,13 @@ _NUMERIC = (T.ByteType, T.ShortType, T.IntegerType, T.LongType,
 _INTEGRAL = (T.ByteType, T.ShortType, T.IntegerType, T.LongType)
 
 
-def _type_ok(tname: str, dtype: T.DataType, col: Column) -> Column:
+def _type_ok(tname: str, dtype: T.DataType, col: Column,
+             draft: str) -> Column:
     """Static-first type check: if the column's Spark type already
     satisfies the JSON type, the predicate folds to a literal (free under
-    Catalyst constant folding)."""
+    Catalyst constant folding).  In drafts 3 and 4 an integer is a
+    language-level integer, so no float or double is one (core.py
+    is_integer_strict)."""
     if tname == "null":
         # NullType is the typed view of a JSON null inside a VARIANT
         return F.lit(True) if isinstance(dtype, T.NullType) else col.isNull()
@@ -93,6 +96,8 @@ def _type_ok(tname: str, dtype: T.DataType, col: Column) -> Column:
         if isinstance(dtype, _INTEGRAL):
             return F.lit(True)
         if isinstance(dtype, (T.FloatType, T.DoubleType)):
+            if draft in (DRAFT3, DRAFT4):
+                return F.lit(False)
             # floor() is a bigint, and from 2^53 up every finite double
             # is integral (NaN sorts above +inf in Spark)
             return (F.when(F.abs(col) < F.lit(_TWO_53), col == F.floor(col))
@@ -721,7 +726,7 @@ class ColumnarValidator:
         if isinstance(t, str):
             self._add(name, "type", f"{sp}/type",
                       f"expected type {t}", "error",
-                      lambda col, dt, _t=t: _type_ok(_t, dt, col))
+                      lambda col, dt, _t=t: _type_ok(_t, dt, col, draft))
         elif isinstance(t, list):
             names = [x for x in t if isinstance(x, str)]
             # draft-3 union types may embed SCHEMA members: the value
@@ -734,7 +739,7 @@ class ColumnarValidator:
                 if isinstance(s, dict) and draft == DRAFT3)
 
             def build_type_union(col, dt, _n=tuple(names), _s=sub_preds):
-                oks = [_type_ok(x, dt, col) for x in _n]
+                oks = [_type_ok(x, dt, col, draft) for x in _n]
                 oks += [p(col, dt).eqNullSafe(True) for p in _s]
                 return _reduce_or(oks)
 
@@ -752,8 +757,11 @@ class ColumnarValidator:
                     f"equality on VARIANT values)")
         if isinstance(sub.get("enum"), list):
             vals = sub["enum"]
+            composite = any(isinstance(x, (list, dict)) for x in vals)
 
-            def build_enum(col, dt, _v=tuple(vals)):
+            def build_enum(col, dt, _v=tuple(vals), _sp=f"{sp}/enum"):
+                if composite:
+                    _no_variant_eq(_sp, dt)
                 if isinstance(dt, T.NullType):
                     return F.lit(None in _v)
                 ok = [x for x in _v if _value_compat(x, dt)]
@@ -782,7 +790,9 @@ class ColumnarValidator:
         if "const" in sub:
             cv = sub["const"]
 
-            def build_const(col, dt, _c=cv):
+            def build_const(col, dt, _c=cv, _sp=f"{sp}/const"):
+                if isinstance(_c, (list, dict)):
+                    _no_variant_eq(_sp, dt)
                 if isinstance(dt, T.NullType):
                     return F.lit(_c is None)
                 if not _value_compat(_c, dt):
@@ -993,10 +1003,12 @@ class ColumnarValidator:
             self.unsupported.append(f"{sp}/uniqueItems (SQL has no "
                                     f"equality on VARIANT values)")
         elif sub.get("uniqueItems") is True:
+            def build_unique(col, et, _sp=f"{sp}/uniqueItems"):
+                _no_variant_eq(_sp, et)
+                return F.size(col) == F.size(F.array_distinct(col))
             self._add(name, "uniqueItems", f"{sp}/uniqueItems",
                       "array items are not unique", "error",
-                      arr_guard(lambda col, et:
-                                F.size(col) == F.size(F.array_distinct(col))))
+                      arr_guard(build_unique))
         items = sub.get("items")
         # items applies past the prefixItems window only in 2020-12/next
         # (prefixItems is an unknown keyword before then — interp
@@ -1975,6 +1987,26 @@ def _array_lit(arr: list, dt: T.DataType) -> Column:
     if not arr:
         return F.array().cast(dt)
     return F.array(*[F.lit(x) for x in arr])
+
+
+def _holds_variant(dt: T.DataType) -> bool:
+    if isinstance(dt, T.ArrayType):
+        return _holds_variant(dt.elementType)
+    if isinstance(dt, T.MapType):
+        return _holds_variant(dt.valueType)
+    if isinstance(dt, T.StructType):
+        return any(_holds_variant(f.dataType) for f in dt.fields)
+    return isinstance(dt, T.VariantType)
+
+
+def _no_variant_eq(sp: str, dt: T.DataType) -> None:
+    """SQL has no equality on VARIANT values: a keyword comparing whole
+    arrays or objects over a type holding a VARIANT raises at apply(),
+    as the unroll guard does, so the table routes to the interpreter."""
+    if _holds_variant(dt):
+        raise UnsupportedKeyword(
+            f"{sp} over {dt.simpleString()} (SQL has no equality on "
+            f"VARIANT values)")
 
 
 def _value_compat(v, dt: T.DataType) -> bool:

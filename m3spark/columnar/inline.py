@@ -3,13 +3,18 @@ compiler (SURVEY §2.8 "eager driver-side inlining with cycle
 detection" + "static scope-chain simulation").
 
 The most common schema idiom — a document reusing fragments via
-``$defs``/``definitions`` and local ``$ref`` — previously routed the
-whole query to the Arrow interpreter because the Column-expression
+``$defs``/``definitions`` and local ``$ref`` — would otherwise route
+the whole query to the Arrow interpreter, because the Column-expression
 compiler cannot follow references at plan-build time.  This pre-pass
 expands references once on the driver, so the compiled plan stays pure
 JVM.
 
-Draft semantics mirror the reference engine:
+Every reference resolves through the interpreter's own URI index
+(``m3spark.schema.core._Index``): the same ``$id``/``$anchor``/
+``$dynamicAnchor`` registry, the same admission of registry, ``uri_dirs``
+and vendored meta-schema resources, and the same choice of a
+``$dynamicRef``/``$recursiveRef`` target for a scope chain.  This module
+is only the transform:
 
 - drafts <= 7: ``$ref`` REPLACES its siblings — the node becomes the
   resolved target (reference property.cljc:227-246, ref.cljc:133-140);
@@ -22,45 +27,32 @@ Draft semantics mirror the reference engine:
   branch-claim rule (annotation-scope isolation,
   property.cljc:268-293).
 
-**Multi-resource bundles** (r6): nested ``$id`` subtrees are indexed
-as embedded schema resources exactly like the interpreter's registry
-walk (core.py _Index.index) — resources keyed by resolved URI,
-anchors/dynamic anchors keyed by (resource URI, name), per-node base
-URIs.  References across resources resolve like the interpreter's
-``_resolve_ref`` restricted to in-document resources; anything
-pointing OUTSIDE the document keeps the interp route.
-
-**Static scope-chain simulation**: the interpreter's dynamic scope
-(core.py _Rt.scope / Compiled.__call__; the reference's
-``$dynamic-scope-chain``, property.cljc:211-216) is the chain of
-schema resources entered along the evaluation path, pushing a
-resource when it differs from the top of the chain.  Because eager
-expansion follows exactly those paths, the chain at every expansion
-point is KNOWN AT COMPILE TIME — so ``$recursiveRef`` (2019-09,
-outermost ``$recursiveAnchor: true`` resource root wins) and
-``$dynamicRef`` (2020-12 bookended; draft-next unbookended with
-plain-``$anchor`` static fallback) resolve statically per path, even
-for the classic tree/strict-tree bundle where the same ``$dynamicRef``
+**Static scope chain**: the interpreter's dynamic scope (core.py
+_Rt.scope; the reference's ``$dynamic-scope-chain``,
+property.cljc:211-216) is the chain of schema resources entered along
+the evaluation path.  Eager expansion follows exactly those paths, so
+the chain at every expansion point is known at compile time and
+``$recursiveRef``/``$dynamicRef`` resolve statically per path — even
+for the tree/strict-tree bundle, where the same ``$dynamicRef``
 resolves differently depending on the entry resource.  Keywords
-inactive in the compile draft (e.g. ``$dynamicRef`` under draft-7)
-are ignored by the interpreter and therefore stripped.
+inactive in the compile draft (e.g. ``$dynamicRef`` under draft-7) are
+ignored by the interpreter and therefore stripped.
 
 The transform is conservative — it returns the ORIGINAL schema
 untouched (so the compiler's standing ``UnsupportedKeyword`` escape
-hatch routes it to the interpreter) whenever it sees:
+hatch routes it to the interpreter) whenever one output tree under one
+draft cannot express what the interpreter does:
 
-- a reference whose target resource is not embedded in the document;
-- a ``$schema`` below the root that switches to a DIFFERENT draft
-  (the single output tree compiles under one draft);
-- duplicate resource URIs, or an anchor/dynamic-anchor name claimed
-  twice in the same resource and actually referenced (ambiguous);
+- a reference the index cannot resolve;
+- an expanded node whose ``$schema`` switches to a DIFFERENT draft, or
+  a target in a resource (registry or embedded) of another draft;
+- a target reached through a URI or anchor the index bound to two
+  different nodes (which binding stands depends on walk order);
 - a ``$dynamicRef`` with no anchor in scope (the interpreter emits a
   per-row error there — that path stays with the interpreter);
-- a base-URI-changing ``$id`` inside a subtree reachable ONLY through
-  a pointer into an unknown keyword (the interpreter's index never
-  walks such subtrees, so the $id is inert there and inner refs
-  resolve against the document root — resolution the transform cannot
-  reproduce, see ``_scan(register=False)``);
+- a base-URI-changing ``$id`` in a pointer target the index never
+  walked (under an unknown keyword, say: the interpreter leaves such an
+  ``$id`` inert);
 - a NON-PRODUCTIVE reference cycle (a ``$ref`` loop that re-enters
   itself without descending through any data-structural keyword —
   unrolling it would never consume input depth);
@@ -90,10 +82,9 @@ from __future__ import annotations
 
 import logging
 
-from m3spark.schema.core import (DRAFT3, DRAFT4, D2019, D2020, DNEXT,
-                                 _ge, draft_of)
-from m3spark.schema.uris import (pointer_get, resolve_uri,
-                                 split_fragment)
+from m3spark.schema.core import (D2019, _KEYWORDS, SchemaError, _ge,
+                                 _id_keyword, _Index, draft_of)
+from m3spark.schema.uris import resolve_uri, split_fragment
 
 __all__ = ["inline_local_refs", "UNROLL_GUARD_KEY"]
 
@@ -153,10 +144,9 @@ def inline_local_refs(schema, draft: str, unroll: int = 8,
     """Return ``schema`` with every reference eagerly expanded
     (productive cycles unrolled ``unroll`` levels, cut with
     ``UNROLL_GUARD_KEY`` markers), or ``schema`` unchanged if any
-    reference cannot be handled safely.  ``registry`` maps absolute
-    URIs to pre-registered external schemas (the interp's lazy
-    registry, core.py _resolve_ref) — statically known, so their
-    resources inline exactly like embedded bundles."""
+    reference cannot be handled safely.  ``registry`` and ``uri_dirs``
+    admit external resources as the interpreter does (core.py
+    _Index.resource); they inline exactly like embedded bundles."""
     if not isinstance(schema, dict):
         return schema
     try:
@@ -186,325 +176,57 @@ class _Inliner:
                  uri_dirs: dict | None = None):
         self.root = root
         self.draft = draft
-        self.registry = registry or {}
-        self.uri_dirs = uri_dirs or {}
+        self.keywords = _KEYWORDS[draft]
         self.unroll = max(0, unroll)
         self.meld = _ge(draft, D2019)
-        self.id_key = "id" if draft in (DRAFT3, DRAFT4) else "$id"
-        # URI registry mirroring the interpreter's _Index (core.py):
-        # resources by resolved URI; anchors/dyn anchors by
-        # (resource URI, name); per-node effective base URI
-        root_base = ""
-        idv = root.get(self.id_key)
-        if isinstance(idv, str) and idv and not idv.startswith("#"):
-            root_base = split_fragment(idv)[0]
-        self.root_uri = root_base
-        self.resources: dict[str, object] = {root_base: root}
-        self.anchors: dict[tuple, object] = {}
-        self.dyn_anchors: dict[tuple, object] = {}
-        self.rec_anchor_roots: set[str] = set()
-        self.node_base: dict[int, str] = {}
-        # anchors registered by hard assignment ($anchor / fragment-$id)
-        # vs dyn setdefault — a hard registration overrides a soft one
-        # (assignment beats setdefault in _Index.index regardless of
-        # walk order), two conflicting registrations of the same kind
-        # make the name ambiguous and any USE of it a GiveUp
-        self._hard: set[tuple] = set()
-        self.ambiguous: set[tuple] = set()
-        self.dyn_ambiguous: set[tuple] = set()
+        self.id_key = _id_keyword(draft)
+        self.index = _Index(draft, registry, uri_dirs)
+        self.root_uri = self.index.index_root(root)
         self.budget = _NODE_BUDGET
-        # dict nodes the feasibility scan has covered (by identity);
-        # pointer targets outside known schema positions get a late scan
-        self._visited: set[int] = set()
-        self._scan(root, root_base, top=True)
 
-    # -- pre-scan: feasibility + URI registry ---------------------------
+    # -- resolution through the interpreter's index -----------------------
 
-    def _scan(self, node, base: str, top=False, register=True):
-        """Walk schema positions registering $id/$anchor/$dynamicAnchor
-        exactly like the interp's _Index.index; abort on what cannot be
-        reproduced statically.
-
-        ``register=False`` for the LATE scan of a pointer target outside
-        known schema positions: the interp's _Index never walks such
-        subtrees (core.py _iter_subschemas), so anchors found there are
-        unregistered/inert in the interp and must stay unregistered
-        here too; a base-URI-changing $id there would be inert in the
-        interp (inner refs resolve against the document root) — a
-        resolution this transform does not reproduce, so GiveUp."""
-        if isinstance(node, list):
-            for x in node:
-                self._scan(x, base, register=register)
-            return
-        if not isinstance(node, dict):
-            return
-        self._visited.add(id(node))
-        r = node.get("$ref")
-        if r is not None and not isinstance(r, str):
-            raise _GiveUp("non-string $ref")
-        if not top:
-            sv = node.get("$schema")
-            if isinstance(sv, str) \
-                    and draft_of({"$schema": sv}, self.draft) != self.draft:
-                raise _GiveUp("mid-schema draft switch")
-        new_base = base
-        idv = node.get(self.id_key)
-        if isinstance(idv, str) and idv:
-            resolved = resolve_uri(base, idv) if base else idv
-            root_part, frag = split_fragment(resolved)
-            if frag:
-                # fragment-carrying id acts as an anchor under the
-                # PARENT base (draft<=7 idiom; _Index.index)
-                if register:
-                    self._reg_anchor(base, frag, node, hard=True)
-                if root_part and root_part != split_fragment(base)[0]:
-                    if not register:
-                        raise _GiveUp("base-URI change in unscanned subtree")
-                    new_base = root_part
-                    self._reg_resource(root_part, node)
-            elif root_part != base or top:
-                if root_part != base:
-                    if not register:
-                        raise _GiveUp("base-URI change in unscanned subtree")
-                    new_base = root_part
-                    self._reg_resource(root_part, node)
-        if register:
-            self.node_base[id(node)] = new_base
-        av = node.get("$anchor")
-        if isinstance(av, str) and register:
-            # unconditional across drafts, mirroring _Index.index
-            self._reg_anchor(new_base, av, node, hard=True)
-        da = node.get("$dynamicAnchor")
-        if isinstance(da, str) and register:
-            key = (new_base, da)
-            if key in self.dyn_anchors:
-                if self.dyn_anchors[key] is not node:
-                    self.dyn_ambiguous.add(key)
-            else:
-                self.dyn_anchors[key] = node
-                # a $dynamicAnchor also answers plain-$ref lookups
-                # unless a hard anchor claims the name (setdefault)
-                self._reg_anchor(new_base, da, node, hard=False)
-        if node.get("$recursiveAnchor") is True \
-                and self.resources.get(new_base) is node and register:
-            self.rec_anchor_roots.add(new_base)
-        # structural walk mirrors the transform's schema positions
-        for k in _SINGLE_SCHEMA_KEYS:
-            if k in node:
-                self._scan(node[k], new_base, register=register)
-        for k in _MAP_SCHEMA_KEYS:
-            v = node.get(k)
-            if isinstance(v, dict):
-                for s in v.values():
-                    self._scan(s, new_base, register=register)
-        for k in _LIST_SCHEMA_KEYS:
-            v = node.get(k)
-            if isinstance(v, list):
-                for s in v:
-                    self._scan(s, new_base, register=register)
-        items = node.get("items")
-        if isinstance(items, list):
-            for s in items:
-                self._scan(s, new_base, register=register)
-        else:
-            self._scan(items, new_base, register=register)
-        ext = node.get("extends")
-        if isinstance(ext, list):
-            for s in ext:
-                self._scan(s, new_base, register=register)
-        elif ext is not None:
-            self._scan(ext, new_base, register=register)
-        deps = node.get("dependencies")
-        if isinstance(deps, dict):
-            for v in deps.values():
-                if isinstance(v, (dict, bool)):
-                    self._scan(v, new_base, register=register)
-        pd = node.get("propertyDependencies")
-        if isinstance(pd, dict):
-            for m in pd.values():
-                if isinstance(m, dict):
-                    for s in m.values():
-                        self._scan(s, new_base, register=register)
-
-    def _reg_resource(self, uri: str, node):
-        cur = self.resources.get(uri)
-        if cur is None:
-            self.resources[uri] = node
-        elif cur is not node:
-            # the interp's setdefault makes this walk-order-dependent;
-            # stay conservative
-            raise _GiveUp(f"duplicate resource URI {uri!r}")
-
-    def _reg_anchor(self, uri: str, name: str, node, hard: bool):
-        key = (uri, name)
-        cur = self.anchors.get(key)
-        if cur is None:
-            self.anchors[key] = node
-            if hard:
-                self._hard.add(key)
-            return
-        if cur is node:
-            if hard:
-                self._hard.add(key)
-            return
-        if hard and key not in self._hard:
-            # hard assignment beats an earlier dyn setdefault
-            self.anchors[key] = node
-            self._hard.add(key)
-            return
-        if not hard and key in self._hard:
-            return  # setdefault after assignment: no-op
-        self.ambiguous.add(key)
-
-    def _ref_active(self, keyword: str) -> bool:
-        """Is this ref-family keyword active in the compile draft?
-        (core.py _KEYWORDS: $recursiveRef only in 2019-09, $dynamicRef
-        in 2020-12/next; plain $ref everywhere.)"""
-        if keyword == "$recursiveRef":
-            return self.draft == D2019
-        if keyword == "$dynamicRef":
-            return self.draft in (D2020, DNEXT)
-        return True
-
-    # -- resolution -----------------------------------------------------
-
-    def _anchor_node(self, key: tuple, table: dict, kind: str):
-        if key in (self.ambiguous if table is self.anchors
-                   else self.dyn_ambiguous):
-            raise _GiveUp(f"ambiguous {kind} {key!r}")
-        node = table.get(key)
-        if node is None:
-            raise _GiveUp(f"unresolvable {kind} {key!r}")
-        return node
+    def _target(self, node, uri: str, dup_key: tuple, key: str):
+        """Check one resolved target -> (node, cycle key)."""
+        if dup_key in self.index.dups \
+                or ("resource", uri) in self.index.dups:
+            raise _GiveUp(f"{dup_key!r} is bound to two nodes")
+        res = self.index.resources.get(uri)
+        if res is not self.root and not isinstance(res, bool) and not (
+                isinstance(res, dict)
+                and draft_of(res, self.draft) == self.draft):
+            # the interpreter compiles such a resource under its own
+            # draft; the single output tree has one
+            raise _GiveUp(f"resource {uri!r} is in another draft")
+        return node, key
 
     def _resolve(self, ref: str, base: str):
-        """Mirror core.py _resolve_ref restricted to in-document
-        resources: -> (raw target node, cycle key)."""
-        target = resolve_uri(base, ref) \
-            if base or not ref.startswith("#") else ref
-        root_part, frag = split_fragment(target)
-        res = self.resources.get(root_part)
-        if res is None:
-            res = self._register_external(root_part)
-        if res is None:
-            raise _GiveUp(f"unresolvable resource {root_part!r}")
-        if frag is None or frag == "":
-            return res, f"res:{root_part}"
+        try:
+            node, uri, frag = self.index.resolve(ref, base)
+        except SchemaError as e:
+            raise _GiveUp(str(e)) from None
+        if not frag:
+            return self._target(node, uri, ("resource", uri), f"res:{uri}")
         if frag.startswith("/"):
-            try:
-                node = pointer_get(res, frag)
-            except (KeyError, IndexError, ValueError):
-                raise _GiveUp(f"unresolvable pointer {target!r}")
-            # a pointer may land in a document position the feasibility
-            # pre-scan never walked (under an unknown keyword, inside
-            # enum/const data, ...).  Run the same scan late over the
-            # target subtree so the guards hold there too, WITHOUT
-            # registering anchors the interp would never index.
-            if isinstance(node, dict) and id(node) not in self._visited:
-                self._scan(node, root_part, register=False)
-            return node, f"ptr:{root_part}#{frag}"
-        node = self._anchor_node((root_part, frag), self.anchors, "anchor")
-        return node, f"anchor:{root_part}#{frag}"
+            return self._target(node, uri, ("resource", uri),
+                                f"ptr:{uri}#{frag}")
+        return self._target(node, uri, ("anchor", (uri, frag)),
+                            f"anchor:{uri}#{frag}")
 
-    def _register_external(self, uri: str):
-        """Lazily admit an external schema as a resource, mirroring the
-        interp's on-demand cascade in _resolve_ref: user registry ->
-        uri_dirs file loading -> vendored draft meta-schemas.  Returns
-        None when no source knows the URI."""
-        reg = self.registry.get(uri)
-        if reg is None and self.uri_dirs:
-            reg = self._load_from_dirs(uri)
-        if reg is None:
-            from m3spark.schema.core import _SCHEMA_URI_TO_DRAFT
-            if uri.rstrip("#") in _SCHEMA_URI_TO_DRAFT:
-                from m3spark.schema.metaschemas import META_BY_DRAFT
-                reg = META_BY_DRAFT.get(
-                    _SCHEMA_URI_TO_DRAFT[uri.rstrip("#")])
-                if reg is None:
-                    # interp: unknown draft name -> True schema
-                    self.resources[uri] = True
-                    return True
-        if reg is None:
-            return None
-        if isinstance(reg, bool):
-            self.resources[uri] = reg
-            return reg
-        if not isinstance(reg, dict):
-            raise _GiveUp(f"malformed registry entry {uri!r}")
-        # the interp compiles the external under draft_of(reg, draft);
-        # a different draft cannot share the single output tree
-        if draft_of(reg, self.draft) != self.draft:
-            raise _GiveUp(f"registry schema {uri!r} declares a "
-                          f"different draft")
-        self.resources[uri] = reg
-        self._scan(reg, uri)
-        return reg
-
-    def _load_from_dirs(self, uri: str):
-        """Mirror core.py _load_from_dirs: uri prefix -> directory map,
-        '.json' appended when missing; None when unmapped/unreadable."""
-        import json as _json
-        import os.path as _p
-        for prefix, directory in self.uri_dirs.items():
-            b = prefix.rstrip("/")
-            if uri == b or uri.startswith(b + "/"):
-                rel = uri[len(b):].lstrip("/")
-                path = _p.join(directory, rel) if rel else directory
-                if not path.endswith(".json"):
-                    path += ".json"
-                try:
-                    with open(path, encoding="utf-8") as f:
-                        return _json.load(f)
-                except (OSError, ValueError):
-                    return None
-        return None
-
-    def _resolve_recursive(self, base: str, chain: tuple):
-        """$recursiveRef '#' (core.py c_recursive_ref): outermost
-        $recursiveAnchor:true resource root in the (static) scope
-        chain; lexical resource root otherwise."""
-        static_node = self.resources.get(base, self.root)
-        static_dynamic = base in self.rec_anchor_roots or (
-            isinstance(static_node, dict)
-            and static_node.get("$recursiveAnchor") is True)
-        if static_dynamic:
-            for uri in chain:
-                r = self.resources.get(uri)
-                if isinstance(r, dict) \
-                        and r.get("$recursiveAnchor") is True:
-                    return r, f"rref:{uri}"
-        return static_node, f"rref:{base}"
-
-    def _resolve_dynamic(self, ref: str, base: str, chain: tuple):
-        """$dynamicRef (core.py c_dynamic_ref) with the scope chain
-        known statically: 2020-12 bookended, draft-next unbookended
-        with plain-anchor static fallback."""
-        target = resolve_uri(base, ref) \
-            if base or not ref.startswith("#") else ref
-        root_part, frag = split_fragment(target)
-        bookend_required = self.draft == D2020
-        is_dynamic = frag is not None and not frag.startswith("/") and (
-            (root_part, frag) in self.dyn_anchors or not bookend_required)
-        if not is_dynamic:
+    def _dynamic(self, ref: str, base: str, chain: tuple):
+        dyn = self.index.dynamic_ref(ref, base, self.draft)
+        if dyn is None:
             return self._resolve(ref, base)
-        if (root_part, frag) in self.dyn_ambiguous:
-            raise _GiveUp(f"ambiguous dynamic anchor {frag!r}")
-        for uri in chain:  # outermost-first
-            if (uri, frag) in self.dyn_anchors:
-                node = self._anchor_node((uri, frag), self.dyn_anchors,
-                                         "dynamic anchor")
-                return node, f"dyn:{uri}#{frag}"
-        if (root_part, frag) in self.dyn_anchors:
-            node = self._anchor_node((root_part, frag), self.dyn_anchors,
-                                     "dynamic anchor")
-            return node, f"dyn:{root_part}#{frag}"
-        if (root_part, frag) in self.anchors:
-            node = self._anchor_node((root_part, frag), self.anchors,
-                                     "anchor")
-            return node, f"anchor:{root_part}#{frag}"
-        # the interp emits a per-row "no anchor in dynamic scope"
-        # error here — leave that path to the interp
-        raise _GiveUp(f"no anchor {frag!r} in dynamic scope")
+        name, static = dyn
+        hit = self.index.dynamic_target(name, chain, static)
+        if hit is None:
+            # the interp emits a per-row "no anchor in dynamic scope"
+            # error here — leave that path to the interp
+            raise _GiveUp(f"no anchor {name!r} in dynamic scope")
+        node, kind, uri = hit
+        prefix = "dyn" if kind == "dynamic" else kind
+        return self._target(node, uri, (kind, (uri, name)),
+                            f"{prefix}:{uri}#{name}")
 
     # -- transform ------------------------------------------------------
 
@@ -525,17 +247,26 @@ class _Inliner:
         ``chain`` is the static scope chain: resource URIs entered
         along this expansion path, deduping consecutive repeats —
         exactly the interp's _Rt.scope at the same point."""
-        if isinstance(node, bool) or node is None:
-            return node
         if not isinstance(node, dict):
             return node
         self._spend()
-        # nodes outside indexed positions default to the document root
-        # resource, mirroring _compile's node_base.get(..., root_uri)
-        nb = self.node_base.get(id(node), self.root_uri)
+        nb = self.index.node_base.get(id(node))
+        if nb is None:
+            # a pointer target the index never walked compiles under the
+            # document root resource (core.py _compile), where an $id of
+            # its own is inert — resolution this tree does not reproduce
+            nb = self.root_uri
+            idv = node.get(self.id_key)
+            if isinstance(idv, str) and idv and split_fragment(
+                    resolve_uri(nb, idv) if nb else idv)[0] not in ("", nb):
+                raise _GiveUp("base-URI change in an unindexed subtree")
         if nb != chain[-1]:
             chain = chain + (nb,)
+        if not top and draft_of(node, self.draft) != self.draft:
+            raise _GiveUp("mid-schema draft switch")
         r = node.get("$ref")
+        if r is not None and not isinstance(r, str):
+            raise _GiveUp("non-string $ref")
         if isinstance(r, str) and not self.meld:
             # drafts <= 7: $ref replaces every sibling ($recursiveRef /
             # $dynamicRef are inactive there, so nothing else to meld)
@@ -552,20 +283,22 @@ class _Inliner:
             branches.append(
                 self._expand(*self._resolve(r, nb), r, stack, chain))
         rr = node.get("$recursiveRef")
-        if isinstance(rr, str) and self._ref_active("$recursiveRef"):
+        if isinstance(rr, str) and "$recursiveRef" in self.keywords:
             had_ref = True
             if rr == "#":
-                target, key = self._resolve_recursive(nb, chain)
+                target, uri = self.index.recursive_target(nb, chain)
+                target, key = self._target(target, uri, ("resource", uri),
+                                           f"rref:{uri}")
             else:
                 # non-'#' values fall back to plain-$ref semantics
                 # (core.py c_recursive_ref)
                 target, key = self._resolve(rr, nb)
             branches.append(self._expand(target, key, rr, stack, chain))
         dr = node.get("$dynamicRef")
-        if isinstance(dr, str) and self._ref_active("$dynamicRef"):
+        if isinstance(dr, str) and "$dynamicRef" in self.keywords:
             had_ref = True
             branches.append(self._expand(
-                *self._resolve_dynamic(dr, nb, chain), dr, stack, chain))
+                *self._dynamic(dr, nb, chain), dr, stack, chain))
         if not had_ref:
             return self._plain(node, stack, chain, top)
         siblings = {k: v for k, v in node.items() if k not in _REF_KEYS}
@@ -605,7 +338,7 @@ class _Inliner:
             if k in _STRIP_KEYS:
                 continue
             if k in ("$recursiveRef", "$dynamicRef") and \
-                    (not self._ref_active(k) or not isinstance(v, str)):
+                    (k not in self.keywords or not isinstance(v, str)):
                 # inactive in this draft, or a non-string value: the
                 # interpreter ignores it entirely (c_recursive_ref /
                 # c_dynamic_ref return None) — drop it so the compiler
@@ -622,7 +355,7 @@ class _Inliner:
                 # root's own, re-inlined): a no-op for the interp
                 # (core.py _compile draft_of) — strip so the compiler
                 # keeps the plan columnar.  A draft SWITCH never gets
-                # here (_scan gives up on it).
+                # here (_schema gives up on it).
                 continue
             # keywords applying to a CHILD value consume input depth:
             # mark the descent so a $ref loop through them counts as

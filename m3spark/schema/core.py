@@ -280,18 +280,63 @@ def _iter_subschemas(node: dict):
         yield from (x for x in v if isinstance(x, dict))
 
 
-class _Index:
-    """URI registry for one compilation (reference analog:
-    json_schema.cljc:58-100 uri->schema registry + validate.cljc:289-308
-    ``make-context`` uri stashes)."""
+def _id_keyword(draft: str) -> str:
+    return "id" if draft in (DRAFT3, DRAFT4) else "$id"
 
-    def __init__(self):
+
+class _Index:
+    """URI registry and reference resolver for one compilation, used by
+    the interpreter and by the columnar ``$ref`` inliner alike
+    (reference analog: json_schema.cljc:58-100 uri->schema registry,
+    validate.cljc:289-308 ``make-context`` uri stashes, ref.cljc:46-115
+    resolution).  A resource outside the document is admitted on its
+    first reference: from ``registry``, else from a ``uri_dirs`` file,
+    else as a vendored draft meta-schema."""
+
+    def __init__(self, draft: str, registry: dict | None = None,
+                 uri_dirs: dict | None = None):
+        self.draft = draft
+        self.registry = registry or {}
+        self.uri_dirs = uri_dirs or {}
+        self.root_uri = ""
         self.resources: dict[str, Any] = {}      # defragged uri -> root node
         self.anchors: dict[tuple, Any] = {}       # (resource_uri, name) -> node
         self.dyn_anchors: dict[tuple, Any] = {}
         self.rec_anchor_roots: set[str] = set()   # resources whose root has $recursiveAnchor
         self.node_base: dict[int, str] = {}        # id(node) -> resource uri
+        # (kind, key) bound to two different nodes of one kind
+        # ("resource", "anchor" or "dynamic"): which binding stands
+        # depends on walk order, so only the interpreter resolves these
+        self.dups: set[tuple] = set()
         self._pins: list = []                      # keep nodes alive for id()
+
+    def index_root(self, schema: Any, base_uri: str = "") -> str:
+        """Index ``schema`` as the document resource; returns its URI."""
+        root = base_uri
+        if isinstance(schema, dict):
+            idv = schema.get(_id_keyword(self.draft))
+            if isinstance(idv, str) and not idv.startswith("#"):
+                root = split_fragment(
+                    resolve_uri(base_uri, idv) if base_uri else idv)[0]
+        self.root_uri = root
+        self.resources.setdefault(root, schema)
+        self.index(schema, root, self.draft)
+        return root
+
+    def _bind(self, table: dict, kind: str, key, node,
+              first_wins: bool = False):
+        """Bind ``key`` to ``node`` in ``table`` (``first_wins``: an
+        existing binding stands), noting in ``dups`` a key already bound
+        to another node."""
+        cur = table.get(key)
+        if cur is not None and cur is not node:
+            # a hard anchor replacing a $dynamicAnchor's plain binding
+            # is precedence, not a duplicate
+            if table is not self.anchors or cur is not self.dyn_anchors.get(key):
+                self.dups.add((kind, key))
+            if first_wins:
+                return
+        table[key] = node
 
     def index(self, node: Any, base_uri: str, draft: str) -> str:
         """Walk ``node`` registering $id/$anchor/$dynamicAnchor.  Returns the
@@ -301,35 +346,148 @@ class _Index:
                 self.node_base[id(node)] = base_uri
             return base_uri
         self._pins.append(node)
-        id_kw = "id" if draft in (DRAFT3, DRAFT4) else "$id"
         new_base = base_uri
-        idv = node.get(id_kw)
+        idv = node.get(_id_keyword(draft))
         if isinstance(idv, str) and idv:
             resolved = resolve_uri(base_uri, idv) if base_uri else idv
             root_part, frag = split_fragment(resolved)
             if frag:  # fragment-only / fragment-carrying id acts as anchor (draft<=7)
-                self.anchors[(base_uri, frag)] = node
+                self._bind(self.anchors, "anchor", (base_uri, frag), node)
                 if root_part and root_part != split_fragment(base_uri)[0]:
                     new_base = root_part
-                    self.resources[root_part] = node
+                    self._bind(self.resources, "resource", root_part, node)
             else:
                 new_base = root_part
-                self.resources.setdefault(root_part, node)
+                self._bind(self.resources, "resource", root_part, node,
+                           first_wins=True)
         self.node_base[id(node)] = new_base
         a = node.get("$anchor")
         if isinstance(a, str):
-            self.anchors[(new_base, a)] = node
+            self._bind(self.anchors, "anchor", (new_base, a), node)
         da = node.get("$dynamicAnchor")
         if isinstance(da, str):
-            self.dyn_anchors[(new_base, da)] = node
+            self._bind(self.dyn_anchors, "dynamic", (new_base, da), node)
             self.anchors.setdefault((new_base, da), node)
         if node.get("$recursiveAnchor") is True and self.resources.get(new_base) is node:
             self.rec_anchor_roots.add(new_base)
         sub_draft = draft_of(node, draft)
         for child in _iter_subschemas(node):
             self.index(child, new_base, sub_draft)
-        # also catch $recursiveAnchor at nodes that become resource roots later
         return new_base
+
+    # -- resolution --------------------------------------------------------
+
+    def resource(self, uri: str):
+        """Root node of resource ``uri`` (no fragment), admitted and
+        indexed on first use; None when no source knows it."""
+        node = self.resources.get(uri)
+        if node is not None:
+            return node
+        node = self.registry.get(uri)
+        if node is None:
+            node = self._load_from_dirs(uri)
+        if node is None:
+            # a standard draft meta-schema: the vendored copy, so
+            # validation against it is real
+            draft = _SCHEMA_URI_TO_DRAFT.get(uri.rstrip("#"))
+            if draft is None:
+                return None
+            from m3spark.schema.metaschemas import META_BY_DRAFT
+            node = META_BY_DRAFT[draft]
+        self.resources[uri] = node
+        self.index(node, uri, draft_of(node, self.draft))
+        return node
+
+    def _load_from_dirs(self, uri: str):
+        """Load a schema JSON file for ``uri`` via the ``uri_dirs``
+        prefix->directory map (validate.cljc:242-258; '.json' appended
+        when missing).  Returns None when unmapped or unreadable."""
+        import os
+        for prefix, directory in self.uri_dirs.items():
+            b = prefix.rstrip("/")
+            if uri == b or uri.startswith(b + "/"):
+                rel = uri[len(b):].lstrip("/")
+                path = os.path.join(directory, rel) if rel else directory
+                if not path.endswith(".json"):
+                    path += ".json"
+                try:
+                    with open(path, encoding="utf-8") as f:
+                        return json.load(f)
+                except (OSError, ValueError):
+                    return None
+        return None
+
+    @staticmethod
+    def _target(ref: str, base_uri: str) -> str:
+        return resolve_uri(base_uri, ref) \
+            if base_uri or not ref.startswith("#") else ref
+
+    def resolve(self, ref: str, base_uri: str):
+        """Static target of reference ``ref`` at ``base_uri`` ->
+        (node, resource uri, fragment).  Raises SchemaError when
+        unresolvable."""
+        target = self._target(ref, base_uri)
+        root_part, frag = split_fragment(target)
+        node = self.resource(root_part)
+        if node is None:
+            raise SchemaError(f"unresolvable $ref: {target!r} (base {base_uri!r})")
+        if frag and frag.startswith("/"):
+            try:
+                node = pointer_get(node, frag)
+            except (KeyError, IndexError, ValueError) as e:
+                raise SchemaError(f"bad $ref pointer {target!r}: {e}") from e
+        elif frag:
+            node = self.anchors.get((root_part, frag))
+            if node is None:
+                raise SchemaError(f"unresolvable anchor {target!r}")
+        return node, root_part, frag
+
+    def dynamic_ref(self, ref: str, base_uri: str, draft: str):
+        """Compile-time half of ``$dynamicRef`` (2020-12: bookended —
+        property.cljc:170-197,387-512; draft-next: no bookend required).
+        None when it acts as a plain ``$ref``: a pointer fragment, or in
+        2020-12 no dynamic anchor of its name in the target resource.
+        Otherwise (name, static): ``static`` is the lexical fallback
+        target, that resource's dynamic anchor else plain anchor, as
+        :meth:`dynamic_target` returns targets, or None."""
+        root_part, frag = split_fragment(self._target(ref, base_uri))
+        if frag is None or frag.startswith("/") or (
+                draft == D2020 and (root_part, frag) not in self.dyn_anchors):
+            return None
+        for kind, table in (("dynamic", self.dyn_anchors),
+                            ("anchor", self.anchors)):
+            node = table.get((root_part, frag))
+            if node is not None:
+                return frag, (node, kind, root_part)
+        return frag, None
+
+    def dynamic_target(self, name: str, chain, static):
+        """``$dynamicRef`` target under scope ``chain`` (resource uris,
+        outermost first): the dynamic anchor ``name`` of the first
+        resource in the chain declaring one, else ``static``.  ->
+        (node, kind, resource uri), or None."""
+        for uri in chain:
+            node = self.dyn_anchors.get((uri, name))
+            if node is not None:
+                return node, "dynamic", uri
+        return static
+
+    def recursive_target(self, base_uri: str, chain):
+        """``$recursiveRef: "#"`` target under scope ``chain`` (2019-09:
+        property.cljc:131-168,302-384): the root of resource
+        ``base_uri``, unless that root has ``$recursiveAnchor: true`` —
+        then the root of the first resource in the chain that has it.
+        -> (node, resource uri)."""
+        node = self.resources.get(base_uri)
+        if node is None:
+            node = self.resources[self.root_uri]
+        if base_uri in self.rec_anchor_roots or (
+                isinstance(node, dict) and node.get("$recursiveAnchor") is True):
+            for uri in chain:
+                r = self.resources.get(uri)
+                if isinstance(r, dict) and r.get("$recursiveAnchor") is True:
+                    return r, uri
+        return node, base_uri
 
 
 # --------------------------------------------------------------------------
@@ -437,45 +595,17 @@ class CompiledSchema:
             # (vocabulary.cljc:599-614; property.cljc:682-700)
             format_assertion = not _ge(self.draft, D2019)
         self.format_assertion = format_assertion
-        self.index = _Index()
+        self.index = _Index(self.draft, self.registry, self.uri_dirs)
         self._memo: dict[int, tuple] = {}
-        root_base = base_uri
-        if isinstance(schema, dict):
-            id_kw = "id" if self.draft in (DRAFT3, DRAFT4) else "$id"
-            idv = schema.get(id_kw)
-            if isinstance(idv, str) and not idv.startswith("#"):
-                root_base = split_fragment(resolve_uri(base_uri, idv) if base_uri else idv)[0]
-        self.root_uri = root_base
-        self.index.resources.setdefault(root_base, schema)
-        self.index.index(schema, root_base, self.draft)
-        self._indexed_registry: set[str] = set()
+        self.root_uri = self.index.index_root(schema, base_uri)
         if self._meta_errors:
             # invalid schema: never compiled, every validation reports
             # the meta-errors (reference: validate.cljc:375-377)
-            c = Compiled(root_base)
+            c = Compiled(self.root_uri)
             c.fn = lambda v, p, rt, _e=self._meta_errors: (list(_e), None)
             self.root = c
         else:
             self.root = self._compile(schema, self.draft, "")
-
-    def _load_from_dirs(self, uri: str):
-        """Load a schema JSON file for ``uri`` via the ``uri_dirs``
-        prefix->directory map (validate.cljc:242-258; '.json' appended
-        when missing).  Returns None when unmapped or unreadable."""
-        import os
-        for prefix, directory in self.uri_dirs.items():
-            b = prefix.rstrip("/")
-            if uri == b or uri.startswith(b + "/"):
-                rel = uri[len(b):].lstrip("/")
-                path = os.path.join(directory, rel) if rel else directory
-                if not path.endswith(".json"):
-                    path += ".json"
-                try:
-                    with open(path, encoding="utf-8") as f:
-                        return json.load(f)
-                except (OSError, ValueError):
-                    return None
-        return None
 
     # -- meta-schema validation (validate-m2) -------------------------------
 
@@ -542,58 +672,6 @@ class CompiledSchema:
 
     def is_valid(self, value: Any) -> bool:
         return self.validate(value).valid
-
-    # -- resolution --------------------------------------------------------
-
-    def _resolve_ref(self, ref: str, base_uri: str):
-        """Resolve a $ref URI to (node, resource_uri).  Reference analog:
-        ref.cljc:46-115 canonicalise/try-path/resolve-uri."""
-        target = resolve_uri(base_uri, ref) if base_uri or not ref.startswith("#") else ref
-        root_part, frag = split_fragment(target)
-        node = self.index.resources.get(root_part)
-        if node is None and root_part in self.registry:
-            reg_schema = self.registry[root_part]
-            self.index.resources[root_part] = reg_schema
-            self.index.index(reg_schema, root_part, draft_of(reg_schema, self.draft))
-            node = reg_schema
-        if node is None and self.uri_dirs:
-            # remote-schema loading: uri prefix -> local directory map
-            # (reference: validate.cljc:237-258 uri-base->dir + slurp)
-            loaded = self._load_from_dirs(root_part)
-            if loaded is not None:
-                self.index.resources[root_part] = loaded
-                self.index.index(loaded, root_part,
-                                 draft_of(loaded, self.draft))
-                node = loaded
-        if node is None and root_part.rstrip("#") in _SCHEMA_URI_TO_DRAFT:
-            # $ref to a standard draft meta-schema: resolve to the
-            # vendored copy so validation against it is real
-            from m3spark.schema.metaschemas import META_BY_DRAFT
-            meta = META_BY_DRAFT.get(
-                _SCHEMA_URI_TO_DRAFT[root_part.rstrip("#")])
-            if meta is not None:
-                self.index.resources[root_part] = meta
-                self.index.index(meta, root_part,
-                                 draft_of(meta, self.draft))
-                node = meta
-            else:
-                return True, root_part
-        if node is None:
-            raise SchemaError(f"unresolvable $ref: {target!r} (base {base_uri!r})")
-        if frag is None or frag == "":
-            return node, root_part
-        if frag.startswith("/"):
-            try:
-                sub = pointer_get(node, frag)
-            except (KeyError, IndexError, ValueError) as e:
-                raise SchemaError(f"bad $ref pointer {target!r}: {e}") from e
-            sub_base = self.index.node_base.get(id(sub), root_part) \
-                if isinstance(sub, dict) else root_part
-            return sub, sub_base
-        anode = self.index.anchors.get((root_part, frag))
-        if anode is None:
-            raise SchemaError(f"unresolvable anchor {target!r}")
-        return anode, self.index.node_base.get(id(anode), root_part)
 
     # -- compilation -------------------------------------------------------
 
@@ -692,8 +770,7 @@ class CompiledSchema:
     # -- $ref family -------------------------------------------------------
 
     def _c_ref(self, ref: str, base: str, draft: str, sp: str):
-        target, turi = self._resolve_ref(ref, base)
-        compiled = self._compile(target, draft, sp)
+        compiled = self.compile_ref_target(ref, base, draft, sp)
 
         def chk(v, p, rt, ann):
             e, a = compiled(v, p, rt)
@@ -701,8 +778,7 @@ class CompiledSchema:
         return chk
 
     def compile_ref_target(self, ref: str, base: str, draft: str, sp: str):
-        target, _ = self._resolve_ref(ref, base)
-        return self._compile(target, draft, sp)
+        return self._compile(self.index.resolve(ref, base)[0], draft, sp)
 
 
 # --------------------------------------------------------------------------
@@ -735,67 +811,38 @@ def c_ref(cs, node, v, draft, sp, base):
 
 
 def c_dynamic_ref(cs, node, v, draft, sp, base):
-    """$dynamicRef (2020-12: bookended — property.cljc:170-197,387-512;
-    draft-next: no bookend required, per m3-tests fixture)."""
+    """$dynamicRef: the target is chosen per validation from the dynamic
+    scope (``_Index.dynamic_ref`` / ``dynamic_target``)."""
     if not isinstance(v, str):
         return None
-    target_uri = resolve_uri(base, v) if base or not v.startswith("#") else v
-    root_part, frag = split_fragment(target_uri)
-    bookend_required = draft == D2020
-    is_dynamic = frag is not None and not frag.startswith("/") and (
-        (root_part, frag) in cs.index.dyn_anchors or not bookend_required
-    )
-    if not is_dynamic:
+    dyn = cs.index.dynamic_ref(v, base, draft)
+    if dyn is None:
         return cs._c_ref(v, base, draft, sp)
-    static = None
-    if (root_part, frag) in cs.index.dyn_anchors:
-        static_node = cs.index.dyn_anchors[(root_part, frag)]
-        static = cs._compile(static_node, draft, sp)
-    elif (root_part, frag) in cs.index.anchors:
-        static = cs._compile(cs.index.anchors[(root_part, frag)], draft, sp)
-    dyn_cache: dict[str, Compiled] = {}
+    name, static = dyn
+    if static is not None:
+        # compiled now, so its errors surface at compile time
+        cs._compile(static[0], draft, sp)
 
-    def chk(v_, p, rt, ann, _frag=frag):
-        compiled = None
-        for uri in rt.scope:  # outermost-first
-            tgt = cs.index.dyn_anchors.get((uri, _frag))
-            if tgt is not None:
-                compiled = dyn_cache.get(uri)
-                if compiled is None:
-                    compiled = cs._compile(tgt, draft, sp)
-                    dyn_cache[uri] = compiled
-                break
-        if compiled is None:
-            compiled = static
-        if compiled is None:
+    def chk(v_, p, rt, ann):
+        target = cs.index.dynamic_target(name, rt.scope, static)
+        if target is None:
             return _err("$dynamicRef", sp, p,
-                        f"$dynamicRef: no anchor {_frag!r} in dynamic scope"), None
-        return compiled(v_, p, rt)
+                        f"$dynamicRef: no anchor {name!r} in dynamic scope"), None
+        return cs._compile(target[0], draft, sp)(v_, p, rt)
     return chk
 
 
 def c_recursive_ref(cs, node, v, draft, sp, base):
-    """$recursiveRef '#' (2019-09: property.cljc:131-168,302-384)."""
+    """$recursiveRef '#': the target is chosen per validation from the
+    dynamic scope (``_Index.recursive_target``)."""
     if v != "#":
         return cs._c_ref(v, base, draft, sp) if isinstance(v, str) else None
-    static_node = cs.index.resources.get(base)
-    static = cs._compile(static_node if static_node is not None else cs.schema,
-                         draft, sp)
-    static_dynamic = base in cs.index.rec_anchor_roots or (
-        isinstance(static_node, dict) and static_node.get("$recursiveAnchor") is True)
-    dyn_cache: dict[str, Compiled] = {}
+    # the static target compiles now, so its errors surface at compile time
+    cs._compile(cs.index.recursive_target(base, ())[0], draft, sp)
 
     def chk(v_, p, rt, ann):
-        if static_dynamic:
-            for uri in rt.scope:
-                root = cs.index.resources.get(uri)
-                if isinstance(root, dict) and root.get("$recursiveAnchor") is True:
-                    compiled = dyn_cache.get(uri)
-                    if compiled is None:
-                        compiled = cs._compile(root, draft, sp)
-                        dyn_cache[uri] = compiled
-                    return compiled(v_, p, rt)
-        return static(v_, p, rt)
+        target, _ = cs.index.recursive_target(base, rt.scope)
+        return cs._compile(target, draft, sp)(v_, p, rt)
     return chk
 
 

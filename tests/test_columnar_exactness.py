@@ -105,6 +105,68 @@ def test_integer_type_on_huge_doubles_matches_interpreter(spark):
         assert got == want[:n], df.dtypes
 
 
+_DRAFT_URIS = {"draft3": "http://json-schema.org/draft-03/schema#",
+               "draft4": "http://json-schema.org/draft-04/schema#",
+               "draft6": "http://json-schema.org/draft-06/schema#"}
+
+
+@pytest.mark.parametrize("draft", sorted(_DRAFT_URIS))
+def test_integer_type_on_float_columns_per_draft(spark, draft):
+    """Drafts 3 and 4 count no float as an integer (the interpreter's
+    ``is_integer_strict``), draft 6 counts one with a zero fraction:
+    float, double and VARIANT ``parse_json('1.0')`` columns agree."""
+    from m3spark.columnar import ColumnarValidator
+    from m3spark.schema.core import compile_schema
+
+    schema = {"$schema": _DRAFT_URIS[draft],
+              "properties": {"x": {"type": "integer"}}}
+    texts = ["1.0", "1.5", "-2.0"]
+    want = [compile_schema(schema).validate({"x": float(t)}).valid
+            for t in texts]
+    assert want == ([True, False, True] if draft == "draft6"
+                    else [False, False, False])
+    rows = [(i, float(t), t) for i, t in enumerate(texts)]
+    base = spark.createDataFrame(rows, "i int, d double, j string")
+    frames = {"float": base.select("i", F.col("d").cast("float").alias("x")),
+              "double": base.select("i", F.col("d").alias("x")),
+              "variant": base.select("i", F.parse_json("j").alias("x"))}
+    cv = ColumnarValidator(schema)
+    for kind, df in frames.items():
+        got = [r["valid"] for r in
+               cv.apply(df).orderBy("i").select("valid").collect()]
+        assert got == want, kind
+
+
+@pytest.mark.parametrize("sub,docs", [
+    ({"const": [1, 2]}, ["[1,2]", "[2,1]", "1"]),
+    ({"const": {"a": 1}}, ['{"a":1}', '{"a":2}', '"x"']),
+    ({"enum": [[1, 2], {"a": 1}, 3]}, ["[1,2]", '{"a":1}', "3", "[3]"]),
+    ({"uniqueItems": True}, ["[1,2]", "[1,1]", '"x"']),
+])
+def test_variant_column_composite_equality_uses_interpreter(spark, sub,
+                                                            docs):
+    """SQL has no equality on VARIANT values: array/object ``enum`` and
+    ``const`` literals and ``uniqueItems`` over a VARIANT table column
+    raise ``UnsupportedKeyword`` at apply, so ``validate_table`` answers
+    with the interpreter."""
+    import json
+
+    from m3spark.columnar import ColumnarValidator, UnsupportedKeyword
+    from m3spark.schema.core import compile_schema
+    from m3spark.sparkval import validate_table
+
+    schema = {"properties": {"o": sub}}
+    df = (spark.createDataFrame(list(enumerate(docs)), "i int, j string")
+               .select("i", F.parse_json("j").alias("o")))
+    with pytest.raises(UnsupportedKeyword):
+        ColumnarValidator(schema).apply(df)
+    got = [r["valid"] for r in
+           validate_table(df, schema).orderBy("i").collect()]
+    want = [compile_schema(schema).validate({"o": json.loads(d)}).valid
+            for d in docs]
+    assert got == want
+
+
 def test_multiple_of_zero_divisor_schema(spark):
     from m3spark.columnar import ColumnarValidator
     df = spark.createDataFrame([(4.0,), (0.0,)], "x double")

@@ -1034,3 +1034,70 @@ def test_registry_admission_order_parity(spark, order):
         assert got == [True, False, False, True]
     else:
         assert got == [True, False, False, True]
+
+
+D3 = "http://json-schema.org/draft-03/schema#"
+
+
+def test_draft3_type_union_anchor_binds_like_interpreter(spark):
+    """Draft-3 ``type`` unions may embed schemas, and the index walks
+    them: here two nodes claim the anchor ``#x``, and the interpreter
+    binds it to the one in the ``type`` union.  The columnar route must
+    not bind it differently."""
+    from m3spark.schema.core import compile_schema
+    from m3spark.sparkval import validate_table
+
+    schema = {"$schema": D3,
+              "type": ["object", {"id": "#x", "maximum": 0}],
+              "definitions": {"x": {"id": "#x", "minimum": 5}},
+              "properties": {"a": {"$ref": "#x"}}}
+    df = spark.createDataFrame([(7,), (-1,)], "a int")
+    got = [r["valid"] for r in validate_table(df, schema).collect()]
+    want = [compile_schema(schema).validate({"a": v}).valid for v in (7, -1)]
+    assert got == want == [False, True]
+
+
+def _function_defs(path):
+    import ast
+
+    return [n for n in ast.walk(ast.parse(path.read_text()))
+            if isinstance(n, (ast.FunctionDef, ast.AsyncFunctionDef))]
+
+
+def test_inliner_keeps_no_uri_registry():
+    """The inliner resolves through the interpreter's ``_Index``: none
+    of its former registry methods or state exist, and exactly one
+    function in the package opens a ``uri_dirs`` file."""
+    import ast
+    from pathlib import Path
+
+    import m3spark
+    from m3spark.columnar import inline
+
+    deleted = {"_scan", "_reg_resource", "_reg_anchor",
+               "_register_external", "_load_from_dirs", "_anchor_node",
+               "_resolve_recursive", "_resolve_dynamic", "_ref_active"}
+    state = {"resources", "anchors", "dyn_anchors", "_hard", "ambiguous",
+             "dyn_ambiguous", "_visited", "rec_anchor_roots", "node_base"}
+    src = Path(inline.__file__)
+    assert not deleted & {f.name for f in _function_defs(src)}
+    assigned = {t.attr for n in ast.walk(ast.parse(src.read_text()))
+                if isinstance(n, (ast.Assign, ast.AnnAssign))
+                for t in (n.targets if isinstance(n, ast.Assign)
+                          else [n.target])
+                if isinstance(t, ast.Attribute)}
+    assert not state & assigned
+
+    def opens_uri_dirs(fn):
+        names = set()
+        for n in ast.walk(fn):
+            if isinstance(n, ast.Name):
+                names.add(n.id)
+            elif isinstance(n, ast.Attribute):
+                names.add(n.attr)
+        return "open" in names and "uri_dirs" in names
+
+    openers = [(str(p), f.name)
+               for p in Path(m3spark.__file__).parent.rglob("*.py")
+               for f in _function_defs(p) if opens_uri_dirs(f)]
+    assert len(openers) == 1, openers

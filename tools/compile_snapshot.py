@@ -1,6 +1,7 @@
 """Snapshot of what the columnar compiler produces for the test corpus.
 
-Every case of ``tests/corpus*.py`` is compiled with its own draft as the
+Every case of ``tests/corpus*.py`` is compiled with its own draft (and,
+for ``corpus_remote``, with its ``uri_dirs`` file loader) as the
 table-row schema itself, as ``{"properties": {"v": schema}}`` and, for
 drafts 2019-09 and later, as the decoded content of a string column
 ``{"properties": {"v": {"contentMediaType": "application/json",
@@ -12,8 +13,9 @@ records
 - the ``UnsupportedKeyword`` text (or another exception's type and text),
 - ``str()`` of the Column trees ``ColumnarValidator._build_apply`` builds
   over each table shape in ``SHAPES``, with the parts that vary from run
-  to run made stable: lambda variables are numbered per tree, and a
-  Python UDF's call site is dropped.
+  to run made stable: lambda variables are numbered per tree, a
+  Python UDF's call site is dropped, and any other captured call stack's
+  identity hash is masked.
 
 The output is sorted, indented JSON, so two snapshots (say, of a parent
 commit and of a change) compare with one ``diff``:
@@ -40,10 +42,12 @@ from m3spark.columnar.compiler import (  # noqa: E402
     ColumnarValidator, UnsupportedKeyword,
 )
 from m3spark.schema.core import D2019, _ge  # noqa: E402
+from corpus_remote import remote_uri_dirs  # noqa: E402
 
 CORPORA = [("corpus", "CASES"), ("corpus2", "CASES2"), ("corpus3", "CASES3"),
            ("corpus4", "CASES4"), ("corpus5", "CASES5"),
-           ("corpus6", "CASES6"), ("corpus7", "CASES7")]
+           ("corpus6", "CASES6"), ("corpus7", "CASES7"),
+           ("corpus_remote", "CASES_REMOTE")]
 
 # fixed table shapes (Spark DDL): scalar, array, struct, map and variant
 # columns named "v" for the property and content forms; flat rows over
@@ -64,22 +68,25 @@ SHAPES = {
 _LAMBDA_VAR = re.compile(r"\b([xy])_\d+\b")
 _UDF_SITE = re.compile(r"Some\(\[Ljava\.lang\.StackTraceElement;@\w+\),"
                        r"Some\(\(\w+,[^)]*\)\)")
+# any other captured call stack prints as an identity hash
+_STACK_ID = re.compile(r"StackTraceElement;@\w+")
 
 
 def _stable(tree) -> str:
     names: dict = {}
     return _LAMBDA_VAR.sub(
         lambda m: names.setdefault(m.group(0), f"{m.group(1)}_{len(names)}"),
-        _UDF_SITE.sub("<call site>", str(tree)))
+        _STACK_ID.sub("StackTraceElement;@<id>",
+                      _UDF_SITE.sub("<call site>", str(tree))))
 
 
 def _err(e: Exception) -> str:
     return f"{type(e).__name__}: {e}"
 
 
-def snapshot_one(schema, draft, frames) -> dict:
+def snapshot_one(schema, draft, frames, uri_dirs=None) -> dict:
     try:
-        cv = ColumnarValidator(schema, draft=draft)
+        cv = ColumnarValidator(schema, draft=draft, uri_dirs=uri_dirs)
     except UnsupportedKeyword as e:
         return {"unsupported": str(e)}
     except Exception as e:  # noqa: BLE001 - recorded, compared by text
@@ -109,6 +116,7 @@ def main() -> None:
     snap = {}
     for mod, attr in CORPORA:
         cases = getattr(importlib.import_module(mod), attr)
+        uri_dirs = remote_uri_dirs() if mod == "corpus_remote" else None
         for i, (draft, desc, schema, _tests) in enumerate(cases):
             forms = [("root", schema),
                      ("property", {"properties": {"v": schema}})]
@@ -118,7 +126,8 @@ def main() -> None:
                     "contentSchema": schema}}}))
             for form, s in forms:
                 snap[f"{mod}/{i:04d}/{form}"] = dict(
-                    snapshot_one(s, draft, frames), description=desc)
+                    snapshot_one(s, draft, frames, uri_dirs),
+                    description=desc)
     with open(args.out, "w") as f:
         json.dump(snap, f, indent=1, sort_keys=True, default=repr)
         f.write("\n")
