@@ -84,8 +84,11 @@ def _type_ok(tname: str, dtype: T.DataType, col: Column,
     language-level integer, so no float or double is one (core.py
     is_integer_strict)."""
     if tname == "null":
-        # NullType is the typed view of a JSON null inside a VARIANT
-        return F.lit(True) if isinstance(dtype, T.NullType) else col.isNull()
+        # NullType is the typed view of a JSON null inside a VARIANT;
+        # the row (``col`` None) is never null
+        if isinstance(dtype, T.NullType):
+            return F.lit(True)
+        return F.lit(False) if col is None else col.isNull()
     if tname == "string":
         return F.lit(isinstance(dtype, T.StringType))
     if tname == "boolean":
@@ -320,8 +323,8 @@ class ColumnarValidator:
             n = len(self.meta_errors)
             if n > 1:
                 msg += f" (+{n - 1} more meta-errors)"
-            self._add(self._ROW_CHECK, "$schema", "", msg, "error",
-                      lambda col, row: F.lit(False), null_passes=False)
+            self.checks.append(Check(self._ROW_CHECK, "$schema", "", msg,
+                                     "error", lambda col, row: F.lit(False)))
             return
         # eager driver-side $ref/$defs inlining (SURVEY §2.8): acyclic
         # local refs expand before compilation so the common reuse idiom
@@ -330,10 +333,11 @@ class ColumnarValidator:
         # $dynamicRef/$recursiveRef, non-productive cycles) keeps the
         # original schema and routes to the interp via UnsupportedKeyword
         # below.
-        self._compile_root(inline_local_refs(schema, draft,
-                                             unroll=ref_unroll,
-                                             registry=registry,
-                                             uri_dirs=uri_dirs))
+        self._compile_property(self._ROW_CHECK,
+                               inline_local_refs(schema, draft,
+                                                 unroll=ref_unroll,
+                                                 registry=registry,
+                                                 uri_dirs=uri_dirs), "")
         if self.unsupported:
             raise UnsupportedKeyword(
                 f"columnar compiler cannot lower: {self.unsupported}; "
@@ -365,42 +369,16 @@ class ColumnarValidator:
 
     # -- compilation --------------------------------------------------------
 
-    _PROP_KEYWORDS = {
-        "type", "enum", "const", "minimum", "maximum", "exclusiveMinimum",
-        "exclusiveMaximum", "multipleOf", "divisibleBy", "minLength",
-        "maxLength", "pattern", "format", "allOf", "anyOf", "oneOf", "not",
-        "required",  # draft3 boolean form / nested struct requireds
-        "items", "prefixItems", "additionalItems",
-        "minItems", "maxItems", "uniqueItems",
-        "contains", "minContains", "maxContains",
-        "properties",  # nested struct/map columns
-        "patternProperties", "additionalProperties", "propertyNames",
-        "minProperties", "maxProperties",
-        "title", "description", "default", "examples", "$comment",
-        "deprecated", "readOnly", "writeOnly",
-        "contentEncoding", "contentMediaType", "contentSchema",
-        "unevaluatedProperties", "unevaluatedItems",
-        "if", "then", "else",
-        "dependentRequired", "dependentSchemas", "dependencies",
-        "extends", "propertyDependencies",
-        UNROLL_GUARD_KEY,
-    }
-    _ROOT_KEYWORDS = {
-        "$schema", "$id", "id", "$defs", "definitions", "type", "properties",
-        "required", "additionalProperties", "patternProperties",
-        "propertyNames", "minProperties", "maxProperties",
-        "title", "description",
-        "$comment", "allOf", "anyOf", "oneOf", "not", "if", "then", "else",
-        "dependentRequired", "dependentSchemas", "dependencies",
-        "unevaluatedProperties", "unevaluatedItems",
-        "extends", "propertyDependencies",
-    }
-
     _ROW_CHECK = None  # a row check's column: build gets (None, row type)
     # keywords a checker reads beside its own (c_if's then/else,
     # c_contains's min/maxContains) and the inliner's unroll cut
     _COMPANIONS = frozenset({"then", "else", "minContains", "maxContains",
                              UNROLL_GUARD_KEY})
+    # the draft keywords with no lowering: a reference the inliner left
+    # behind (cycle, external target, dynamic scope) and draft 3's
+    # disallow.  A schema using one routes to the interpreter.
+    _UNLOWERED = frozenset({"$ref", "$dynamicRef", "$recursiveRef",
+                            "disallow"})
 
     def _active(self, sub: dict) -> dict:
         """``sub`` without the keywords its draft does not define.  The
@@ -410,30 +388,6 @@ class ColumnarValidator:
         table = _KEYWORDS[self.draft]
         return {k: v for k, v in sub.items()
                 if k in table or k in self._COMPANIONS}
-
-    def _compile_root(self, schema: dict, sp: str = ""):
-        """The table row: an object whose fields are the columns.
-        Top-level ``required`` and ``properties`` become per-column
-        checks; every other object keyword compiles through
-        :meth:`_compile_object`, as a struct or map column's does."""
-        for k in schema:
-            if k not in self._ROOT_KEYWORDS:
-                self.unsupported.append(k)
-        schema = self._active(schema)
-        for name, rsp in self._required_keys(schema, sp):
-            # interp convention (c_required): the violation sits at
-            # the OBJECT that is missing the key — the table row,
-            # pointer "" — and renders the row document as value
-            # (apply() special-cases the whole-row to_json)
-            self._add(name, "required", rsp,
-                      f"required property {name!r} missing",
-                      "error", lambda col, dt: col.isNotNull(),
-                      doc_path="")
-        props = schema.get("properties")
-        if isinstance(props, dict):
-            for name, sub in props.items():
-                self._compile_property(name, sub, f"{sp}/properties/{name}")
-        self._compile_object(self._ROW_CHECK, schema, sp)
 
     def _required_keys(self, sub: dict, sp: str) -> list:
         """(key, schema path) for each key object ``sub`` requires: its
@@ -455,13 +409,33 @@ class ColumnarValidator:
         the column and its type).  Struct fields and row columns are
         static, so their names match at build time; map keys are
         dynamic (HOFs over ``map_keys``); any other type passes — the
-        ``type`` keyword reports it (m3 analog: property.cljc:992-1095)."""
+        ``type`` keyword reports it (m3 analog: property.cljc:992-1095;
+        SURVEY §2.4)."""
         row = name is self._ROW_CHECK
 
-        def add(kw, ksp, msg, build, on="object"):
+        def add(kw, ksp, msg, build, on="object", value_of=None):
             self._add(name, kw, ksp, msg, "error", _only(on, build),
-                      doc_path="" if row else None)
+                      value_of=value_of)
 
+        # interp convention (c_required): the violation sits at the
+        # OBJECT that is missing the key and renders it as its value
+        for k, rsp in self._required_keys(sub, sp):
+            def build_req(col, dt, _k=k):
+                present = self._obj_present(col, dt, _k)
+                return F.lit(True) if present is None else present
+
+            add("required", rsp, f"required property {k!r} missing",
+                build_req, value_of=_object_json)
+        # a row property is a column; a struct or map member is reached
+        # through the column, each inner check surfaced as its own
+        props = sub.get("properties")
+        for pname, psub in (props.items() if isinstance(props, dict)
+                            else ()):
+            if row:
+                self._compile_property(pname, psub,
+                                       f"{sp}/properties/{pname}")
+            else:
+                self._surface_nested_property(name, pname, psub, sp)
         pats = self._claim_patterns(sub)
         pp = sub.get("patternProperties")
         for pat, (jpat, rx) in pats.items():
@@ -615,8 +589,10 @@ class ColumnarValidator:
                     doc = c.doc_path
                     if row and doc is None:
                         doc = f"/{c.column}"
-                    self.checks.append(replace(c, column=name, build=gated,
-                                               doc_path=doc))
+                    # a column check moved onto the row renders no value
+                    self.checks.append(replace(
+                        c, column=name, build=gated, doc_path=doc,
+                        value_of=c.value_of if c.column == name else None))
 
     def _sub_checks(self, frag, sp, name="_e", errors_only=False,
                     jvm_only=False, variant=False) -> list[Check]:
@@ -638,17 +614,11 @@ class ColumnarValidator:
         (see ``_variant``)."""
         if frag is True or frag == {}:
             return []
-        if frag is False and name is None:
-            return [Check(None, "false", sp, "schema is false", "error",
-                          lambda col, row: F.lit(False), doc_path="")]
         prefix = "" if name is None else f"/properties/{name}"
         inner = ColumnarValidator.__new__(ColumnarValidator)
         inner._setup(frag, self.draft, self.format_assertion)
         inner._variant = self._variant or variant
-        if name is None:
-            inner._compile_root(frag)
-        else:
-            inner._compile_property(name, frag, prefix)
+        inner._compile_property(name, frag, prefix)
         self.unsupported.extend(sp + u.removeprefix(prefix)
                                 for u in inner.unsupported)
         out = []
@@ -684,13 +654,23 @@ class ColumnarValidator:
 
     def _add(self, column, keyword, sp, msg, level, build, null_passes=True,
              doc_path=None, value_of=None):
-        # the row (column _ROW_CHECK) is never missing and never a VARIANT
-        if column is not self._ROW_CHECK:
-            build = _at_value(build, null_passes and keyword != "required")
+        if column is self._ROW_CHECK:
+            # the row is never missing, never a VARIANT and always an
+            # object: a builder for another kind is statically true
+            if getattr(build, "_on", None) not in (None, "object"):
+                return
+            doc_path = "" if doc_path is None else doc_path
+        else:
+            build = _at_value(build, null_passes)
         self.checks.append(Check(column, keyword, sp, msg, level, build,
                                  doc_path, value_of))
 
-    def _compile_property(self, name: str, sub, sp: str):
+    def _compile_property(self, name: str | None, sub, sp: str):
+        """Schema ``sub`` at one value position: column ``name``
+        (builders get the column and its type) or, when ``name`` is
+        ``_ROW_CHECK``, the table row — an object whose fields are the
+        columns (builders get ``(None, row type)``)."""
+        row = name is self._ROW_CHECK
         if sub is True or sub == {}:
             return
         if sub is False:
@@ -699,9 +679,9 @@ class ColumnarValidator:
             return
         if not isinstance(sub, dict):
             return
-        for k in sub:
-            if k not in self._PROP_KEYWORDS:
-                self.unsupported.append(f"{sp}/{k}")
+        sub = self._active(sub)
+        self.unsupported.extend(k if row else f"{sp}/{k}" for k in sub
+                                if k in self._UNLOWERED)
         # unroll cut planted by inline.py at a productive $ref cycle:
         # the builder RAISES — but builders only run when the apply-time
         # type descent actually reaches this schema position, so tables
@@ -718,35 +698,40 @@ class ColumnarValidator:
             self._add(name, "$ref", f"{sp}/$ref",
                       "recursion beyond unroll depth", "error",
                       build_guard, null_passes=False)
-        sub = self._active(sub)
         draft = self.draft
         old = draft in (DRAFT3, DRAFT4)
 
         t = sub.get("type")
-        if isinstance(t, str):
-            self._add(name, "type", f"{sp}/type",
-                      f"expected type {t}", "error",
-                      lambda col, dt, _t=t: _type_ok(_t, dt, col, draft))
-        elif isinstance(t, list):
-            names = [x for x in t if isinstance(x, str)]
+        members = t if isinstance(t, list) else [t]
+        names = [x for x in members if isinstance(x, str)]
+        # the row is an object: a type that admits one adds nothing
+        if isinstance(t, (str, list)) and not (
+                row and {"object", "any"} & set(names)):
             # draft-3 union types may embed SCHEMA members: the value
             # matches the union if it satisfies any member schema
             # (c_type parity; in draft-4+ schema members are
             # meta-invalid and never reach here)
             sub_preds = tuple(
-                self._fragment_pred(s, f"{sp}/type/{i}")
-                for i, s in enumerate(t)
+                self._fragment_pred(s, f"{sp}/type/{i}", row)
+                for i, s in enumerate(members)
                 if isinstance(s, dict) and draft == DRAFT3)
 
-            def build_type_union(col, dt, _n=tuple(names), _s=sub_preds):
+            def build_type(col, dt, _n=tuple(names), _s=sub_preds):
                 oks = [_type_ok(x, dt, col, draft) for x in _n]
                 oks += [p(col, dt).eqNullSafe(True) for p in _s]
                 return _reduce_or(oks)
 
+            if old and "integer" in names:
+                # a VARIANT stores both 1.0 and 12345678901234567890 as
+                # DECIMAL(p,0); drafts 3/4 call only the second an integer
+                build_type._no_variant = (
+                    f"{sp}/type integer over variant (drafts 3/4: a "
+                    f"VARIANT DECIMAL(p,0) may hold 1.0 or an integer)")
             self._add(name, "type", f"{sp}/type",
-                      f"expected one of {names}", "error",
-                      build_type_union,
-                      null_passes=False if "null" in names else True)
+                      f"expected type {t}" if isinstance(t, str)
+                      else f"expected one of {names}", "error", build_type,
+                      null_passes=not (isinstance(t, list)
+                                       and "null" in names))
 
         for kw, lits in (("enum", sub.get("enum")),
                          ("const", [sub.get("const")])):
@@ -757,11 +742,9 @@ class ColumnarValidator:
                     f"equality on VARIANT values)")
         if isinstance(sub.get("enum"), list):
             vals = sub["enum"]
-            composite = any(isinstance(x, (list, dict)) for x in vals)
 
             def build_enum(col, dt, _v=tuple(vals), _sp=f"{sp}/enum"):
-                if composite:
-                    _no_variant_eq(_sp, dt)
+                _no_literal_eq(_sp, _v, dt)
                 if isinstance(dt, T.NullType):
                     return F.lit(None in _v)
                 ok = [x for x in _v if _value_compat(x, dt)]
@@ -791,8 +774,7 @@ class ColumnarValidator:
             cv = sub["const"]
 
             def build_const(col, dt, _c=cv, _sp=f"{sp}/const"):
-                if isinstance(_c, (list, dict)):
-                    _no_variant_eq(_sp, dt)
+                _no_literal_eq(_sp, (_c,), dt)
                 if isinstance(dt, T.NullType):
                     return F.lit(_c is None)
                 if not _value_compat(_c, dt):
@@ -887,12 +869,11 @@ class ColumnarValidator:
                           f"not a valid {fmt}", level,
                           _string_only(_format_pred(fmt)))
 
-        if ("contentEncoding" in sub or "contentMediaType" in sub
-                or "contentSchema" in sub):
-            self._compile_content(name, sub, sp, draft)
-
-        self._compile_array_keywords(name, sub, sp)
-        self._compile_struct_keywords(name, sub, sp)
+        if not row:  # the row is never a string or an array
+            if ("contentEncoding" in sub or "contentMediaType" in sub
+                    or "contentSchema" in sub):
+                self._compile_content(name, sub, sp, draft)
+            self._compile_array_keywords(name, sub, sp)
         self._compile_object(name, sub, sp)
 
     # -- content keywords (decode-then-validate, §2.9) -----------------------
@@ -1168,8 +1149,7 @@ class ColumnarValidator:
                 if trig is None:
                     return F.lit(True)
                 return F.when(trig, _ok(col, dt)).otherwise(F.lit(True))
-            self._add(name, kw, dsp, msg, "error", _only("object", build),
-                      doc_path="" if row else None)
+            self._add(name, kw, dsp, msg, "error", _only("object", build))
 
         def req_check(kw, key, needs, dsp):
             add(kw, dsp, f"property {key!r} requires {list(needs)!r}",
@@ -1266,42 +1246,6 @@ class ColumnarValidator:
                       + idp[len("/_e"):],
                       value_of=value_of)
 
-    def _compile_struct_keywords(self, name: str, sub: dict, sp: str):
-        """``required`` and ``properties`` of a struct or map column: the
-        members the row's own pair maps to columns (m3 analog:
-        property.cljc:992-1052; SURVEY §2.4)."""
-        props = sub.get("properties")
-        for k, rsp in self._required_keys(sub, sp):
-            def build_req(col, dt, _k=k):
-                # a NULL struct means the whole property is missing:
-                # nested required does not apply (presence semantics)
-                if isinstance(dt, T.StructType):
-                    inner = (F.lit(False) if _k not in dt.fieldNames()
-                             else col.getField(_k).isNotNull())
-                elif isinstance(dt, T.MapType):
-                    inner = F.map_contains_key(col, F.lit(_k))
-                else:
-                    return F.lit(True)
-                return F.when(col.isNull(), F.lit(True)).otherwise(inner)
-
-            def req_value(col, dt):
-                # interp parity: the violation's value is the OBJECT
-                # missing the key, compact-JSON rendered with null
-                # fields omitted (= absent, the typed-column
-                # convention) — matches _fmt_value's separators
-                if isinstance(dt, (T.StructType, T.MapType)):
-                    return F.to_json(col)
-                return F.lit(None)
-            self._add(name, "required", rsp,
-                      f"required property {k!r} missing", "error",
-                      _only("object", build_req), doc_path=f"/{name}",
-                      value_of=req_value)
-        if isinstance(props, dict):
-            for pname, pschema in props.items():
-                if pschema is not False and not isinstance(pschema, dict):
-                    continue
-                self._surface_nested_property(name, pname, pschema, sp)
-
     # -- unevaluatedProperties / unevaluatedItems (§2.4/§2.5 hard part) ------
     # Static key-set algebra (SURVEY §7 hard-part 1): each in-place
     # applicator branch contributes its evaluated key-set GATED on the
@@ -1327,10 +1271,6 @@ class ColumnarValidator:
     # UnsupportedKeyword, the compiler's standing escape hatch: $ref
     # left by a cycle or external target, $dynamicRef, $recursiveRef.
 
-    _CLAIM_UNSAFE = frozenset({
-        "$ref", "$dynamicRef", "$recursiveRef",
-    })
-
     def _claim_patterns(self, frag) -> dict:
         """pattern -> (java_rlike, compiled_python) for each
         patternProperties key — ECMA-invalid patterns are ignored by
@@ -1353,14 +1293,14 @@ class ColumnarValidator:
         if not isinstance(frag, dict):
             return {"names": (), "patterns": (), "all_keys": False,
                     "branches": ()}
-        unsafe = [k for k in frag if k in self._CLAIM_UNSAFE]
+        frag = self._active(frag)
+        unsafe = [k for k in frag if k in self._UNLOWERED]
         if unsafe:
             self.unsupported.append(
                 f"{sp} (unevaluated* claim algebra cannot model "
                 f"{sorted(set(unsafe))})")
             return {"names": (), "patterns": (), "all_keys": False,
                     "branches": ()}
-        frag = self._active(frag)
         props = frag.get("properties")
         names = tuple(props) if isinstance(props, dict) else ()
         branches = []
@@ -1560,8 +1500,7 @@ class ColumnarValidator:
 
         self._add(name, "unevaluatedProperties", usp,
                   f"{'column' if row else 'property'} not evaluated by any "
-                  f"schema", "error", _only("object", build),
-                  doc_path="" if row else None)
+                  f"schema", "error", _only("object", build))
 
     def _array_claims(self, frag, sp, top=False):
         """{n_prefix, all_items, contains, branches} claim structure for
@@ -1569,14 +1508,14 @@ class ColumnarValidator:
         if not isinstance(frag, dict):
             return {"n_prefix": 0, "all_items": False, "contains": None,
                     "branches": ()}
-        unsafe = [k for k in frag if k in self._CLAIM_UNSAFE]
+        frag = self._active(frag)
+        unsafe = [k for k in frag if k in self._UNLOWERED]
         if unsafe:
             self.unsupported.append(
                 f"{sp} (unevaluated* claim algebra cannot model "
                 f"{sorted(set(unsafe))})")
             return {"n_prefix": 0, "all_items": False, "contains": None,
                     "branches": ()}
-        frag = self._active(frag)
         is2020 = _ge(self.draft, D2020)
         items = frag.get("items")
         prefix = frag.get("prefixItems") if is2020 else (
@@ -1691,11 +1630,11 @@ class ColumnarValidator:
             # A row branch compiles onto this row; a column branch
             # compiles apart (its content-decode columns stay its own)
             for i, s in enumerate(subs):
-                if row and isinstance(s, dict):
-                    self._compile_root(s, f"{sp}/{i}")
+                if row:
+                    self._compile_property(name, s, f"{sp}/{i}")
                 else:
                     self.checks.extend(self._sub_checks(
-                        s, f"{sp}/{i}", name=None if row else name))
+                        s, f"{sp}/{i}", name=name))
             return
         preds = [self._fragment_pred(s, f"{sp}/{i}", row, errors_only=False)
                  for i, s in enumerate(subs)
@@ -1708,7 +1647,7 @@ class ColumnarValidator:
             return _count(branch) == 1
 
         self._add(name, comb, sp, f"{comb} constraint failed", "error",
-                  build, doc_path="" if row else None)
+                  build)
 
     # -- application --------------------------------------------------------
 
@@ -1744,12 +1683,9 @@ class ColumnarValidator:
         structs = []
         for c in self.checks:
             ok = self._check_ok(c, df.schema)
-            if c.keyword == "required" and c.doc_path == "":
-                # interp parity: top-level required renders the ROW
-                # document (to_json omits nulls = absent fields)
-                val_expr = F.substring(
-                    F.to_json(F.struct(*[F.col(n) for n in dtypes])),
-                    1, 128)
+            if c.column is self._ROW_CHECK and c.value_of is not None:
+                # the row document (required): JSON text already
+                val_expr = F.substring(c.value_of(None, df.schema), 1, 128)
             elif (c.column is self._ROW_CHECK or c.column not in dtypes
                     or isinstance(dtypes[c.column], T.BinaryType)):
                 # cross-column checks have no single offending value;
@@ -1809,12 +1745,9 @@ class ColumnarValidator:
         if c.column is self._ROW_CHECK:
             return c.build(None, row)
         if c.column not in row.names:
-            # column absent from the table: TOP-LEVEL required (doc_path
-            # "", the row object) fails statically; everything else
-            # passes — including nested required, whose parent property
-            # is missing (presence semantics, c_required parity)
-            return F.lit(not (c.keyword == "required"
-                              and c.doc_path == ""))
+            # column absent from the table: a missing value passes
+            # (presence semantics; the row's `required` reports it)
+            return F.lit(True)
         return c.build(F.col(c.column), row[c.column].dataType)
 
     def violation_prefilter(self, df: DataFrame) -> DataFrame:
@@ -1989,24 +1922,61 @@ def _array_lit(arr: list, dt: T.DataType) -> Column:
     return F.array(*[F.lit(x) for x in arr])
 
 
-def _holds_variant(dt: T.DataType) -> bool:
+def _holds(dt: T.DataType, kinds) -> bool:
+    """``dt`` is, or holds as an element, value or field, a ``kinds``
+    type."""
+    if isinstance(dt, kinds):
+        return True
     if isinstance(dt, T.ArrayType):
-        return _holds_variant(dt.elementType)
+        return _holds(dt.elementType, kinds)
     if isinstance(dt, T.MapType):
-        return _holds_variant(dt.valueType)
+        return _holds(dt.valueType, kinds)
     if isinstance(dt, T.StructType):
-        return any(_holds_variant(f.dataType) for f in dt.fields)
-    return isinstance(dt, T.VariantType)
+        return any(_holds(f.dataType, kinds) for f in dt.fields)
+    return False
 
 
 def _no_variant_eq(sp: str, dt: T.DataType) -> None:
     """SQL has no equality on VARIANT values: a keyword comparing whole
     arrays or objects over a type holding a VARIANT raises at apply(),
     as the unroll guard does, so the table routes to the interpreter."""
-    if _holds_variant(dt):
+    if _holds(dt, T.VariantType):
         raise UnsupportedKeyword(
             f"{sp} over {dt.simpleString()} (SQL has no equality on "
             f"VARIANT values)")
+
+
+def _has_object(x) -> bool:
+    """JSON value ``x`` is or holds an object."""
+    return isinstance(x, dict) or (
+        isinstance(x, list) and any(_has_object(e) for e in x))
+
+
+def _no_literal_eq(sp: str, lits, dt: T.DataType) -> None:
+    """Raises at apply() when ``enum``/``const`` literals ``lits`` cannot
+    be compared in SQL over a value of type ``dt``: an array or object
+    literal over a type holding a VARIANT (:func:`_no_variant_eq`), or
+    an object literal over a type holding a struct or map (the row
+    included): object literals have no lowering, and
+    :func:`_value_compat` would call every such value unequal."""
+    if any(isinstance(x, (list, dict)) for x in lits):
+        _no_variant_eq(sp, dt)
+    if any(_has_object(x) for x in lits) \
+            and _holds(dt, (T.StructType, T.MapType)):
+        raise UnsupportedKeyword(
+            f"{sp} over {dt.simpleString()} (object literal: no JSON "
+            f"equality on struct or map values)")
+
+
+def _object_json(col, dt: T.DataType) -> Column:
+    """An object as compact JSON text, NULL fields omitted (= absent):
+    the value of a ``required`` violation, as the interpreter renders
+    the object missing the key (the row when ``col`` is None)."""
+    if col is None:
+        return F.to_json(F.struct(*[F.col(n) for n in dt.names]))
+    if isinstance(dt, (T.StructType, T.MapType)):
+        return F.to_json(col)
+    return F.lit(None)
 
 
 def _value_compat(v, dt: T.DataType) -> bool:
@@ -2034,6 +2004,8 @@ def _at_value(build, null_passes: bool):
     literal for the types it does not constrain, and the view's map
     values and array elements are VARIANTs again."""
     on = getattr(build, "_on", None)
+    # a builder whose verdict a VARIANT's typed views cannot decide
+    no_variant = getattr(build, "_no_variant", None)
 
     def at(col, dt):
         if not isinstance(dt, T.VariantType):
@@ -2041,6 +2013,8 @@ def _at_value(build, null_passes: bool):
                 return F.when(col.isNull(), F.lit(True)) \
                         .otherwise(build(col, dt))
             return build(col, dt)
+        if no_variant:
+            raise UnsupportedKeyword(no_variant)
         out = F.when(col.isNull(), F.lit(True) if null_passes
                      else build(col, dt))
         kind = F.schema_of_variant(col)

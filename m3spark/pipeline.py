@@ -15,6 +15,7 @@ from __future__ import annotations
 import copy
 import functools
 import json
+import logging
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -24,6 +25,8 @@ from m3spark.columnar import ColumnarValidator
 from m3spark.memo import expr_memo
 from m3spark.pages import PAGES_SCHEMA
 from m3spark.sparkval import violation_rows
+
+_log = logging.getLogger(__name__)
 
 
 def _heavy_null_only_cols(schema: dict, pages: DataFrame, key_col: str,
@@ -104,7 +107,9 @@ def validate_pages(pages: DataFrame, schema: dict | None = None,
     try:
         bad = cv_light.violation_prefilter(light)
         prefiltered = True
-    except ValueError:
+    except ValueError as e:
+        _log.info("validate_pages runs without the violation prefilter: %s",
+                  e)
         bad = light
         prefiltered = False
     slim = cv_light.apply(bad).select(

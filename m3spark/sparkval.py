@@ -17,6 +17,7 @@ no Python in the hot loop).
 from __future__ import annotations
 
 import json
+import logging
 from functools import lru_cache
 from typing import Iterator
 
@@ -29,6 +30,8 @@ from pyspark.sql.types import (
 )
 
 from m3spark.memo import expr_memo
+
+_log = logging.getLogger(__name__)
 
 VIOLATION_SCHEMA = StructType([
     StructField("keyword", StringType()),
@@ -159,8 +162,9 @@ def validate_table(df: DataFrame, schema: dict | bool,
                                registry=registry, uri_dirs=uri_dirs)
         return cv.apply(df, out_valid=out_valid,
                         out_violations=out_violations)
-    except UnsupportedKeyword:
-        pass
+    except UnsupportedKeyword as e:
+        _log.info("validate_table falls back to the Arrow interpreter: %s",
+                  e)
     doc = F.to_json(F.struct(*[F.col(c) for c in df.columns]))
     out = validate_json(df.withColumn("_m3_doc", doc), schema,
                         doc_col="_m3_doc", draft=draft,

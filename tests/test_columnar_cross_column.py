@@ -12,11 +12,11 @@ import pytest
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from m3spark.columnar import ColumnarValidator
+from m3spark.columnar import ColumnarValidator, UnsupportedKeyword
 from m3spark.schema.core import (
     D2019, D2020, DRAFT3, DRAFT4, DRAFT6, DRAFT7, compile_schema,
 )
-from m3spark.sparkval import validate_json
+from m3spark.sparkval import validate_json, validate_table
 
 SCHEMA = {
     "type": "object",
@@ -171,6 +171,13 @@ OBJECT_KEYWORDS = {
     "propertyNames": {"propertyNames": {"pattern": "^a"}},
     "additionalProperties": {"properties": {"a": {}},
                              "additionalProperties": False},
+    "required": {"required": ["a"]},
+    "properties": {"properties": {"a": _LE5}},
+    "type_array": {"type": "array"},
+    "type_null": {"type": "null"},
+    # keys no draft defines, and annotations, are ignored by both engines
+    "unknown": {"x-note": 1, "$anchor": "n", "$comment": "c",
+                "properties": {"a": {"maximum": 5, "x-unit": "s"}}},
 }
 DRAFTS = [DRAFT3, DRAFT4, DRAFT6, DRAFT7, D2019, D2020]
 POSITIONS = {  # position -> (wrap the keyword schema, table DDL)
@@ -335,10 +342,10 @@ def test_empty_property_name_is_a_column(spark):
         [("minLength", "/", "x")]
 
 
-@pytest.mark.parametrize("position", ["struct", "map", "variant"])
+@pytest.mark.parametrize("position", ["row", "struct", "map", "variant"])
 def test_false_property_schema_rejects_present_key(spark, position):
-    """`properties: {"a": false}` inside an object column rejects an
-    object that has "a", as the interpreter does."""
+    """`properties: {"a": false}` on the row or inside an object column
+    rejects an object that has "a", as the interpreter does."""
     wrap, _ = POSITIONS[position]
     schema = wrap({"properties": {"a": False}})
     df = _table(spark, position)
@@ -347,4 +354,33 @@ def test_false_property_schema_rejects_present_key(spark, position):
     cs = compile_schema(schema)
     assert [got[_key(position, dict(zip(df.columns, raw)))]
             for raw in _rows(position)] == \
-        [cs.validate({"o": o}).valid for o in OBJECTS]
+        [cs.validate(o if position == "row" else {"o": o}).valid
+         for o in OBJECTS]
+
+
+@pytest.mark.parametrize("keyword", ["const", "enum"])
+def test_object_literal_equality_uses_interpreter(spark, keyword):
+    """An `enum`/`const` literal holding a JSON object has no SQL equality
+    over a struct, a map or the row: ``apply`` raises
+    ``UnsupportedKeyword``, and ``validate_table`` answers with the
+    interpreter at each position."""
+    lit = {"a": "p", "b": "x"}
+    sub = {keyword: lit if keyword == "const" else [lit, 3]}
+    tables = {
+        "struct": ("s struct<a: string, b: string>",
+                   [(("p", "x"),), (("q", "x"),)], {"properties": {"s": sub}}),
+        "map": ("s map<string, string>", [({"a": "p", "b": "x"},),
+                                          ({"b": "x"},)],
+                {"properties": {"s": sub}}),
+        "row": ("a string, b string", [("p", "x"), ("q", "x")], sub),
+    }
+    for position, (ddl, rows, schema) in tables.items():
+        df = spark.createDataFrame(rows, ddl)
+        with pytest.raises(UnsupportedKeyword, match="object literal"):
+            ColumnarValidator(schema).apply(df)
+        cs = compile_schema(schema)
+        docs = [json.loads(r[0]) for r in
+                df.select(F.to_json(F.struct(*df.columns))).collect()]
+        want = [cs.validate(d).valid for d in docs]
+        got = [r["valid"] for r in validate_table(df, schema).collect()]
+        assert got == want == [True, False], position

@@ -15,7 +15,7 @@ import pytest
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from m3spark.columnar.compiler import _multiple_of_pred
+from m3spark.columnar.compiler import UnsupportedKeyword, _multiple_of_pred
 from m3spark.schema.formats import FORMATS, SPARK_RLIKE
 from m3spark.schema.jsontypes import is_multiple_of
 
@@ -114,7 +114,8 @@ _DRAFT_URIS = {"draft3": "http://json-schema.org/draft-03/schema#",
 def test_integer_type_on_float_columns_per_draft(spark, draft):
     """Drafts 3 and 4 count no float as an integer (the interpreter's
     ``is_integer_strict``), draft 6 counts one with a zero fraction:
-    float, double and VARIANT ``parse_json('1.0')`` columns agree."""
+    float and double columns agree (VARIANT numbers:
+    ``test_variant_integer_type_per_draft``)."""
     from m3spark.columnar import ColumnarValidator
     from m3spark.schema.core import compile_schema
 
@@ -125,16 +126,56 @@ def test_integer_type_on_float_columns_per_draft(spark, draft):
             for t in texts]
     assert want == ([True, False, True] if draft == "draft6"
                     else [False, False, False])
-    rows = [(i, float(t), t) for i, t in enumerate(texts)]
-    base = spark.createDataFrame(rows, "i int, d double, j string")
+    rows = [(i, float(t)) for i, t in enumerate(texts)]
+    base = spark.createDataFrame(rows, "i int, d double")
     frames = {"float": base.select("i", F.col("d").cast("float").alias("x")),
-              "double": base.select("i", F.col("d").alias("x")),
-              "variant": base.select("i", F.parse_json("j").alias("x"))}
+              "double": base.select("i", F.col("d").alias("x"))}
     cv = ColumnarValidator(schema)
     for kind, df in frames.items():
         got = [r["valid"] for r in
                cv.apply(df).orderBy("i").select("valid").collect()]
         assert got == want, kind
+
+
+# the five JSON numbers as parse_json stores them: BIGINT, DECIMAL(1,0),
+# DECIMAL(2,1), DECIMAL(20,0), DOUBLE
+VARIANT_NUMBERS = ["1", "1.0", "2.5", "12345678901234567890", "1e2"]
+
+
+@pytest.mark.parametrize("types", ["integer", ["integer", "string"]])
+@pytest.mark.parametrize("draft", sorted(_DRAFT_URIS))
+def test_variant_integer_type_per_draft(spark, draft, types):
+    """A VARIANT stores the JSON numbers 1.0 and 12345678901234567890
+    alike as DECIMAL(p,0), so the typed views cannot decide drafts 3/4's
+    `type: integer`: the check raises ``UnsupportedKeyword`` at apply,
+    and ``validate_table`` answers with the interpreter over the JSON
+    the VARIANT holds (``to_json`` writes DECIMAL(1,0) as ``1``).  Draft
+    6 stays columnar with the same verdicts."""
+    import json
+
+    from m3spark.columnar import ColumnarValidator
+    from m3spark.schema.core import compile_schema
+    from m3spark.sparkval import validate_table
+
+    schema = {"$schema": _DRAFT_URIS[draft],
+              "properties": {"x": {"type": types}}}
+    df = (spark.createDataFrame(list(enumerate(VARIANT_NUMBERS)),
+                                "i int, j string")
+               .select("i", F.parse_json("j").alias("x")))
+    held = [json.loads(r["t"]) for r in df.orderBy("i").select(
+        F.to_json(F.struct("x")).alias("t")).collect()]
+    want = [compile_schema(schema).validate(d).valid for d in held]
+    assert want == [True, True, False, True, draft == "draft6"]
+    if draft == "draft6":
+        got = [r["valid"] for r in
+               ColumnarValidator(schema).apply(df).orderBy("i").collect()]
+        assert got == want
+    else:
+        with pytest.raises(UnsupportedKeyword, match="type integer over"):
+            ColumnarValidator(schema).apply(df)
+    got = [r["valid"] for r in
+           validate_table(df, schema).orderBy("i").collect()]
+    assert got == want
 
 
 @pytest.mark.parametrize("sub,docs", [

@@ -74,6 +74,25 @@ def test_heavy_split_scan_shape(spark, tmp_path):
     assert "IsNull(html)" in heavy_plan
 
 
+def test_validate_pages_logs_a_skipped_prefilter(spark, caplog):
+    """A schema with content keywords runs without the violation
+    prefilter, and validate_pages logs why."""
+    import logging
+
+    schema = {"$schema": "https://json-schema.org/draft/2020-12/schema",
+              "required": ["url"],
+              "properties": {"text": {"contentMediaType":
+                                      "application/json"}}}
+    with caplog.at_level(logging.INFO, logger="m3spark.pipeline"):
+        validate_pages(generate_pages(spark, 100), schema,
+                       with_uniqueness=False)
+    assert [r.getMessage() for r in caplog.records
+            if r.name == "m3spark.pipeline"] == [
+        "validate_pages runs without the violation prefilter: "
+        "violation_prefilter does not support schemas with content "
+        "keywords"]
+
+
 def test_heavy_split_exact_on_nulls(spark):
     """Verdicts and violation identities from the split path must be
     bit-identical to the single full-apply semantics on dirty data:

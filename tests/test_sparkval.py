@@ -146,6 +146,24 @@ def test_columnar_unsupported_raises(spark):
     assert "$ref" in str(ei.value)
 
 
+def test_validate_table_logs_its_fallback(spark, caplog):
+    """The interpreter fallback is logged at INFO with its reason."""
+    import logging
+
+    from m3spark.sparkval import validate_table
+
+    schema = {"properties": {"a": {"$ref": "https://example.com/s.json"}}}
+    df = spark.createDataFrame([(1,)], "a long")
+    with caplog.at_level(logging.INFO, logger="m3spark.sparkval"):
+        validate_table(df, schema)
+    (rec,) = [r for r in caplog.records if r.name == "m3spark.sparkval"]
+    assert rec.levelno == logging.INFO
+    assert rec.getMessage() == (
+        "validate_table falls back to the Arrow interpreter: columnar "
+        "compiler cannot lower: ['/properties/a/$ref']; use "
+        "m3spark.sparkval.validate_json for these")
+
+
 def test_validate_table_engine_selection(spark):
     """r6: validate_table picks columnar when the schema lowers and
     falls back to the Arrow interp both at compile time (dynamic ref)

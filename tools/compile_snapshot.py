@@ -5,14 +5,18 @@ for ``corpus_remote``, with its ``uri_dirs`` file loader) as the
 table-row schema itself, as ``{"properties": {"v": schema}}`` and, for
 drafts 2019-09 and later, as the decoded content of a string column
 ``{"properties": {"v": {"contentMediaType": "application/json",
-"contentSchema": schema}}}``.  For each compiled schema the snapshot
-records
+"contentSchema": schema}}}``.  The schemas that ``validate_pages`` and
+the ``__spark_entry__`` queries run (``m3spark.pages.PAGES_SCHEMA`` and
+the validation schemas of ``__spark_entry__``) are compiled too, each
+over its own table shape, as a ``production/<name>`` key.  For each compiled
+schema the snapshot records
 
 - the checks as ``(column, keyword, schema_path, doc_path, message,
   level)`` tuples, with ``<row>`` for a check on the table row,
 - the ``UnsupportedKeyword`` text (or another exception's type and text),
 - ``str()`` of the Column trees ``ColumnarValidator._build_apply`` builds
-  over each table shape in ``SHAPES``, with the parts that vary from run
+  over each table shape in ``SHAPES`` (a production schema: over its
+  own shape), with the parts that vary from run
   to run made stable: lambda variables are numbered per tree, a
   Python UDF's call site is dropped, and any other captured call stack's
   identity hash is masked.
@@ -38,9 +42,11 @@ ROOT = Path(__file__).resolve().parents[1]
 sys.path.insert(0, str(ROOT))
 sys.path.insert(0, str(ROOT / "tests"))
 
+import __spark_entry__ as entry  # noqa: E402
 from m3spark.columnar.compiler import (  # noqa: E402
     ColumnarValidator, UnsupportedKeyword,
 )
+from m3spark.pages import PAGES_SCHEMA  # noqa: E402
 from m3spark.schema.core import D2019, _ge  # noqa: E402
 from corpus_remote import remote_uri_dirs  # noqa: E402
 
@@ -65,6 +71,35 @@ SHAPES = {
     "flat_obj": "foo struct<bar: long>, a map<string, string>, x double",
 }
 
+_PAGES = "url string, warc_ts timestamp, html binary, text string, lang string"
+# name -> (schema, table DDL, format_assertion): each as its caller runs
+# it.  "pages_light" is validate_pages' value-scan validator: the blob
+# column html, whose only constraint is `required`, is dropped from the
+# table and from `required`.
+PRODUCTION = {
+    "pages": (PAGES_SCHEMA, _PAGES, True),
+    "pages_light": (dict(PAGES_SCHEMA, required=[
+        r for r in PAGES_SCHEMA["required"] if r != "html"]),
+        _PAGES.replace(" html binary,", ""), True),
+    "documents": (entry.DOCUMENTS_SCHEMA,
+                  "doc_id long, text string, lang string, source string, "
+                  "n_chars long", True),
+    "lineitem": (entry.LINEITEM_SCHEMA,
+                 "l_orderkey long, l_partkey long, l_suppkey long, "
+                 "l_linenumber int, l_quantity double, "
+                 "l_extendedprice double, l_discount double, l_tax double, "
+                 "l_returnflag string, l_linestatus string, "
+                 "l_shipdate timestamp, line_id string", True),
+    "event_props": (entry.EVENT_PROPS_SCHEMA,
+                    "event_id long, k int, d string", True),
+    "ref_defs_orders": (entry.REF_DEFS_ORDERS_SCHEMA,
+                        "o_orderkey long, o_custkey long, "
+                        "o_orderstatus string, o_totalprice double, "
+                        "o_orderdate timestamp, o_orderpriority string",
+                        True),
+    "content": (entry.CONTENT_SCHEMA, "doc_id long, payload string", None),
+}
+
 _LAMBDA_VAR = re.compile(r"\b([xy])_\d+\b")
 _UDF_SITE = re.compile(r"Some\(\[Ljava\.lang\.StackTraceElement;@\w+\),"
                        r"Some\(\(\w+,[^)]*\)\)")
@@ -84,9 +119,11 @@ def _err(e: Exception) -> str:
     return f"{type(e).__name__}: {e}"
 
 
-def snapshot_one(schema, draft, frames, uri_dirs=None) -> dict:
+def snapshot_one(schema, draft, frames, uri_dirs=None,
+                 format_assertion=None) -> dict:
     try:
-        cv = ColumnarValidator(schema, draft=draft, uri_dirs=uri_dirs)
+        cv = ColumnarValidator(schema, draft=draft, uri_dirs=uri_dirs,
+                               format_assertion=format_assertion)
     except UnsupportedKeyword as e:
         return {"unsupported": str(e)}
     except Exception as e:  # noqa: BLE001 - recorded, compared by text
@@ -114,6 +151,10 @@ def main() -> None:
     spark.sparkContext.setLogLevel("ERROR")
     frames = {n: spark.createDataFrame([], ddl) for n, ddl in SHAPES.items()}
     snap = {}
+    for name, (schema, ddl, fa) in PRODUCTION.items():
+        snap[f"production/{name}"] = snapshot_one(
+            schema, None, {name: spark.createDataFrame([], ddl)},
+            format_assertion=fa)
     for mod, attr in CORPORA:
         cases = getattr(importlib.import_module(mod), attr)
         uri_dirs = remote_uri_dirs() if mod == "corpus_remote" else None
