@@ -619,8 +619,12 @@ class ColumnarValidator:
         inner._setup(frag, self.draft, self.format_assertion)
         inner._variant = self._variant or variant
         inner._compile_property(name, frag, prefix)
-        self.unsupported.extend(sp + u.removeprefix(prefix)
-                                for u in inner.unsupported)
+        for u in inner.unsupported:
+            u = u.removeprefix(prefix)
+            # a row fragment reports its own keys bare ("$ref"); every
+            # other entry is a path or a note after one
+            self.unsupported.append(sp + (u if u[:1] in ("", "/", " ")
+                                          else f"/{u}"))
         out = []
         for c in inner.checks:
             path = sp + c.schema_path.removeprefix(prefix)

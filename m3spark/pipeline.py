@@ -103,7 +103,11 @@ def validate_pages(pages: DataFrame, schema: dict | None = None,
     # row document from the pruned projection, without the heavy
     # field's base64 (identical when the heavy column is null, since
     # to_json omits nulls).
-    light = pages.drop(*heavy) if heavy else pages
+    light = pages
+    if heavy:
+        _log.info("validate_pages moves heavy columns %s to the "
+                  "footer-only IS NULL scan", heavy)
+        light = pages.drop(*heavy)
     try:
         bad = cv_light.violation_prefilter(light)
         prefiltered = True

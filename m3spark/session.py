@@ -4,6 +4,21 @@ Centralizes the physical-strategy knobs we own (SURVEY.md §4): AQE with
 skew-join splitting, partition sizing, Arrow batch size for the
 regex/format UDF stages.  Tests and bench share this so local runs
 exercise the same configuration that a spark-submit deployment would.
+
+JVM defaults go in ``spark.driver.defaultJavaOptions`` and
+``spark.executor.defaultJavaOptions``.  Spark puts them before the
+matching ``extraJavaOptions`` (``spark-defaults.conf``,
+``PYSPARK_SUBMIT_ARGS``) on the command line, so a user's flag wins:
+
+- the driver JVM: ``-XX:CompileThresholdScaling=4`` (see ``_JIT_OPTS``);
+- each ``local-cluster`` executor: ``-XX:ActiveProcessorCount=<cores>``.
+
+``get_spark`` sets both ``defaultJavaOptions`` keys, so a site-wide value
+of them in ``spark-defaults.conf`` does not reach its JVMs; put site JVM
+flags in ``extraJavaOptions`` instead.
+
+:func:`jvm_counters` reads the driver JVM's compilation layer (HotSpot
+JIT and GC time, Janino-generated classes).
 """
 
 from __future__ import annotations
@@ -11,6 +26,27 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import SparkSession
+
+# HotSpot compiles a method once its invocation and back-edge counters
+# pass a threshold; scaling the thresholds by 4 leaves the lukewarm
+# methods of session start-up and short jobs in the interpreter, while
+# hot loops still reach C2.  Sweep on a 4-vCPU VM (JDK 17, local[4]),
+# medians of 4 interleaved `perfbench/run.py --seconds 12` seeds:
+#
+#   scaling  setup_s job/interp  op_cpu_s job/interp  peak_rss_mb job
+#   1        19.7 / 18.4         5.58 / 6.75          1886
+#   2        15.9 / 15.7         5.17 / 7.07          1876
+#   4        14.2 / 14.1         5.15 / 6.71          1835
+#   8        13.5 / 14.2         5.39 / 6.43          1524
+#
+# The cost is a slower warm-up: in `tools/ab_bench.py` (sf0.1, median
+# of runs 2-6 in a fresh JVM) dedup_clusters_documents took 2.8 s at 1,
+# 3.3 s at 2, 3.6 s at 4 and 3.8 s at 8, and minhash_pairs_documents
+# 1.1 s at 1-4 but 1.5 s at 8.  4 keeps most of 8's start-up cut
+# without 8's warm-up cost.  The default is the driver's only: every
+# measurement above ran in local[...] mode, where the driver JVM runs
+# all tasks; local-cluster executors get it once a run there shows it.
+_JIT_OPTS = "-XX:CompileThresholdScaling=4"
 
 
 def get_spark(app: str = "m3spark", cores: int | None = None,
@@ -55,15 +91,20 @@ def get_spark(app: str = "m3spark", cores: int | None = None,
             # executors otherwise each spawn host-width service threads
             # and oversubscribe the box (real clusters set this via
             # container CPU limits)
-            .config("spark.executor.extraJavaOptions",
+            .config("spark.executor.defaultJavaOptions",
                     f"-XX:ActiveProcessorCount={cores}"))
-    java_opts = os.environ.get("M3SPARK_JAVA_OPTS")
-    if java_opts:
-        # e.g. GC selection for oversubscribed-host experiments
-        builder = builder.config("spark.driver.extraJavaOptions", java_opts)
     return (
         builder
+        .config("spark.driver.defaultJavaOptions", _JIT_OPTS)
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
+        # whole-stage codegen caches at most 100 compiled classes by
+        # default; one dedup_clusters_documents run generates 103
+        # distinct classes, so every warm run evicted and recompiled 33
+        # of them, and the new bytecode ran interpreted until HotSpot
+        # compiled it again
+        # (sf0.1, local[4], runs 2-5 in one JVM: 4.8-5.8 s at 100,
+        # 3.5-4.6 s and no new classes at 1000)
+        .config("spark.sql.codegen.cache.maxEntries", "1000")
         # InferFiltersFromGenerate plants a `size(gen_input) > 0` filter
         # below every explode; predicate pushdown then substitutes the
         # FULL generator-input expression into that filter, so for the
@@ -91,3 +132,22 @@ def get_spark(app: str = "m3spark", cores: int | None = None,
         .config("spark.ui.showConsoleProgress", "false")
         .getOrCreate()
     )
+
+
+def jvm_counters(spark: SparkSession) -> dict[str, int]:
+    """Cumulative compilation-layer counters of the driver JVM, which in
+    ``local[...]`` mode also runs every task: HotSpot JIT milliseconds
+    (``CompilationMXBean``), GC milliseconds summed over the
+    ``GarbageCollectorMXBean``s, and the number of classes Janino has
+    compiled for whole-stage codegen (``CodegenMetrics``).  Diff two
+    readings to charge a query."""
+    jvm = spark.sparkContext._jvm
+    mf = jvm.java.lang.management.ManagementFactory
+    codegen = jvm.org.apache.spark.metrics.source.CodegenMetrics
+    return {
+        "jit_ms": mf.getCompilationMXBean().getTotalCompilationTime(),
+        # a collector that does not track time reports -1
+        "gc_ms": sum(max(0, b.getCollectionTime())
+                     for b in mf.getGarbageCollectorMXBeans()),
+        "codegen_classes": codegen.METRIC_COMPILATION_TIME().getCount(),
+    }

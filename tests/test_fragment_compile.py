@@ -8,8 +8,10 @@ from __future__ import annotations
 import ast
 import pathlib
 
+import pytest
+
 import m3spark.columnar.compiler as compiler
-from m3spark.columnar import ColumnarValidator
+from m3spark.columnar import ColumnarValidator, UnsupportedKeyword
 
 ROOT = pathlib.Path(__file__).resolve().parent.parent
 
@@ -83,3 +85,21 @@ def test_compiler_builds_validators_only_in_sub_checks():
     visitor.visit(ast.parse(path.read_text()))
     assert [name for name, _ in visitor.sites] == ["_sub_checks"], \
         visitor.sites
+
+
+REMOTE = {"$ref": "http://example.com/x.json"}
+
+
+@pytest.mark.parametrize("schema, text", [
+    ({"anyOf": [REMOTE, {"type": "object"}]}, "['/anyOf/0/$ref']"),
+    ({"not": REMOTE}, "['/not/$ref']"),
+    ({"if": REMOTE, "then": {}}, "['/if/$ref']"),
+    (REMOTE, "['$ref']"),
+], ids=["anyOf", "not", "if", "row"])
+def test_unsupported_fragment_keys_join_their_path(schema, text):
+    """A row fragment's unlowerable key is reported below the fragment's
+    path, joined with a `/`; a key of the table row itself stays bare."""
+    with pytest.raises(UnsupportedKeyword) as e:
+        ColumnarValidator(schema)
+    assert str(e.value) == (f"columnar compiler cannot lower: {text}; use "
+                            f"m3spark.sparkval.validate_json for these")

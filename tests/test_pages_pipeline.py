@@ -93,6 +93,18 @@ def test_validate_pages_logs_a_skipped_prefilter(spark, caplog):
         "keywords"]
 
 
+def test_validate_pages_logs_its_heavy_columns(spark, caplog):
+    """The heavy-column split is logged with the columns it moves."""
+    import logging
+
+    with caplog.at_level(logging.INFO, logger="m3spark.pipeline"):
+        validate_pages(generate_pages(spark, 100), with_uniqueness=False)
+    assert [r.getMessage() for r in caplog.records
+            if r.name == "m3spark.pipeline"] == [
+        "validate_pages moves heavy columns ['html'] to the footer-only "
+        "IS NULL scan"]
+
+
 def test_heavy_split_exact_on_nulls(spark):
     """Verdicts and violation identities from the split path must be
     bit-identical to the single full-apply semantics on dirty data:

@@ -33,7 +33,7 @@ def main():
     n_pages = int(sys.argv[1]) if len(sys.argv) > 1 else 1_000_000
     cache = os.environ.get("M3SPARK_BENCH_CACHE", "/tmp/m3spark_bench")
     path = os.path.join(cache, f"pages_{n_pages}.parquet")
-    spark = get_spark("profile-pages", cores=32)
+    spark = get_spark("profile-pages")
     spark.sparkContext.setLogLevel("ERROR")
     if not os.path.isdir(path):
         from m3spark.pages import generate_pages
