@@ -22,6 +22,7 @@ north-star's "regex/format checks batched, never per-row Python".
 
 from __future__ import annotations
 
+import logging
 import re
 from dataclasses import dataclass, replace
 from decimal import Decimal
@@ -48,6 +49,8 @@ from m3spark.schema.formats import (
 )
 from m3spark.sparkval import violation_rows
 
+_log = logging.getLogger(__name__)
+
 
 class UnsupportedKeyword(Exception):
     """Schema uses a keyword the columnar compiler can't lower; route the
@@ -69,6 +72,9 @@ class Check:
     # navigates from the top-level column to the offending value (nested
     # checks render the leaf, not the whole struct); None = the column
     value_of: Callable[[Column, T.DataType], Column] | None = None
+    # the key a row presence check (``required``) tests: its predicate
+    # reads that column's NULLness alone.  None for any other check
+    presence: str | None = None
 
 
 _NUMERIC = (T.ByteType, T.ShortType, T.IntegerType, T.LongType,
@@ -424,8 +430,10 @@ class ColumnarValidator:
                 present = self._obj_present(col, dt, _k)
                 return F.lit(True) if present is None else present
 
-            add("required", rsp, f"required property {k!r} missing",
-                build_req, value_of=_object_json)
+            self._add(name, "required", rsp,
+                      f"required property {k!r} missing", "error",
+                      _only("object", build_req), value_of=_object_json,
+                      presence=k if row else None)
         # a row property is a column; a struct or map member is reached
         # through the column, each inner check surfaced as its own
         props = sub.get("properties")
@@ -592,7 +600,8 @@ class ColumnarValidator:
                     # a column check moved onto the row renders no value
                     self.checks.append(replace(
                         c, column=name, build=gated, doc_path=doc,
-                        value_of=c.value_of if c.column == name else None))
+                        value_of=c.value_of if c.column == name else None,
+                        presence=None))
 
     def _sub_checks(self, frag, sp, name="_e", errors_only=False,
                     jvm_only=False, variant=False) -> list[Check]:
@@ -657,7 +666,7 @@ class ColumnarValidator:
                             build))
 
     def _add(self, column, keyword, sp, msg, level, build, null_passes=True,
-             doc_path=None, value_of=None):
+             doc_path=None, value_of=None, presence=None):
         if column is self._ROW_CHECK:
             # the row is never missing, never a VARIANT and always an
             # object: a builder for another kind is statically true
@@ -667,7 +676,7 @@ class ColumnarValidator:
         else:
             build = _at_value(build, null_passes)
         self.checks.append(Check(column, keyword, sp, msg, level, build,
-                                 doc_path, value_of))
+                                 doc_path, value_of, presence))
 
     def _compile_property(self, name: str | None, sub, sp: str):
         """Schema ``sub`` at one value position: column ``name``
@@ -1657,12 +1666,18 @@ class ColumnarValidator:
 
     def apply(self, df: DataFrame, out_valid: str = "valid",
               out_violations: str = "violations") -> DataFrame:
+        return self._apply(df, (), out_valid, out_violations)
+
+    def _apply(self, df: DataFrame, moved: tuple, out_valid: str = "valid",
+               out_violations: str = "violations") -> DataFrame:
+        """:meth:`apply` without the ``moved`` columns' presence checks."""
         # expression memo (m3spark.memo), expressions only: keyed on the
         # SparkContext, this validator, the ordered input dtypes and
         # the output names
         added, viol_arr, valid_col = expr_memo(
-            self, df.dtypes, (out_valid, out_violations),
-            lambda: self._build_apply(df, out_violations))
+            self, df.dtypes, (out_valid, out_violations, moved),
+            lambda: self._build_apply(df, out_violations, [
+                c for c in self.checks if c.presence not in moved]))
         for dname, build_col in added:
             df = df.withColumn(dname, build_col)
         df = df.withColumn(out_violations, viol_arr)
@@ -1671,9 +1686,10 @@ class ColumnarValidator:
             df = df.drop(*[n for n, _ in added])
         return df
 
-    def _build_apply(self, df: DataFrame, out_violations: str):
+    def _build_apply(self, df: DataFrame, out_violations: str,
+                     checks: list[Check]):
         """(derived columns, violations array, valid) Columns for
-        :meth:`apply` over ``df``'s shape."""
+        :meth:`apply` of ``checks`` over ``df``'s shape."""
         dtypes = {f.name: f.dataType for f in df.schema.fields}
         # bind shared subexpressions (content decode chain) once per row
         # in a projection UNDER the check projection: each is referenced
@@ -1685,7 +1701,7 @@ class ColumnarValidator:
                  if src in dtypes and isinstance(dtypes[src], T.StringType)]
         self._avail = set(n for n, _ in added)
         structs = []
-        for c in self.checks:
+        for c in checks:
             ok = self._check_ok(c, df.schema)
             if c.column is self._ROW_CHECK and c.value_of is not None:
                 # the row document (required): JSON text already
@@ -1765,20 +1781,85 @@ class ColumnarValidator:
         Only valid when the schema registered no derived columns — a
         filter over a derived-column projection would be pushed below
         it with the expensive expression substituted per reference."""
+        return self._prefilter(df, ())
+
+    def _prefilter(self, df: DataFrame, moved: tuple) -> DataFrame:
         if self.derived:
             raise ValueError("violation_prefilter does not support "
                              "schemas with content keywords")
 
         def build():
             return _reduce_or([~self._check_ok(c, df.schema).eqNullSafe(True)
-                               for c in self.checks])
+                               for c in self.checks
+                               if c.presence not in moved])
 
-        return df.where(expr_memo(self, df.dtypes, (), build))
+        return df.where(expr_memo(self, df.dtypes, (moved,), build))
+
+    def null_only(self, df: DataFrame, carried=()) -> list[str]:
+        """The binary columns of ``df`` that only their row presence
+        checks read (row checks do not declare the columns they read,
+        so any other row check reads them all) and that the caller does
+        not carry (``carried``: the key, say).  One that stays is
+        logged with the reason."""
+        dtypes = dict(df.dtypes)
+        out = []
+        for k in dict.fromkeys(c.presence for c in self.checks
+                               if dtypes.get(c.presence) == "binary"):
+            reader = next((c.keyword for c in self.checks
+                           if c.presence is None
+                           and c.column in (k, self._ROW_CHECK)), None)
+            if k in carried or reader:
+                _log.info("binary column %r stays in the value scan: %s", k,
+                          "the caller carries it" if k in carried
+                          else f"the {reader!r} check reads it")
+            else:
+                out.append(k)
+        return out
+
+    def violation_scans(self, df: DataFrame, carried=(), prefilter=True):
+        """(value scan, null-only scan, moved, prefilter_skipped) over
+        ``df``, split on its :meth:`null_only` columns (``moved``): the
+        value scan applies every check but their presence checks to
+        ``df`` without them (``prefilter``: to the rows
+        :meth:`violation_prefilter` passes, unless ``prefilter_skipped``
+        says why not); the null-only scan (or None) is ``df`` where one
+        is NULL, which parquet answers from row-group statistics, with
+        ``violations`` of those presence checks and ``other_err`` (an
+        error-level check of the value scan fails)."""
+        moved = tuple(self.null_only(df, carried))
+        value, skipped = df.drop(*moved), None
+        if prefilter:
+            try:
+                value = self._prefilter(value, moved)
+            except ValueError as e:
+                skipped = str(e)
+        value = self._apply(value, moved)
+        if not moved:
+            return value, None, moved, skipped
+
+        def build():
+            _, viols, _ = self._build_apply(
+                df, "violations",
+                [c for c in self.checks if c.presence in moved])
+            return (_reduce_or([F.col(k).isNull() for k in moved]), viols,
+                    _reduce_or([~self._check_ok(c, df.schema).eqNullSafe(True)
+                                for c in self.checks if c.level == "error"
+                                and c.presence not in moved]))
+
+        null_any, viols, other_err = expr_memo(
+            self, df.dtypes, ("null_only", moved), build)
+        return (value, df.where(null_any).withColumn("violations", viols)
+                .withColumn("other_err", other_err), moved, skipped)
 
     def violation_rows(self, df: DataFrame, key_col: str) -> DataFrame:
         """The north-star violation table: (key, keyword, path, message,
-        offending value)."""
-        return violation_rows(self.apply(df), key_col)
+        offending value), from both :meth:`violation_scans`, unfiltered:
+        where most rows violate, a prefilter runs the checks twice."""
+        value, nulls, _, _ = self.violation_scans(df, (key_col,),
+                                                  prefilter=False)
+        out = violation_rows(value, key_col)
+        return out if nulls is None else out.unionByName(
+            violation_rows(nulls, key_col))
 
 
 def _field(col, name: str) -> Column:

@@ -105,6 +105,66 @@ def test_validate_pages_logs_its_heavy_columns(spark, caplog):
         "IS NULL scan"]
 
 
+def test_heavy_split_ignores_schema_annotations(pages):
+    """The split is decided from the compiled checks: keys that add no
+    check (``$defs``, ``title``, ``description``) keep html out of the
+    value scan, with the plain schema's verdicts."""
+    schema = dict(PAGES_SCHEMA, title="pages", description="crawl rows",
+                  **{"$defs": {"day": {"type": "string"}}})
+    res = validate_pages(pages, schema)
+    assert res["slim_heavy"] is not None
+    assert (sorted(res["partition_verdicts"].collect())
+            == sorted(validate_pages(pages)["partition_verdicts"].collect()))
+
+
+def test_validate_pages_is_column_order_invariant(pages):
+    """Reversed input columns: the same split, verdicts and violations
+    (``value`` aside: the row document renders in column order)."""
+    cols = ["url", "keyword", "schema_path", "doc_path", "message", "level"]
+    res = validate_pages(pages)
+    rev = validate_pages(pages.select(*reversed(pages.columns)))
+    assert rev["slim_heavy"] is not None
+    assert (sorted(rev["partition_verdicts"].collect())
+            == sorted(res["partition_verdicts"].collect()))
+    got, want = (r["violations"].select(*cols) for r in (rev, res))
+    assert got.exceptAll(want).count() == 0
+    assert want.exceptAll(got).count() == 0
+
+
+def test_compiler_logs_why_a_blob_stays(spark, caplog):
+    """A row check that reads every column keeps html in the value
+    scan, and the compiler logs the column and the check's keyword."""
+    import logging
+
+    schema = dict(PAGES_SCHEMA, minProperties=2)
+    with caplog.at_level(logging.INFO, logger="m3spark.columnar.compiler"):
+        res = validate_pages(generate_pages(spark, 100), schema,
+                             with_uniqueness=False)
+    assert res["slim_heavy"] is None
+    assert [r.getMessage() for r in caplog.records
+            if r.name == "m3spark.columnar.compiler"] == [
+        "binary column 'html' stays in the value scan: the "
+        "'minProperties' check reads it"]
+
+
+def test_violation_rows_scan_shape(spark, tmp_path):
+    """``ColumnarValidator.violation_rows`` gets validate_pages' split:
+    its value scan does not read html, and its other scan pushes
+    IsNull(html) to parquet."""
+    from m3spark.columnar import ColumnarValidator
+
+    path = str(tmp_path / "pages.parquet")
+    generate_pages(spark, 2000).write.parquet(path)
+    cv = ColumnarValidator(PAGES_SCHEMA, format_assertion=True)
+    plan = (cv.violation_rows(spark.read.parquet(path), "url")
+            ._jdf.queryExecution().executedPlan().toString())
+    scans = [ln for ln in plan.splitlines() if "FileScan parquet" in ln]
+    assert len(scans) == 2
+    value, nulls = sorted(scans, key=lambda ln: "IsNull(html)" in ln)
+    assert "html" not in value.split("ReadSchema:")[-1]
+    assert "IsNull(html)" not in value and "IsNull(html)" in nulls
+
+
 def test_heavy_split_exact_on_nulls(spark):
     """Verdicts and violation identities from the split path must be
     bit-identical to the single full-apply semantics on dirty data:

@@ -2,7 +2,10 @@
 the CURRENT tree and a git ref (the commit-98436cc methodology):
 each side runs in a FRESH subprocess JVM, sides alternate A,B,B,A per
 round so window drift cannot land on one side, 1 warmup + N timed runs
-per invocation, sf0.1 input.
+per invocation, sf0.1 input.  ``M3SPARK_AB_ROUNDS`` rounds (default 6:
+with 2, one tree's runs of a query spread wider than a 10% change, and
+a "within the parent's run spread" verdict flipped between runs) of
+``M3SPARK_AB_TIMED`` timed runs (default 5).
 
     python tools/ab_bench.py <ref> <query> [<query> ...]
 
@@ -29,7 +32,7 @@ from pathlib import Path
 ROOT = Path(__file__).resolve().parents[1]
 SF = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 TIMED = int(os.environ.get("M3SPARK_AB_TIMED", "5"))
-ROUNDS = int(os.environ.get("M3SPARK_AB_ROUNDS", "2"))
+ROUNDS = int(os.environ.get("M3SPARK_AB_ROUNDS", "6"))
 
 _CHILD = r"""
 import importlib.util, json, sys, time, statistics

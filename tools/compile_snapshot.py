@@ -72,15 +72,14 @@ SHAPES = {
 }
 
 _PAGES = "url string, warc_ts timestamp, html binary, text string, lang string"
-# name -> (schema, table DDL, format_assertion): each as its caller runs
-# it.  "pages_light" is validate_pages' value-scan validator: the blob
-# column html, whose only constraint is `required`, is dropped from the
-# table and from `required`.
+# name -> (schema, table DDL, format_assertion[, moved columns]): each
+# as its caller runs it.  "pages_light" is validate_pages' value scan:
+# every check but the presence check of the null-only blob column html
+# (ColumnarValidator.violation_scans), over the table without html.
 PRODUCTION = {
     "pages": (PAGES_SCHEMA, _PAGES, True),
-    "pages_light": (dict(PAGES_SCHEMA, required=[
-        r for r in PAGES_SCHEMA["required"] if r != "html"]),
-        _PAGES.replace(" html binary,", ""), True),
+    "pages_light": (PAGES_SCHEMA, _PAGES.replace(" html binary,", ""),
+                    True, ("html",)),
     "documents": (entry.DOCUMENTS_SCHEMA,
                   "doc_id long, text string, lang string, source string, "
                   "n_chars long", True),
@@ -120,7 +119,7 @@ def _err(e: Exception) -> str:
 
 
 def snapshot_one(schema, draft, frames, uri_dirs=None,
-                 format_assertion=None) -> dict:
+                 format_assertion=None, moved=()) -> dict:
     try:
         cv = ColumnarValidator(schema, draft=draft, uri_dirs=uri_dirs,
                                format_assertion=format_assertion)
@@ -128,17 +127,18 @@ def snapshot_one(schema, draft, frames, uri_dirs=None,
         return {"unsupported": str(e)}
     except Exception as e:  # noqa: BLE001 - recorded, compared by text
         return {"error": _err(e)}
+    checks = [c for c in cv.checks if c.presence not in moved]
     trees = {}
     for name, df in frames.items():
         try:
-            added, viol, valid = cv._build_apply(df, "violations")
+            added, viol, valid = cv._build_apply(df, "violations", checks)
             trees[name] = [_stable(c) for c in
                            [c for _, c in added] + [viol, valid]]
         except Exception as e:  # noqa: BLE001
             trees[name] = _err(e)
     return {"checks": [["<row>" if c.column == cv._ROW_CHECK else c.column,
                         c.keyword, c.schema_path, c.doc_path, c.message,
-                        c.level] for c in cv.checks],
+                        c.level] for c in checks],
             "trees": trees}
 
 
@@ -151,10 +151,10 @@ def main() -> None:
     spark.sparkContext.setLogLevel("ERROR")
     frames = {n: spark.createDataFrame([], ddl) for n, ddl in SHAPES.items()}
     snap = {}
-    for name, (schema, ddl, fa) in PRODUCTION.items():
+    for name, (schema, ddl, fa, *moved) in PRODUCTION.items():
         snap[f"production/{name}"] = snapshot_one(
             schema, None, {name: spark.createDataFrame([], ddl)},
-            format_assertion=fa)
+            format_assertion=fa, moved=moved[0] if moved else ())
     for mod, attr in CORPORA:
         cases = getattr(importlib.import_module(mod), attr)
         uri_dirs = remote_uri_dirs() if mod == "corpus_remote" else None
