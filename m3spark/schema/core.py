@@ -34,6 +34,7 @@ from typing import Any, Callable, Optional
 
 from .jsontypes import (
     is_integer_loose,
+    is_integer_strict,
     is_multiple_of,
     is_number,
     json_eq,
@@ -43,7 +44,8 @@ from .jsontypes import (
     unique_items,
 )
 from .formats import FORMATS
-from .uris import join_pointer, pointer_get, resolve_uri, split_fragment
+from .uris import (join_pointer, pointer_escape, pointer_get, resolve_uri,
+                   split_fragment)
 
 # --------------------------------------------------------------------------
 # drafts
@@ -163,19 +165,26 @@ class SchemaError(Exception):
     """Raised at compile time for unresolvable/ill-formed schemas."""
 
 
-# Annotation state propagated upward: (evaluated property names,
-# evaluated item indices).  None means "no annotations".
+# Annotation state: (evaluated property names, evaluated item indices).
+# Built only where an unevaluated* keyword can see it (see ``_node``).
 Ann = Optional[tuple]
 
 
-def _merge(a: Ann, b: Ann) -> Ann:
-    if b is None:
-        return a
-    if a is None:
-        return (set(b[0]), set(b[1]))
-    a[0].update(b[0])
-    a[1].update(b[1])
-    return a
+def _annotate(acc: tuple, a: Ann) -> None:
+    """Fold a child's annotation sets into the accumulator ``acc``."""
+    if a is not None:
+        acc[0].update(a[0])
+        acc[1].update(a[1])
+
+
+def _ptr(path) -> str:
+    """JSON pointer of a document path.  The root is ``""``; a child is
+    ``(parent path, key)``, joined only here, when a violation is made."""
+    keys = []
+    while path:
+        path, key = path
+        keys.append(key)
+    return "".join(["/" + pointer_escape(str(k)) for k in reversed(keys)])
 
 
 # --------------------------------------------------------------------------
@@ -185,16 +194,22 @@ def _merge(a: Ann, b: Ann) -> Ann:
 class _Rt:
     """Per-validation runtime state: the dynamic scope chain of schema
     resources entered (for $dynamicRef/$recursiveRef, compare the
-    reference's ``$dynamic-scope-chain``: property.cljc:211-216) plus an
-    application-depth counter guarding degenerate $ref cycles."""
+    reference's ``$dynamic-scope-chain``: property.cljc:211-216), an
+    application-depth counter guarding degenerate $ref cycles, and
+    ``quiet``, the number of enclosing branches whose violations their
+    caller throws away (anyOf, oneOf, not, the if condition, contains,
+    propertyNames, draft-03 type schemas and disallow): there no value
+    is stamped.  An exception abandons the whole ``_Rt``, so none of
+    these is restored on the way out."""
 
-    __slots__ = ("scope", "depth")
+    __slots__ = ("scope", "depth", "quiet")
 
     MAX_DEPTH = 2500  # schema applications, ~tracks document depth
 
     def __init__(self, root_uri: str):
         self.scope = [root_uri]
         self.depth = 0
+        self.quiet = 0
 
 
 class _DepthExceeded(Exception):
@@ -202,31 +217,103 @@ class _DepthExceeded(Exception):
 
 
 class Compiled:
-    """A compiled schema node: a callable ``(value, path, rt) ->
-    (errors, ann)``.  ``fn`` is assigned after construction so recursive
-    $refs can close over the wrapper before the body exists."""
+    """A compiled schema node.  ``fn(value, path, rt) -> errors`` and,
+    for a caller that folds the node's annotations into its own,
+    ``fa(value, path, rt) -> (errors, annotations)``.  Both are assigned
+    after construction, so recursive $refs can close over the node
+    before its body exists; callers read them at call time."""
 
-    __slots__ = ("fn", "resource_uri")
+    __slots__ = ("fn", "fa")
 
-    def __init__(self, resource_uri: str):
-        self.fn = None
-        self.resource_uri = resource_uri
 
-    def __call__(self, value, path, rt):
-        rt.depth += 1
-        if rt.depth > _Rt.MAX_DEPTH:
+def _pass(value, path, rt):
+    return None
+
+
+def _pass_ann(value, path, rt):
+    return None, None
+
+
+def _stamp(errs: list, value, path) -> None:
+    """Stamp the offending instance value onto the violations in
+    ``errs`` raised AT this node (deeper ones were stamped in their own
+    node).  Error-only cost: ancestors of the offending node find
+    nothing left to stamp, and formatting the WHOLE enclosing document
+    (json.dumps) there doubled the error path (BENCH r2->r3 A/B).
+    Direct construction, not dataclasses.replace, which re-introspects
+    fields per call."""
+    here = fv = None
+    for i, e in enumerate(errs):
+        if e.value is None:
+            if here is None:
+                here = _ptr(path)
+            if e.doc_path == here:
+                if fv is None:  # formatted once, when first needed
+                    fv = (_fmt_value(value),)
+                errs[i] = Violation(e.keyword, e.schema_path, e.doc_path,
+                                    e.message, e.level, fv[0])
+
+
+def _node(uri: str | None, checkers: list, collect: bool):
+    """``(fn, fa)`` of a schema object in resource ``uri`` (None: no
+    dynamic reference reads the scope chain) with compiled ``checkers``,
+    each a value checker ``chk(value, path, rt) -> errors | None`` or a
+    pair ``(chk, achk)`` whose ``achk(value, path, rt, acc)`` also adds
+    the keyword's annotations to ``acc``.  ``collect``: an unevaluated*
+    keyword of this object reads the annotation sets, so ``fn`` builds
+    them too.  Otherwise ``fn`` runs the plain checkers and touches no
+    annotation, and with no pair at all ``fa`` has none to report."""
+    plain = [c[0] if isinstance(c, tuple) else c for c in checkers]
+    annot = [(c[1], True) if isinstance(c, tuple) else (c, False)
+             for c in checkers]
+
+    def fn(value, path, rt):
+        depth = rt.depth + 1
+        if depth > _Rt.MAX_DEPTH:
             raise _DepthExceeded(path)
-        uri = self.resource_uri
-        try:
-            if rt.scope[-1] != uri:
-                rt.scope.append(uri)
-                try:
-                    return self.fn(value, path, rt)
-                finally:
-                    rt.scope.pop()
-            return self.fn(value, path, rt)
-        finally:
-            rt.depth -= 1
+        rt.depth = depth
+        pushed = uri is not None and rt.scope[-1] != uri
+        if pushed:
+            rt.scope.append(uri)
+        errs: list = []
+        for chk in plain:
+            e = chk(value, path, rt)
+            if e:
+                errs += e
+        if pushed:
+            rt.scope.pop()
+        rt.depth = depth - 1
+        if errs and not rt.quiet:
+            _stamp(errs, value, path)
+        return errs
+
+    def fa(value, path, rt):
+        depth = rt.depth + 1
+        if depth > _Rt.MAX_DEPTH:
+            raise _DepthExceeded(path)
+        rt.depth = depth
+        pushed = uri is not None and rt.scope[-1] != uri
+        if pushed:
+            rt.scope.append(uri)
+        errs: list = []
+        acc = (set(), set())
+        for chk, takes_acc in annot:
+            e = chk(value, path, rt, acc) if takes_acc \
+                else chk(value, path, rt)
+            if e:
+                errs += e
+        if pushed:
+            rt.scope.pop()
+        rt.depth = depth - 1
+        if errs and not rt.quiet:
+            _stamp(errs, value, path)
+        return errs, acc
+
+    if collect:
+        return (lambda value, path, rt: fa(value, path, rt)[0]), fa
+    if not any(isinstance(c, tuple) for c in checkers):
+        return fn, (lambda value, path, rt: (fn(value, path, rt), None))
+    return fn, fa
 
 
 # --------------------------------------------------------------------------
@@ -597,15 +684,19 @@ class CompiledSchema:
         self.format_assertion = format_assertion
         self.index = _Index(self.draft, self.registry, self.uri_dirs)
         self._memo: dict[int, tuple] = {}
+        # a $dynamicRef/$recursiveRef reads the dynamic scope chain
+        self._dynamic = False
+        self._unlinked: list = []  # compiled nodes without functions yet
         self.root_uri = self.index.index_root(schema, base_uri)
         if self._meta_errors:
             # invalid schema: never compiled, every validation reports
             # the meta-errors (reference: validate.cljc:375-377)
-            c = Compiled(self.root_uri)
-            c.fn = lambda v, p, rt, _e=self._meta_errors: (list(_e), None)
+            c = Compiled()
+            c.fn = lambda v, p, rt, _e=self._meta_errors: list(_e)
             self.root = c
         else:
             self.root = self._compile(schema, self.draft, "")
+            self._link()
 
     # -- meta-schema validation (validate-m2) -------------------------------
 
@@ -656,7 +747,7 @@ class CompiledSchema:
             if prev_limit < needed:
                 sys.setrecursionlimit(needed)
             try:
-                errs, _ = self.root(value, "", rt)
+                errs = self.root.fn(value, "", rt) or []
             except (_DepthExceeded, RecursionError):
                 # degenerate $ref cycle with no structural descent (e.g.
                 # {"$ref": "#"}): fail the document rather than the process
@@ -682,64 +773,55 @@ class CompiledSchema:
             return hit[1]
         base = self.index.node_base.get(id(node), self.root_uri) \
             if isinstance(node, dict) else self.root_uri
-        c = Compiled(base)
+        c = Compiled()
         self._memo[key] = (node, c)
         if node is True or node == {}:
-            c.fn = lambda v, p, rt: ([], None)
+            c.fn, c.fa = _pass, _pass_ann
             return c
         if node is False:
             # boolean false schema (validate.cljc:163-171)
-            c.fn = lambda v, p, rt, _sp=sp: (
-                [Violation("false", _sp, p, "schema is false: nothing is valid")],
-                None)
+            def false(v, p, rt, _sp=sp):
+                return _err(rt, "false", _sp, p,
+                            "schema is false: nothing is valid")
+            c.fn = false
+            c.fa = lambda v, p, rt: (false(v, p, rt), None)
             return c
         if not isinstance(node, dict):
             # malformed subschema (e.g. a string where a schema object is
             # expected): warn and treat as always-true instead of
             # crashing — the reference's corpus-stress regression
             # (json_schema_test.cljc:118-130 "must not crash")
-            c.fn = lambda v, p, rt, _sp=sp, _n=node: (
-                [Violation("$schema", _sp, p,
-                           f"ignoring malformed subschema {_n!r} "
-                           f"(expected object or boolean)", "warning")],
-                None)
+            def malformed(v, p, rt, _sp=sp, _n=node):
+                return _err(rt, "$schema", _sp, p,
+                            f"ignoring malformed subschema {_n!r} "
+                            f"(expected object or boolean)", "warning")
+            c.fn = malformed
+            c.fa = lambda v, p, rt: (malformed(v, p, rt), None)
             return c
         draft = draft_of(node, draft)
         checkers = self._compile_object(node, draft, sp, base)
+        self._unlinked.append((c, base, [chk for _, chk in checkers],
+                               any(name in _CONSUMERS for name, _ in checkers)))
+        return c
 
-        def run(value, path, rt, _checkers=checkers):
-            errs: list = []
-            ann: Ann = None
-            for chk in _checkers:
-                e, a = chk(value, path, rt, ann)
-                if e:
-                    errs.extend(e)
-                ann = _merge(ann, a)
-            if errs:
-                # stamp the offending instance value onto violations
-                # raised AT this node (deeper ones were stamped in their
-                # own run; error-only cost, nothing on the valid path).
-                # Lazily: ancestors of the offending node re-enter this
-                # branch with nothing left to stamp, and formatting the
-                # WHOLE enclosing document (json.dumps) there doubled
-                # the error path (BENCH r2->r3 A/B).  Direct
-                # construction, not dataclasses.replace, which
-                # re-introspects fields per call.
-                if any(e.value is None and e.doc_path == path
-                       for e in errs):
-                    fv = _fmt_value(value)
-                    errs = [Violation(e.keyword, e.schema_path,
-                                      e.doc_path, e.message, e.level, fv)
-                            if e.value is None and e.doc_path == path
-                            else e
-                            for e in errs]
-            return errs, ann
+    def _link(self):
+        """Build the functions of the nodes compiled since the last call.
+        Only when a dynamic reference reads it does a node keep the
+        dynamic scope chain."""
+        for c, base, checkers, collect in self._unlinked:
+            c.fn, c.fa = _node(base if self._dynamic else None, checkers,
+                               collect)
+        self._unlinked.clear()
 
-        c.fn = run
+    def _compile_now(self, node: Any, draft: str, sp: str) -> Compiled:
+        """``_compile`` during validation (a dynamic reference's target)."""
+        c = self._compile(node, draft, sp)
+        self._link()
         return c
 
     def _compile_object(self, node: dict, draft: str, sp: str, base: str):
-        """Compile one schema object into an ordered checker list.
+        """Compile one schema object into an ordered list of (keyword,
+        checker).
 
         Keyword ordering is dependency-driven like the reference's
         topo-sorted vocabularies (vocabulary.cljc:190-192): in-place
@@ -750,8 +832,7 @@ class CompiledSchema:
         old_ref = not _ge(draft, D2019)
         if old_ref and isinstance(node.get("$ref"), str):
             # draft<=7: $ref replaces all siblings (vocabulary.cljc:154,158)
-            chk = self._c_ref(node["$ref"], base, draft, sp)
-            return [chk]
+            return [("$ref", self._c_ref(node["$ref"], base, draft, sp))]
         checkers = []
         allowed = self._allowed_keywords
         for name in _KEYWORD_ORDER:
@@ -764,18 +845,13 @@ class CompiledSchema:
                 continue
             chk = fn(self, node, node[name], draft, join_pointer(sp, name), base)
             if chk is not None:
-                checkers.append(chk)
+                checkers.append((name, chk))
         return checkers
 
     # -- $ref family -------------------------------------------------------
 
     def _c_ref(self, ref: str, base: str, draft: str, sp: str):
-        compiled = self.compile_ref_target(ref, base, draft, sp)
-
-        def chk(v, p, rt, ann):
-            e, a = compiled(v, p, rt)
-            return e, (a if not e else a)
-        return chk
+        return _in_place(self.compile_ref_target(ref, base, draft, sp))
 
     def compile_ref_target(self, ref: str, base: str, draft: str, sp: str):
         return self._compile(self.index.resolve(ref, base)[0], draft, sp)
@@ -784,21 +860,56 @@ class CompiledSchema:
 # --------------------------------------------------------------------------
 # keyword compilers
 #
-# Each has signature  c(cs, node, v, draft, sp, base) -> checker | None
-# where checker(value, path, rt, ann_so_far) -> (errors, ann_delta).
-# ``ann_so_far`` lets unevaluated* see siblings' evaluated sets, mirroring
-# how the reference threads :matched/:evaluated through c1
-# (property.cljc:992-1011, 1004-1009).
+# Each has signature  c(cs, node, v, draft, sp, base) -> checker | None.
+# A checker is either a value checker
+#     chk(value, path, rt) -> errors | None
+# or, for a keyword whose evaluated properties/items an unevaluated*
+# keyword can see, a pair (chk, achk) whose
+#     achk(value, path, rt, acc) -> errors | None
+# also adds them to ``acc``, the node's (properties, items) sets; the
+# node runs ``achk`` only when an unevaluated* keyword reads them
+# (``_node``), mirroring how the reference threads :matched/:evaluated
+# through c1 (property.cljc:992-1011, 1004-1009).  ``path`` is the
+# document path, ``""`` or ``(parent path, key)``; a violation carries
+# it as a JSON pointer (``_ptr``).  A subschema is a :class:`Compiled`:
+# ``sub.fn`` for its violations, ``sub.fa`` for violations and
+# annotations.
 
 
-def _err(kw, sp, p, msg, level="error"):
-    return [Violation(kw, sp, p, msg, level)]
+_CONSUMERS = ("unevaluatedItems", "unevaluatedProperties")
 
 
-def _no_ann(fn):
-    def chk(v, p, rt, ann):
-        return fn(v, p, rt), None
-    return chk
+# what a checker reports under ``rt.quiet``: its caller asks only
+# whether anything was reported, so no violation is built
+_DISCARDED = (Violation("", "", "", "thrown away by the caller"),)
+
+
+def _err(rt, kw, sp, p, msg, level="error"):
+    if rt.quiet:
+        return _DISCARDED
+    return [Violation(kw, sp, _ptr(p), msg, level)]
+
+
+def _in_place(sub: Compiled):
+    """Checker pair applying ``sub`` to the value itself: its violations
+    and annotations pass through ($ref)."""
+    def chk(v, p, rt):
+        return sub.fn(v, p, rt)
+
+    def achk(v, p, rt, acc):
+        e, a = sub.fa(v, p, rt)
+        _annotate(acc, a)
+        return e
+    return chk, achk
+
+
+def _quiet_fails(sub: Compiled, v, p, rt) -> bool:
+    """Whether ``sub`` reports anything for ``v``, when the caller throws
+    the violations away (no value is stamped on them)."""
+    rt.quiet += 1
+    e = sub.fn(v, p, rt)
+    rt.quiet -= 1
+    return bool(e)
 
 
 # ---- core / refs ----
@@ -810,6 +921,24 @@ def c_ref(cs, node, v, draft, sp, base):
     return cs._c_ref(v, base, draft, sp)
 
 
+def _dynamic(target_of):
+    """Checker pair applying the subschema ``target_of(value, path, rt)``
+    picks from the dynamic scope (a :class:`Compiled`, or violations when
+    there is none)."""
+    def chk(v, p, rt):
+        t = target_of(v, p, rt)
+        return t.fn(v, p, rt) if isinstance(t, Compiled) else t
+
+    def achk(v, p, rt, acc):
+        t = target_of(v, p, rt)
+        if not isinstance(t, Compiled):
+            return t
+        e, a = t.fa(v, p, rt)
+        _annotate(acc, a)
+        return e
+    return chk, achk
+
+
 def c_dynamic_ref(cs, node, v, draft, sp, base):
     """$dynamicRef: the target is chosen per validation from the dynamic
     scope (``_Index.dynamic_ref`` / ``dynamic_target``)."""
@@ -819,17 +948,18 @@ def c_dynamic_ref(cs, node, v, draft, sp, base):
     if dyn is None:
         return cs._c_ref(v, base, draft, sp)
     name, static = dyn
+    cs._dynamic = True
     if static is not None:
         # compiled now, so its errors surface at compile time
         cs._compile(static[0], draft, sp)
 
-    def chk(v_, p, rt, ann):
-        target = cs.index.dynamic_target(name, rt.scope, static)
-        if target is None:
-            return _err("$dynamicRef", sp, p,
-                        f"$dynamicRef: no anchor {name!r} in dynamic scope"), None
-        return cs._compile(target[0], draft, sp)(v_, p, rt)
-    return chk
+    def target(v_, p, rt):
+        t = cs.index.dynamic_target(name, rt.scope, static)
+        if t is None:
+            return _err(rt, "$dynamicRef", sp, p,
+                        f"$dynamicRef: no anchor {name!r} in dynamic scope")
+        return cs._compile_now(t[0], draft, sp)
+    return _dynamic(target)
 
 
 def c_recursive_ref(cs, node, v, draft, sp, base):
@@ -838,50 +968,82 @@ def c_recursive_ref(cs, node, v, draft, sp, base):
     if v != "#":
         return cs._c_ref(v, base, draft, sp) if isinstance(v, str) else None
     # the static target compiles now, so its errors surface at compile time
+    cs._dynamic = True
     cs._compile(cs.index.recursive_target(base, ())[0], draft, sp)
 
-    def chk(v_, p, rt, ann):
-        target, _ = cs.index.recursive_target(base, rt.scope)
-        return cs._compile(target, draft, sp)(v_, p, rt)
-    return chk
+    def target(v_, p, rt):
+        return cs._compile_now(
+            cs.index.recursive_target(base, rt.scope)[0], draft, sp)
+    return _dynamic(target)
 
 
 # ---- type / enum / const ----
 
 
+_TYPE_CLASSES = {"string": (str,), "object": (dict,), "array": (list, tuple),
+                 "boolean": (bool,)}
+
+
+def _type_pred(names: list, strict: bool):
+    """One predicate for "the value has one of the JSON types ``names``"
+    (``type_check`` over each name).  A value outside the JSON model
+    fails it, and the violation's message raises ``json_type``'s
+    TypeError."""
+    if "any" in names:  # draft-03
+        return lambda x: True
+    if "number" in names:
+        num = is_number
+    elif "integer" in names:
+        num = is_integer_strict if strict else is_integer_loose
+    else:
+        num = None
+    classes = tuple(c for n in names for c in _TYPE_CLASSES.get(n, ()))
+    null = "null" in names
+    if num is None and not null:
+        return lambda x: isinstance(x, classes)
+    if not classes and not null:
+        return num
+    return lambda x: (isinstance(x, classes) or (null and x is None)
+                      or (num is not None and num(x)))
+
+
 def c_type(cs, node, v, draft, sp, base):
     strict = draft in (DRAFT3, DRAFT4)
     if isinstance(v, str):
-        @_no_ann
+        ok = _type_pred([v], strict)
+
         def chk(val, p, rt):
-            if not type_check(val, v, strict):
-                return _err("type", sp, p,
+            if not ok(val):
+                return _err(rt, "type", sp, p,
                             f"expected type {v}, got {json_type(val)}")
-            return []
         return chk
     if isinstance(v, list):
         names = [t for t in v if isinstance(t, str)]
         schemas = [cs._compile(t, draft, join_pointer(sp, i))
                    for i, t in enumerate(v) if isinstance(t, dict)]
+        if "any" in names or schemas:
+            # draft-03 only: the lattice's order of evaluation, name by
+            # name, then the embedded schemas
+            def ok(val):
+                return any(type_check(val, n, strict) for n in names)
+        else:
+            ok = _type_pred(names, strict)
 
-        def chk(val, p, rt, ann):
-            if any(type_check(val, n, strict) for n in names):
-                return [], None
+        def chk(val, p, rt):
+            if ok(val):
+                return None
             for s in schemas:  # draft-03 union with embedded schemas
-                e, _ = s(val, p, rt)
-                if not e:
-                    return [], None
-            return _err("type", sp, p,
-                        f"expected one of {names}, got {json_type(val)}"), None
+                if not _quiet_fails(s, val, p, rt):
+                    return None
+            return _err(rt, "type", sp, p,
+                        f"expected one of {names}, got {json_type(val)}")
         return chk
     if isinstance(v, dict):  # draft-03: schema as type
         compiled = cs._compile(v, draft, sp)
 
-        def chk(val, p, rt, ann):
-            e, _ = compiled(val, p, rt)
-            if e:
-                return _err("type", sp, p, "value does not match type schema"), None
-            return [], None
+        def chk(val, p, rt):
+            if _quiet_fails(compiled, val, p, rt):
+                return _err(rt, "type", sp, p, "value does not match type schema")
         return chk
     return None
 
@@ -892,11 +1054,12 @@ def c_disallow(cs, node, v, draft, sp, base):
     if pos is None:
         return None
 
-    def chk(val, p, rt, ann):
-        e, _ = pos(val, p, rt, None)
+    def chk(val, p, rt):
+        rt.quiet += 1
+        e = pos(val, p, rt)
+        rt.quiet -= 1
         if not e:
-            return _err("disallow", sp, p, f"disallowed type matched: {v}"), None
-        return [], None
+            return _err(rt, "disallow", sp, p, f"disallowed type matched: {v}")
     return chk
 
 
@@ -905,20 +1068,16 @@ def c_enum(cs, node, v, draft, sp, base):
         return None
     vals = list(v)
 
-    @_no_ann
     def chk(val, p, rt):
-        if any(json_eq(val, x) for x in vals):
-            return []
-        return _err("enum", sp, p, f"value not in enum ({len(vals)} options)")
+        if not any(json_eq(val, x) for x in vals):
+            return _err(rt, "enum", sp, p, f"value not in enum ({len(vals)} options)")
     return chk
 
 
 def c_const(cs, node, v, draft, sp, base):
-    @_no_ann
     def chk(val, p, rt):
-        if json_eq(val, v):
-            return []
-        return _err("const", sp, p, "value does not equal const")
+        if not json_eq(val, v):
+            return _err(rt, "const", sp, p, "value does not equal const")
     return chk
 
 
@@ -926,13 +1085,9 @@ def c_const(cs, node, v, draft, sp, base):
 
 
 def _num_chk(kw, sp, pred, msg_fmt, bound):
-    @_no_ann
     def chk(val, p, rt):
-        if not is_number(val):
-            return []
-        if pred(val):
-            return []
-        return _err(kw, sp, p, msg_fmt.format(val=val, bound=bound))
+        if is_number(val) and not pred(val):
+            return _err(rt, kw, sp, p, msg_fmt.format(val=val, bound=bound))
     return chk
 
 
@@ -984,22 +1139,20 @@ def c_multiple_of(cs, node, v, draft, sp, base):
 def c_min_length(cs, node, v, draft, sp, base):
     if isinstance(v, bool) or not isinstance(v, (int, float)):
         return None  # malformed bound: ignored when meta-validation is off
-    @_no_ann
+
     def chk(val, p, rt):
         if isinstance(val, str) and json_length(val) < v:
-            return _err("minLength", sp, p, f"string shorter than {v}")
-        return []
+            return _err(rt, "minLength", sp, p, f"string shorter than {v}")
     return chk
 
 
 def c_max_length(cs, node, v, draft, sp, base):
     if isinstance(v, bool) or not isinstance(v, (int, float)):
         return None  # malformed bound: ignored when meta-validation is off
-    @_no_ann
+
     def chk(val, p, rt):
         if isinstance(val, str) and json_length(val) > v:
-            return _err("maxLength", sp, p, f"string longer than {v}")
-        return []
+            return _err(rt, "maxLength", sp, p, f"string longer than {v}")
     return chk
 
 
@@ -1037,12 +1190,10 @@ def c_pattern(cs, node, v, draft, sp, base):
     if match is None:
         return None
 
-    @_no_ann
     def chk(val, p, rt):
         # ECMA 'test' semantics: unanchored find (property.cljc:702-720)
         if isinstance(val, str) and not match(val):
-            return _err("pattern", sp, p, f"string does not match {v!r}")
-        return []
+            return _err(rt, "pattern", sp, p, f"string does not match {v!r}")
     return chk
 
 
@@ -1054,18 +1205,14 @@ def c_format(cs, node, v, draft, sp, base):
     fn = cs.formats.get(v)
     level = "error" if cs.format_assertion else "warning"
     if fn is None:
-        @_no_ann
         def chk_unknown(val, p, rt):
             if isinstance(val, str):
-                return _err("format", sp, p, f"unknown format {v!r}", "warning")
-            return []
+                return _err(rt, "format", sp, p, f"unknown format {v!r}", "warning")
         return chk_unknown
 
-    @_no_ann
     def chk(val, p, rt):
         if isinstance(val, str) and not fn(val):
-            return _err("format", sp, p, f"not a valid {v}", level)
-        return []
+            return _err(rt, "format", sp, p, f"not a valid {v}", level)
     return chk
 
 
@@ -1079,27 +1226,27 @@ def c_properties(cs, node, v, draft, sp, base):
     required3 = []
     for k, s in v.items():
         if draft == DRAFT3 and isinstance(s, dict) and s.get("required") is True:
-            required3.append(k)
+            required3.append((k, join_pointer(sp, k)))
         subs[k] = cs._compile(s, draft, join_pointer(sp, k))
+    subs = list(subs.items())
 
-    def chk(val, p, rt, ann):
+    def chk(val, p, rt, acc=None):
         if not isinstance(val, dict):
-            return [], None
+            return None
         errs = []
-        props = set()
-        for k, sub in subs.items():
+        for k, sub in subs:
             if k in val:
-                props.add(k)
-                e, a = sub(val[k], join_pointer(p, k), rt)
-                errs.extend(e)
-                if a:
-                    pass  # child annotations are per-child-instance; not lifted
-        for k in required3:
+                e = sub.fn(val[k], (p, k), rt)
+                if e:
+                    errs += e
+                if acc is not None:
+                    acc[0].add(k)
+        for k, sp_k in required3:
             if k not in val:
-                errs.extend(_err("required", join_pointer(sp, k), p,
-                                 f"required property {k!r} missing"))
-        return errs, (props, set())
-    return chk
+                errs += _err(rt, "required", sp_k, p,
+                             f"required property {k!r} missing")
+        return errs
+    return chk, chk
 
 
 def c_pattern_properties(cs, node, v, draft, sp, base):
@@ -1112,19 +1259,20 @@ def c_pattern_properties(cs, node, v, draft, sp, base):
             continue
         pairs.append((match, cs._compile(s, draft, join_pointer(sp, pat))))
 
-    def chk(val, p, rt, ann):
+    def chk(val, p, rt, acc=None):
         if not isinstance(val, dict):
-            return [], None
+            return None
         errs = []
-        props = set()
         for k, item in val.items():
             for match, sub in pairs:
                 if match(k):
-                    props.add(k)
-                    e, _ = sub(item, join_pointer(p, k), rt)
-                    errs.extend(e)
-        return errs, (props, set())
-    return chk
+                    if acc is not None:
+                        acc[0].add(k)
+                    e = sub.fn(item, (p, k), rt)
+                    if e:
+                        errs += e
+        return errs
+    return chk, chk
 
 
 def c_additional_properties(cs, node, v, draft, sp, base):
@@ -1141,56 +1289,54 @@ def c_additional_properties(cs, node, v, draft, sp, base):
                 pats.append(match)
     sub = cs._compile(v, draft, sp)
 
-    def chk(val, p, rt, ann):
+    def chk(val, p, rt, acc=None):
         if not isinstance(val, dict):
-            return [], None
+            return None
         errs = []
-        props = set()
         for k, item in val.items():
             if k in named or any(match(k) for match in pats):
                 continue
-            props.add(k)
-            e, _ = sub(item, join_pointer(p, k), rt)
-            errs.extend(e)
-        return errs, (props, set())
-    return chk
+            if acc is not None:
+                acc[0].add(k)
+            e = sub.fn(item, (p, k), rt)
+            if e:
+                errs += e
+        return errs
+    return chk, chk
 
 
 def c_unevaluated_properties(cs, node, v, draft, sp, base):
-    """Runs LAST; sees the union of evaluated keys from succeeding sibling
-    applicators via ``ann`` (reference threads this through c1:
-    property.cljc:1083-1095)."""
+    """Runs LAST; sees the evaluated keys of its siblings in ``acc``
+    (reference threads this through c1: property.cljc:1083-1095)."""
     sub = cs._compile(v, draft, sp)
 
-    def chk(val, p, rt, ann):
+    def chk(val, p, rt, acc):
         if not isinstance(val, dict):
-            return [], None
-        seen = ann[0] if ann else set()
+            return None
+        seen = acc[0]
         errs = []
-        props = set()
         for k, item in val.items():
             if k in seen:
                 continue
-            props.add(k)
-            e, _ = sub(item, join_pointer(p, k), rt)
-            errs.extend(e)
-        return errs, (props, set())
-    return chk
+            seen.add(k)
+            e = sub.fn(item, (p, k), rt)
+            if e:
+                errs += e
+        return errs
+    return chk, chk
 
 
 def c_property_names(cs, node, v, draft, sp, base):
     sub = cs._compile(v, draft, sp)
 
-    @_no_ann
     def chk(val, p, rt):
         if not isinstance(val, dict):
-            return []
+            return None
         errs = []
         for k in val:
-            e, _ = sub(k, join_pointer(p, k), rt)
-            if e:
-                errs.extend(_err("propertyNames", sp, p,
-                                 f"property name {k!r} is invalid"))
+            if _quiet_fails(sub, k, (p, k), rt):
+                errs += _err(rt, "propertyNames", sp, p,
+                             f"property name {k!r} is invalid")
         return errs
     return chk
 
@@ -1199,36 +1345,85 @@ def c_required(cs, node, v, draft, sp, base):
     if draft == DRAFT3 or not isinstance(v, list):
         return None  # draft-03 required lives inside property schemas
 
-    @_no_ann
     def chk(val, p, rt):
-        if not isinstance(val, dict):
-            return []
-        missing = [k for k in v if k not in val]
-        return [Violation("required", sp, p, f"required property {k!r} missing")
-                for k in missing]
+        if isinstance(val, dict):
+            missing = [k for k in v if k not in val]
+            if missing:
+                if rt.quiet:
+                    return _DISCARDED
+                here = _ptr(p)
+                return [Violation("required", sp, here,
+                                  f"required property {k!r} missing")
+                        for k in missing]
     return chk
 
 
 def c_min_properties(cs, node, v, draft, sp, base):
     if isinstance(v, bool) or not isinstance(v, (int, float)):
         return None  # malformed bound: ignored when meta-validation is off
-    @_no_ann
+
     def chk(val, p, rt):
         if isinstance(val, dict) and len(val) < v:
-            return _err("minProperties", sp, p, f"fewer than {v} properties")
-        return []
+            return _err(rt, "minProperties", sp, p, f"fewer than {v} properties")
     return chk
 
 
 def c_max_properties(cs, node, v, draft, sp, base):
     if isinstance(v, bool) or not isinstance(v, (int, float)):
         return None  # malformed bound: ignored when meta-validation is off
-    @_no_ann
+
     def chk(val, p, rt):
         if isinstance(val, dict) and len(val) > v:
-            return _err("maxProperties", sp, p, f"more than {v} properties")
-        return []
+            return _err(rt, "maxProperties", sp, p, f"more than {v} properties")
     return chk
+
+
+def _present_deps(kw, deps: list):
+    """Value checker for (key, schema path, required keys) triples: an
+    object holding the key must hold every required key."""
+    def chk(val, p, rt):
+        if not isinstance(val, dict):
+            return None
+        errs = []
+        for k, sp_k, needs in deps:
+            if k in val:
+                for n in needs:
+                    if n not in val:
+                        errs += _err(rt, kw, sp_k, p,
+                                     f"property {k!r} requires {n!r}")
+        return errs
+    return chk
+
+
+def _applying(select):
+    """Checker pair applying to the value itself, in order, each
+    subschema ``select(value)`` returns; a passing one's annotations
+    count (allOf, dependentSchemas and their kin)."""
+    def chk(val, p, rt):
+        errs = []
+        for sub in select(val):
+            e = sub.fn(val, p, rt)
+            if e:
+                errs += e
+        return errs
+
+    def achk(val, p, rt, acc):
+        errs = []
+        for sub in select(val):
+            e, a = sub.fa(val, p, rt)
+            if e:
+                errs += e
+            else:
+                _annotate(acc, a)
+        return errs
+    return chk, achk
+
+
+def _keyed(deps: list):
+    """The subschemas of (key, subschema) pairs whose key an object
+    holds."""
+    return lambda val: [sub for k, sub in deps if k in val] \
+        if isinstance(val, dict) else ()
 
 
 def c_dependencies(cs, node, v, draft, sp, base):
@@ -1236,75 +1431,40 @@ def c_dependencies(cs, node, v, draft, sp, base):
     string (draft3), array of strings, or a schema."""
     if not isinstance(v, dict):
         return None
-    present_deps = {}
-    schema_deps = {}
+    present = []
+    schemas = []
     for k, d in v.items():
         if isinstance(d, str):
-            present_deps[k] = [d]
+            present.append((k, join_pointer(sp, k), [d]))
         elif isinstance(d, list):
-            present_deps[k] = [x for x in d if isinstance(x, str)]
+            present.append((k, join_pointer(sp, k),
+                            [x for x in d if isinstance(x, str)]))
         elif isinstance(d, (dict, bool)):
-            schema_deps[k] = cs._compile(d, draft, join_pointer(sp, k))
+            schemas.append((k, cs._compile(d, draft, join_pointer(sp, k))))
+    pchk = _present_deps("dependencies", present)
+    schk, sachk = _applying(_keyed(schemas))
 
-    def chk(val, p, rt, ann):
-        if not isinstance(val, dict):
-            return [], None
-        errs = []
-        out_ann: Ann = None
-        for k, needs in present_deps.items():
-            if k in val:
-                for n in needs:
-                    if n not in val:
-                        errs.extend(_err("dependencies", join_pointer(sp, k), p,
-                                         f"property {k!r} requires {n!r}"))
-        for k, sub in schema_deps.items():
-            if k in val:
-                e, a = sub(val, p, rt)
-                errs.extend(e)
-                if not e:
-                    out_ann = _merge(out_ann, a)
-        return errs, out_ann
-    return chk
+    def chk(val, p, rt):
+        return (pchk(val, p, rt) or []) + (schk(val, p, rt) or [])
+
+    def achk(val, p, rt, acc):
+        return (pchk(val, p, rt) or []) + (sachk(val, p, rt, acc) or [])
+    return chk, achk
 
 
 def c_dependent_required(cs, node, v, draft, sp, base):
     if not isinstance(v, dict):
         return None
-
-    @_no_ann
-    def chk(val, p, rt):
-        if not isinstance(val, dict):
-            return []
-        errs = []
-        for k, needs in v.items():
-            if k in val and isinstance(needs, list):
-                for n in needs:
-                    if n not in val:
-                        errs.extend(_err("dependentRequired",
-                                         join_pointer(sp, k), p,
-                                         f"property {k!r} requires {n!r}"))
-        return errs
-    return chk
+    return _present_deps("dependentRequired", [
+        (k, join_pointer(sp, k), needs) for k, needs in v.items()
+        if isinstance(needs, list)])
 
 
 def c_dependent_schemas(cs, node, v, draft, sp, base):
     if not isinstance(v, dict):
         return None
-    subs = {k: cs._compile(s, draft, join_pointer(sp, k)) for k, s in v.items()}
-
-    def chk(val, p, rt, ann):
-        if not isinstance(val, dict):
-            return [], None
-        errs = []
-        out_ann: Ann = None
-        for k, sub in subs.items():
-            if k in val:
-                e, a = sub(val, p, rt)
-                errs.extend(e)
-                if not e:
-                    out_ann = _merge(out_ann, a)
-        return errs, out_ann
-    return chk
+    return _applying(_keyed([(k, cs._compile(s, draft, join_pointer(sp, k)))
+                             for k, s in v.items()]))
 
 
 def c_property_dependencies(cs, node, v, draft, sp, base):
@@ -1319,83 +1479,70 @@ def c_property_dependencies(cs, node, v, draft, sp, base):
                                              join_pointer(sp, prop, sval))
                            for sval, s in m.items()}
 
-    def chk(val, p, rt, ann):
+    def select(val):
         if not isinstance(val, dict):
-            return [], None
-        errs = []
-        out_ann: Ann = None
-        for prop, m in table.items():
-            pv = val.get(prop)
-            if isinstance(pv, str) and pv in m:
-                e, a = m[pv](val, p, rt)
-                errs.extend(e)
-                if not e:
-                    out_ann = _merge(out_ann, a)
-        return errs, out_ann
-    return chk
+            return ()
+        return [m[pv] for prop, m in table.items()
+                if isinstance(pv := val.get(prop), str) and pv in m]
+    return _applying(select)
 
 
 # ---- arrays ----
 
 
+def _positional(subs: list):
+    """Checker pair for a positional (tuple) item list: element i against
+    ``subs[i]``; the indices applied count as evaluated."""
+    def chk(val, p, rt, acc=None):
+        if not isinstance(val, list):
+            return None
+        errs = []
+        for i, sub in enumerate(subs[:len(val)]):
+            e = sub.fn(val[i], (p, i), rt)
+            if e:
+                errs += e
+        if acc is not None:
+            acc[1].update(range(min(len(subs), len(val))))
+        return errs
+    return chk, chk
+
+
+def _tail(start: int, sub: Compiled):
+    """Checker pair applying ``sub`` to every element from ``start`` on;
+    those indices count as evaluated."""
+    def chk(val, p, rt, acc=None):
+        if not isinstance(val, list):
+            return None
+        errs = []
+        for i in range(start, len(val)):
+            e = sub.fn(val[i], (p, i), rt)
+            if e:
+                errs += e
+        if acc is not None:
+            acc[1].update(range(start, len(val)))
+        return errs
+    return chk, chk
+
+
 def c_prefix_items(cs, node, v, draft, sp, base):
     if not isinstance(v, list):
         return None
-    subs = [cs._compile(s, draft, join_pointer(sp, i)) for i, s in enumerate(v)]
-
-    def chk(val, p, rt, ann):
-        if not isinstance(val, list):
-            return [], None
-        errs = []
-        idxs = set()
-        for i, sub in enumerate(subs):
-            if i >= len(val):
-                break
-            idxs.add(i)
-            e, _ = sub(val[i], join_pointer(p, i), rt)
-            errs.extend(e)
-        return errs, (set(), idxs)
-    return chk
+    return _positional([cs._compile(s, draft, join_pointer(sp, i))
+                        for i, s in enumerate(v)])
 
 
 def c_items(cs, node, v, draft, sp, base):
     """Schema form: every element past the positional prefix; tuple form
     (draft≤2019): positional (property.cljc:1156-1208)."""
     if isinstance(v, list):  # tuple form
-        subs = [cs._compile(s, draft, join_pointer(sp, i))
-                for i, s in enumerate(v)]
-
-        def chk_t(val, p, rt, ann):
-            if not isinstance(val, list):
-                return [], None
-            errs = []
-            idxs = set()
-            for i, sub in enumerate(subs):
-                if i >= len(val):
-                    break
-                idxs.add(i)
-                e, _ = sub(val[i], join_pointer(p, i), rt)
-                errs.extend(e)
-            return errs, (set(), idxs)
-        return chk_t
+        return _positional([cs._compile(s, draft, join_pointer(sp, i))
+                            for i, s in enumerate(v)])
     offset = 0
     if draft in (D2020, DNEXT):
         pi = node.get("prefixItems")
         if isinstance(pi, list):
             offset = len(pi)
-    sub = cs._compile(v, draft, sp)
-
-    def chk(val, p, rt, ann):
-        if not isinstance(val, list):
-            return [], None
-        errs = []
-        idxs = set()
-        for i in range(offset, len(val)):
-            idxs.add(i)
-            e, _ = sub(val[i], join_pointer(p, i), rt)
-            errs.extend(e)
-        return errs, (set(), idxs)
-    return chk
+    return _tail(offset, cs._compile(v, draft, sp))
 
 
 def c_additional_items(cs, node, v, draft, sp, base):
@@ -1403,39 +1550,26 @@ def c_additional_items(cs, node, v, draft, sp, base):
     items = node.get("items")
     if not isinstance(items, list):
         return None
-    n = len(items)
-    sub = cs._compile(v, draft, sp)
-
-    def chk(val, p, rt, ann):
-        if not isinstance(val, list):
-            return [], None
-        errs = []
-        idxs = set()
-        for i in range(n, len(val)):
-            idxs.add(i)
-            e, _ = sub(val[i], join_pointer(p, i), rt)
-            errs.extend(e)
-        return errs, (set(), idxs)
-    return chk
+    return _tail(len(items), cs._compile(v, draft, sp))
 
 
 def c_unevaluated_items(cs, node, v, draft, sp, base):
     sub = cs._compile(v, draft, sp)
 
-    def chk(val, p, rt, ann):
+    def chk(val, p, rt, acc):
         if not isinstance(val, list):
-            return [], None
-        seen = ann[1] if ann else set()
+            return None
+        seen = acc[1]
         errs = []
-        idxs = set()
         for i in range(len(val)):
             if i in seen:
                 continue
-            idxs.add(i)
-            e, _ = sub(val[i], join_pointer(p, i), rt)
-            errs.extend(e)
-        return errs, (set(), idxs)
-    return chk
+            seen.add(i)
+            e = sub.fn(val[i], (p, i), rt)
+            if e:
+                errs += e
+        return errs
+    return chk, chk
 
 
 def c_contains(cs, node, v, draft, sp, base):
@@ -1447,45 +1581,41 @@ def c_contains(cs, node, v, draft, sp, base):
     max_c = node.get("maxContains")
     count_evaluated = draft in (D2020, DNEXT)
 
-    def chk(val, p, rt, ann):
+    def chk(val, p, rt, acc=None):
         if not isinstance(val, list):
-            return [], None
-        matched = set()
-        for i, item in enumerate(val):
-            e, _ = sub(item, join_pointer(p, i), rt)
-            if not e:
-                matched.add(i)
+            return None
+        matched = [i for i, item in enumerate(val)
+                   if not _quiet_fails(sub, item, (p, i), rt)]
         errs = []
         if len(matched) < (min_c if isinstance(min_c, (int, float)) else 1):
             kw = "contains" if min_c == 1 else "minContains"
-            errs.extend(_err(kw, sp, p,
-                             f"fewer than {min_c} elements match contains"))
+            errs += _err(rt, kw, sp, p, f"fewer than {min_c} elements match contains")
         if isinstance(max_c, (int, float)) and len(matched) > max_c:
-            errs.extend(_err("maxContains", sp, p,
-                             f"more than {max_c} elements match contains"))
-        return errs, ((set(), matched) if count_evaluated else None)
-    return chk
+            errs += _err(rt, "maxContains", sp, p,
+                         f"more than {max_c} elements match contains")
+        if acc is not None and count_evaluated:
+            acc[1].update(matched)
+        return errs
+    return chk, chk
 
 
 def c_min_items(cs, node, v, draft, sp, base):
     if isinstance(v, bool) or not isinstance(v, (int, float)):
         return None  # malformed bound: ignored when meta-validation is off
-    @_no_ann
+
     def chk(val, p, rt):
         if isinstance(val, list) and len(val) < v:
-            return _err("minItems", sp, p, f"fewer than {v} items")
-        return []
+            return _err(rt, "minItems", sp, p, f"fewer than {v} items")
     return chk
 
 
 def c_max_items(cs, node, v, draft, sp, base):
     if isinstance(v, bool) or not isinstance(v, (int, float)):
         return None  # malformed bound: ignored when meta-validation is off
-    @_no_ann
+
     def chk(val, p, rt):
         if isinstance(val, list) and len(val) > v:
-            return _err("maxItems", sp, p, f"more than {v} items")
-        return []
+            return _err(rt, "maxItems", sp, p, f"more than {v} items")
     return chk
 
 
@@ -1493,11 +1623,9 @@ def c_unique_items(cs, node, v, draft, sp, base):
     if v is not True:
         return None
 
-    @_no_ann
     def chk(val, p, rt):
         if isinstance(val, list) and not unique_items(val):
-            return _err("uniqueItems", sp, p, "array items are not unique")
-        return []
+            return _err(rt, "uniqueItems", sp, p, "array items are not unique")
     return chk
 
 
@@ -1508,17 +1636,26 @@ def c_all_of(cs, node, v, draft, sp, base):
     if not isinstance(v, list):
         return None
     subs = [cs._compile(s, draft, join_pointer(sp, i)) for i, s in enumerate(v)]
+    return _applying(lambda val: subs)
 
-    def chk(val, p, rt, ann):
-        errs = []
-        out_ann: Ann = None
-        for sub in subs:
-            e, a = sub(val, p, rt)
-            errs.extend(e)
-            if not e:
-                out_ann = _merge(out_ann, a)
-        return errs, out_ann
-    return chk
+
+def _passing(subs: list, val, p, rt, acc):
+    """How many of ``subs`` pass ``val``; every branch runs, its
+    violations thrown away.  With ``acc``, the passing branches'
+    annotations are added to it."""
+    n_ok = 0
+    rt.quiet += 1
+    for sub in subs:
+        if acc is None:
+            e = sub.fn(val, p, rt)
+        else:
+            e, a = sub.fa(val, p, rt)
+        if not e:
+            n_ok += 1
+            if acc is not None:
+                _annotate(acc, a)
+    rt.quiet -= 1
+    return n_ok
 
 
 def c_any_of(cs, node, v, draft, sp, base):
@@ -1526,18 +1663,10 @@ def c_any_of(cs, node, v, draft, sp, base):
         return None
     subs = [cs._compile(s, draft, join_pointer(sp, i)) for i, s in enumerate(v)]
 
-    def chk(val, p, rt, ann):
-        out_ann: Ann = None
-        ok = False
-        for sub in subs:
-            e, a = sub(val, p, rt)
-            if not e:
-                ok = True
-                out_ann = _merge(out_ann, a)
-        if ok:
-            return [], out_ann
-        return _err("anyOf", sp, p, f"no schema of {len(subs)} matched"), None
-    return chk
+    def chk(val, p, rt, acc=None):
+        if not _passing(subs, val, p, rt, acc):
+            return _err(rt, "anyOf", sp, p, f"no schema of {len(subs)} matched")
+    return chk, chk
 
 
 def c_one_of(cs, node, v, draft, sp, base):
@@ -1545,30 +1674,24 @@ def c_one_of(cs, node, v, draft, sp, base):
         return None
     subs = [cs._compile(s, draft, join_pointer(sp, i)) for i, s in enumerate(v)]
 
-    def chk(val, p, rt, ann):
-        out_ann: Ann = None
-        n_ok = 0
-        for sub in subs:
-            e, a = sub(val, p, rt)
-            if not e:
-                n_ok += 1
-                out_ann = _merge(out_ann, a)
-        if n_ok == 1:
-            return [], out_ann
-        return _err("oneOf", sp, p,
-                    f"expected exactly 1 of {len(subs)} schemas, got {n_ok}"), None
-    return chk
+    def chk(val, p, rt, acc=None):
+        # annotations are added only when exactly one branch passes
+        ann = None if acc is None else (set(), set())
+        n_ok = _passing(subs, val, p, rt, ann)
+        if n_ok != 1:
+            return _err(rt, "oneOf", sp, p,
+                        f"expected exactly 1 of {len(subs)} schemas, got {n_ok}")
+        if acc is not None:
+            _annotate(acc, ann)
+    return chk, chk
 
 
 def c_not(cs, node, v, draft, sp, base):
     sub = cs._compile(v, draft, sp)
 
-    @_no_ann
     def chk(val, p, rt):
-        e, _ = sub(val, p, rt)
-        if not e:
-            return _err("not", sp, p, "value matches 'not' schema")
-        return []
+        if not _quiet_fails(sub, val, p, rt):
+            return _err(rt, "not", sp, p, "value matches 'not' schema")
     return chk
 
 
@@ -1577,14 +1700,7 @@ def c_extends(cs, node, v, draft, sp, base):
     schemas = v if isinstance(v, list) else [v]
     subs = [cs._compile(s, draft, join_pointer(sp, i))
             for i, s in enumerate(schemas) if isinstance(s, (dict, bool))]
-
-    def chk(val, p, rt, ann):
-        errs = []
-        for sub in subs:
-            e, _ = sub(val, p, rt)
-            errs.extend(e)
-        return errs, None
-    return chk
+    return _applying(lambda val: subs)[0]  # annotations are not kept
 
 
 def c_if(cs, node, v, draft, sp, base):
@@ -1597,23 +1713,24 @@ def c_if(cs, node, v, draft, sp, base):
     else_s = cs._compile(else_v, draft, sp + "/../else") if isinstance(
         else_v, (dict, bool)) else None
 
-    def chk(val, p, rt, ann):
-        e, a = if_s(val, p, rt)
+    def chk(val, p, rt):
+        branch = else_s if _quiet_fails(if_s, val, p, rt) else then_s
+        if branch is not None:
+            return branch.fn(val, p, rt)
+
+    def achk(val, p, rt, acc):
+        rt.quiet += 1
+        e, a = if_s.fa(val, p, rt)
+        rt.quiet -= 1
         if not e:
-            out = _merge(None, a)
-            if then_s is not None:
-                e2, a2 = then_s(val, p, rt)
-                if e2:
-                    return e2, out
-                return [], _merge(out, a2)
-            return [], out
-        if else_s is not None:
-            e2, a2 = else_s(val, p, rt)
-            if e2:
-                return e2, None
-            return [], _merge(None, a2)
-        return [], None
-    return chk
+            _annotate(acc, a)
+        branch = else_s if e else then_s
+        if branch is not None:
+            e, a = branch.fa(val, p, rt)
+            if e:
+                return e
+            _annotate(acc, a)
+    return chk, achk
 
 
 # ---- content (decode-then-validate: property.cljc:743-810) ----
@@ -1629,16 +1746,15 @@ def c_content(cs, node, v, draft, sp, base):
     sub = cs._compile(csch, draft, join_pointer(sp, "contentSchema")) \
         if isinstance(csch, (dict, bool)) and _ge(draft, D2019) else None
 
-    @_no_ann
     def chk(val, p, rt):
         if not isinstance(val, str):
-            return []
+            return None
         decoded = val
         if enc == "base64":
             try:
                 decoded = base64.b64decode(val, validate=True).decode("utf-8")
             except (binascii.Error, UnicodeDecodeError, ValueError):
-                return _err("contentEncoding", sp, p,
+                return _err(rt, "contentEncoding", sp, p,
                             "not valid base64", level)
         # No contentMediaType + a contentSchema => assume JSON content,
         # matching the reference (property.cljc:796-801); a decode
@@ -1654,16 +1770,15 @@ def c_content(cs, node, v, draft, sp, base):
                         ValueError(f"non-JSON constant {c}")))
             except ValueError:
                 if mt is None:
-                    return _err("contentSchema", sp, p,
+                    return _err(rt, "contentSchema", sp, p,
                                 "content is not valid JSON", "warning")
-                return _err("contentMediaType", sp, p,
+                return _err(rt, "contentMediaType", sp, p,
                             "content is not valid JSON", level)
             if sub is not None:
-                e, _ = sub(parsed, p, rt)
+                e = sub.fn(parsed, p, rt)
                 if e:
                     return [Violation(x.keyword, x.schema_path, x.doc_path,
                                       x.message, "warning") for x in e]
-        return []
     return chk
 
 
@@ -1693,16 +1808,14 @@ def c_deprecated(cs, node, v, draft, sp, base):
     if v is not True:
         return None
 
-    @_no_ann
     def chk(val, p, rt):
-        return _err("deprecated", sp, p, "deprecated", "warning")
+        return _err(rt, "deprecated", sp, p, "deprecated", "warning")
     return chk
 
 
 def c_comment(cs, node, v, draft, sp, base):
-    @_no_ann
     def chk(val, p, rt):
-        return _err("$comment", sp, p, str(v), "info")
+        return _err(rt, "$comment", sp, p, str(v), "info")
     return chk
 
 

@@ -25,11 +25,13 @@ Regenerate after any testdata refresh:
 from __future__ import annotations
 
 import sys
+from pathlib import Path
 
 import pyarrow as pa
 import pyarrow.parquet as pq
 
-sys.path.insert(0, "/root/repo")
+ROOT = Path(__file__).resolve().parents[1]
+sys.path.insert(0, str(ROOT))
 
 from m3spark.ops.xxh64 import spark_xxhash64  # noqa: E402
 
@@ -49,7 +51,7 @@ def shingles(text: str) -> set[str]:
 def main() -> None:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
     out = (sys.argv[2] if len(sys.argv) > 2
-           else "/root/repo/fixtures/minhash_sigs_sf0.01.parquet")
+           else str(ROOT / "fixtures" / "minhash_sigs_sf0.01.parquet"))
 
     docs = pq.read_table(f"{sf_dir}/documents.parquet",
                          columns=["doc_id", "text"])

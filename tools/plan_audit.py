@@ -12,8 +12,10 @@ from __future__ import annotations
 
 import re
 import sys
+from pathlib import Path
 
-sys.path.insert(0, "/root/repo")
+ROOT = Path(__file__).resolve().parents[1]
+sys.path.insert(0, str(ROOT))
 
 SF = "/root/testdata/sf0.01"
 
@@ -231,7 +233,7 @@ def audit():
     else:
         lines.append("No hygiene violations: zero unexpected shuffles, "
                      "zero unexpected Python stages.")
-    with open("/root/repo/PLANS.md", "w") as f:
+    with open(ROOT / "PLANS.md", "w") as f:
         f.write("\n".join(lines) + "\n")
     print("\n".join(problems) if problems else "clean")
     return 1 if problems else 0

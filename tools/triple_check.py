@@ -32,15 +32,17 @@ import argparse
 import json
 import re
 import sys
+from pathlib import Path
 
-sys.path.insert(0, "/root/repo")
-sys.path.insert(0, "/root/repo/tests")
+ROOT = Path(__file__).resolve().parents[1]
+sys.path.insert(0, str(ROOT))
+sys.path.insert(0, str(ROOT / "tests"))
 
 from m3spark.schema.core import (  # noqa: E402
     DRAFT3, DRAFT4, DRAFT6, D2019, _ge, compile_schema,
 )
 
-COVERAGE = "/root/repo/COVERAGE.md"
+COVERAGE = ROOT / "COVERAGE.md"
 MARK_BEGIN = "<!-- triple-check:begin -->"
 MARK_END = "<!-- triple-check:end -->"
 
