@@ -568,18 +568,15 @@ class ColumnarValidator:
                 self._compile_combinator(name, "allOf", subs,
                                          f"{sp}/extends")
         if isinstance(sub.get("not"), (dict, bool)):
-            p = self._fragment_pred(sub["not"], f"{sp}/not", row,
-                                    errors_only=False)
+            p = self._fragment_pred(sub["not"], f"{sp}/not", row)
             add("not", f"{sp}/not",
                 f"{'row' if row else 'value'} matches 'not' schema",
                 lambda col, dt, _p=p: ~_p(col, dt), on=None)
-        # if/then/else (c_if): a warning fails the `if` branch; the
-        # taken arm forwards its own errors, so each error check of
-        # then/else is a check at `.../if/../then|else/...`, gated on
-        # the `if` outcome
+        # if/then/else (c_if): the taken arm forwards its own errors,
+        # so each error check of then/else is a check at
+        # `.../if/../then|else/...`, gated on the `if` outcome
         if isinstance(sub.get("if"), (dict, bool)):
-            if_p = self._fragment_pred(sub["if"], f"{sp}/if", row,
-                                       errors_only=False)
+            if_p = self._fragment_pred(sub["if"], f"{sp}/if", row)
             for arm in ("then", "else"):
                 if not isinstance(sub.get(arm), (dict, bool)):
                     continue
@@ -1023,8 +1020,7 @@ class ColumnarValidator:
                       arr_guard(lambda col, et, _n=n_pfx:
                                 F.size(col) <= _n))
         elif isinstance(items, dict):
-            builders = self._value_builders(items, f"{sp}/items",
-                                            errors_only=False)
+            builders = self._value_builders(items, f"{sp}/items")
             n_prefix = pfx_offset
             if builders:
                 def build_items(col, et, _b=tuple(builders), _n=n_prefix):
@@ -1043,8 +1039,7 @@ class ColumnarValidator:
             prefix = sub["items"]
             tuple_kw = "items"
         if tuple_kw and all(isinstance(s, (dict, bool)) for s in prefix):
-            per_pos = [self._value_builders(s, f"{sp}/{tuple_kw}/{i}",
-                                            errors_only=False)
+            per_pos = [self._value_builders(s, f"{sp}/{tuple_kw}/{i}")
                        if isinstance(s, dict) else
                        ([] if s is True else
                         [lambda col, dt: F.lit(False)])
@@ -1078,7 +1073,7 @@ class ColumnarValidator:
                                     F.size(col) <= _n))
             else:
                 builders = self._value_builders(
-                    addl, f"{sp}/additionalItems", errors_only=False)
+                    addl, f"{sp}/additionalItems")
                 if builders:
                     def build_ai(col, et, _b=tuple(builders), _n=n):
                         rest = F.slice(col, _n + 1,
@@ -1100,7 +1095,7 @@ class ColumnarValidator:
                 builders = [lambda col, dt: F.lit(False)]  # matches none
             else:
                 builders = self._value_builders(
-                    contains, f"{sp}/contains", errors_only=False)
+                    contains, f"{sp}/contains")
             min_c = sub.get("minContains", 1)
             max_c = sub.get("maxContains")
 
@@ -1419,31 +1414,30 @@ class ColumnarValidator:
             return F.lit(True) if total is None else total == 1
         return gate
 
-    def _fragment_pred(self, frag, sp, row=False, errors_only=True):
-        """fn(col, dt) -> branch-success Column: every check of object
-        fragment ``frag`` passes at this position (``row``: ``frag`` is
-        compiled as the row schema, else as the value of a column).
-        ``errors_only``: warnings don't fail a branch, matching the
-        interpreter's in-place applicators that forward inner errors."""
+    def _fragment_pred(self, frag, sp, row=False):
+        """fn(col, dt) -> branch-success Column: every error-level check
+        of object fragment ``frag`` passes at this position (``row``:
+        ``frag`` is compiled as the row schema, else as the value of a
+        column).  A warning fails no branch (core.py ``_err``)."""
         if not row:
-            builders = self._value_builders(frag, sp, errors_only)
+            builders = self._value_builders(frag, sp)
         elif frag is False:
             return lambda col, dt: F.lit(False)
         else:
             builders = [lambda col, dt, _c=c: self._check_ok(_c, dt)
                         for c in self._sub_checks(frag, sp, name=None,
-                                                  errors_only=errors_only)]
+                                                  errors_only=True)]
         return lambda col, dt: _reduce_and(
             [b(col, dt).eqNullSafe(True) for b in builders])
 
-    def _value_builders(self, frag, sp, errors_only=True):
-        """JVM builders for the checks of a value-position fragment
-        (items, patternProperties/additionalProperties values, branch
-        predicates); ``errors_only`` drops warning-level checks."""
+    def _value_builders(self, frag, sp):
+        """JVM builders for the error-level checks of a value-position
+        fragment (items, patternProperties/additionalProperties values,
+        branch predicates)."""
         if frag is False:
             return (lambda col, dt: F.lit(False),)
         return tuple(c.build for c in self._sub_checks(
-            frag, sp, errors_only=errors_only, jvm_only=True))
+            frag, sp, errors_only=True, jvm_only=True))
 
     def _claimed_field(self, claims, fname, col, dt):
         """Boolean Column: struct field ``fname`` is evaluated."""
@@ -1649,7 +1643,7 @@ class ColumnarValidator:
                     self.checks.extend(self._sub_checks(
                         s, f"{sp}/{i}", name=name))
             return
-        preds = [self._fragment_pred(s, f"{sp}/{i}", row, errors_only=False)
+        preds = [self._fragment_pred(s, f"{sp}/{i}", row)
                  for i, s in enumerate(subs)
                  if isinstance(s, (dict, bool))]
 

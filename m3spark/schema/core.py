@@ -880,13 +880,14 @@ _CONSUMERS = ("unevaluatedItems", "unevaluatedProperties")
 
 
 # what a checker reports under ``rt.quiet``: its caller asks only
-# whether anything was reported, so no violation is built
+# whether an error was reported, so no violation is built, and a
+# warning or an info is not reported at all
 _DISCARDED = (Violation("", "", "", "thrown away by the caller"),)
 
 
 def _err(rt, kw, sp, p, msg, level="error"):
     if rt.quiet:
-        return _DISCARDED
+        return _DISCARDED if level == "error" else None
     return [Violation(kw, sp, _ptr(p), msg, level)]
 
 
@@ -1774,7 +1775,7 @@ def c_content(cs, node, v, draft, sp, base):
                                 "content is not valid JSON", "warning")
                 return _err(rt, "contentMediaType", sp, p,
                             "content is not valid JSON", level)
-            if sub is not None:
+            if sub is not None and not rt.quiet:  # warnings only
                 e = sub.fn(parsed, p, rt)
                 if e:
                     return [Violation(x.keyword, x.schema_path, x.doc_path,

@@ -20,7 +20,10 @@ Families:
    draft-next plain-$anchor fallback, $recursiveRef without anchors,
    pointer-fragment $dynamicRef;
 4. inactive-draft no-ops — $recursiveRef under 2020-12, $dynamicRef
-   under 2019-09 (ignored by the keyword tables).
+   under 2019-09 (ignored by the keyword tables);
+5. warning-only branches — a branch whose only reports are warnings or
+   infos ($comment, deprecated, an unknown format, 2019+ content)
+   passes every applicator that asks whether it passed.
 """
 
 from __future__ import annotations
@@ -263,3 +266,33 @@ CASES7.append((
      ({"v": 5, "next": {"v": 11}}, False),
      ({"v": 5, "next": {"v": 6, "next": {"v": 12}}}, False),
      ({"v": 5, "next": "x"}, False), ({}, True)]))
+
+
+# ---------------------------------------------------------------------------
+# family 5: annotations never fail a branch (verdicts from the spec: an
+# annotation keyword asserts nothing)
+
+_JSON_STR = {"contentMediaType": "application/json",
+             "contentSchema": {"type": "string"}}
+
+for _desc, _schema, _tests in [
+        ("anyOf: $comment-only branch",
+         {"anyOf": [{"$comment": "x"}]}, [(1, True), ("a", True)]),
+        ("oneOf: deprecated-only branch",
+         {"oneOf": [{"deprecated": True}, {"type": "string"}]},
+         [(1, True), ("a", False)]),
+        ("contains: $comment-only subschema",
+         {"contains": {"$comment": "x"}}, [([1], True), ([], False)]),
+        ("if: deprecated-only condition takes then",
+         {"if": {"deprecated": True}, "then": {"type": "string"}},
+         [(1, False), ("a", True)]),
+        ("anyOf: unknown-format branch",
+         {"anyOf": [{"format": "nope"}]}, [("a", True)]),
+        ("not: $comment-only subschema",
+         {"not": {"$comment": "x"}}, [(1, False), ("a", False)]),
+        ("anyOf: content annotations only",
+         {"anyOf": [_JSON_STR]}, [("1", True), ("x", True)]),
+        ("items: content annotations only",
+         {"items": _JSON_STR}, [(["1"], True), (["x", '"s"'], True)]),
+]:
+    CASES7.append((D20, f"warning-only branch: {_desc}", _schema, _tests))

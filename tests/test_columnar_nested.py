@@ -11,6 +11,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from m3spark.columnar import ColumnarValidator
+from m3spark.schema import compile_schema
 from m3spark.sparkval import validate_json
 
 SCHEMA = {
@@ -195,10 +196,14 @@ def test_tuple_items_draft2019(spark):
 
 
 def test_nested_udf_format_rejected():
+    """An asserted format that needs a pandas UDF cannot run inside
+    items; an annotated one is a warning, which fails no items verdict,
+    so nothing has to run there."""
+    schema = {"properties": {"xs": {"items": {"format": "idn-hostname"}}}}
     with pytest.raises(Exception) as ei:
-        ColumnarValidator(
-            {"properties": {"xs": {"items": {"format": "idn-hostname"}}}})
+        ColumnarValidator(schema, format_assertion=True)
     assert "pandas-UDF" in str(ei.value)
+    assert ColumnarValidator(schema).unsupported == []
 
 
 def test_boolean_contains_and_items_false_with_prefix(spark):
@@ -379,3 +384,32 @@ def test_nested_doc_path_pointer_escaping(spark):
     rows = cv.apply(df).selectExpr("inline(violations)").collect()
     assert [r["doc_path"] for r in rows] == ["/o/a~1b/c~0d"]
     assert rows[0]["value"] == "7"
+
+
+_IPV4 = {"format": "ipv4"}  # a warning: format_assertion is off
+_JSON_STR = {"contentMediaType": "application/json",
+             "contentSchema": {"type": "string"}}  # 2020-12: warnings
+
+
+@pytest.mark.parametrize("schema, ddl, values, expected", [
+    ({"items": _IPV4}, "array<string>", [["999.0.0.1"], ["1.2.3.4"]],
+     [True, True]),
+    ({"prefixItems": [_IPV4]}, "array<string>", [["999.0.0.1"]], [True]),
+    ({"contains": _IPV4}, "array<string>", [["999.0.0.1"]], [True]),
+    ({"anyOf": [_IPV4]}, "string", ["999.0.0.1"], [True]),
+    ({"not": _IPV4}, "string", ["999.0.0.1"], [False]),
+    ({"if": _IPV4, "then": {"maxLength": 0}}, "string", ["999.0.0.1"],
+     [False]),
+    ({"anyOf": [_JSON_STR]}, "string", ["1", "x"], [True, True]),
+    ({"items": _JSON_STR}, "array<string>", [["1"]], [True]),
+], ids=["items", "prefixItems", "contains", "anyOf", "not", "if",
+        "anyOf-content", "items-content"])
+def test_warnings_fail_no_branch(spark, schema, ddl, values, expected):
+    """A subschema whose only failing checks are warnings passes every
+    applicator that asks whether it passed, in both engines."""
+    cv = ColumnarValidator({"properties": {"v": schema}},
+                           format_assertion=False)
+    df = spark.createDataFrame(list(enumerate(values)), f"i int, v {ddl}")
+    got = [r["valid"] for r in cv.apply(df).orderBy("i").collect()]
+    interp = compile_schema(schema, format_assertion=False)
+    assert got == [interp.is_valid(v) for v in values] == expected

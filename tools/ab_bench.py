@@ -11,9 +11,11 @@ a "within the parent's run spread" verdict flipped between runs) of
 
 Prints one JSON line per query: median seconds per side + ratio, and
 per side the median change of the driver JVM's ``jvm_counters`` (JIT
-ms, GC ms, Janino classes) over the warmup and timed runs.  Both sides
-read the counters through this tree's ``m3spark/session.py``, so a ref
-that predates ``jvm_counters`` is measured the same way.  Sessions use
+ms, GC ms, Janino classes) and of the Python workers' CPU seconds
+(:func:`python_worker_cpu_s`) over the warmup and timed runs.  Both
+sides read the counters through this tree's ``m3spark/session.py`` and
+this file, so a ref that predates ``jvm_counters`` is measured the same
+way.  Sessions use
 ``get_spark``'s default core count (``SPARK_GRAFT_CPUS``, else the
 host's).
 """
@@ -36,18 +38,25 @@ ROUNDS = int(os.environ.get("M3SPARK_AB_ROUNDS", "6"))
 
 _CHILD = r"""
 import importlib.util, json, sys, time, statistics
-tree, qname, sf, timed, counters = sys.argv[1], sys.argv[2], sys.argv[3], \
-    int(sys.argv[4]), sys.argv[5]
+tree, qname, sf, timed = sys.argv[1], sys.argv[2], sys.argv[3], \
+    int(sys.argv[4])
 sys.path.insert(0, tree)   # the side's OWN entry + m3spark package
 import __spark_entry__ as entry
 from m3spark.session import get_spark
-spec = importlib.util.spec_from_file_location("ab_counters", counters)
-mod = importlib.util.module_from_spec(spec)
-spec.loader.exec_module(mod)
+
+def load(name, path):
+    spec = importlib.util.spec_from_file_location(name, path)
+    mod = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(mod)
+    return mod
+
+mod, ab = load("ab_counters", sys.argv[5]), load("ab_bench", sys.argv[6])
 spark = get_spark("ab")
 spark.sparkContext.setLogLevel("ERROR")
+jvm_pid = spark.sparkContext._gateway.proc.pid
 q = entry.queries()[qname]
 before = mod.jvm_counters(spark)
+py_before = ab.python_worker_cpu_s(jvm_pid)
 q(spark, sf).count()  # warmup
 secs = []
 for _ in range(timed):
@@ -56,7 +65,8 @@ for _ in range(timed):
 after = mod.jvm_counters(spark)
 print(json.dumps({"median": statistics.median(secs),
                   "runs": [round(s, 3) for s in secs],
-                  "jvm": {k: after[k] - before[k] for k in after}}))
+                  "jvm": {k: after[k] - before[k] for k in after},
+                  "py_cpu_s": ab.python_worker_cpu_s(jvm_pid) - py_before}))
 spark.stop()
 """
 
@@ -69,13 +79,43 @@ def _run_side(tree: str, query: str) -> dict:
     try:
         out = subprocess.run(
             [sys.executable, script, tree, query, SF, str(TIMED),
-             str(ROOT / "m3spark" / "session.py")],
+             str(ROOT / "m3spark" / "session.py"), __file__],
             capture_output=True, text=True, check=True, cwd=tree)
         line = [ln for ln in out.stdout.splitlines()
                 if ln.startswith("{")][-1]
         return json.loads(line)
     finally:
         os.unlink(script)
+
+
+def python_worker_cpu_s(jvm_pid: int) -> float:
+    """CPU seconds (user + system) of every descendant of the JVM
+    ``jvm_pid``, with their reaped children's, from ``/proc``.  In
+    ``local[...]`` mode those are the Python worker daemon and the
+    workers it forks, whose CPU neither ``jvm_counters`` nor Spark's
+    executor CPU metric includes."""
+    children: dict[int, list[int]] = {}
+    ticks: dict[int, int] = {}
+    for entry in os.listdir("/proc"):
+        if not entry.isdigit():
+            continue
+        try:
+            with open(f"/proc/{entry}/stat") as f:
+                stat = f.read()
+        except OSError:  # exited since listdir
+            continue
+        # fields after the parenthesised command name, from field 3 on
+        rest = stat[stat.rindex(")") + 2:].split()
+        pid = int(entry)
+        children.setdefault(int(rest[1]), []).append(pid)
+        # utime, stime, cutime, cstime: fields 14-17
+        ticks[pid] = sum(int(x) for x in rest[11:15])
+    total, todo = 0, list(children.get(jvm_pid, ()))
+    while todo:
+        pid = todo.pop()
+        total += ticks[pid]
+        todo += children.get(pid, ())
+    return total / os.sysconf("SC_CLK_TCK")
 
 
 def _median_counters(runs: list[dict]) -> dict:
@@ -113,6 +153,10 @@ def main():
                 "cur_over_ref": round(med_cur / med_ref, 3),
                 "ref_jvm": _median_counters(runs["ref"]),
                 "cur_jvm": _median_counters(runs["cur"]),
+                "ref_py_cpu_s": round(statistics.median(
+                    x["py_cpu_s"] for x in runs["ref"]), 3),
+                "cur_py_cpu_s": round(statistics.median(
+                    x["py_cpu_s"] for x in runs["cur"]), 3),
             }), flush=True)
     finally:
         shutil.rmtree(wt, ignore_errors=True)
